@@ -85,13 +85,6 @@ def main() -> None:
     from inferdb_spark.catalog import load_table
     from inferdb_spark.gate import queries as gate_queries
 
-    # staged-but-benched: e2e_curation_index headlines before its driver
-    # window opens (round-10 activation); once registered this import is
-    # a no-op re-registration
-    try:
-        import inferdb_spark.gate_r10b  # noqa: F401
-    except ImportError:
-        pass
     from inferdb_spark.operators.binning import BinSpec
     from inferdb_spark.operators.index import build_index
     from inferdb_spark.operators.scoring import index_score
@@ -262,11 +255,7 @@ def main() -> None:
     docs_par.unpersist()
     spark.catalog.clearCache()
 
-    # heavy relational + data-prep gate queries at bench scale.  Staged
-    # (not-yet-registered) modules whose queries headline the bench are
-    # imported explicitly — registration in THIS process only.
-    import inferdb_spark.gate_r9a  # noqa: F401  (ranking_eval_shortlist)
-
+    # heavy relational + data-prep gate queries at bench scale
     gq = gate_queries()
     for name in [
         "pricing_summary",

@@ -60,8 +60,7 @@ def fit_index_pipeline(
 
     t0 = time.perf_counter()
     enc = apply_bins(train, specs).cache()
-    iv_task = "classification" if task == "classification" else task
-    selected = greedy_select(enc, specs, target, task=iv_task)
+    selected = greedy_select(enc, specs, target, task=task)
     if not selected:
         selected = specs[: max(1, min(2, len(specs)))]
     timings["solution_s"] = time.perf_counter() - t0
@@ -159,7 +158,7 @@ def register_pipeline_views(
     (the query-integration pattern).  Views are lazy plans, not copies;
     add .cache() on a stage to pin it like the reference's ANALYZE'd
     materialized views."""
-    from inferdb_spark.operators.scoring import index_score, translate
+    from inferdb_spark.operators.scoring import translate
 
     names = []
     stages = {

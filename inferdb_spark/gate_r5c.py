@@ -190,19 +190,6 @@ ORDER BY ante, cons
 """
 
 
-# r11 NEGATIVE RESULT: the un-persisted plan re-expands the basket-
-# distinct subtree combinatorially (76 parquet scans / 148 exchanges:
-# bif's self-join doubles bi, directed doubles fpairs, every
-# crossJoin(nbr) re-expands bi) — yet persisting was REFUTED by
-# alternating A/B at sf0.1: bi+fpairs persist median 7.23 s vs 4.22 s
-# without; fpairs-only 4.27 vs 3.84.  The duplicated subtrees are cheap
-# column-pruned scans running fully parallel, while persist inserts
-# materialization barriers.  Left unpersisted; at cluster scale AQE
-# exchange reuse handles the big shuffles.
-_APRIORI_PERSIST = False
-_APRIORI_PERSIST_FPAIRS = False
-
-
 @gate("assoc_rules_apriori", oracle=_APRIORI_ORACLE)
 def q_assoc_rules_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent-pair association rules (Apriori, MADlib assoc_rules
@@ -220,8 +207,6 @@ def q_assoc_rules_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item"))
         .distinct()
     )
-    if _APRIORI_PERSIST:
-        bi = bi.persist()
     nbr = bi.agg(F.countDistinct("basket").cast("long").alias("n"))
     isup = bi.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("icnt"))
     fitems = isup.crossJoin(F.broadcast(nbr)).where(
@@ -241,8 +226,6 @@ def q_assoc_rules_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     fpairs = pairs.crossJoin(F.broadcast(nbr)).where(
         F.col("pcnt") * 100 >= F.lit(APRIORI_PAIR_PCT) * F.col("n")
     )
-    if _APRIORI_PERSIST or _APRIORI_PERSIST_FPAIRS:
-        fpairs = fpairs.persist()
     directed = fpairs.select(
         F.col("i1").alias("ante"), F.col("i2").alias("cons"), "pcnt"
     ).unionAll(

@@ -243,25 +243,6 @@ def _grad_hess(margin: Column, y: Column, objective: str) -> tuple[Column, Colum
 # the same edge literals)
 
 
-# spread the narrow projection before the histogram explode / the binned
-# working relation before its checkpoint (A/B-toggleable; integer sums
-# are partitioning-insensitive so values never change).
-# BOTH REFUTED by r11 alternating A/B (6 reps/side, tools/ab_alternate.py):
-#   _HIST_SPREAD  gbt_grad_histogram median 2.04 (on) vs 1.98 s (off) — wash;
-#                 the 3-feature bin explode is too cheap per row for the
-#                 extra exchange to pay locally.
-#   _WORK_SPREAD  gbt_train_predict median 4.29 (on, one 30 s transient)
-#                 vs 3.08 s (off) — the 6 sequential per-level histogram
-#                 jobs each pay 32-task scheduling on the widened
-#                 checkpoint, re-confirming the r10 sequential-A/B revert.
-#                 A follow-up width sweep (0/4/8, 6 reps alternating) was
-#                 a three-way wash (3.24/3.16/3.15 s): per-job driver
-#                 latency, not map width, is the floor at this SF.
-#                 (True = size-aware width, int n = explicit width.)
-_HIST_SPREAD = False
-_WORK_SPREAD = False
-
-
 def gradient_histogram(
     df: DataFrame,
     feature_cols: list[str],
@@ -284,15 +265,6 @@ def gradient_histogram(
             for c in feature_cols
         ]
     )
-    if _HIST_SPREAD:
-        from inferdb_spark.scale import spread
-
-        cols = list(dict.fromkeys([*feature_cols, label_col]))
-        # the bin/quantize explode is heavy per-row map work off a
-        # (locally one-task) scan — spread the narrow projection first
-        # (guide §2.2; the textprep explode pattern); integer sums are
-        # partitioning-insensitive
-        df = spread(df.select(*cols))
     return (
         df.select(
             F.explode(pairs).alias("fb"),
@@ -547,18 +519,8 @@ def fit_hist_gbt(
             m = df.select(F.avg(F.col(label_col).cast("double"))).collect()[0][0]
             base_score = float(m if m is not None else 0.0)
 
-    # binned working relation: bins + label + margin, cached.  Spread the
-    # narrow source projection first: every per-level histogram job's map
-    # side then runs at the checkpoint's width instead of one task per
-    # row group (locally ONE task; guide §2.2).
-    src = df.select(*dict.fromkeys([*feature_cols, label_col]))
-    if _WORK_SPREAD:
-        from inferdb_spark.scale import spread
-
-        src = spread(
-            src, partitions=_WORK_SPREAD if _WORK_SPREAD is not True else None
-        )
-    work = src.select(
+    # binned working relation: bins + label + margin, cached
+    work = df.select(
         *[
             _bin_expr(c, edges[c]).alias(f"_b{i}")
             for i, c in enumerate(feature_cols)
@@ -575,62 +537,6 @@ def fit_hist_gbt(
             F.lit(float(base_score)).alias("_m"),
         ).localCheckpoint()
 
-    from contextlib import nullcontext
-
-    from inferdb_spark.scale import no_adaptive
-
-    # the fit loop issues n_trees x max_depth small fixed-shape histogram
-    # jobs with no joins — AQE's per-exchange re-planning is pure per-job
-    # latency here (the GD-trainer finding, scale.no_adaptive); trees and
-    # leaf weights are identical, AQE only rewrites physical plans
-    fit_ctx = (
-        no_adaptive(df.sparkSession) if _FIT_NO_ADAPTIVE else nullcontext()
-    )
-    with fit_ctx:
-        trees, rounds_log, stats_per_tree = _fit_loop(
-            work, vwork, feature_cols, nb, edges, objective, n_trees,
-            max_depth, learning_rate, reg_lambda, gamma, min_child_weight,
-            checkpoint_every, early_stopping_rounds, tol, track_loss,
-        )
-    return HistGBTModel(
-        trees=trees,
-        base_score=float(base_score),
-        objective=objective,
-        edges=edges,
-        learning_rate=learning_rate,
-        train_rounds=rounds_log,
-        split_stats=[st for per_tree in stats_per_tree for st in per_tree],
-    )
-
-
-# AQE off around the fixed-shape fit loop (A/B-toggleable; values are
-# plan-independent).  r11 alternating A/B: median 3.50 s (off) vs 3.51 s
-# (on) — a wash; unlike the GD trainers' one-row aggregates, the per-
-# level histogram shuffle is real work AQE handles fine, so AQE stays ON
-# (the scale-conservative side of a wash).
-_FIT_NO_ADAPTIVE = False
-
-
-def _fit_loop(
-    work: DataFrame,
-    vwork: DataFrame | None,
-    feature_cols: list[str],
-    nb: list[int],
-    edges: dict[str, list[float]],
-    objective: str,
-    n_trees: int,
-    max_depth: int,
-    learning_rate: float,
-    reg_lambda: float,
-    gamma: float,
-    min_child_weight: float,
-    checkpoint_every: int,
-    early_stopping_rounds: int | None,
-    tol: float,
-    track_loss: bool,
-):
-    """The level-wise growth loop of fit_hist_gbt, factored out so the
-    AQE scope wraps exactly the sequential job sequence."""
     trees = []
     rounds_log: list[dict[str, float]] = []
     stats_per_tree: list[list[tuple[str, float, float]]] = []
@@ -835,7 +741,15 @@ def _fit_loop(
         else:
             rounds_log.append(entry)
 
-    return trees, rounds_log, stats_per_tree
+    return HistGBTModel(
+        trees=trees,
+        base_score=float(base_score),
+        objective=objective,
+        edges=edges,
+        learning_rate=learning_rate,
+        train_rounds=rounds_log,
+        split_stats=[st for per_tree in stats_per_tree for st in per_tree],
+    )
 
 
 def _assemble_tree(

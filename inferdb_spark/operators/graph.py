@@ -33,12 +33,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# Broadcast-hint the per-round label map when the node count is at most
+# this (round-10 verdict item 1: the halving join was a plain shuffled
+# self-join; the candidate join also re-shuffles the FULL edge list every
+# round when the node map would hash-join map-side for free).  Two longs
+# per row keeps 2e7 rows well under the 8 GB broadcast cap; past the cap
+# the prior shuffled shape is the correct plan (the mf.py guard pattern).
+# The node count is read once from the already-checkpointed seed labels.
+_BROADCAST_LABELS_CAP = 20_000_000
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 50,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Return (node, component) with component = min node id reachable.
 
@@ -48,60 +57,17 @@ def connected_components(
     result with the node universe).  Node ids must be non-null and
     orderable (the canonical representative is the minimum).
 
-    ``shuffle_partitions`` (optional) scopes
-    ``spark.sql.shuffle.partitions`` to the iteration loop — an explicit
-    knob for callers whose edge relations dwarf the session default.
-    It is deliberately NOT auto-derived: the round-9 sf10 A/B on the
-    126M-edge clone match graph measured auto-widening (~64 MB/reducer,
-    the gram-explode heuristic) at 3330 s vs 2318 s with the session
-    default — per-round localCheckpoint materialization and task
-    overhead dominate this loop, not reduce width, so widening by
-    default is a measured LOSS (BASELINE.md round-9 profile).
-
-    Concurrency: passing ``shuffle_partitions`` mutates the session-wide
-    ``spark.sql.shuffle.partitions`` for the loop's duration — callers
-    running concurrent queries on the same SparkSession must either
-    leave it ``None`` or serialize around this call (single-threaded
-    driver assumed, which is how every pipeline in this repo runs).
+    The loop runs at the session's shuffle width.  Widening it was
+    measured as a loss (round-9 sf10 A/B on the 126M-edge clone match
+    graph: ~64 MB/reducer took 3330 s vs 2318 s at the session default)
+    because per-round localCheckpoint materialization and task overhead
+    dominate this loop, not reduce width (BASELINE.md round-9 profile).
     """
+    from inferdb_spark.scale import free_local_checkpoint, rotate_local_checkpoint
+
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     sym = sym.localCheckpoint(eager=True)
-
-    if shuffle_partitions is None:
-        return _cc_min_label_loop(sym, max_iters)
-    spark = edges.sparkSession
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        return _cc_min_label_loop(sym, max_iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-
-
-# Number of lbl := lbl(lbl) path-compression applications per round.
-# Module-level so the A/B harness can toggle it without a process restart;
-# the fixpoint is identical for any value >= 0 (the map is monotone).
-# Round-11 alternating A/B at sf0.1 (tools/ab_alternate.py, 6 reps/side,
-# two independent sessions): x1 min 4.40/4.14 s, x2 4.55/4.36, x3
-# 4.76/4.60 — the round-10 x3 setting (13→6 rounds) was a measured LOSS
-# locally (each extra application triples per-round join work faster
-# than it shrinks the round count), confirming the round-10 driver
-# regression (0.72x).  x1 = classic path halving is the shipped form.
-_PATH_COMPRESSIONS = 1
-
-# Broadcast-hint the per-round label map when the node count is at most
-# this (round-10 verdict item 1: the compression joins were plain shuffled
-# self-joins; the candidate join also re-shuffles the FULL edge list every
-# round when the node map would hash-join map-side for free).  Two longs
-# per row keeps 2e7 rows well under the 8 GB broadcast cap; past the cap
-# the prior shuffled shape is the correct plan (the mf.py guard pattern).
-# The node count is read once from the already-checkpointed seed labels.
-_BROADCAST_LABELS_CAP = 20_000_000
-
-
-def _cc_min_label_loop(sym: DataFrame, max_iters: int) -> DataFrame:
-    from inferdb_spark.scale import free_local_checkpoint, rotate_local_checkpoint
 
     # seed with the 1-hop minimum (min(self, neighbors)) — one aggregation
     # that replaces the first propagation round
@@ -133,30 +99,14 @@ def _cc_min_label_loop(sym: DataFrame, max_iters: int) -> DataFrame:
             .unionByName(labels)
         )
         new_labels = cand.groupBy("node").agg(F.min("lbl").alias("lbl"))
-        # path compression: lbl := lbl(lbl), applied THREE times against
-        # the round's node→lbl map.  One application (classic halving)
-        # converged in 13 rounds on the co-purchase gate graph; each
-        # extra application is only a broadcast self-join of the
-        # node-count relation INSIDE the same checkpoint job (no extra
-        # barrier), and three cut the loop to 6 rounds — per-round job
-        # latency, not data volume, dominates this loop (guide §1.2).
-        # The map is monotone (map[x] <= x), so iterating it preserves
-        # the fixpoint exactly: final labels are component minima either
-        # way, and the loop exits on the same unchanged-sum test.
-        resolved = new_labels
-        for h in range(_PATH_COMPRESSIONS):
-            lbl_map = new_labels.select(
-                F.col("node").alias(f"_ln{h}"), F.col("lbl").alias(f"_lv{h}")
-            )
-            resolved = (
-                resolved.join(
-                    wrap(lbl_map), resolved["lbl"] == lbl_map[f"_ln{h}"], "left"
-                )
-                .select(
-                    "node",
-                    F.coalesce(f"_lv{h}", "lbl").alias("lbl"),
-                )
-            )
+        # path halving: lbl := lbl(lbl) against the round's node→lbl map.
+        # The map is monotone (map[x] <= x), so the fixpoint is unchanged.
+        lbl_map = new_labels.select(
+            F.col("node").alias("_ln"), F.col("lbl").alias("_lv")
+        )
+        resolved = new_labels.join(
+            wrap(lbl_map), new_labels["lbl"] == lbl_map["_ln"], "left"
+        ).select("node", F.coalesce("_lv", "lbl").alias("lbl"))
         new_labels = rotate_local_checkpoint(resolved, last_ckpt)
         labels = new_labels
         last_ckpt = new_labels
@@ -411,17 +361,6 @@ def k_core(
         eager=True
     )
     last_ckpt = e
-    # one count on the checkpointed seed decides join placement for every
-    # round (the _cc_min_label_loop pattern): the surviving-node set has
-    # at most 2x|edges| rows and only shrinks, so a seed under the cap
-    # stays under it.  Broadcasting it makes both semi-join probes
-    # map-side — the (larger) edge relation is no longer re-shuffled
-    # twice per round (guide §3.1); survival is placement-independent.
-    wrap = (
-        F.broadcast
-        if 2 * e.count() <= _BROADCAST_LABELS_CAP
-        else (lambda d: d)
-    )
     for _ in range(n_rounds):
         deg = (
             e.select(F.col("u").alias("n"))
@@ -431,8 +370,8 @@ def k_core(
         )
         keep = deg.filter(F.col("d") >= k).select("n")
         e = rotate_local_checkpoint(
-            e.join(wrap(keep), e["u"] == keep["n"], "left_semi")
-            .join(wrap(keep), F.col("v") == keep["n"], "left_semi"),
+            e.join(keep, e["u"] == keep["n"], "left_semi")
+            .join(keep, F.col("v") == keep["n"], "left_semi"),
             last_ckpt,
         )
         last_ckpt = e

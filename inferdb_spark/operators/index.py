@@ -96,7 +96,7 @@ def build_index(
         prefix_aggs: dict[int, DataFrame] = {}
         for L in range(1, k):
             pcols = bin_cols[:L]
-            pkey = F.concat_ws(".", *[F.col(c).cast("string") for c in pcols])
+            pkey = key_expr(specs[:L], BIN_SUFFIX)
             if agg_mode == "rows":
                 agg = per_key.groupBy(*pcols).agg(
                     (F.sum("s") / F.sum("c")).alias("value")
@@ -128,7 +128,7 @@ def build_index(
         prefix_aggs = {}
         for L in range(1, k):
             pcols = bin_cols[:L]
-            pkey = F.concat_ws(".", *[F.col(c).cast("string") for c in pcols])
+            pkey = key_expr(specs[:L], BIN_SUFFIX)
             if agg_mode == "rows":
                 src = per_key_cls.groupBy(*pcols, "value").agg(
                     F.sum("cnt").alias("cnt")
@@ -218,12 +218,12 @@ def unseen_paths(index: KVIndex) -> DataFrame:
     anti join against the stored keys."""
     spark = index.kv.sparkSession
     domain = None
-    for i, s in enumerate(index.specs):
-        d = spark.createDataFrame([(b,) for b in range(s.n_bins)], f"b{i} int")
+    for s in index.specs:
+        d = spark.createDataFrame(
+            [(b,) for b in range(s.n_bins)], f"`{s.column}{BIN_SUFFIX}` int"
+        )
         domain = d if domain is None else domain.crossJoin(d)
-    all_keys = domain.select(
-        F.concat_ws(".", *[F.col(f"b{i}").cast("string") for i in range(len(index.specs))]).alias("key")
-    )
+    all_keys = domain.select(key_expr(index.specs, BIN_SUFFIX).alias("key"))
     return all_keys.join(index.kv.select("key"), "key", "left_anti")
 
 

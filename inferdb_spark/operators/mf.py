@@ -203,7 +203,11 @@ def fit_mf_gd(
     ).localCheckpoint(eager=True)
 
     def _side(tag: int, key: str, prefix: str) -> DataFrame:
-        return _w_side(W, tag, key, prefix, k)
+        """One factor matrix's view of the tagged relation W."""
+        return W.filter(F.col("tag") == tag).select(
+            F.col("key").alias(key),
+            *[F.col(f"q{f}").alias(f"{prefix}q{f}") for f in range(k)],
+        )
 
     # size guard on the hint (round-10 advice item 3): W is already
     # materialized (eager localCheckpoint), so the count is a metadata-
@@ -214,55 +218,10 @@ def fit_mf_gd(
         broadcast_factors = False
 
     wrap = F.broadcast if broadcast_factors else (lambda d: d)
-    from contextlib import nullcontext
-
-    from inferdb_spark.scale import no_adaptive
-
-    # with the factor joins explicitly broadcast-hinted, AQE has nothing
-    # left to decide per step — its per-exchange re-planning is pure
-    # barrier latency (the GD-trainer finding); plans-only, values exact
-    step_ctx = (
-        no_adaptive(ratings.sparkSession)
-        if (_FIT_NO_ADAPTIVE and broadcast_factors)
-        else nullcontext()
-    )
-    with step_ctx:
-        W = _step_loop(r, W, k, lr, n_steps, wrap)
-    r.unpersist()
-    return MFModel(
-        user_col="u", item_col="i", k=k,
-        user_factors=_side(0, "u", "u"), item_factors=_side(1, "i", "v"),
-        n_steps=n_steps, learning_rate=lr,
-        broadcast_factors=broadcast_factors,
-    )
-
-
-# AQE off around the hinted fixed-shape MF step loop (A/B-toggleable).
-# r11 alternating A/B: median 5.09 s (off) vs 5.03 s (on) — a wash, so
-# AQE stays ON (scale-conservative side; barrier latency, not AQE
-# re-planning, is this loop's floor).
-_FIT_NO_ADAPTIVE = False
-
-
-def _w_side(W: DataFrame, tag: int, key: str, prefix: str, k: int) -> DataFrame:
-    """One factor matrix's view of the tagged relation W."""
-    return W.filter(F.col("tag") == tag).select(
-        F.col("key").alias(key),
-        *[F.col(f"q{f}").alias(f"{prefix}q{f}") for f in range(k)],
-    )
-
-
-def _step_loop(r: DataFrame, W: DataFrame, k: int, lr: float, n_steps: int, wrap):
-    """The per-step error->gradient->update chain of fit_mf_gd, factored
-    out so the AQE scope wraps exactly the sequential barrier sequence;
-    returns the final W checkpoint (the caller rebinds it before any
-    factor-side use)."""
-    from inferdb_spark.scale import free_local_checkpoint
-
     for _ in range(n_steps):
         E = (
-            r.join(wrap(_w_side(W, 0, "u", "u", k)), "u")
-            .join(wrap(_w_side(W, 1, "i", "v", k)), "i")
+            r.join(wrap(_side(0, "u", "u")), "u")
+            .join(wrap(_side(1, "i", "v")), "i")
             .withColumn("eq", _error_micro(k))
         )
         grad_recs = F.explode(
@@ -318,7 +277,13 @@ def _step_loop(r: DataFrame, W: DataFrame, k: int, lr: float, n_steps: int, wrap
             .localCheckpoint(eager=True)
         )
         free_local_checkpoint(W_prev)
-    return W
+    r.unpersist()
+    return MFModel(
+        user_col="u", item_col="i", k=k,
+        user_factors=_side(0, "u", "u"), item_factors=_side(1, "i", "v"),
+        n_steps=n_steps, learning_rate=lr,
+        broadcast_factors=broadcast_factors,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -52,9 +52,7 @@ def index_score(
     fallback_cols: list[Column] = [F.col("_v_exact")]
     for L in range(k - 1, 0, -1):
         pa = index.prefix_aggs[L].withColumnRenamed("value", f"_v_p{L}")
-        prefix = F.concat_ws(
-            ".", *[F.col(c).cast("string") for c in bin_cols[:L]]
-        ).alias(f"prefix_{L}")
+        prefix = key_expr(index.specs[:L], BIN_SUFFIX)
         out = out.withColumn(f"prefix_{L}", prefix).join(
             F.broadcast(pa), f"prefix_{L}", "left"
         )

@@ -6,9 +6,7 @@ local tests exercise correctness, the docstrings carry the sizing rules.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -104,44 +102,6 @@ def stage_to_parquet(df: DataFrame, path: str, partition_cols: list[str] | None 
     return df.sparkSession.read.parquet(path)
 
 
-def repartition_for_output(
-    df: DataFrame, target_file_mb: int = 256, estimated_total_mb: int | None = None
-) -> DataFrame:
-    """Right-size output files: too many small files poison downstream
-    scans; too few underuse writers.  With AQE coalesce enabled the shuffle
-    partitions self-tune; this helper is the explicit form for final sinks."""
-    if estimated_total_mb is None:
-        return df.coalesce(max(1, df.rdd.getNumPartitions()))
-    n = max(1, estimated_total_mb // target_file_mb)
-    return df.repartition(n)
-
-
-@contextmanager
-def no_adaptive(spark):
-    """Disable AQE around a driver-side fit loop of small, fixed-shape
-    aggregate jobs.
-
-    AQE materializes every exchange as a separate re-planned stage; for a
-    one-row global aggregate whose reduce side is a single partition by
-    construction, that re-planning is pure per-job latency (measured on
-    the softmax fit step over a cached 600k-row relation: collect 0.43 s
-    with AQE vs 0.16 s without — the values are identical, AQE only
-    rewrites physical plans).  Worth it ONLY for loops issuing many tiny
-    jobs; leave AQE on for anything with joins (it is what upgrades a
-    checkpointed-relation join to broadcast) or real shuffle volume.
-
-    Session-wide and therefore single-threaded by assumption — the same
-    contract as graph.connected_components' shuffle_partitions knob.
-    Restores the previous setting on exit.
-    """
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 # spread() sizes its width from Catalyst's size estimate: one task per
 # this many estimated input bytes.  Deliberately TINY compared to the
 # 64-128 MB/task of byte-bound shuffles because spread's consumers are
@@ -156,7 +116,7 @@ def no_adaptive(spark):
 SPREAD_BYTES_PER_TASK = 16 << 10
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a NARROW relation toward the session's
     core count when its current layout yields fewer tasks than the data
     supports.
@@ -184,16 +144,11 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    if partitions:
-        target = partitions
-    else:
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:  # noqa: BLE001 — estimate is advisory only
-            est = 1 << 62
-        target = min(cores, max(1, est // SPREAD_BYTES_PER_TASK + 1))
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — estimate is advisory only
+        est = 1 << 62
+    target = min(cores, max(1, est // SPREAD_BYTES_PER_TASK + 1))
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

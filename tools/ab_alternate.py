@@ -9,8 +9,8 @@ Usage:
     python3 tools/ab_alternate.py <query> <toggle> <val_a> <val_b> [val_c ...] [--reps N]
 
 <toggle> is "module.attr" set before each sample, e.g.
-    python3 tools/ab_alternate.py connected_components \
-        inferdb_spark.operators.graph._PATH_COMPRESSIONS 1 2 3
+    python3 tools/ab_alternate.py split_leakage_audit \
+        inferdb_spark.scale.SPREAD_BYTES_PER_TASK 16384 32768
 or "conf:<spark.conf.key>" to toggle a runtime-settable Spark conf, e.g.
     python3 tools/ab_alternate.py bm25_ranked_retrieval \
         conf:spark.sql.adaptive.coalescePartitions.parallelismFirst true false
@@ -20,6 +20,7 @@ Values parse as int when possible, else float, else string
 
 from __future__ import annotations
 
+import argparse
 import importlib
 import os
 import statistics
@@ -46,13 +47,23 @@ def _parse(v: str):
         return v
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description="Alternating A/B timer for one gate query.")
+    ap.add_argument("query")
+    ap.add_argument("toggle", help='"module.attr" or "conf:<spark.conf.key>"')
+    ap.add_argument("values", nargs="+", metavar="value", help="one per side, at least two")
+    ap.add_argument("--reps", type=int, default=6, help="timed samples per side")
+    args = ap.parse_args(argv)
+    if len(args.values) < 2:
+        ap.error("give at least two values to compare")
+    if args.reps < 1:
+        ap.error("--reps must be at least 1")
+    return args
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 6
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1]) if "=" in a else reps
-    query, toggle = args[0], args[1]
+    args = parse_args()
+    query, toggle, reps = args.query, args.toggle, args.reps
 
     from inferdb_spark.gate import queries as gate_queries
     from inferdb_spark.session import get_spark
@@ -62,7 +73,7 @@ def main() -> None:
 
     if toggle.startswith("conf:"):
         key = toggle[5:]
-        values = list(args[2:])  # conf values stay strings
+        values = list(args.values)  # conf values stay strings
         orig = spark.conf.get(key, None)
 
         def setattr_toggle(v):
@@ -72,7 +83,7 @@ def main() -> None:
             if orig is not None:
                 spark.conf.set(key, orig)
     else:
-        values = [_parse(v) for v in args[2:]]
+        values = [_parse(v) for v in args.values]
         mod_name, attr = toggle.rsplit(".", 1)
         mod = importlib.import_module(mod_name)
         orig = getattr(mod, attr)
