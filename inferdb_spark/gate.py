@@ -170,56 +170,56 @@ def _ensure_registered() -> None:
 # headliners, TPC-H battery) is now the oldest tier and leads; any gate
 # added this round is never-checked and must be inserted ABOVE this block.
 _PRIORITY: list[str] = [
-    "bradley_terry_mm",
-    "elo_weekly_batch",
-    "dawid_skene_round",
-    "ndcg_at_k",
-    "mrr_first_relevant",
-    "gumbel_block_maxima",
-    "negbin_moments_fit",
-    "lognormal_conversion_fit",
-    "shannon_simpson_diversity",
-    "herfindahl_concentration",
-    "lasso_cd_replay",
-    "raking_ipf_weights",
-    "connected_components_star",
-    "hof_battery",
-    "decimal_exact_money",
-    "triangle_count",
-    "knn_regress",
-    "gbt_grad_histogram",
-    "kmv_distinct_sketch",
-    "media_image_decode",
-    "media_resize_roundtrip",
-    "media_audio_decode",
-    "media_video_frames",
-    "isotonic_calibration",
-    "winnowing_fingerprints",
-    "weighted_median",
-    "ks_statistic",
-    "regression_metrics",
-    "pii_redaction",
-    "paragraph_dedup_corpus",
-    "token_histogram",
-    "multiclass_metrics",
-    "distinct_paths",
-    "collect_sorted_list",
-    "hash_split_sample",
-    "date_arithmetic",
-    "edit_distance_pairs",
-    "sql_shared_text",
-    "cooccurrence_pairs",
-    "ntile_decile_stats",
-    "unpivot_measures",
-    "stratified_sample",
-    "tfidf_top_terms",
-    "group_zscore",
-    "stats_moments",
-    "array_functions",
-    "string_functions",
-    "json_extract",
-    "pivot_event_counts",
-    "range_frame_sum",
+    "map_functions",
+    "activity_islands",
+    "share_of_total",
+    "event_transitions",
+    "stream_index_score",
+    "gbt_train_predict",
+    "gbt_train_logistic",
+    "hist_quantile_sketch",
+    "hist_quantile_merge",
+    "bloom_prejoin_filter",
+    "cms_term_frequency",
+    "pagerank_supplier_part",
+    "spearman_rank_corr",
+    "mutual_information",
+    "token_budget_per_source",
+    "multiclass_prebin_stats",
+    "optbin_categorical_stats",
+    "iqr_range_prefilter",
+    "semantic_dedup",
+    "temperature_mixing",
+    "fasttext_quality_score",
+    "ivf_pq_search",
+    "bpe_fit_merges",
+    "bpe_segment_apply",
+    "sequence_packing",
+    "rrf_hybrid_retrieval",
+    "zipf_law_slope",
+    "hard_negative_mining",
+    "k_anonymity_suppress",
+    "dsir_selection",
+    "rollup_revenue",
+    "intersect_except",
+    "range_join_bands",
+    "cube_volume",
+    "window_value_functions",
+    "correlated_above_avg",
+    "full_outer_reconcile",
+    "null_safe_join",
+    "grouping_sets_mix",
+    "cdc_apply_changes",
+    "morton_zorder_key",
+    "column_profile",
+    "mad_outliers",
+    "try_safe_arithmetic",
+    "knn_classify",
+    "naive_bayes_model",
+    "naive_bayes_score",
+    "tree_score",
+    "gbt_score_sigmoid",
+    "linreg_gram",
 ]
 
 

@@ -13,18 +13,22 @@ reaching the driver.
 Scale shape (the 100 TB question): each step is a single map-side-combined
 `agg` over the training scan producing p+2 BIGINT sums — no shuffle wider
 than one combiner row per partition, no per-row state, nothing driver-side
-that grows with the data.  `n_steps` scans of the data total (persist the
-quantized projection once if the input is remote).
+that grows with the data.  `n_steps` scans of the cached quantized
+projection total.
 
-Determinism engineering (the gbt_train.py playbook, see _grad_hess there):
+The model has ONE definition: SQL text.  The per-step gradient the fit
+submits and the scoring Columns (`F.expr` over the same text) are built
+by the same `_margin_sql`; the DuckDB replay (`_replay_ctes`) and the
+numpy twins mirror it.  Determinism engineering (the gbt_train.py
+playbook, see _grad_hess there):
 
 - features are integer-quantized once: ``xq = floor(x*scale + 0.5)`` as
   BIGINT (floor(+0.5), NOT round(): Spark round is HALF_UP, DuckDB/numpy
   differ — floor-based snapping is identical everywhere);
 - the per-row margin is evaluated in written order
   ``((b + c0*t0) + c1*t1) + ...`` with ``t_j = xq_j / scale`` — identical
-  parenthesization in the Column tree, the DuckDB CTE chain, and the numpy
-  twin, so IEEE doubles agree bit-for-bit;
+  parenthesization in the Spark SQL text, the DuckDB CTE chain, and the
+  numpy twin, so IEEE doubles agree bit-for-bit;
 - the ONLY libm call, ``p = 1/(1+exp(-m))``, is snapped onto the 1e-6 grid
   immediately; the per-row gradient ``gq = floor((p-y)*1e6 + 0.5)`` and the
   products ``gq * xq_j`` are then exact BIGINTs, so the aggregated sums are
@@ -36,178 +40,214 @@ Determinism engineering (the gbt_train.py playbook, see _grad_hess there):
 
 from __future__ import annotations
 
+import math
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 GRID = 1_000_000  # 1e-6 probability grid, the gbt_train.py convention
+_GR = f"{float(GRID)!r}D"
+
+# -- the model as Spark SQL text ----------------------------------------------
+# Every fragment is fully parenthesized in written order and every double
+# literal is spelled `{x!r}D` (repr round-trips, the D suffix keeps it a
+# DOUBLE, not a DECIMAL), so the text parses to the same expression tree a
+# Column builder would make.  The margin is written over a per-feature
+# LEAF holding xq_j: `_xq{j}`, the BIGINT the fit caches once per row
+# (`_gd_input`), or `_xq_sql(col)`, the same quantization inline for
+# scoring.
 
 
-@dataclass
-class LogRegModel:
-    feature_cols: list[str]
-    coefs: list[float]
-    intercept: float
-    scale: int
-    n_steps: int
-    learning_rate: float
-
-    def margin(self) -> Column:
-        return _margin_expr(self.feature_cols, self.coefs, self.intercept, self.scale)
-
-    def probability(self) -> Column:
-        """Snapped-to-1e-6 P(y=1) as a Column over the feature columns."""
-        return _snap_prob(self.margin())
-
-    def prediction(self) -> Column:
-        return (self.probability() > F.lit(0.5)).cast("long")
+def _xq_sql(col: str, scale: int) -> str:
+    """floor(x*scale + 0.5) as BIGINT over a feature column."""
+    return f"CAST(FLOOR((`{col}` * {float(scale)!r}D) + 0.5D) AS BIGINT)"
 
 
-def _xq(col: str, scale: int) -> Column:
-    return F.floor(F.col(col) * F.lit(float(scale)) + F.lit(0.5)).cast("long")
+def _fit_leaves(p: int) -> list[str]:
+    return [f"_xq{j}" for j in range(p)]
 
 
-def _margin_from_ts(ts: list[Column], coefs: list[float], intercept: float) -> Column:
-    m = F.lit(float(intercept))
-    for t, b in zip(ts, coefs):
-        m = m + F.lit(float(b)) * t
-    return m
-
-
-def _margin_expr(
-    feature_cols: list[str], coefs: list[float], intercept: float, scale: int
-) -> Column:
-    ts = [_xq(c, scale).cast("double") / F.lit(float(scale)) for c in feature_cols]
-    return _margin_from_ts(ts, coefs, intercept)
-
-
-# -- quantize-once fit-loop input (optimization round 10) -------------------
-#
-# Every GD fit here runs n_steps sequential one-row aggregations.  The
-# original loops aggregated over the RAW df, so each step re-scanned the
-# parquet and re-quantized every feature — and on the single-row-group
-# local files that scan is ONE task, serializing each step's per-row work
-# (floor/exp/compare) on one core.  The prep below materializes the
-# integer quantizations ONCE into a spread, persisted projection; steps
-# then aggregate cached BIGINTs in parallel.
-#
-# Bit-exactness: the cached column _xq{j} holds exactly _xq(col, scale);
-# margins rebuild t = cast(_xq{j} AS DOUBLE) / scale — the same long
-# cast to the same double the inline form produces, so every
-# margin/probability/gradient value (and therefore every fitted
-# coefficient and the oracle replay) is unchanged.  The per-step sums are
-# exact BIGINTs, so the repartition cannot reorder anything observable.
-
-
-def _gd_input(
-    df: DataFrame, feature_cols: list[str], label_col: str, scale: int
-) -> DataFrame:
-    from inferdb_spark.scale import spread
-
-    proj = df.select(
-        *[_xq(c, scale).alias(f"_xq{j}") for j, c in enumerate(feature_cols)],
-        F.col(label_col).alias("_y"),
-    )
-    return spread(proj).persist()
-
-
-def _q_ts(p: int, scale: int) -> list[Column]:
-    return [
-        F.col(f"_xq{j}").cast("double") / F.lit(float(scale)) for j in range(p)
-    ]
-
-
-def _gd_sums(qdf: DataFrame, p: int, gq: Column) -> DataFrame:
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum(gq).alias("sg")]
-    for j in range(p):
-        aggs.append(F.sum(gq * F.col(f"_xq{j}")).alias(f"sgx_{j}"))
-    return qdf.agg(*aggs)
-
-
-# --- assembled-SQL twins of the per-step expressions (r10, guide §7.3) ---
-# The Column forms above build the margin/probability/gradient trees one
-# py4j call at a time, and _gd_sums re-evaluates the FULL gq tree (incl.
-# its exp) inside every aggregate child — p+1 evaluations per row where
-# one suffices (the poisson_bootstrap_ci finding, §1/§6 of
-# OPTIMIZATION_r10.md).  The twins below parse the identical expression
-# trees JVM-side in a handful of calls and project gq ONCE per row
-# before the aggregate.  Exactness: `{x!r}D` double literals round-trip
-# (the gate_r5c house pattern), every sub-tree is parenthesized to the
-# Column form's association, and the gradient sums are exact BIGINTs —
-# the numpy-parity tests and the full DuckDB fit replays pin the models.
-
-
-def _t_sql(j: int, scale: int) -> str:
-    """Textual twin of _q_ts()[j]."""
-    return f"(CAST(_xq{j} AS DOUBLE) / {float(scale)!r}D)"
-
-
-def _margin_sql(p: int, coefs: list[float], intercept: float, scale: int) -> str:
-    """Textual twin of _margin_from_ts(_q_ts(p, scale), coefs, intercept)."""
-    import math
-
+def _margin_sql(
+    leaves: list[str], coefs: list[float], intercept: float, scale: int
+) -> str:
+    """((b + c0*t0) + c1*t1) + ... with t_j = CAST(leaf_j AS DOUBLE)/scale."""
     # repr(inf/nan) is not a valid SQL double literal — a diverged fit
     # (oversized learning_rate) must fail with a diagnosis, not a
-    # ParseException deep in the step (round-10 advice item 1).
+    # ParseException deep in the step or the scoring projection.
     if not all(math.isfinite(c) for c in [intercept, *coefs]):
         raise ValueError(
             "fit diverged: non-finite coefficient/intercept "
             f"(intercept={intercept!r}, coefs={coefs!r}); lower learning_rate"
         )
     m = f"{float(intercept)!r}D"
-    for j in range(p):
-        m = f"({m} + ({float(coefs[j])!r}D * {_t_sql(j, scale)}))"
+    for leaf, c in zip(leaves, coefs):
+        m = f"({m} + ({float(c)!r}D * (CAST({leaf} AS DOUBLE) / {float(scale)!r}D)))"
     return m
 
 
-def _gd_step_row(qdf: DataFrame, p: int, gq_sql: str):
-    """One GD step's exact sums: project gq once per row (single
-    selectExpr parse), aggregate n/sg/sgx_j.  Same BIGINT sums as
-    _gd_sums over the same gq tree."""
+def _snap_prob(margin: str) -> str:
+    """1/(1+exp(-m)) snapped onto the 1e-6 grid."""
+    return f"(FLOOR(((1.0D / (1.0D + EXP(-({margin})))) * {_GR}) + 0.5D) / {_GR})"
+
+
+@dataclass
+class _LinearModel:
+    feature_cols: list[str]
+    coefs: list[float]
+    intercept: float
+    scale: int
+
+    def _margin_text(self) -> str:
+        leaves = [_xq_sql(c, self.scale) for c in self.feature_cols]
+        return _margin_sql(leaves, self.coefs, self.intercept, self.scale)
+
+    def margin(self) -> Column:
+        return F.expr(self._margin_text())
+
+
+@dataclass
+class LogRegModel(_LinearModel):
+    n_steps: int
+    learning_rate: float
+
+    def probability(self) -> Column:
+        """Snapped-to-1e-6 P(y=1) as a Column over the feature columns."""
+        return F.expr(_snap_prob(self._margin_text()))
+
+    def prediction(self) -> Column:
+        return F.expr(f"CAST(({_snap_prob(self._margin_text())} > 0.5D) AS BIGINT)")
+
+
+# -- the fixed-step GD driver loop shared by every Spark fit here -------------
+
+
+def _gd_input(
+    df: DataFrame, feature_cols: list[str], label_col: str, scale: int
+) -> DataFrame:
+    """The fit input: each feature quantized ONCE into `_xq{j}`, the label
+    as `_y`, spread and persisted, so every step aggregates cached BIGINTs
+    in parallel instead of re-scanning and re-quantizing the source."""
+    from inferdb_spark.scale import spread
+
+    proj = df.selectExpr(
+        *[f"{_xq_sql(c, scale)} AS _xq{j}" for j, c in enumerate(feature_cols)],
+        f"`{label_col}` AS _y",
+    )
+    return spread(proj).persist()
+
+
+def _gd_step(qdf: DataFrame, p: int, gqs: dict[str, str]) -> DataFrame:
+    """One step's exact sums over the fit input.  `gqs` maps a tag to a
+    per-row BIGINT gradient: each projects ONCE per row as `_gq{tag}`,
+    then n, sg[_tag] = SUM gq and sgx[_tag]_j = SUM gq*xq_j aggregate."""
     g = qdf.selectExpr(
-        f"{gq_sql} AS _gq", *[f"_xq{j}" for j in range(p)]
+        *[f"{sql} AS _gq{t}" for t, sql in gqs.items()], *_fit_leaves(p)
     )
-    return g.agg(
-        F.expr("count(1) AS n"),
-        F.expr("sum(_gq) AS sg"),
-        *[F.expr(f"sum(_gq * _xq{j}) AS sgx_{j}") for j in range(p)],
-    ).collect()[0]
+    aggs = [F.expr("count(1) AS n")]
+    for t in gqs:
+        sfx = f"_{t}" if t else ""
+        aggs.append(F.expr(f"sum(_gq{t}) AS sg{sfx}"))
+        aggs += [F.expr(f"sum(_gq{t} * _xq{j}) AS sgx{sfx}_{j}") for j in range(p)]
+    return g.agg(*aggs)
 
 
-def _logreg_gq_sql(p: int, coefs: list[float], intercept: float, scale: int) -> str:
-    """Twin of floor((snap_prob(margin) − y)·GRID + 0.5) cast long."""
-    gr = f"{float(GRID)!r}D"
-    m = _margin_sql(p, coefs, intercept, scale)
-    prob = f"(FLOOR(((1.0D / (1.0D + EXP(-({m})))) * {gr}) + 0.5D) / {gr})"
-    return (
-        f"CAST(FLOOR((({prob} - CAST(_y AS DOUBLE)) * {gr}) + 0.5D) AS BIGINT)"
-    )
-
-
-def _snap_prob(margin: Column) -> Column:
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-    return F.floor(p * F.lit(float(GRID)) + F.lit(0.5)) / F.lit(float(GRID))
-
-
-def gradient_relation(
+def _run_gd(
     df: DataFrame,
     feature_cols: list[str],
     label_col: str,
-    coefs: list[float],
-    intercept: float,
     scale: int,
-) -> DataFrame:
-    """One-row relation of exact integer gradient sums at the given
-    coefficients: n, sg = Σ gq, sgx_j = Σ gq·xq_j with
-    gq = floor((p−y)·1e6 + 0.5).  All BIGINT — bit-stable under shuffle."""
-    p = _snap_prob(_margin_expr(feature_cols, coefs, intercept, scale))
-    y = F.col(label_col).cast("double")
-    gq = F.floor((p - y) * F.lit(float(GRID)) + F.lit(0.5)).cast("long")
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum(gq).alias("sg")]
-    for j, c in enumerate(feature_cols):
-        aggs.append(F.sum(gq * _xq(c, scale)).alias(f"sgx_{j}"))
-    return df.agg(*aggs)
+    n_steps: int,
+    state,
+    gradient: Callable[..., dict[str, str]],
+    update: Callable,
+) -> list:
+    """Fixed-step full-batch GD: persist the fit input once, then per step
+    gradient(state) → one collected aggregate → update(state, row).
+    Returns the trajectory [state_0, ..., state_n_steps]; the cached
+    input is released on every path, a diverged fit included."""
+    p = len(feature_cols)
+    qdf = _gd_input(df, feature_cols, label_col, scale)
+    states = [state]
+    try:
+        for _ in range(n_steps):
+            row = _gd_step(qdf, p, gradient(states[-1])).collect()[0]
+            states.append(update(states[-1], row))
+    finally:
+        qdf.unpersist()
+    return states
+
+
+def _fit_linear(
+    df: DataFrame,
+    feature_cols: list[str],
+    label_col: str,
+    n_steps: int,
+    learning_rate: float,
+    scale: int,
+    gq_sql: Callable[[str], str],
+    lam: float | None = None,
+) -> list[tuple[float, list[float]]]:
+    """_run_gd for one coefficient vector from beta = 0.  gq_sql maps the
+    margin text to the per-row gradient; lam adds the L2 shrink term to
+    the coefficient (not the intercept) update.  Returns the
+    (intercept, coefs) trajectory."""
+    p = len(feature_cols)
+    lr = float(learning_rate)
+    leaves = _fit_leaves(p)
+
+    def gradient(state):
+        intercept, coefs = state
+        return {"": gq_sql(_margin_sql(leaves, coefs, intercept, scale))}
+
+    def update(state, row):
+        intercept, coefs = state
+        n = row["n"]
+        g = [row[f"sgx_{j}"] / (1000000.0 * scale * n) for j in range(p)]
+        if lam is None:
+            coefs = [coefs[j] - lr * g[j] for j in range(p)]
+        else:
+            coefs = [coefs[j] - lr * (g[j] + lam * coefs[j]) for j in range(p)]
+        return intercept - lr * (row["sg"] / (1000000.0 * n)), coefs
+
+    return _run_gd(
+        df, feature_cols, label_col, scale, n_steps, (0.0, [0.0] * p),
+        gradient, update,
+    )
+
+
+def _logreg_gq_sql(margin: str) -> str:
+    return (
+        f"CAST(FLOOR((({_snap_prob(margin)} - CAST(_y AS DOUBLE)) * {_GR})"
+        " + 0.5D) AS BIGINT)"
+    )
+
+
+def _logreg_trajectory(
+    df: DataFrame,
+    feature_cols: list[str],
+    label_col: str,
+    n_steps: int,
+    learning_rate: float,
+    scale: int,
+) -> list[LogRegModel]:
+    """The models beta_0..beta_K of one logreg fit."""
+    states = _fit_linear(
+        df, feature_cols, label_col, n_steps, learning_rate, scale,
+        _logreg_gq_sql,
+    )
+    return [
+        LogRegModel(
+            feature_cols=list(feature_cols),
+            coefs=coefs,
+            intercept=intercept,
+            scale=scale,
+            n_steps=n_steps,
+            learning_rate=float(learning_rate),
+        )
+        for intercept, coefs in states
+    ]
 
 
 def fit_logreg_gd(
@@ -222,32 +262,9 @@ def fit_logreg_gd(
     exact aggregation over the scan (p+2 BIGINT sums collected), then the
     O(p) double update on the driver — the kmeans-Lloyd/hist-GBT driver-loop
     shape, `.collect()` volume independent of row count."""
-    p = len(feature_cols)
-    coefs = [0.0] * p
-    intercept = 0.0
-    lr = float(learning_rate)
-    qdf = _gd_input(df, feature_cols, label_col, scale)
-    try:
-        for _ in range(n_steps):
-            row = _gd_step_row(
-                qdf, p, _logreg_gq_sql(p, coefs, intercept, scale)
-            )
-            n = row["n"]
-            intercept = intercept - lr * (row["sg"] / (1000000.0 * n))
-            coefs = [
-                coefs[j] - lr * (row[f"sgx_{j}"] / (1000000.0 * scale * n))
-                for j in range(p)
-            ]
-    finally:
-        qdf.unpersist()
-    return LogRegModel(
-        feature_cols=list(feature_cols),
-        coefs=coefs,
-        intercept=intercept,
-        scale=scale,
-        n_steps=n_steps,
-        learning_rate=lr,
-    )
+    return _logreg_trajectory(
+        df, feature_cols, label_col, n_steps, learning_rate, scale
+    )[-1]
 
 
 def fit_logreg_gd_history(
@@ -259,41 +276,93 @@ def fit_logreg_gd_history(
     scale: int = 10_000,
 ) -> list[LogRegModel]:
     """Like fit_logreg_gd but returns the PER-STEP model snapshots
-    beta_1..beta_K (same arithmetic, same gradient_relation aggregates) —
-    the input to dataset-cartography statistics, which need the model's
-    probability trajectory across training steps, not just the final
-    fit.  Driver traffic is still p+2 BIGINT sums per step."""
-    p = len(feature_cols)
-    coefs = [0.0] * p
-    intercept = 0.0
-    lr = float(learning_rate)
-    history: list[LogRegModel] = []
-    qdf = _gd_input(df, feature_cols, label_col, scale)
-    for _ in range(n_steps):
-        row = _gd_step_row(qdf, p, _logreg_gq_sql(p, coefs, intercept, scale))
-        n = row["n"]
-        intercept = intercept - lr * (row["sg"] / (1000000.0 * n))
-        coefs = [
-            coefs[j] - lr * (row[f"sgx_{j}"] / (1000000.0 * scale * n))
-            for j in range(p)
-        ]
-        history.append(
-            LogRegModel(
-                feature_cols=list(feature_cols),
-                coefs=list(coefs),
-                intercept=intercept,
-                scale=scale,
-                n_steps=n_steps,
-                learning_rate=lr,
-            )
-        )
-    qdf.unpersist()
-    return history
+    beta_1..beta_K (same arithmetic, same step aggregates) — the input to
+    dataset-cartography statistics, which need the model's probability
+    trajectory across training steps, not just the final fit.  Driver
+    traffic is still p+2 BIGINT sums per step."""
+    return _logreg_trajectory(
+        df, feature_cols, label_col, n_steps, learning_rate, scale
+    )[1:]
 
 
 # ---------------------------------------------------------------------------
 # DuckDB oracle: the ENTIRE fit replayed as one CTE chain (the
 # fit_predict_hist_gbt_sql standard) + final per-row scoring
+
+
+def _duck_xq(expr: str, scale: int) -> str:
+    return f"CAST(floor(({expr}) * {float(scale)!r} + 0.5) AS BIGINT)"
+
+
+def _replay_margin(src: str, p: int, scale: int) -> str:
+    """((b0 + (c0 * t0)) + (c1 * t1)) + ... over coefficient relation src."""
+    m = f"{src}.b0"
+    for j in range(p):
+        t = f"(CAST(x{j} AS DOUBLE) / {float(scale)!r})"
+        m = f"({m} + ({src}.c{j} * {t}))"
+    return m
+
+
+def _replay_prob(m: str) -> str:
+    return (
+        f"(floor((1.0 / (1.0 + exp(-({m})))) * {float(GRID)!r} + 0.5)"
+        f" / {float(GRID)!r})"
+    )
+
+
+def _replay_logreg_gq(m: str) -> str:
+    return f"CAST(floor(({_replay_prob(m)} - y) * {float(GRID)!r} + 0.5) AS BIGINT)"
+
+
+def _replay_ctes(
+    feature_sqls: list[str],
+    row_id_sql: str,
+    label: tuple[str, str],
+    gq_sql: Callable[[str], str],
+    n_steps: int,
+    learning_rate: float,
+    scale: int,
+    table: str,
+    where: str | None = None,
+    lam: float | None = None,
+) -> list[str]:
+    """The CTE chain every linear fit replays: quantize into `b` (row_id,
+    x_j, and the label column named label[0] computed as label[1]) →
+    (gradient-sum CTE s{k} → coefficient-update CTE beta{k+1}) × n_steps.
+    gq_sql maps a margin to the per-row gradient; lam adds the L2 shrink
+    term exactly as _fit_linear does.  beta{n_steps} holds the fit."""
+    p = len(feature_sqls)
+    lr = float(learning_rate)
+    name, expr = label
+    src_where = f" WHERE {where}" if where else ""
+    base_cols = ", ".join(
+        f"{_duck_xq(e, scale)} AS x{j}" for j, e in enumerate(feature_sqls)
+    )
+    xs = ", ".join(f"x{j}" for j in range(p))
+    ctes = [
+        f"b AS MATERIALIZED (SELECT CAST({row_id_sql} AS BIGINT) AS row_id, "
+        f"{base_cols}, {expr} AS {name} FROM {table}{src_where})",
+        "beta0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, "
+        + ", ".join(f"CAST(0.0 AS DOUBLE) AS c{j}" for j in range(p))
+        + ")",
+    ]
+    for k in range(n_steps):
+        gq = gq_sql(_replay_margin(f"beta{k}", p, scale))
+        sgx = ", ".join(f"SUM(gq * x{j}) AS sgx_{j}" for j in range(p))
+        ctes.append(
+            f"s{k} AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n, SUM(gq) AS sg, {sgx} "
+            f"FROM (SELECT {name}, {xs}, {gq} AS gq FROM b CROSS JOIN beta{k}))"
+        )
+        upd = [f"beta{k}.b0 - {lr!r} * (s{k}.sg / (1000000.0 * s{k}.n)) AS b0"]
+        for j in range(p):
+            g = f"s{k}.sgx_{j} / (1000000.0 * {scale} * s{k}.n)"
+            if lam is not None:
+                g += f" + {float(lam)!r} * beta{k}.c{j}"
+            upd.append(f"beta{k}.c{j} - {lr!r} * ({g}) AS c{j}")
+        ctes.append(
+            f"beta{k + 1} AS MATERIALIZED (SELECT {', '.join(upd)} FROM beta{k} CROSS JOIN s{k})"
+        )
+    return ctes
 
 
 def fit_predict_logreg_sql(
@@ -308,64 +377,19 @@ def fit_predict_logreg_sql(
     """Full training replay in DuckDB: quantize → (gradient-sum CTE →
     coefficient-update CTE) × n_steps → score every row with the final
     coefficients.  Generated from the SAME step/lr/scale literals as the
-    Spark fit; every arithmetic expression mirrors the Column tree's
+    Spark fit; every arithmetic expression mirrors the Spark SQL text's
     parenthesization so coefficients and probabilities are bit-identical."""
-    p = len(feature_sqls)
-    lr = float(learning_rate)
-
-    def xq_sql(expr: str) -> str:
-        return f"CAST(floor(({expr}) * {float(scale)!r} + 0.5) AS BIGINT)"
-
-    base_cols = ", ".join(
-        f"{xq_sql(e)} AS x{j}" for j, e in enumerate(feature_sqls)
+    ctes = _replay_ctes(
+        feature_sqls, row_id_sql, ("y", f"CAST({label_sql} AS DOUBLE)"),
+        _replay_logreg_gq, n_steps, learning_rate, scale, table,
     )
-    ctes = [
-        f"b AS MATERIALIZED (SELECT CAST({row_id_sql} AS BIGINT) AS row_id, "
-        f"{base_cols}, CAST({label_sql} AS DOUBLE) AS y FROM {table})",
-        "beta0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, "
-        + ", ".join(f"CAST(0.0 AS DOUBLE) AS c{j}" for j in range(p))
-        + ")",
-    ]
-
-    def margin_sql(src: str) -> str:
-        # ((b0 + (c0 * t0)) + (c1 * t1)) + ... — the Column tree's shape
-        m = f"{src}.b0"
-        for j in range(p):
-            t = f"(CAST(x{j} AS DOUBLE) / {float(scale)!r})"
-            m = f"({m} + ({src}.c{j} * {t}))"
-        return m
-
-    def prob_sql(m: str) -> str:
-        return f"(floor((1.0 / (1.0 + exp(-({m})))) * {float(GRID)!r} + 0.5) / {float(GRID)!r})"
-
-    for k in range(n_steps):
-        m = margin_sql(f"beta{k}")
-        gq = f"CAST(floor(({prob_sql(m)} - y) * {float(GRID)!r} + 0.5) AS BIGINT)"
-        sgx = ", ".join(f"SUM(gq * x{j}) AS sgx_{j}" for j in range(p))
-        ctes.append(
-            f"s{k} AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n, SUM(gq) AS sg, {sgx} "
-            f"FROM (SELECT y, {', '.join(f'x{j}' for j in range(p))}, {gq} AS gq "
-            f"FROM b CROSS JOIN beta{k}))"
-        )
-        upd = [
-            f"beta{k}.b0 - {lr!r} * (s{k}.sg / (1000000.0 * s{k}.n)) AS b0"
-        ]
-        for j in range(p):
-            upd.append(
-                f"beta{k}.c{j} - {lr!r} * (s{k}.sgx_{j} / "
-                f"(1000000.0 * {scale} * s{k}.n)) AS c{j}"
-            )
-        ctes.append(
-            f"beta{k + 1} AS MATERIALIZED (SELECT {', '.join(upd)} FROM beta{k} CROSS JOIN s{k})"
-        )
-
     final = f"beta{n_steps}"
-    m = margin_sql(final)
+    prob = _replay_prob(_replay_margin(final, len(feature_sqls), scale))
     return (
         "WITH "
         + ", ".join(ctes)
-        + f" SELECT row_id, CAST({prob_sql(m)} AS DOUBLE) AS prob, "
-        f"CAST(CASE WHEN {prob_sql(m)} > 0.5 THEN 1 ELSE 0 END AS BIGINT) AS pred "
+        + f" SELECT row_id, CAST({prob} AS DOUBLE) AS prob, "
+        f"CAST(CASE WHEN {prob} > 0.5 THEN 1 ELSE 0 END AS BIGINT) AS pred "
         f"FROM b CROSS JOIN {final} ORDER BY row_id"
     )
 
@@ -389,68 +413,21 @@ def cartography_sql(
     BIGINTs (std and mean are monotone in these, so region thresholds
     compare integers, no float tie-break anywhere)."""
     p = len(feature_sqls)
-    lr = float(learning_rate)
-    k_steps = n_steps
-
-    def xq_sql(expr: str) -> str:
-        return f"CAST(floor(({expr}) * {float(scale)!r} + 0.5) AS BIGINT)"
-
-    src_where = f" WHERE {where}" if where else ""
-    base_cols = ", ".join(
-        f"{xq_sql(e)} AS x{j}" for j, e in enumerate(feature_sqls)
+    ctes = _replay_ctes(
+        feature_sqls, row_id_sql, ("y", f"CAST({label_sql} AS DOUBLE)"),
+        _replay_logreg_gq, n_steps, learning_rate, scale, table, where=where,
     )
-    ctes = [
-        f"b AS MATERIALIZED (SELECT CAST({row_id_sql} AS BIGINT) AS row_id, "
-        f"{base_cols}, CAST({label_sql} AS DOUBLE) AS y FROM {table}{src_where})",
-        "beta0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, "
-        + ", ".join(f"CAST(0.0 AS DOUBLE) AS c{j}" for j in range(p))
-        + ")",
-    ]
-
-    def margin_sql(src: str) -> str:
-        m = f"{src}.b0"
-        for j in range(p):
-            t = f"(CAST(x{j} AS DOUBLE) / {float(scale)!r})"
-            m = f"({m} + ({src}.c{j} * {t}))"
-        return m
-
-    def prob_sql(m: str) -> str:
-        return (
-            f"(floor((1.0 / (1.0 + exp(-({m})))) * {float(GRID)!r} + 0.5)"
-            f" / {float(GRID)!r})"
-        )
-
-    for k in range(n_steps):
-        m = margin_sql(f"beta{k}")
-        gq = f"CAST(floor(({prob_sql(m)} - y) * {float(GRID)!r} + 0.5) AS BIGINT)"
-        sgx = ", ".join(f"SUM(gq * x{j}) AS sgx_{j}" for j in range(p))
-        ctes.append(
-            f"s{k} AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n, "
-            f"SUM(gq) AS sg, {sgx} "
-            f"FROM (SELECT y, {', '.join(f'x{j}' for j in range(p))}, {gq} AS gq "
-            f"FROM b CROSS JOIN beta{k}))"
-        )
-        upd = [f"beta{k}.b0 - {lr!r} * (s{k}.sg / (1000000.0 * s{k}.n)) AS b0"]
-        for j in range(p):
-            upd.append(
-                f"beta{k}.c{j} - {lr!r} * (s{k}.sgx_{j} / "
-                f"(1000000.0 * {scale} * s{k}.n)) AS c{j}"
-            )
-        ctes.append(
-            f"beta{k + 1} AS MATERIALIZED (SELECT {', '.join(upd)} "
-            f"FROM beta{k} CROSS JOIN s{k})"
-        )
-
     betas = ", ".join(f"beta{k}" for k in range(1, n_steps + 1))
     ptus = []
     for k in range(1, n_steps + 1):
-        pk = prob_sql(margin_sql(f"beta{k}"))
+        pk = _replay_prob(_replay_margin(f"beta{k}", p, scale))
         pu = f"CAST(round({pk} * {float(GRID)!r}) AS BIGINT)"
         ptus.append(
             f"(CASE WHEN y = 1.0 THEN {pu} ELSE {GRID} - {pu} END) AS ptu{k}"
         )
     sum_pt = " + ".join(f"ptu{k}" for k in range(1, n_steps + 1))
     sum_pt2 = " + ".join(f"ptu{k} * ptu{k}" for k in range(1, n_steps + 1))
+    easy, hard, ambig = cartography_thresholds(n_steps)
     return (
         "WITH "
         + ", ".join(ctes)
@@ -458,12 +435,12 @@ def cartography_sql(
         f"FROM b CROSS JOIN {betas})"
         f", stats AS (SELECT row_id, label, "
         f"CAST({sum_pt} AS BIGINT) AS conf_u, "
-        f"CAST({k_steps} * ({sum_pt2}) - ({sum_pt}) * ({sum_pt}) AS BIGINT)"
+        f"CAST({n_steps} * ({sum_pt2}) - ({sum_pt}) * ({sum_pt}) AS BIGINT)"
         f" AS var_x FROM steps) "
         f"SELECT row_id, label, conf_u, var_x, "
-        f"(CASE WHEN var_x >= {cartography_thresholds(n_steps)[2]} THEN 'ambiguous' "
-        f"WHEN conf_u >= {cartography_thresholds(n_steps)[0]} THEN 'easy' "
-        f"WHEN conf_u <= {cartography_thresholds(n_steps)[1]} THEN 'hard' "
+        f"(CASE WHEN var_x >= {ambig} THEN 'ambiguous' "
+        f"WHEN conf_u >= {easy} THEN 'easy' "
+        f"WHEN conf_u <= {hard} THEN 'hard' "
         f"ELSE 'mid' END) AS region FROM stats ORDER BY row_id"
     )
 
@@ -527,39 +504,13 @@ def fit_logreg_numpy(
 
 
 @dataclass
-class QuantRegModel:
-    feature_cols: list[str]
-    coefs: list[float]
-    intercept: float
-    scale: int
+class QuantRegModel(_LinearModel):
     tau_micro: int  # tau * 1e6, exact
     n_steps: int
     learning_rate: float
 
     def prediction(self) -> Column:
-        return _margin_expr(self.feature_cols, self.coefs, self.intercept, self.scale)
-
-
-def quantile_gradient_relation(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    coefs: list[float],
-    intercept: float,
-    scale: int,
-    tau_micro: int,
-) -> DataFrame:
-    """One-row relation of exact integer pinball-gradient sums: gq is
-    -tau_micro when y > f else GRID - tau_micro."""
-    m = _margin_expr(feature_cols, coefs, intercept, scale)
-    y = F.col(label_col).cast("double")
-    gq = (
-        F.when(y > m, F.lit(-tau_micro)).otherwise(F.lit(GRID - tau_micro))
-    ).cast("long")
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum(gq).alias("sg")]
-    for j, c in enumerate(feature_cols):
-        aggs.append(F.sum(gq * _xq(c, scale)).alias(f"sgx_{j}"))
-    return df.agg(*aggs)
+        return self.margin()
 
 
 def fit_quantile_gd(
@@ -572,31 +523,22 @@ def fit_quantile_gd(
     scale: int = 10_000,
 ) -> QuantRegModel:
     """Fixed-step full-batch subgradient descent from beta = 0 — the
-    fit_logreg_gd loop with the pinball gradient."""
-    p = len(feature_cols)
-    coefs = [0.0] * p
-    intercept = 0.0
-    lr = float(learning_rate)
-    qdf = _gd_input(df, feature_cols, label_col, scale)
-    try:
-        for _ in range(n_steps):
-            m = _margin_sql(p, coefs, intercept, scale)
-            gq_sql = (
-                f"CAST(CASE WHEN CAST(_y AS DOUBLE) > {m} THEN {-tau_micro} "
-                f"ELSE {GRID - tau_micro} END AS BIGINT)"
-            )
-            row = _gd_step_row(qdf, p, gq_sql)
-            n = row["n"]
-            intercept = intercept - lr * (row["sg"] / (1000000.0 * n))
-            coefs = [
-                coefs[j] - lr * (row[f"sgx_{j}"] / (1000000.0 * scale * n))
-                for j in range(p)
-            ]
-    finally:
-        qdf.unpersist()
+    fit_logreg_gd loop with the pinball gradient: gq is -tau_micro when
+    y > f else GRID - tau_micro."""
+
+    def gq_sql(m: str) -> str:
+        return (
+            f"CAST(CASE WHEN CAST(_y AS DOUBLE) > {m} THEN {-tau_micro} "
+            f"ELSE {GRID - tau_micro} END AS BIGINT)"
+        )
+
+    intercept, coefs = _fit_linear(
+        df, feature_cols, label_col, n_steps, learning_rate, scale, gq_sql
+    )[-1]
     return QuantRegModel(
         feature_cols=list(feature_cols), coefs=coefs, intercept=intercept,
-        scale=scale, tau_micro=tau_micro, n_steps=n_steps, learning_rate=lr,
+        scale=scale, tau_micro=tau_micro, n_steps=n_steps,
+        learning_rate=float(learning_rate),
     )
 
 
@@ -613,56 +555,19 @@ def fit_predict_quantile_sql(
     """Full quantile-regression training replay in DuckDB (the
     fit_predict_logreg_sql chain with the pinball gradient), scoring every
     row with the final coefficients (6dp-rounded predictions)."""
-    p = len(feature_sqls)
-    lr = float(learning_rate)
 
-    def xq_sql(expr: str) -> str:
-        return f"CAST(floor(({expr}) * {float(scale)!r} + 0.5) AS BIGINT)"
-
-    base_cols = ", ".join(
-        f"{xq_sql(e)} AS x{j}" for j, e in enumerate(feature_sqls)
-    )
-    ctes = [
-        f"b AS MATERIALIZED (SELECT CAST({row_id_sql} AS BIGINT) AS row_id, "
-        f"{base_cols}, CAST({label_sql} AS DOUBLE) AS y FROM {table})",
-        "beta0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, "
-        + ", ".join(f"CAST(0.0 AS DOUBLE) AS c{j}" for j in range(p))
-        + ")",
-    ]
-
-    def margin_sql(src: str) -> str:
-        m = f"{src}.b0"
-        for j in range(p):
-            t = f"(CAST(x{j} AS DOUBLE) / {float(scale)!r})"
-            m = f"({m} + ({src}.c{j} * {t}))"
-        return m
-
-    for k in range(n_steps):
-        m = margin_sql(f"beta{k}")
-        gq = (
+    def gq_sql(m: str) -> str:
+        return (
             f"CAST(CASE WHEN y > {m} THEN {-tau_micro} "
             f"ELSE {GRID - tau_micro} END AS BIGINT)"
         )
-        sgx = ", ".join(f"SUM(gq * x{j}) AS sgx_{j}" for j in range(p))
-        ctes.append(
-            f"s{k} AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n, SUM(gq) AS sg, {sgx} "
-            f"FROM (SELECT y, {', '.join(f'x{j}' for j in range(p))}, {gq} AS gq "
-            f"FROM b CROSS JOIN beta{k}))"
-        )
-        upd = [
-            f"beta{k}.b0 - {lr!r} * (s{k}.sg / (1000000.0 * s{k}.n)) AS b0"
-        ]
-        for j in range(p):
-            upd.append(
-                f"beta{k}.c{j} - {lr!r} * (s{k}.sgx_{j} / "
-                f"(1000000.0 * {scale} * s{k}.n)) AS c{j}"
-            )
-        ctes.append(
-            f"beta{k + 1} AS MATERIALIZED (SELECT {', '.join(upd)} FROM beta{k} CROSS JOIN s{k})"
-        )
 
+    ctes = _replay_ctes(
+        feature_sqls, row_id_sql, ("y", f"CAST({label_sql} AS DOUBLE)"),
+        gq_sql, n_steps, learning_rate, scale, table,
+    )
     final = f"beta{n_steps}"
-    m = margin_sql(final)
+    m = _replay_margin(final, len(feature_sqls), scale)
     return (
         "WITH "
         + ", ".join(ctes)
@@ -721,41 +626,13 @@ def fit_quantile_numpy(
 
 
 @dataclass
-class SVMModel:
-    feature_cols: list[str]
-    coefs: list[float]
-    intercept: float
-    scale: int
+class SVMModel(_LinearModel):
     lam: float
     n_steps: int
     learning_rate: float
 
-    def margin(self) -> Column:
-        return _margin_expr(self.feature_cols, self.coefs, self.intercept, self.scale)
-
     def prediction(self) -> Column:
-        return (self.margin() > F.lit(0.0)).cast("long")
-
-
-def svm_gradient_relation(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    coefs: list[float],
-    intercept: float,
-    scale: int,
-) -> DataFrame:
-    """One-row relation of exact integer hinge-gradient sums: with
-    s = 2y - 1, gq = -s*GRID when s*f < 1 else 0 (BIGINT, order-free)."""
-    m = _margin_expr(feature_cols, coefs, intercept, scale)
-    s = F.lit(2.0) * F.col(label_col).cast("double") - F.lit(1.0)
-    gq = (
-        F.when((s * m) < F.lit(1.0), (-s) * F.lit(float(GRID))).otherwise(F.lit(0.0))
-    ).cast("long")
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum(gq).alias("sg")]
-    for j, c in enumerate(feature_cols):
-        aggs.append(F.sum(gq * _xq(c, scale)).alias(f"sgx_{j}"))
-    return df.agg(*aggs)
+        return F.expr(f"CAST(({self._margin_text()} > 0.0D) AS BIGINT)")
 
 
 def fit_svm_gd(
@@ -769,34 +646,24 @@ def fit_svm_gd(
 ) -> SVMModel:
     """Fixed-step full-batch subgradient descent from beta = 0 — the
     fit_logreg_gd driver loop with the hinge gradient and an L2 shrink
-    term on the coefficients (intercept unregularized, as usual)."""
-    p = len(feature_cols)
-    coefs = [0.0] * p
-    intercept = 0.0
-    lr = float(learning_rate)
-    lamf = float(lam)
-    qdf = _gd_input(df, feature_cols, label_col, scale)
-    # textual twin of  y_sign = 2.0·y − 1.0  (duplicated where the Column
-    # form reused the subexpression — identical tree either way)
+    term on the coefficients (intercept unregularized, as usual).  With
+    s = 2y - 1, gq = -s*GRID when s*f < 1 else 0."""
     ys = "((2.0D * CAST(_y AS DOUBLE)) - 1.0D)"
-    for _ in range(n_steps):
-        m = _margin_sql(p, coefs, intercept, scale)
-        gq_sql = (
+
+    def gq_sql(m: str) -> str:
+        return (
             f"CAST(CASE WHEN ({ys} * {m}) < 1.0D "
-            f"THEN (-{ys}) * {float(GRID)!r}D ELSE 0.0D END AS BIGINT)"
+            f"THEN (-{ys}) * {_GR} ELSE 0.0D END AS BIGINT)"
         )
-        row = _gd_step_row(qdf, p, gq_sql)
-        n = row["n"]
-        intercept = intercept - lr * (row["sg"] / (1000000.0 * n))
-        coefs = [
-            coefs[j]
-            - lr * (row[f"sgx_{j}"] / (1000000.0 * scale * n) + lamf * coefs[j])
-            for j in range(p)
-        ]
-    qdf.unpersist()
+
+    intercept, coefs = _fit_linear(
+        df, feature_cols, label_col, n_steps, learning_rate, scale, gq_sql,
+        lam=float(lam),
+    )[-1]
     return SVMModel(
         feature_cols=list(feature_cols), coefs=coefs, intercept=intercept,
-        scale=scale, lam=lamf, n_steps=n_steps, learning_rate=lr,
+        scale=scale, lam=float(lam), n_steps=n_steps,
+        learning_rate=float(learning_rate),
     )
 
 
@@ -813,57 +680,20 @@ def fit_predict_svm_sql(
     """Full linear-SVM training replay in DuckDB (the fit_predict_logreg_sql
     chain with the hinge gradient and L2-shrunk coefficient updates),
     scoring every row with the final hyperplane."""
-    p = len(feature_sqls)
-    lr = float(learning_rate)
-    lamf = float(lam)
 
-    def xq_sql(expr: str) -> str:
-        return f"CAST(floor(({expr}) * {float(scale)!r} + 0.5) AS BIGINT)"
-
-    base_cols = ", ".join(
-        f"{xq_sql(e)} AS x{j}" for j, e in enumerate(feature_sqls)
-    )
-    ctes = [
-        f"b AS MATERIALIZED (SELECT CAST({row_id_sql} AS BIGINT) AS row_id, "
-        f"{base_cols}, (2.0 * CAST({label_sql} AS DOUBLE) - 1.0) AS s FROM {table})",
-        "beta0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, "
-        + ", ".join(f"CAST(0.0 AS DOUBLE) AS c{j}" for j in range(p))
-        + ")",
-    ]
-
-    def margin_sql(src: str) -> str:
-        m = f"{src}.b0"
-        for j in range(p):
-            t = f"(CAST(x{j} AS DOUBLE) / {float(scale)!r})"
-            m = f"({m} + ({src}.c{j} * {t}))"
-        return m
-
-    for k in range(n_steps):
-        m = margin_sql(f"beta{k}")
-        gq = (
+    def gq_sql(m: str) -> str:
+        return (
             f"CAST(CASE WHEN (s * {m}) < 1.0 "
             f"THEN (-s) * {float(GRID)!r} ELSE 0.0 END AS BIGINT)"
         )
-        sgx = ", ".join(f"SUM(gq * x{j}) AS sgx_{j}" for j in range(p))
-        ctes.append(
-            f"s{k} AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n, SUM(gq) AS sg, {sgx} "
-            f"FROM (SELECT s, {', '.join(f'x{j}' for j in range(p))}, {gq} AS gq "
-            f"FROM b CROSS JOIN beta{k}))"
-        )
-        upd = [
-            f"beta{k}.b0 - {lr!r} * (s{k}.sg / (1000000.0 * s{k}.n)) AS b0"
-        ]
-        for j in range(p):
-            upd.append(
-                f"beta{k}.c{j} - {lr!r} * (s{k}.sgx_{j} / "
-                f"(1000000.0 * {scale} * s{k}.n) + {lamf!r} * beta{k}.c{j}) AS c{j}"
-            )
-        ctes.append(
-            f"beta{k + 1} AS MATERIALIZED (SELECT {', '.join(upd)} FROM beta{k} CROSS JOIN s{k})"
-        )
 
+    ctes = _replay_ctes(
+        feature_sqls, row_id_sql,
+        ("s", f"(2.0 * CAST({label_sql} AS DOUBLE) - 1.0)"),
+        gq_sql, n_steps, learning_rate, scale, table, lam=float(lam),
+    )
     final = f"beta{n_steps}"
-    m = margin_sql(final)
+    m = _replay_margin(final, len(feature_sqls), scale)
     return (
         "WITH "
         + ", ".join(ctes)

@@ -21,7 +21,8 @@ Determinism (see logreg.py for the full rationale):
 - softmax probabilities p_c = exp(m_c) / ((exp(m_0) + exp(m_1)) + ...)
   with the denominator summed in class order, then snapped to the 1e-6
   grid — ONE division per class, identical parenthesization in the
-  Column tree, the DuckDB CTE chain, and the numpy twin;
+  Spark SQL text (fit steps and scoring alike), the DuckDB CTE chain,
+  and the numpy twin;
 - per-row gradients gq_c = floor((p_c - y_c)*1e6 + 0.5) and products
   gq_c * xq_j are exact BIGINTs → order-independent sums;
 - argmax prediction ties break to the LOWEST class index on both sides.
@@ -34,21 +35,26 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-GRID = 1_000_000
+from inferdb_spark.operators.logreg import (
+    _GR,
+    GRID,
+    _duck_xq,
+    _fit_leaves,
+    _margin_sql,
+    _run_gd,
+    _xq_sql,
+)
 
 
-def _xq(col: str, scale: int) -> Column:
-    return F.floor(F.col(col) * F.lit(float(scale)) + F.lit(0.5)).cast("long")
-
-
-def _margin_expr(
-    feature_cols: list[str], coefs: list[float], intercept: float, scale: int
-) -> Column:
-    m = F.lit(float(intercept))
-    for c, b in zip(feature_cols, coefs):
-        t = _xq(c, scale).cast("double") / F.lit(float(scale))
-        m = m + F.lit(float(b)) * t
-    return m
+def _prob_sqls(margins: list[str]) -> list[str]:
+    """1e-6-snapped softmax probabilities, denominator folded in class
+    order (written-order parenthesization)."""
+    denom = f"EXP({margins[0]})"
+    for m in margins[1:]:
+        denom = f"({denom} + EXP({m}))"
+    return [
+        f"(FLOOR(((EXP({m}) / {denom}) * {_GR}) + 0.5D) / {_GR})" for m in margins
+    ]
 
 
 @dataclass
@@ -61,153 +67,32 @@ class SoftmaxModel:
     n_steps: int
     learning_rate: float
 
-    def margins(self) -> list[Column]:
+    def _margin_texts(self) -> list[str]:
+        leaves = [_xq_sql(c, self.scale) for c in self.feature_cols]
         return [
-            _margin_expr(self.feature_cols, self.coefs[c], self.intercepts[c], self.scale)
+            _margin_sql(leaves, self.coefs[c], self.intercepts[c], self.scale)
             for c in range(self.n_classes)
         ]
 
+    def margins(self) -> list[Column]:
+        return [F.expr(m) for m in self._margin_texts()]
+
     def probabilities(self) -> list[Column]:
-        """1e-6-snapped softmax probabilities, denominator folded in class
-        order (written-order parenthesization)."""
-        ms = self.margins()
-        denom = F.exp(ms[0])
-        for m in ms[1:]:
-            denom = denom + F.exp(m)
-        return [
-            F.floor(F.exp(m) / denom * F.lit(float(GRID)) + F.lit(0.5))
-            / F.lit(float(GRID))
-            for m in ms
-        ]
+        return [F.expr(p) for p in _prob_sqls(self._margin_texts())]
 
     def prediction(self) -> Column:
         """Argmax class, ties to the LOWEST class index: class c wins iff
-        p_c >= p_k for every k > c and p_c > p_k is not required for k < c
-        (strictly-greater already handled by the when-chain order)."""
-        ps = self.probabilities()
-        expr = F.lit(self.n_classes - 1)
+        p_c >= p_k for every k > c (a strictly greater p_k for k < c is
+        already handled by the CASE chain checking class 0 first)."""
+        ps = _prob_sqls(self._margin_texts())
+        expr = str(self.n_classes - 1)
         # build the chain backwards so class 0's condition is checked first
         for c in range(self.n_classes - 2, -1, -1):
-            cond = F.lit(True)
-            for k in range(c + 1, self.n_classes):
-                cond = cond & (ps[c] >= ps[k])
-            expr = F.when(cond, F.lit(c)).otherwise(expr)
-        return expr.cast("long")
-
-
-def gradient_relation(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    coefs: list[list[float]],
-    intercepts: list[float],
-    scale: int,
-) -> DataFrame:
-    """One-row relation of exact integer softmax gradient sums:
-    n, and per class c: sg_c = SUM gq_c, sgx_c_j = SUM gq_c * xq_j with
-    gq_c = floor((p_c - [y=c])*1e6 + 0.5).  All BIGINT."""
-    n_classes = len(coefs)
-    model = SoftmaxModel(
-        feature_cols=list(feature_cols), n_classes=n_classes, coefs=coefs,
-        intercepts=intercepts, scale=scale, n_steps=0, learning_rate=0.0,
-    )
-    ps = model.probabilities()
-    y = F.col(label_col).cast("long")
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for c in range(n_classes):
-        yc = (y == c).cast("double")
-        gq = F.floor((ps[c] - yc) * F.lit(float(GRID)) + F.lit(0.5)).cast("long")
-        aggs.append(F.sum(gq).alias(f"sg_{c}"))
-        for j, col in enumerate(feature_cols):
-            aggs.append(F.sum(gq * _xq(col, scale)).alias(f"sgx_{c}_{j}"))
-    return df.agg(*aggs)
-
-
-def _gradient_relation_q(
-    qdf: DataFrame,
-    p: int,
-    label_col: str,
-    coefs: list[list[float]],
-    intercepts: list[float],
-    scale: int,
-) -> DataFrame:
-    """gradient_relation reading the PRE-QUANTIZED fit input (_xq{j}
-    BIGINT columns): identical expression tree except the xq leaves are
-    cached longs instead of floor(col*scale+0.5) recomputed per row —
-    same values, same written-order parenthesization, same snapping."""
-    n_classes = len(coefs)
-    ms = []
-    for c in range(n_classes):
-        m = F.lit(float(intercepts[c]))
-        for j in range(p):
-            t = F.col(f"_xq{j}").cast("double") / F.lit(float(scale))
-            m = m + F.lit(float(coefs[c][j])) * t
-        ms.append(m)
-    denom = F.exp(ms[0])
-    for m in ms[1:]:
-        denom = denom + F.exp(m)
-    ps = [
-        F.floor(F.exp(m) / denom * F.lit(float(GRID)) + F.lit(0.5))
-        / F.lit(float(GRID))
-        for m in ms
-    ]
-    y = F.col(label_col).cast("long")
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for c in range(n_classes):
-        yc = (y == c).cast("double")
-        gq = F.floor((ps[c] - yc) * F.lit(float(GRID)) + F.lit(0.5)).cast("long")
-        aggs.append(F.sum(gq).alias(f"sg_{c}"))
-        for j in range(p):
-            aggs.append(F.sum(gq * F.col(f"_xq{j}")).alias(f"sgx_{c}_{j}"))
-    return qdf.agg(*aggs)
-
-
-def _gradient_step_row_sql(
-    qdf: DataFrame,
-    p: int,
-    label_col: str,
-    coefs: list[list[float]],
-    intercepts: list[float],
-    scale: int,
-):
-    """Assembled-SQL twin of _gradient_relation_q + collect (r10, guide
-    §7.3 — the operators/logreg._gd_step_row pattern): the Column form
-    paid C·(p+1) py4j-built aggregate children, each re-evaluating the
-    full softmax (C exps) per row; here every per-class gq projects ONCE
-    per row from one selectExpr parse and the aggregates read the
-    projected BIGINTs.  Identical expression trees ({x!r}D literals,
-    Column-form association), exact integer sums — the numpy-parity test
-    and the DuckDB full-fit replay pin the fitted matrix."""
-    n_classes = len(coefs)
-    gr = f"{float(GRID)!r}D"
-    ms = []
-    for c in range(n_classes):
-        m = f"{float(intercepts[c])!r}D"
-        for j in range(p):
-            m = (
-                f"({m} + ({float(coefs[c][j])!r}D *"
-                f" (CAST(_xq{j} AS DOUBLE) / {float(scale)!r}D)))"
+            cond = " AND ".join(
+                f"({ps[c]} >= {ps[k]})" for k in range(c + 1, self.n_classes)
             )
-        ms.append(m)
-    denom = f"EXP({ms[0]})"
-    for m in ms[1:]:
-        denom = f"({denom} + EXP({m}))"
-    gqs = []
-    for c in range(n_classes):
-        pc = f"(FLOOR(((EXP({ms[c]}) / {denom}) * {gr}) + 0.5D) / {gr})"
-        # backtick-quote the identifier: raw splicing breaks on any column
-        # name needing quoting (round-10 advice item 2)
-        yc = f"CAST((CAST(`{label_col}` AS BIGINT) = {c}) AS DOUBLE)"
-        gqs.append(
-            f"CAST(FLOOR((({pc} - {yc}) * {gr}) + 0.5D) AS BIGINT) AS _gq{c}"
-        )
-    g = qdf.selectExpr(*gqs, *[f"_xq{j}" for j in range(p)])
-    aggs = [F.expr("count(1) AS n")]
-    for c in range(n_classes):
-        aggs.append(F.expr(f"sum(_gq{c}) AS sg_{c}"))
-        for j in range(p):
-            aggs.append(F.expr(f"sum(_gq{c} * _xq{j}) AS sgx_{c}_{j}"))
-    return g.agg(*aggs).collect()[0]
+            expr = f"CASE WHEN {cond} THEN {c} ELSE {expr} END"
+        return F.expr(f"CAST({expr} AS BIGINT)")
 
 
 def fit_softmax_gd(
@@ -219,46 +104,49 @@ def fit_softmax_gd(
     learning_rate: float = 1.0,
     scale: int = 10_000,
 ) -> SoftmaxModel:
-    """Fixed-step full-batch softmax GD from the zero matrix.  Per step one
-    exact aggregation (C*(p+1)+1 BIGINT sums) reaches the driver."""
+    """Fixed-step full-batch softmax GD from the zero matrix
+    (operators/logreg._run_gd).  Per step one exact aggregation
+    (C*(p+1)+1 BIGINT sums) reaches the driver: per class c,
+    sg_c = SUM gq_c and sgx_c_j = SUM gq_c * xq_j with
+    gq_c = floor((p_c - [y=c])*1e6 + 0.5)."""
     p = len(feature_cols)
-    coefs = [[0.0] * p for _ in range(n_classes)]
-    intercepts = [0.0] * n_classes
     lr = float(learning_rate)
-    # quantize-once fit input (see operators/logreg._gd_input): the
-    # integer feature quantizations and the label are materialized into a
-    # spread, persisted projection so each of the n_steps aggregations
-    # reads cached BIGINTs in parallel instead of re-scanning the (one-
-    # row-group, one-task) parquet and re-quantizing per row per step.
-    # The cached _xq{j} is exactly _xq(col, scale); margins rebuild
-    # t = cast(_xq{j} AS DOUBLE)/scale — bit-identical to the inline form,
-    # and the gradient sums are exact BIGINTs, so the fitted matrix (and
-    # the DuckDB fit replay) is unchanged.
-    from inferdb_spark.scale import spread
+    leaves = _fit_leaves(p)
 
-    qdf = spread(
-        df.select(
-            *[_xq(c, scale).alias(f"_xq{j}") for j, c in enumerate(feature_cols)],
-            F.col(label_col).alias("_y"),
-        )
-    ).persist()
-    for _ in range(n_steps):
-        row = _gradient_step_row_sql(qdf, p, label_col="_y", coefs=coefs,
-                                     intercepts=intercepts, scale=scale)
+    def gradient(state):
+        intercepts, coefs = state
+        ps = _prob_sqls([
+            _margin_sql(leaves, coefs[c], intercepts[c], scale)
+            for c in range(n_classes)
+        ])
+        return {
+            str(c): f"CAST(FLOOR((({ps[c]} - CAST((CAST(`_y` AS BIGINT) = {c})"
+            f" AS DOUBLE)) * {_GR}) + 0.5D) AS BIGINT)"
+            for c in range(n_classes)
+        }
+
+    def update(state, row):
+        intercepts, coefs = state
         n = row["n"]
-        intercepts = [
-            intercepts[c] - lr * (row[f"sg_{c}"] / (1000000.0 * n))
-            for c in range(n_classes)
-        ]
-        coefs = [
+        return (
             [
-                coefs[c][j]
-                - lr * (row[f"sgx_{c}_{j}"] / (1000000.0 * scale * n))
-                for j in range(p)
-            ]
-            for c in range(n_classes)
-        ]
-    qdf.unpersist()
+                intercepts[c] - lr * (row[f"sg_{c}"] / (1000000.0 * n))
+                for c in range(n_classes)
+            ],
+            [
+                [
+                    coefs[c][j]
+                    - lr * (row[f"sgx_{c}_{j}"] / (1000000.0 * scale * n))
+                    for j in range(p)
+                ]
+                for c in range(n_classes)
+            ],
+        )
+
+    zero = ([0.0] * n_classes, [[0.0] * p for _ in range(n_classes)])
+    intercepts, coefs = _run_gd(
+        df, feature_cols, label_col, scale, n_steps, zero, gradient, update
+    )[-1]
     return SoftmaxModel(
         feature_cols=list(feature_cols), n_classes=n_classes, coefs=coefs,
         intercepts=intercepts, scale=scale, n_steps=n_steps, learning_rate=lr,
@@ -286,11 +174,8 @@ def fit_predict_softmax_sql(
     p = len(feature_sqls)
     lr = float(learning_rate)
 
-    def xq_sql(expr: str) -> str:
-        return f"CAST(floor(({expr}) * {float(scale)!r} + 0.5) AS BIGINT)"
-
     base_cols = ", ".join(
-        f"{xq_sql(e)} AS x{j}" for j, e in enumerate(feature_sqls)
+        f"{_duck_xq(e, scale)} AS x{j}" for j, e in enumerate(feature_sqls)
     )
     beta0_cols = ", ".join(
         [f"CAST(0.0 AS DOUBLE) AS b{c}" for c in range(n_classes)]

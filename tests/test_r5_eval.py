@@ -134,14 +134,25 @@ def test_quantile_regression_numpy_parity_and_coverage(spark):
     assert 0.8 <= under <= 1.0  # converging toward tau=0.9 from above
 
 
-def test_quantile_regression_no_transcendentals_in_plan(spark):
-    """The pinball gradient aggregation plan contains no exp/log calls."""
+def test_quantile_regression_no_transcendentals_in_plan(spark, monkeypatch):
+    """The step aggregates fit_quantile_gd submits contain no exp/log calls."""
     from inferdb_spark.operators import logreg as LG
 
-    df = spark.createDataFrame([(0.1, 0.2)], "x0 double, y double")
-    rel = LG.quantile_gradient_relation(df, ["x0"], "y", [0.0], 0.0, 10_000, 900_000)
-    plan = rel._jdf.queryExecution().executedPlan().toString()
-    assert "exp(" not in plan.lower() and "log(" not in plan.lower()
+    steps = []
+    real_step = LG._gd_step
+
+    def capture(*args):
+        steps.append(real_step(*args))
+        return steps[-1]
+
+    monkeypatch.setattr(LG, "_gd_step", capture)
+    df = spark.createDataFrame([(0.1, 0.2), (0.3, 0.1)], "x0 double, y double")
+    LG.fit_quantile_gd(df, ["x0"], "y", n_steps=2)
+    assert len(steps) == 2
+    for rel in steps:
+        plan = rel._jdf.queryExecution().executedPlan().toString().lower()
+        assert "hashaggregate" in plan and "_gq" in plan
+        assert "exp(" not in plan and "log(" not in plan
 
 
 def test_entity_resolution_twins_resolve(spark):

@@ -48,6 +48,16 @@ def test_softmax_partitioning_invariance(spark, sm_df):
     assert m1.coefs == m13.coefs and m1.intercepts == m13.intercepts
 
 
+def test_softmax_divergence_raises_diagnosis(spark):
+    """An oversized learning rate drives a coefficient to inf after one
+    step; the next step must fail with the diagnosis, not a parse error."""
+    df = spark.createDataFrame([(3.0, 0)] * 8, "x0 double, y long")
+    with pytest.raises(ValueError, match="fit diverged"):
+        SM.fit_softmax_gd(
+            df, ["x0"], "y", n_classes=3, n_steps=3, learning_rate=1e308
+        )
+
+
 def test_softmax_improves_accuracy(spark, sm_df):
     """Enough GD steps beat the majority-class baseline (0.43 on this
     fixture) decisively on training accuracy."""

@@ -72,6 +72,17 @@ def test_svm_hinge_loss_decreases(spark, svm_df):
     assert l12 <= l2 + 1e-12
 
 
+def test_svm_divergence_releases_fit_input(spark):
+    """A diverging fit raises the diagnosis and leaves nothing cached."""
+    df = spark.createDataFrame(
+        [(3.0, 1)] * 8, "x0 double, y long"
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="fit diverged"):
+        LR.fit_svm_gd(df, ["x0"], "y", n_steps=3, learning_rate=1e308)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ---------------------------------------------------------------------------
 # portable HLL
 
