@@ -197,10 +197,9 @@ def main() -> None:
     )
     docs_par = docs.repartition(ncores).cache()
     docs_par.count()
-    # SQL-twin fingerprint (r11): identical 48-bit simhash tree, one
-    # parse per iteration instead of ~200 py4j calls (dedup.simhash_sql,
-    # bit-equality test-pinned) — an optimization of the QUERY, not a
-    # methodology change (the timed region still builds + runs the plan)
+    # 48-bit simhash as SQL text (dedup.simhash_sql): one parse per
+    # iteration instead of ~200 py4j calls — the timed region still
+    # builds + runs the plan
     from inferdb_spark.operators.dedup import simhash_sql
 
     results["simhash"] = timed(

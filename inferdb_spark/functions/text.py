@@ -1,8 +1,11 @@
 """Text primitives for the data-prep operators (dedup, quality, lang-id).
 
-All pure Column expressions (JVM-side regex/array ops) so they vectorize
-and have exact DuckDB-SQL oracles.  Tokenization = lowercase, strip
+All pure JVM-side regex/array expressions, so they vectorize and have
+exact DuckDB-SQL oracles.  Tokenization = lowercase, strip
 non-alphanumerics, split on whitespace — deliberately simple and portable.
+The n-gram shingles exist only as SQL text (`*_ngrams_sql`, wrapped in
+F.expr by callers); `normalize` and `tokens` still have a Column form
+next to their SQL text because Column code composes them.
 """
 
 from __future__ import annotations
@@ -53,48 +56,17 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_ngrams(col: Column, n: int) -> Column:
-    """array of character n-grams over the normalized text (shingling for
-    minhash / jaccard).  Expression-only: substring over a position range."""
-    def build(norm: Column) -> Column:
-        # guard: sequence(1, 0) would step DOWN; emit [] for too-short text
-        return F.when(
-            F.length(norm) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.length(norm) - F.lit(n - 1)),
-                lambda i: norm.substr(i, F.lit(n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return bind_once(normalize(col), build)
-
-
-def word_ngrams(col: Column, n: int) -> Column:
-    """array of word n-grams (space-joined) for n-gram Jaccard dedup."""
-    def build(t: Column) -> Column:
-        return F.when(
-            F.size(t) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return bind_once(tokens(col), build)
-
-
-# --- textual SQL twins (the similarity.ivf_assign_sql pattern) ----------
-# Assemble the SAME expression trees as the Column helpers above as one
-# SQL string, so hot call sites (minhash/simhash fingerprints rebuilt per
-# bench iteration) pay ONE JVM-side parse instead of hundreds of py4j
-# round trips.  Trees and IEEE/regex semantics are identical, so outputs
-# are bit-equal (tests/test_dataprep.py pins the fingerprint twins).
+# --- SQL-text expressions ----------------------------------------------
+# The n-gram shingles (and the fingerprints built on them in
+# operators/dedup.py) are written once, as SQL text: callers wrap them in
+# F.expr, so a hot call site pays ONE JVM-side parse instead of hundreds
+# of py4j round trips per construction.
 
 _EMPTY_STR_ARR = "CAST(array() AS ARRAY<STRING>)"
 
 
 def normalize_sql(expr: str) -> str:
-    """Textual twin of :func:`normalize`."""
+    """SQL text of :func:`normalize` (same regex passes, same order)."""
     return (
         "trim(regexp_replace(regexp_replace(lower("
         + expr
@@ -103,7 +75,8 @@ def normalize_sql(expr: str) -> str:
 
 
 def tokens_sql(expr: str) -> str:
-    """Textual twin of :func:`tokens`."""
+    """SQL text of :func:`tokens`: the normalized text split on single
+    spaces, an empty array for blank text."""
     n = normalize_sql(expr)
     return (
         f"CASE WHEN length({n}) = 0 THEN {_EMPTY_STR_ARR} "
@@ -112,7 +85,13 @@ def tokens_sql(expr: str) -> str:
 
 
 def char_ngrams_sql(expr: str, n: int) -> str:
-    """Textual twin of :func:`char_ngrams` (same bind_once shape)."""
+    """array<string> of character n-grams over the normalized text
+    (shingling for minhash / jaccard): substring over a position range.
+
+    The normalized text is bound once as the lambda variable `nv` (the
+    :func:`bind_once` shape), so its two regex passes run once per row
+    rather than once per gram.  Text shorter than n yields an empty array
+    — `sequence(1, 0)` would step DOWN instead of going empty."""
     inner = (
         f"CASE WHEN length(nv) >= {n} "
         f"THEN transform(sequence(1, length(nv) - {n - 1}), "
@@ -126,7 +105,10 @@ def char_ngrams_sql(expr: str, n: int) -> str:
 
 
 def word_ngrams_sql(expr: str, n: int) -> str:
-    """Textual twin of :func:`word_ngrams` (same bind_once shape)."""
+    """array<string> of space-joined word n-grams over :func:`tokens_sql`
+    (n-gram Jaccard, boilerplate and overlap postings).  The token array
+    is bound once as the lambda variable `tv` (the :func:`bind_once`
+    shape); documents with fewer than n tokens yield an empty array."""
     inner = (
         f"CASE WHEN size(tv) >= {n} "
         f"THEN transform(sequence(1, size(tv) - {n - 1}), "

@@ -1,7 +1,7 @@
 """Gate queries: data-prep operators (dedup, similarity, text analysis).
 
 Oracle construction notes: the DuckDB SQL for minhash/simhash/fingerprint
-is GENERATED from the same Python constants as the Spark Column trees, so
+is GENERATED from the same Python constants as the Spark expressions, so
 both sides execute the identical integer algorithm.  The md5-based 52-bit
 token hash (functions/hashing.py) is the portability keystone.
 """
@@ -769,16 +769,16 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same partial-aggregate shape as the vocab build, with an integer
     (df desc, gram asc) total order for the top-k.
     """
-    from inferdb_spark.functions.text import word_ngrams
+    from inferdb_spark.functions.text import word_ngrams_sql
 
     d = load_table(spark, sf_dir, "documents")
     # array_distinct makes (doc_id, gram) unique per row already — no
     # dedup shuffle needed before the df count
     grams = d.select(
         "doc_id",
-        F.explode(F.array_distinct(word_ngrams(F.col("text"), BOILER_N))).alias(
-            "gram"
-        ),
+        F.explode(
+            F.array_distinct(F.expr(word_ngrams_sql("`text`", BOILER_N)))
+        ).alias("gram"),
     )
     df_counts = (
         grams.groupBy("gram")

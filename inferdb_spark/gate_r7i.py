@@ -43,7 +43,7 @@ _BLEU_FINAL = (
 
 def _spark_grams(arr, n: int):
     """word n-grams over a token-array column (space-joined); the
-    word_ngrams builder generalized to a pre-sliced array.  bind_once
+    word_ngrams_sql shape generalized to a pre-sliced array.  bind_once
     evaluates the (sliced) array a single time — referencing it inside
     the per-element lambda would re-evaluate the slice per gram."""
 

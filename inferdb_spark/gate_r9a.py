@@ -80,7 +80,7 @@ _BUCKET_SQL = " + ".join(
     for i, ps in enumerate(_plane_sql)
 )
 # weakest plane = lexicographic min of (|proj|, index) structs — the same
-# struct-sort idiom as similarity.hyperplane_multiprobe's array_sort
+# struct-sort idiom as similarity.hyperplane_multiprobe_sql's array_sort
 _WEAK_SQL = (
     "list_sort(["
     + ", ".join(

@@ -291,10 +291,12 @@ def q_kmv_pairwise_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     One corpus pass builds the sketches; the pairwise set algebra runs on
     a #groups-row relation (operators/sketch.kmv_pairwise_overlap).
     """
-    from inferdb_spark.functions.text import word_ngrams
+    from inferdb_spark.functions.text import word_ngrams_sql
 
     d = load_table(spark, sf_dir, "documents")
-    grams = d.select("lang", F.explode(word_ngrams(F.col("text"), OVL_N)).alias("g"))
+    grams = d.select(
+        "lang", F.explode(F.expr(word_ngrams_sql("`text`", OVL_N))).alias("g")
+    )
     sk = kmv_sketch(grams, ["lang"], F.col("g"), OVL_K)
     return kmv_pairwise_overlap(sk, "lang", OVL_K)
 

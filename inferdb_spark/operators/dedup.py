@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from inferdb_spark.functions.hashing import MERSENNE_P, perm_params
-from inferdb_spark.functions.text import bind_once, char_ngrams, tokens, word_ngrams
+from inferdb_spark.functions.text import char_ngrams_sql, tokens_sql, word_ngrams_sql
 
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
@@ -43,10 +43,10 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
     return df.join(keep, id_col, "left_semi")
 
 
-def _shingle_hashes(
-    text_col: Column, shingle_n: int, mode: str, hash_fn: str = "md5"
-) -> Column:
-    """Distinct shingles -> integer hashes reduced mod P (array column).
+def _shingle_hashes_sql(
+    text_sql: str, shingle_n: int, mode: str, hash_fn: str = "md5"
+) -> str:
+    """Distinct shingles -> integer hashes reduced mod P (SQL array text).
 
     hash_fn="md5": 52-bit md5 prefix — engine-portable (the oracle gate
     recomputes it in DuckDB), but MessageDigest is the minhash bottleneck.
@@ -54,61 +54,6 @@ def _shingle_hashes(
     default when cross-engine reproducibility isn't required (still fully
     deterministic within Spark, so retries/speculation are safe).
     """
-    sh = (
-        char_ngrams(text_col, shingle_n)
-        if mode == "char"
-        else word_ngrams(text_col, shingle_n)
-    )
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    if hash_fn == "xxhash64":
-        elem = lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_P))  # noqa: E731
-    else:
-        elem = lambda s: (  # noqa: E731
-            F.conv(F.substring(F.md5(s), 1, 13), 16, 10).cast("long") % F.lit(MERSENNE_P)
-        )
-    return F.transform(F.array_distinct(sh), elem)
-
-
-def minhash_signature(
-    text_col: Column,
-    n_hashes: int = 32,
-    shingle_n: int = 4,
-    mode: str = "char",
-    seed: int = 42,
-    hash_fn: str = "md5",
-) -> Column:
-    """array<bigint> MinHash signature as ONE fold over the shingle hashes.
-
-    sig_i = min over shingles of (a_i * h(shingle) + b_i) mod P; empty
-    documents get P (an impossible hash) in every slot so they only match
-    other empty documents.
-
-    Perf-critical shape: a naive per-slot `array_min(transform(hs, perm_i))`
-    re-evaluates the md5 shingle pipeline once per permutation (Catalyst
-    inlines the shared subtree into every slot) — measured 40× slower.  The
-    single aggregate walks the hashes once and least-merges an accumulator
-    array, so each shingle is hashed exactly once regardless of n_hashes.
-    """
-    hs = _shingle_hashes(text_col, shingle_n, mode, hash_fn)
-    params = perm_params(n_hashes, seed)
-    init = F.array(*[F.lit(MERSENNE_P).cast("long") for _ in range(n_hashes)])
-
-    def merge(acc: Column, x: Column) -> Column:
-        permed = F.array(
-            *[(F.lit(a) * x + F.lit(b)) % F.lit(MERSENNE_P) for a, b in params]
-        )
-        return F.zip_with(acc, permed, lambda u, v: F.least(u, v))
-
-    return F.aggregate(hs, init, merge)
-
-
-def _shingle_hashes_sql(
-    text_sql: str, shingle_n: int, mode: str, hash_fn: str = "md5"
-) -> str:
-    """Textual twin of :func:`_shingle_hashes` — one parse, bit-equal."""
-    from inferdb_spark.functions.text import char_ngrams_sql, word_ngrams_sql
-
     sh = (
         char_ngrams_sql(text_sql, shingle_n)
         if mode == "char"
@@ -134,12 +79,22 @@ def minhash_signature_sql(
     seed: int = 42,
     hash_fn: str = "md5",
 ) -> str:
-    """Textual twin of :func:`minhash_signature` (the ivf_assign_sql
-    pattern): the SAME single-fold least-merge tree assembled as one SQL
-    string — one JVM-side parse instead of ~n_hashes x 3 + shingle-
-    pipeline py4j calls PER BENCH ITERATION (the signature tree is
-    rebuilt inside the timed region).  Identical arithmetic, bit-equal
-    signatures (tests/test_dataprep.py pins Column-vs-SQL equality)."""
+    """array<bigint> MinHash signature (SQL text) as ONE fold over the
+    shingle hashes.
+
+    sig_i = min over shingles of (a_i * h(shingle) + b_i) mod P; empty
+    documents get P (an impossible hash) in every slot so they only match
+    other empty documents.
+
+    Perf-critical shape: a naive per-slot `array_min(transform(hs, perm_i))`
+    re-evaluates the md5 shingle pipeline once per permutation (Catalyst
+    inlines the shared subtree into every slot) — measured 40× slower.  The
+    single aggregate walks the hashes once and least-merges an accumulator
+    array, so each shingle is hashed exactly once regardless of n_hashes.
+    As SQL text the whole tree is one JVM-side parse instead of
+    ~n_hashes x 3 py4j calls per construction (the signature tree is
+    rebuilt inside every timed bench iteration).
+    """
     hs = _shingle_hashes_sql(text_sql, shingle_n, mode, hash_fn)
     params = perm_params(n_hashes, seed)
     init = "array(" + ", ".join(
@@ -170,7 +125,10 @@ def lsh_band_relation(
     O(rows × bands), independent of document length.  Persist this
     relation to dedup future batches against the corpus WITHOUT
     re-hashing history (see incremental_lsh_candidates)."""
-    assert n_hashes % bands == 0
+    if n_hashes % bands:
+        raise ValueError(
+            f"n_hashes ({n_hashes}) must be a multiple of bands ({bands})"
+        )
     rpb = n_hashes // bands
     if parallelism:
         # narrow FIRST: the explicit-width branch must shuffle only the
@@ -186,9 +144,6 @@ def lsh_band_relation(
         # runs it on ONE core (guide §2.2).  Signatures are per-row
         # deterministic — layout cannot affect the band relation.
         df = spread(df.select(F.col(id_col), F.col(text_col)))
-    # SQL textual twin: the signature tree is rebuilt per call (bench
-    # times it); one parse instead of hundreds of py4j round trips,
-    # bit-equal output (tests/test_dataprep.py)
     sig = df.select(
         F.col(id_col),
         F.expr(
@@ -307,11 +262,8 @@ def ngram_jaccard(
     """Exact n-gram Jaccard for candidate pairs: join shingle sets back and
     compute |∩|/|∪| with array ops — integers, so the similarity is an
     exact division (engine-portable)."""
-    sh = (
-        char_ngrams(F.col(text_col), ngram_n)
-        if mode == "char"
-        else word_ngrams(F.col(text_col), ngram_n)
-    )
+    ngrams_sql = char_ngrams_sql if mode == "char" else word_ngrams_sql
+    sh = F.expr(ngrams_sql(f"`{text_col}`", ngram_n))
     sets = df.select(F.col(id_col), F.array_distinct(sh).alias("sh"))
     out = (
         pairs.join(sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -361,50 +313,23 @@ def dedup_corpus(
     return survivors.join(drop_ids, id_col, "left_anti")
 
 
-def simhash(text_col: Column, n_bits: int = 48) -> Column:
-    """SimHash fingerprint (BIGINT) over word-token hashes — one projection.
+def simhash_sql(text_sql: str, n_bits: int = 48) -> str:
+    """SimHash fingerprint (BIGINT, SQL text) over word-token hashes — one
+    projection.
 
     bit_j(doc) = 1 iff Σ_tokens (±1 by bit j of h(token)) > 0.  Near-dups
     have small hamming distance; group by the fingerprint (or high bits)
-    to bucket.  n_bits ≤ 52 (token hashes are 52-bit).
+    to bucket.  Token hashes are 52-bit, so 1 <= n_bits <= 52: a higher
+    bit would always be 0.
+
+    One fold accumulates all per-bit votes at once (a per-bit aggregate
+    would re-run the md5 token pipeline n_bits times — see the minhash
+    note), and the folded votes are bound once as the lambda variable
+    `votes` (the bind_once shape) — referencing the aggregate from every
+    per-bit term would re-run it n_bits times.
     """
-    th = F.transform(
-        tokens(text_col),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 13), 16, 10).cast("long"),
-    )
-    # one fold: accumulate all per-bit votes at once (a per-bit aggregate
-    # would re-run the md5 token pipeline n_bits times — see minhash note)
-    init = F.array(*[F.lit(0) for _ in range(n_bits)])
-
-    def merge(acc: Column, x: Column) -> Column:
-        bits = F.array(
-            *[
-                F.when(F.shiftright(x, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for j in range(n_bits)
-            ]
-        )
-        return F.zip_with(acc, bits, lambda u, v: u + v)
-
-    def fold_bits(votes: Column) -> Column:
-        fp = F.lit(0).cast("long")
-        for j in range(n_bits):
-            fp = fp + F.when(
-                F.element_at(votes, j + 1) > 0, F.lit(2**j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return fp
-
-    # bind the folded votes once — referencing the aggregate from every
-    # per-bit term would re-run it n_bits times
-    return bind_once(F.aggregate(th, init, merge), fold_bits)
-
-
-def simhash_sql(text_sql: str, n_bits: int = 48) -> str:
-    """Textual twin of :func:`simhash` — the SAME vote-fold tree as one
-    SQL string (one parse vs ~4 x n_bits py4j calls per construction;
-    the fingerprint expression is rebuilt inside the bench's timed
-    region).  Bit-equal (tests/test_dataprep.py)."""
-    from inferdb_spark.functions.text import tokens_sql
-
+    if not 1 <= n_bits <= 52:
+        raise ValueError(f"n_bits must be in [1, 52], got {n_bits}")
     th = (
         f"transform({tokens_sql(text_sql)}, "
         "t -> CAST(conv(substring(md5(t), 1, 13), 16, 10) AS BIGINT))"
@@ -515,10 +440,10 @@ def prefix_filter_pairs(
     """
     from pyspark.sql.window import Window
 
-    sh = (
-        char_ngrams(F.col(text_col), shingle_n)
+    sh = F.expr(
+        char_ngrams_sql(f"`{text_col}`", shingle_n)
         if shingle_n > 0
-        else tokens(F.col(text_col))
+        else tokens_sql(f"`{text_col}`")
     )
     from inferdb_spark.scale import spread
 

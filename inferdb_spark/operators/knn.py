@@ -212,7 +212,7 @@ def knn_classify_ivf(
     t = test.select(
         F.col(test_key).alias("_tk"), F.col(vec_col).alias("_q")
     )
-    probe_cells = SIM.ivf_probe_cells(F.col("_q"), centroids, n_probe)
+    probe_cells = F.expr(SIM.ivf_probe_cells_sql("`_q`", centroids, n_probe))
     t = F.broadcast(t.select("_tk", "_q", F.explode(probe_cells).alias("list_id")))
     cand = indexed.join(t, on="list_id")
     cos = cosine_similarity(

@@ -151,14 +151,17 @@ def ivf_shortlist_pairs(
     `n_probe` nearest IVF lists — the candidate-generation stage shared by
     :func:`ivf_shortlisted_eval` and the shortlist gates.  The only join
     is the equi-join on list_id; nothing quadratic."""
-    from inferdb_spark.operators.similarity import ivf_assign, ivf_probe_cells
+    from inferdb_spark.operators.similarity import (
+        ivf_assign_sql,
+        ivf_probe_cells_sql,
+    )
 
     cand = candidates.withColumn(
-        "list_id", ivf_assign(F.col("cv"), centroids)
+        "list_id", F.expr(ivf_assign_sql("`cv`", centroids))
     )
     qprobe = queries.withColumn(
         "list_id",
-        F.explode(ivf_probe_cells(F.col("qv"), centroids, n_probe)),
+        F.explode(F.expr(ivf_probe_cells_sql("`qv`", centroids, n_probe))),
     )
     return _scored_probe_join(qprobe, cand)
 
@@ -172,7 +175,7 @@ def lsh_shortlist_pairs(
     """Scored pairs restricted to each query's multi-probe LSH buckets:
     candidates hash to their sign bucket over `planes`; each query probes
     its own bucket plus the (n_probe - 1) weakest-plane flips
-    (similarity.hyperplane_multiprobe).  Sign cells are balanced by
+    (similarity.hyperplane_multiprobe_sql).  Sign cells are balanced by
     construction on roughly-isotropic embeddings, where distance-argmin
     cells around random centroids collapse — measured in the round-8
     ranking-eval report."""
@@ -181,11 +184,6 @@ def lsh_shortlist_pairs(
         hyperplane_multiprobe_sql,
     )
 
-    # SQL textual twins (similarity.hyperplane_*_sql): one JVM-side parse
-    # instead of ~|planes| x dim py4j literal calls per side — the same
-    # ivf_assign_sql pattern that removed the construct floor of the IVF
-    # gates in r10 (guide §1/§4); trees and values are bit-identical
-    # (tests/test_similarity.py pins both twins).
     cand = candidates.withColumn(
         "list_id", F.expr(hyperplane_bucket_sql("`cv`", planes))
     )
@@ -205,7 +203,7 @@ def ivf_shortlisted_eval(
 ) -> DataFrame:
     """Corpus-scale ranking evaluation: each query scores ONLY the
     candidates in its `n_probe` nearest IVF lists (similarity.ivf_build /
-    ivf_probe_cells), and n_rel comes from a LINEAR per-label count of
+    ivf_probe_cells_sql), and n_rel comes from a LINEAR per-label count of
     the full candidate relation — exact normalization without the
     quadratic pair enumeration.  Inputs carry the same columns as
     :func:`scored_pairs`.  With n_probe = n_lists the shortlist is the

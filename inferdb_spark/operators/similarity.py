@@ -9,7 +9,7 @@ Four tiers, as a 100 TB pipeline needs:
 - IVF: coarse k-means cells + partition-pruned probe of the nearest
   cells (fit_ivf_centroids / ivf_build / ivf_search);
 - PQ: 32×-compressed codes + ADC literal-LUT scan for shortlist →
-  exact re-rank (fit_pq_codebooks / pq_encode / pq_adc_topk).
+  exact re-rank (fit_pq_codebooks / pq_encode_sql / pq_adc_topk).
 
 Vector math stays in whole-stage codegen via functions/vector.py; a numpy
 mapInPandas variant is provided for very wide embeddings where the
@@ -48,58 +48,6 @@ def cosine_topk(
     )
 
 
-def hyperplane_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: bit_i = sign(v · plane_i).  Planes should be dyadic
-    literals (e.g. ±0.5/±0.25) for cross-engine reproducibility."""
-    v = as_double_array(vec_col)
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        d = dot(v, F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket + F.when(d > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
-def hyperplane_multiprobe(
-    vec_col: Column, planes: list[list[float]], n_probe: int
-) -> Column:
-    """Multi-probe LSH bucket list: the vector's own sign bucket followed
-    by the buckets reached by flipping the (n_probe - 1) planes with the
-    SMALLEST |projection| — the standard multi-probe sequence (query-
-    directed probing), which recovers most of the recall of probing many
-    independent tables at one table's cost.  Tie-break on equal |proj| is
-    the lower plane index (struct field order), identical cross-engine.
-    Sign buckets are balanced by construction on roughly-isotropic data —
-    unlike distance-argmin cells around random centroids, which collapse
-    onto whichever centroid is nearest the data mean (measured: the
-    round-8 ranking-eval report)."""
-    v = as_double_array(vec_col)
-    projs = []
-    for i, p in enumerate(planes):
-        projs.append(dot(v, F.array(*[F.lit(float(x)) for x in p])))
-    bucket = F.lit(0).cast("long")
-    for i, d in enumerate(projs):
-        bucket = bucket + F.when(d > 0, F.lit(2**i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    entries = [
-        F.struct(F.abs(d).alias("d"), F.lit(i).alias("i"))
-        for i, d in enumerate(projs)
-    ]
-    weak = F.slice(F.array_sort(F.array(*entries)), 1, n_probe - 1)
-
-    # flip bit i: bucket XOR 2^i == bucket + 2^i - 2*(bit_i(bucket))*2^i,
-    # with bit_i = floor(bucket / 2^i) % 2 — pure integer arithmetic, no
-    # engine-specific XOR.  The closure re-evaluates the (cheap, 5-plane)
-    # bucket expression per flipped element; n_probe - 1 elements.
-    def _flip(s: Column) -> Column:
-        pw = F.pow(F.lit(2.0), s["i"].cast("double")).cast("long")
-        bit = F.floor(bucket.cast("double") / pw.cast("double")).cast("long") % 2
-        return bucket + pw - 2 * bit * pw
-
-    flips = F.transform(weak, _flip)
-    return F.concat(F.array(bucket), flips)
-
-
 def make_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     """Deterministic dyadic pseudo-random hyperplanes (LCG over ±{0.25,0.5,
     0.75,1.0}) — exactly representable doubles, identical in any engine."""
@@ -133,7 +81,7 @@ def lsh_cosine_topk(
             qbucket += 2**i
     sim = cosine_similarity(as_double_array(F.col(vec_col)), _query_lit(query_vec))
     return (
-        df.filter(hyperplane_bucket(F.col(vec_col), planes) == qbucket)
+        df.filter(F.expr(hyperplane_bucket_sql(f"`{vec_col}`", planes)) == qbucket)
         .select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
@@ -157,7 +105,7 @@ def embedding_near_pairs(
     b = df.select(
         F.col(id_col),
         as_double_array(F.col(vec_col)).alias("v"),
-        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.expr(hyperplane_bucket_sql(f"`{vec_col}`", planes)).alias("bucket"),
     ).withColumn("n", l2_norm(F.col("v")))
     a, c = b.alias("a"), b.alias("b")
     cand = a.join(
@@ -197,15 +145,11 @@ def _sql_dlit(x: float) -> str:
     return r if ("e" in r or "E" in r or "n" in r) else r + "D"
 
 
-def ivf_assign_sql(vec_sql: str, centroids: list[list[float]]) -> str:
-    """Textual twin of :func:`ivf_assign` over a SQL vector expression —
-    the SAME argmin tree (zip_with/aggregate fold per centroid, array_min
-    over (d, list_id) structs) assembled as one string so it parses
-    JVM-side in a single call.  Building it Column-by-Column costs
-    ~|centroids| x dim py4j round trips of pure driver latency (measured
-    ~3 s of construct on the ivf_pq_search gate, guide §1); the parsed
-    tree and every IEEE operation are identical, so assignments are
-    bit-equal."""
+def _ivf_entries_sql(vec_sql: str, centroids: list[list[float]]) -> str:
+    """SQL array of one (d, list_id) struct per literal centroid, d the
+    squared L2 distance from the vector — the single definition of the
+    IVF distance fold.  Struct field order makes array_min / array_sort
+    break distance ties on the lower list id."""
     v = f"CAST({vec_sql} AS ARRAY<DOUBLE>)"
     entries = []
     for i, c in enumerate(centroids):
@@ -215,14 +159,44 @@ def ivf_assign_sql(vec_sql: str, centroids: list[list[float]]) -> str:
             "0.0D, (acc, x) -> acc + x)"
         )
         entries.append(f"named_struct('d', {d}, 'list_id', {i})")
-    return "array_min(array(" + ", ".join(entries) + ")).list_id"
+    return "array(" + ", ".join(entries) + ")"
+
+
+def ivf_assign_sql(vec_sql: str, centroids: list[list[float]]) -> str:
+    """Nearest-centroid (list) id of a SQL vector expression: argmin over
+    literal centroids by squared L2 — a projection, no join, no shuffle,
+    lowest-id tiebreak.
+
+    One SQL string parses JVM-side in a single call, where a Column-built
+    tree costs ~|centroids| x dim py4j round trips of pure driver latency
+    (measured ~3 s of construct on the ivf_pq_search gate, guide §1).
+    The per-centroid distance is a
+    zip_with/aggregate fold on purpose: a flat element_at expansion was
+    measured SLOWER — 64-dim x K-centroid flat trees exceed codegen
+    method limits and fall back to interpreted evaluation of a much
+    bigger tree."""
+    return f"array_min({_ivf_entries_sql(vec_sql, centroids)}).list_id"
+
+
+def ivf_probe_cells_sql(
+    vec_sql: str, centroids: list[list[float]], n_probe: int
+) -> str:
+    """The n_probe nearest list ids of a SQL vector expression — the
+    set-probe form of ivf_search's driver-side ranking, for workloads
+    where the queries are themselves a relation (batch ANN scoring, KNN
+    joins).  (distance, list_id) structs sorted and sliced: ties break on
+    the lower list id, exactly like coarse_probe_ids."""
+    entries = _ivf_entries_sql(vec_sql, centroids)
+    ranked = f"slice(array_sort({entries}), 1, {n_probe})"
+    return f"transform({ranked}, s -> s.list_id)"
 
 
 def pq_encode_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
-    """Textual twin of :func:`pq_encode` (same per-subspace argmin trees,
-    one JVM-side parse instead of thousands of py4j literal calls — the
-    dominant construction cost of the IVF-PQ query).  Exact same IEEE
-    arithmetic and struct ordering, so codes are bit-equal."""
+    """array<int> of per-subspace nearest-centroid PQ codes: argmin over
+    literal codewords via array_min on (d, c) structs (lowest code on a
+    distance tie), whole-stage codegen'd, no Python in the encode path.
+    One JVM-side parse instead of thousands of py4j literal calls — the
+    dominant construction cost of the IVF-PQ query."""
     v = f"CAST({vec_sql} AS ARRAY<DOUBLE>)"
     sub = len(codebooks[0][0])
     codes = []
@@ -240,7 +214,7 @@ def pq_encode_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
 
 
 def _hyperplane_projs_sql(v: str, planes: list[list[float]]) -> list[str]:
-    """Per-plane projection expressions (the dot() fold, textual)."""
+    """Per-plane projection expressions (the vector.dot fold)."""
     projs = []
     for p in planes:
         arr = "array(" + ", ".join(_sql_dlit(x) for x in p) + ")"
@@ -262,12 +236,10 @@ def _hyperplane_bucket_sql_from(projs: list[str]) -> str:
 
 
 def hyperplane_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
-    """Textual twin of :func:`hyperplane_bucket` — the SAME sign-bit sum
-    (zip_with/aggregate fold per plane) assembled as one string so it
-    parses JVM-side in a single call instead of ~|planes| x dim py4j
-    literal round trips (the ivf_assign_sql pattern, guide §1/§4).  The
-    parsed tree and every IEEE operation are identical, so bucket ids are
-    bit-equal (tests/test_similarity.py pins this)."""
+    """LSH bucket id: bit i is set iff v · plane_i > 0.
+    Planes should be dyadic literals (e.g. ±0.5/±0.25) for cross-engine
+    reproducibility.  One JVM-side parse instead of ~|planes| x dim py4j
+    literal round trips (guide §1/§4)."""
     v = f"CAST({vec_sql} AS ARRAY<DOUBLE>)"
     return _hyperplane_bucket_sql_from(_hyperplane_projs_sql(v, planes))
 
@@ -275,10 +247,20 @@ def hyperplane_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
 def hyperplane_multiprobe_sql(
     vec_sql: str, planes: list[list[float]], n_probe: int
 ) -> str:
-    """Textual twin of :func:`hyperplane_multiprobe`: own bucket followed
-    by the (n_probe - 1) weakest-plane flips, same |proj| struct-sort and
-    integer flip arithmetic, one parse.  Bit-equal to the Column form
-    (tests/test_similarity.py)."""
+    """Multi-probe LSH bucket list: the vector's own sign bucket followed
+    by the buckets reached by flipping the (n_probe - 1) planes with the
+    SMALLEST |projection| — the standard multi-probe sequence (query-
+    directed probing), which recovers most of the recall of probing many
+    independent tables at one table's cost.  Flips come in ascending
+    |proj| order; a tie on |proj| goes to the lower plane index (struct
+    field order), identical cross-engine.  Sign buckets are balanced by
+    construction on roughly-isotropic data — unlike distance-argmin cells
+    around random centroids, which collapse onto whichever centroid is
+    nearest the data mean (measured: the round-8 ranking-eval report).
+
+    Flipping bit i is bucket XOR 2^i == bucket + 2^i - 2*bit_i*2^i, with
+    bit_i = floor(bucket / 2^i) % 2 — pure integer arithmetic, no
+    engine-specific XOR."""
     v = f"CAST({vec_sql} AS ARRAY<DOUBLE>)"
     projs = _hyperplane_projs_sql(v, planes)
     bucket = "(" + _hyperplane_bucket_sql_from(projs) + ")"
@@ -295,56 +277,12 @@ def hyperplane_multiprobe_sql(
     return f"concat(array({bucket}), transform({weak}, s -> {flip}))"
 
 
-def ivf_assign(vec_col: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid (list) id as a projection: argmin over literal
-    centroids by squared L2 — no join, no shuffle, lowest-id tiebreak.
-    (Round-4 note: a flat element_at expansion of these folds was tried
-    and MEASURED SLOWER — 64-dim x K-centroid flat trees exceed codegen
-    method limits and fall back to interpreted evaluation of a much
-    bigger tree.  The HOF fold form is the right shape here.)"""
-    v = as_double_array(vec_col)
-    entries = []
-    for i, c in enumerate(centroids):
-        clit = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, clit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        entries.append(F.struct(d.alias("d"), F.lit(i).alias("list_id")))
-    return F.array_min(F.array(*entries))["list_id"]
-
-
-def ivf_probe_cells(
-    vec_col: Column, centroids: list[list[float]], n_probe: int
-) -> Column:
-    """The n_probe nearest list ids for a *column* of query vectors — the
-    set-probe twin of ivf_search's driver-side ranking, for workloads where
-    the queries are themselves a relation (batch ANN scoring, KNN joins).
-    Pure expression: array of (distance, id) structs, sorted, sliced —
-    lowest-id tiebreak via struct field order."""
-    v = as_double_array(vec_col)
-    entries = []
-    for i, c in enumerate(centroids):
-        clit = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, clit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        entries.append(F.struct(d.alias("d"), F.lit(i).alias("list_id")))
-    ranked = F.slice(F.array_sort(F.array(*entries)), 1, n_probe)
-    return F.transform(ranked, lambda s: s["list_id"])
-
-
 def ivf_build(
     df: DataFrame, vec_col: str, centroids: list[list[float]], id_col: str = "vec_id"
 ) -> DataFrame:
     """Assign every vector to its inverted list.  At scale, persist this
     partitioned/bucketed BY list_id so a probe touches only the probed
-    lists' files (partition pruning does the index lookup).  Uses the
-    SQL-assembled twin of ivf_assign: one parse call instead of
-    ~|centroids| x dim py4j round trips (bit-identical tree)."""
+    lists' files (partition pruning does the index lookup)."""
     return df.withColumn(
         "list_id", F.expr(ivf_assign_sql(f"`{vec_col}`", centroids))
     )
@@ -464,35 +402,6 @@ def fit_pq_codebooks(
                     C[c] = Xs[m].mean(axis=0)
         books.append([[float(x) for x in row] for row in C])
     return books
-
-
-def pq_encode(vec_col: Column, codebooks: list[list[list[float]]]) -> Column:
-    """array<int> of per-subspace nearest-centroid codes — pure Column
-    expressions (argmin over literal centroids via array_min on
-    (dist, id) structs, the W3 cluster-assign pattern), whole-stage
-    codegen'd, no Python in the encode path."""
-    v = as_double_array(vec_col)
-    sub = len(codebooks[0][0])
-    codes = []
-    for s, book in enumerate(codebooks):
-        cands = F.array(
-            *[
-                F.struct(
-                    sum(
-                        (
-                            (F.element_at(v, s * sub + j + 1) - F.lit(book[c][j]))
-                            * (F.element_at(v, s * sub + j + 1) - F.lit(book[c][j]))
-                            for j in range(sub)
-                        ),
-                        F.lit(0.0),
-                    ).alias("d"),
-                    F.lit(c).alias("c"),
-                )
-                for c in range(len(book))
-            ]
-        )
-        codes.append(F.array_min(cands)["c"])
-    return F.array(*codes)
 
 
 def pq_adc_topk(
@@ -685,9 +594,6 @@ def ivf_pq_search(
             adc_q = term if adc_q is None else adc_q + term
         return adc_q
 
-    # SQL-assembled encode (textual twin of pq_encode): one parse call
-    # instead of thousands of py4j literal round trips — construction,
-    # not execution, dominated this query (guide §1)
     adc = bind_once(
         F.expr(pq_encode_sql(f"`{vec_col}`", codebooks)), with_codes
     )
@@ -820,7 +726,7 @@ def hard_negative_mining_ivf(
 
     1. Corpus side: `ivf_build` assigns every vector to its inverted list
        (map-only; at scale the corpus is stored partitioned by list_id).
-    2. Anchor side: `ivf_probe_cells` ranks the literal centroids per
+    2. Anchor side: `ivf_probe_cells_sql` ranks the literal centroids per
        anchor and explodes the n_probe nearest list ids — |anchors| x
        n_probe rows.
     3. Join anchors to corpus ON list_id (hash join — broadcastable for
@@ -832,7 +738,7 @@ def hard_negative_mining_ivf(
     |anchors| * |corpus|; recall follows the IVF probe trade-off and
     equals the exact variant when n_probe = n_lists (parity-tested).
     Probe ranking ties break (distance, list_id) ascending — identical
-    in ivf_probe_cells, coarse_probe_ids, and the gate oracle."""
+    in ivf_probe_cells_sql, coarse_probe_ids, and the gate oracle."""
     from pyspark.sql.window import Window
 
     from inferdb_spark.functions.vector import l2_norm
@@ -842,7 +748,7 @@ def hard_negative_mining_ivf(
         as_double_array(F.col(vec_col)).alias("_av"),
         F.col(label_col).alias("_al"),
         F.explode(
-            ivf_probe_cells(F.col(vec_col), centroids, n_probe)
+            F.expr(ivf_probe_cells_sql(f"`{vec_col}`", centroids, n_probe))
         ).alias("list_id"),
     ).withColumn("_an", l2_norm(F.col("_av")))
     c = ivf_build(corpus, vec_col, centroids, id_col).select(
@@ -977,7 +883,7 @@ def cluster_balanced_sample(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Cluster-balanced (topic-balanced) subsampling: assign every vector
-    to its nearest literal centroid (ivf_assign — a map-only argmin, no
+    to its nearest literal centroid (ivf_assign_sql — a map-only argmin, no
     join), then keep a deterministic pseudo-random `quota` per cluster by
     ranking on the portable 52-bit hash of the id (h52 ASC, id ASC).
     The diversity-preserving alternative to uniform sampling for
@@ -997,7 +903,7 @@ def cluster_balanced_sample(
 
     asg = df.select(
         F.col(id_col),
-        ivf_assign(F.col(vec_col), centroids).alias("cluster"),
+        F.expr(ivf_assign_sql(f"`{vec_col}`", centroids)).alias("cluster"),
         h52(F.col(id_col).cast("string")).alias("_h"),
     )
     w = Window.partitionBy("cluster").orderBy(F.asc("_h"), F.asc(id_col))

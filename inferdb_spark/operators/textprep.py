@@ -406,13 +406,13 @@ def repetition_features(
     gets filtered before training.  All array expressions (tokenize once,
     ngrams + distinct JVM-side) — no shuffle, no UDF.
     """
-    from inferdb_spark.functions.text import word_ngrams
+    from inferdb_spark.functions.text import word_ngrams_sql
 
     t = tokens(F.col(text_col))
     out = df.select(
         F.col(id_col),
         t.alias("t"),
-        word_ngrams(F.col(text_col), 2).alias("g2"),
+        F.expr(word_ngrams_sql(f"`{text_col}`", 2)).alias("g2"),
     )
     n_tok = F.size("t")
     n_g = F.size("g2")
@@ -451,14 +451,15 @@ def ngram_hash_postings(
     for callers that dedup later in a cheaper place (see ngram_overlap).
     """
     from inferdb_spark.functions.hashing import h52
-    from inferdb_spark.functions.text import word_ngrams
+    from inferdb_spark.functions.text import word_ngrams_sql
     from inferdb_spark.scale import spread
 
     # spread: gram explode + hash is the heavy map work; one-row-group
     # scans would run it on ONE core (guide §2.2).  Output is a distinct
     # posting set keyed by exact hashes — layout-insensitive.
     out = spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("g")
+        F.col(id_col),
+        F.explode(F.expr(word_ngrams_sql(f"`{text_col}`", n))).alias("g"),
     )
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")

@@ -257,7 +257,7 @@ def curation_stream(
     curation_stream_foreach_batch, which broadcast-joins the suite as a
     posting relation per microbatch — suite-size-independent)."""
     from inferdb_spark.functions.hashing import h52
-    from inferdb_spark.functions.text import bind_once, word_ngrams
+    from inferdb_spark.functions.text import bind_once, word_ngrams_sql
 
     s1 = stream_df.where(
         F.size(F.split(F.col(text_col), " ")) >= min_tokens
@@ -270,7 +270,9 @@ def curation_stream(
             ]
         )
         doc_grams = F.array_distinct(
-            F.transform(word_ngrams(F.col(text_col), n), lambda g: h52(g))
+            F.transform(
+                F.expr(word_ngrams_sql(f"`{text_col}`", n)), lambda g: h52(g)
+            )
         )
         contaminated = bind_once(
             doc_grams,

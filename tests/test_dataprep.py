@@ -1,5 +1,9 @@
 """Dedup / similarity / textprep operator semantics."""
 
+import hashlib
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from inferdb_spark.operators import dedup as DD
@@ -51,7 +55,9 @@ def test_simhash_near_dup_distance(spark):
     d = _docs(spark)
     fp = {
         r.doc_id: r.fp
-        for r in d.select("doc_id", DD.simhash(F.col("text"), 32).alias("fp")).collect()
+        for r in d.select(
+            "doc_id", F.expr(DD.simhash_sql("`text`", 32)).alias("fp")
+        ).collect()
     }
     assert fp[0] == fp[1]
     h02 = bin(fp[0] ^ fp[2]).count("1")
@@ -298,31 +304,133 @@ def test_repetition_features_flags_loops(spark):
     assert out[2].dup_bigram_frac < 0.1 and out[2].distinct_ratio > 0.9
 
 
-def test_fingerprint_sql_twins_match_column_forms(spark):
-    """The SQL-assembled twins of minhash_signature / simhash (one
-    JVM-side parse vs hundreds of py4j calls rebuilt per bench
-    iteration — the r11 construct fix) must be bit-equal to the
-    Column-built originals on every row, including the empty document
-    and both hash functions / shingle modes."""
-    d = _docs(spark)
-    for hash_fn in ("md5", "xxhash64"):
-        for mode, sn in (("char", 4), ("word", 2)):
-            rows = d.select(
-                DD.minhash_signature(
-                    F.col("text"), 16, sn, mode, 42, hash_fn
-                ).alias("c"),
+def _py_tokens(text):
+    """normalize + split, as functions.text.tokens_sql defines them."""
+    norm = re.sub(" +", " ", re.sub("[^a-z0-9 ]", " ", text.lower())).strip(" ")
+    return norm, (norm.split(" ") if norm else [])
+
+
+def _py_shingles(text, n, mode):
+    norm, toks = _py_tokens(text)
+    if mode == "char":
+        grams = [norm[i : i + n] for i in range(len(norm) - n + 1)]
+    else:
+        grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+    return list(dict.fromkeys(grams))
+
+
+def _py_h52(s):
+    return int(hashlib.md5(s.encode()).hexdigest()[:13], 16)
+
+
+def _py_minhash(hashes, n_hashes, seed):
+    from inferdb_spark.functions.hashing import MERSENNE_P, perm_params
+
+    return [
+        min([(a * x + b) % MERSENNE_P for x in hashes], default=MERSENNE_P)
+        for a, b in perm_params(n_hashes, seed)
+    ]
+
+
+def _fingerprint_docs(spark):
+    extra = [
+        (5, "Hello, WORLD!!  hello   world?"),  # case, punctuation, spaces
+        (6, "ab!"),  # shorter than one char 4-gram
+        (7, "solo"),  # shorter than one word 2-gram
+        (8, "?!, ..."),  # punctuation only: blank after normalize
+    ]
+    return _docs(spark).unionByName(
+        spark.createDataFrame(extra, "doc_id long, text string")
+    )
+
+
+def test_fingerprint_sql_matches_hashlib_reference(spark):
+    """minhash_signature_sql (md5; char and word shingles) and simhash_sql
+    (24 and 48 bits) against a hashlib/Python reference, row by row.  A
+    document with no shingle (empty, too short, punctuation only) gets
+    MERSENNE_P in every signature slot."""
+    from inferdb_spark.functions.hashing import MERSENNE_P
+
+    d = _fingerprint_docs(spark)
+    texts = {r.doc_id: r.text for r in d.collect()}
+    for mode, sn in (("char", 4), ("word", 2)):
+        got = {
+            r.doc_id: list(r.sig)
+            for r in d.select(
+                "doc_id",
+                F.expr(
+                    DD.minhash_signature_sql("`text`", 16, sn, mode, 42, "md5")
+                ).alias("sig"),
+            ).collect()
+        }
+        for i, t in texts.items():
+            hs = [_py_h52(g) % MERSENNE_P for g in _py_shingles(t, sn, mode)]
+            assert got[i] == _py_minhash(hs, 16, 42), (mode, i)
+        no_shingle = {4, 6, 8} | ({7} if mode == "word" else set())
+        for i in no_shingle:
+            assert got[i] == [MERSENNE_P] * 16, (mode, i)
+    for n_bits in (24, 48):
+        got = {
+            r.doc_id: r.fp
+            for r in d.select(
+                "doc_id", F.expr(DD.simhash_sql("`text`", n_bits)).alias("fp")
+            ).collect()
+        }
+        for i, t in texts.items():
+            hs = [_py_h52(w) for w in _py_tokens(t)[1]]
+            votes = [
+                sum(1 if (h >> j) & 1 else -1 for h in hs) for j in range(n_bits)
+            ]
+            assert got[i] == sum(2**j for j, v in enumerate(votes) if v > 0)
+
+
+def test_minhash_xxhash64_matches_spark_shingle_hashes(spark):
+    """The xxhash64 signature mode against Spark's own
+    pmod(xxhash64(s), P) over the Python-enumerated shingles."""
+    from inferdb_spark.functions.hashing import MERSENNE_P
+
+    d = _fingerprint_docs(spark)
+    texts = {r.doc_id: r.text for r in d.collect()}
+    for mode, sn in (("char", 4), ("word", 2)):
+        shingles = {i: _py_shingles(t, sn, mode) for i, t in texts.items()}
+        grams = sorted({g for gs in shingles.values() for g in gs})
+        xh = {
+            r.s: r.h
+            for r in spark.createDataFrame([(g,) for g in grams], "s string")
+            .select("s", F.expr(f"pmod(xxhash64(s), {MERSENNE_P})").alias("h"))
+            .collect()
+        }
+        got = {
+            r.doc_id: list(r.sig)
+            for r in d.select(
+                "doc_id",
                 F.expr(
                     DD.minhash_signature_sql(
-                        "`text`", 16, sn, mode, 42, hash_fn
+                        "`text`", 16, sn, mode, 42, "xxhash64"
                     )
-                ).alias("s"),
+                ).alias("sig"),
             ).collect()
-            for r in rows:
-                assert list(r["c"]) == list(r["s"]), (hash_fn, mode)
-    for n_bits in (24, 48):
-        rows = d.select(
-            DD.simhash(F.col("text"), n_bits).alias("c"),
-            F.expr(DD.simhash_sql("`text`", n_bits)).alias("s"),
-        ).collect()
-        for r in rows:
-            assert r["c"] == r["s"], n_bits
+        }
+        for i, gs in shingles.items():
+            assert got[i] == _py_minhash([xh[g] for g in gs], 16, 42), (mode, i)
+
+
+def test_simhash_sql_rejects_n_bits_above_52(spark):
+    """Token hashes are 52-bit: a higher fingerprint bit is always 0, and
+    a simhash_near_pairs band lying wholly above bit 51 would make every
+    pair a candidate."""
+    for n_bits in (0, 53, 56, 64):
+        with pytest.raises(ValueError, match="n_bits"):
+            DD.simhash_sql("`text`", n_bits)
+    with pytest.raises(ValueError, match="n_bits"):
+        DD.simhash_near_pairs(
+            _docs(spark), "doc_id", "text", n_bits=64, band_bits=8
+        )
+    assert DD.simhash_sql("`text`", 52)
+
+
+def test_lsh_band_relation_rejects_uneven_bands(spark):
+    """n_hashes must split evenly into bands — checked with a ValueError,
+    not an assert that vanishes under python -O."""
+    with pytest.raises(ValueError, match="multiple of bands"):
+        DD.lsh_band_relation(_docs(spark), "doc_id", "text", n_hashes=30, bands=8)

@@ -64,14 +64,14 @@ def test_resolve_and_summary(records):
 
 
 def test_hash_fn_validation_raises(spark):
-    from inferdb_spark.operators.dedup import _shingle_hashes
+    from inferdb_spark.operators.dedup import _shingle_hashes_sql
     from inferdb_spark.operators.textprep import ngram_hash_postings
 
     df = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
     with pytest.raises(ValueError, match="hash_fn"):
         ngram_hash_postings(df, "doc_id", "text", 2, hash_fn="sha1")
     with pytest.raises(ValueError, match="hash_fn"):
-        _shingle_hashes(F.col("text"), 4, "char", hash_fn="sha1")
+        _shingle_hashes_sql("`text`", 4, "char", hash_fn="sha1")
 
 
 def test_block_size_guard_raises(records):

@@ -52,12 +52,31 @@ def test_tokens_and_ngrams(spark):
     toks = [r[0] for r in df.select(TXT.tokens(F.col("t"))).collect()]
     assert toks[0] == ["the", "quick", "brown", "fox"]
     assert toks[1] == []
-    ng = df.select(TXT.word_ngrams(F.col("t"), 2)).first()[0]
+    ng = df.select(F.expr(TXT.word_ngrams_sql("`t`", 2))).first()[0]
     assert ng == ["the quick", "quick brown", "brown fox"]
     cg = spark.createDataFrame([("abcd",)], "t string").select(
-        TXT.char_ngrams(F.col("t"), 3)
+        F.expr(TXT.char_ngrams_sql("`t`", 3))
     ).first()[0]
     assert cg == ["abc", "bcd"]
+
+
+def test_tokens_and_normalize_sql_match_column_forms(spark):
+    """normalize / tokens keep a Column form next to their SQL text; both
+    must agree on blank, punctuation-only, repeated-space and mixed-case
+    text."""
+    rows = [("",), ("?!, ...",), ("a   b    c",), ("  MiXeD CaSe, Words!  ",), (None,)]
+    got = spark.createDataFrame(rows, "t string").select(
+        TXT.normalize(F.col("t")).alias("n_col"),
+        F.expr(TXT.normalize_sql("`t`")).alias("n_sql"),
+        TXT.tokens(F.col("t")).alias("t_col"),
+        F.expr(TXT.tokens_sql("`t`")).alias("t_sql"),
+    ).collect()
+    for r in got:
+        assert r["n_col"] == r["n_sql"]
+        assert r["t_col"] == r["t_sql"]
+    assert [r["t_sql"] for r in got[:4]] == [
+        [], [], ["a", "b", "c"], ["mixed", "case", "words"]
+    ]
 
 
 def test_h52_range_and_determinism(spark):

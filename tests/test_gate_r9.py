@@ -291,7 +291,7 @@ def test_boxcox_reference(spark, sf_dir):
 
 
 def test_lsh_multiprobe_properties(spark):
-    """hyperplane_multiprobe: first element is the own bucket, flips
+    """hyperplane_multiprobe_sql: first element is the own bucket, flips
     differ in exactly one bit, and the flipped bit is the weakest |proj|."""
     from inferdb_spark.operators import similarity as S
     from pyspark.sql import functions as F
@@ -304,8 +304,8 @@ def test_lsh_multiprobe_properties(spark):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], "i long, v array<double>")
     out = df.select(
         "i",
-        S.hyperplane_bucket(F.col("v"), planes).alias("b"),
-        S.hyperplane_multiprobe(F.col("v"), planes, 2).alias("probe"),
+        F.expr(S.hyperplane_bucket_sql("`v`", planes)).alias("b"),
+        F.expr(S.hyperplane_multiprobe_sql("`v`", planes, 2)).alias("probe"),
     ).collect()
     for r in out:
         v = vecs[r["i"]]

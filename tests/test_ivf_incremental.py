@@ -93,13 +93,13 @@ def test_pq_adc_recall_vs_bruteforce(spark, sf_dir):
     from inferdb_spark.operators.similarity import (
         fit_pq_codebooks,
         pq_adc_topk,
-        pq_encode,
+        pq_encode_sql,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = fit_pq_codebooks(emb, "embedding", n_subvectors=8, n_centroids=32)
     codes = emb.select(
-        "vec_id", pq_encode(F.col("embedding"), books).alias("codes")
+        "vec_id", F.expr(pq_encode_sql("`embedding`", books)).alias("codes")
     )
     plan = codes._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan  # encode is pure expressions

@@ -131,6 +131,6 @@ def test_ivf_probe_cells_orders_by_distance(spark):
     cents = [[0.0, 0.0], [10.0, 0.0], [0.0, 10.0]]
     df = spark.createDataFrame([(1, [9.0, 1.0])], "id long, v array<double>")
     out = df.select(
-        SIM.ivf_probe_cells(F.col("v"), cents, n_probe=2).alias("cells")
+        F.expr(SIM.ivf_probe_cells_sql("`v`", cents, n_probe=2)).alias("cells")
     ).collect()[0]["cells"]
     assert out == [1, 0]

@@ -65,20 +65,28 @@ def test_sq8_codes_bounded_and_rank_matches_float(spark):
     assert sq8_quantize_query(query, zs) == [0] * 8
 
 
-def test_sql_twins_match_column_forms(spark):
-    """The SQL-assembled twins of ivf_assign / pq_encode (one JVM-side
-    parse instead of thousands of py4j literal calls) must produce
-    bit-identical assignments and codes to the Column-built originals on
-    every row — the equivalence that let ivf_build / ivf_pq_search switch
-    to them."""
+def _sq_l2(v, c):
+    """Squared L2 as the SQL fold computes it: a left-to-right sum of
+    (a - b)^2 from 0.0, so the floats match bit for bit."""
+    acc = 0.0
+    for a, b in zip(v, c):
+        acc += (a - b) * (a - b)
+    return acc
+
+
+def test_ivf_and_pq_sql_match_numpy_argmin(spark):
+    """ivf_assign_sql / ivf_probe_cells_sql / pq_encode_sql against a
+    numpy argmin over the same squared-L2 distances.  Centroid 4 repeats
+    centroid 1 and codeword 7 repeats codeword 2 of every subspace, so
+    every vector nearest to one of them meets a built-in exact tie: the
+    lower id must win, and in a probe list the lower id comes first."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
 
     from inferdb_spark.operators.similarity import (
-        ivf_assign,
         ivf_assign_sql,
-        pq_encode,
+        ivf_probe_cells_sql,
         pq_encode_sql,
     )
 
@@ -90,60 +98,93 @@ def test_sql_twins_match_column_forms(spark):
         )
     )
     cents = [
-        [round(float(x), 3) for x in rng.uniform(-1, 1, 16)] for _ in range(5)
+        [round(float(x), 3) for x in rng.uniform(-1, 1, 16)] for _ in range(4)
     ]
+    cents.append(list(cents[1]))
     books = [
-        [[round(float(x), 3) for x in rng.uniform(-1, 1, 4)] for _ in range(8)]
+        [[round(float(x), 3) for x in rng.uniform(-1, 1, 4)] for _ in range(7)]
         for _ in range(4)
     ]
+    for book in books:
+        book.append(list(book[2]))
     rows = df.select(
-        ivf_assign(F.col("embedding"), cents).alias("a_col"),
-        F.expr(ivf_assign_sql("`embedding`", cents)).alias("a_sql"),
-        pq_encode(F.col("embedding"), books).alias("c_col"),
-        F.expr(pq_encode_sql("`embedding`", books)).alias("c_sql"),
+        "vec_id",
+        F.expr(ivf_assign_sql("`embedding`", cents)).alias("a"),
+        F.expr(ivf_probe_cells_sql("`embedding`", cents, 1)).alias("p1"),
+        F.expr(ivf_probe_cells_sql("`embedding`", cents, 3)).alias("p3"),
+        F.expr(pq_encode_sql("`embedding`", books)).alias("codes"),
     ).collect()
+    X = vecs.astype(np.float64)
+    saw_ivf_tie = saw_pq_tie = False
     for r in rows:
-        assert r["a_col"] == r["a_sql"]
-        assert list(r["c_col"]) == list(r["c_sql"])
+        v = X[r["vec_id"]].tolist()
+        d = np.array([_sq_l2(v, c) for c in cents])
+        assert r["a"] == int(np.argmin(d))
+        ranked = [int(i) for i in np.argsort(d, kind="stable")]
+        assert list(r["p1"]) == ranked[:1]
+        assert list(r["p3"]) == ranked[:3]
+        saw_ivf_tie |= r["a"] == 1
+        codes = []
+        for s, book in enumerate(books):
+            sub = v[s * 4 : (s + 1) * 4]
+            codes.append(int(np.argmin([_sq_l2(sub, c) for c in book])))
+        assert list(r["codes"]) == codes
+        saw_pq_tie |= 2 in codes
+    assert saw_ivf_tie and saw_pq_tie
+    assert all(r["a"] != 4 and 7 not in r["codes"] for r in rows)
 
 
-def test_hyperplane_sql_twins_match_column_forms(spark):
-    """The SQL-assembled twins of hyperplane_bucket / hyperplane_multiprobe
-    (one JVM-side parse instead of ~|planes| x dim py4j literal calls —
-    the r11 construct-cost fix for the LSH shortlist gates) must produce
-    bit-identical buckets and probe sequences to the Column-built
-    originals on every row, including exact-zero projections (sign
-    boundary) and the n_probe=1 empty-flip edge."""
+def _sign_bit_reference(v, planes, n_probe):
+    """Python multi-probe: own sign bucket, then bucket ^ 2^i for the
+    (n_probe - 1) planes with the smallest (|proj|, i)."""
+    projs = []
+    for p in planes:
+        acc = 0.0
+        for a, b in zip(v, p):
+            acc += a * b
+        projs.append(acc)
+    bucket = sum(2**i for i, d in enumerate(projs) if d > 0)
+    weak = sorted(range(len(planes)), key=lambda i: (abs(projs[i]), i))
+    return bucket, [bucket] + [bucket ^ (1 << i) for i in weak[: n_probe - 1]]
+
+
+def test_hyperplane_sql_matches_sign_bit_reference(spark):
+    """hyperplane_bucket_sql / hyperplane_multiprobe_sql against the
+    Python sign-bit reference, for n_probe 1, 2 and 4.  Plane 4 is the
+    negation of plane 0, so |proj| ties between them on every vector and
+    the lower plane index must flip first; the zero vector has every
+    projection exactly 0 (no sign bit set, flips in plane order)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
 
     from inferdb_spark.operators.similarity import (
-        hyperplane_bucket,
         hyperplane_bucket_sql,
-        hyperplane_multiprobe,
         hyperplane_multiprobe_sql,
         make_hyperplanes,
     )
 
     rng = np.random.RandomState(7)
     vecs = [rng.uniform(-1, 1, 16).tolist() for _ in range(200)]
-    vecs.append([0.0] * 16)  # all projections exactly 0 -> no sign bits
+    vecs.append([0.0] * 16)
     df = spark.createDataFrame(
         pd.DataFrame({"vec_id": range(len(vecs)), "embedding": vecs})
     )
-    planes = make_hyperplanes(5, 16, seed=1234)
+    planes = make_hyperplanes(4, 16, seed=1234)
+    planes.append([-x for x in planes[0]])
     for n_probe in (1, 2, 4):
         rows = df.select(
-            hyperplane_bucket(F.col("embedding"), planes).alias("b_col"),
-            F.expr(hyperplane_bucket_sql("`embedding`", planes)).alias("b_sql"),
-            hyperplane_multiprobe(F.col("embedding"), planes, n_probe).alias(
-                "p_col"
-            ),
+            "vec_id",
+            F.expr(hyperplane_bucket_sql("`embedding`", planes)).alias("b"),
             F.expr(
                 hyperplane_multiprobe_sql("`embedding`", planes, n_probe)
-            ).alias("p_sql"),
+            ).alias("probe"),
         ).collect()
         for r in rows:
-            assert r["b_col"] == r["b_sql"]
-            assert list(r["p_col"]) == list(r["p_sql"])
+            bucket, probe = _sign_bit_reference(
+                vecs[r["vec_id"]], planes, n_probe
+            )
+            assert r["b"] == bucket
+            assert list(r["probe"]) == probe, (r["vec_id"], n_probe)
+    zero = next(r for r in rows if r["vec_id"] == len(vecs) - 1)
+    assert zero["b"] == 0 and list(zero["probe"]) == [0, 1, 2, 4]

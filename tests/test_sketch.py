@@ -68,12 +68,12 @@ def test_estimate_within_error_bound(docs):
 
 def test_pairwise_overlap_estimates(docs, spark):
     # estimator vs exact set overlap on per-lang 5-gram hash sets
-    from inferdb_spark.functions.text import word_ngrams
+    from inferdb_spark.functions.text import word_ngrams_sql
     from inferdb_spark.operators.sketch import kmv_pairwise_overlap
 
     k = 64
     grams = docs.select(
-        "lang", F.explode(word_ngrams(F.col("text"), 5)).alias("g")
+        "lang", F.explode(F.expr(word_ngrams_sql("`text`", 5))).alias("g")
     )
     sk = kmv_sketch(grams, ["lang"], F.col("g"), k)
     est = {

@@ -127,18 +127,22 @@ def ranking_eval_report(sf_dir: str, n_lists: int = 16, n_probe: int = 2) -> dic
         sec = time.perf_counter() - t0
         # candidate recall@10: exact top-10 present in the probed lists
         if kind == "ivf":
-            cand = cs.withColumn("list_id", S.ivf_assign(F.col("cv"), cents))
-            qpr = qs.withColumn(
-                "list_id",
-                F.explode(S.ivf_probe_cells(F.col("qv"), cents, n_probe)),
-            ).select("qid", "list_id")
-        else:
             cand = cs.withColumn(
-                "list_id", S.hyperplane_bucket(F.col("cv"), cents)
+                "list_id", F.expr(S.ivf_assign_sql("`cv`", cents))
             )
             qpr = qs.withColumn(
                 "list_id",
-                F.explode(S.hyperplane_multiprobe(F.col("qv"), cents, n_probe)),
+                F.explode(F.expr(S.ivf_probe_cells_sql("`qv`", cents, n_probe))),
+            ).select("qid", "list_id")
+        else:
+            cand = cs.withColumn(
+                "list_id", F.expr(S.hyperplane_bucket_sql("`cv`", cents))
+            )
+            qpr = qs.withColumn(
+                "list_id",
+                F.explode(
+                    F.expr(S.hyperplane_multiprobe_sql("`qv`", cents, n_probe))
+                ),
             ).select("qid", "list_id")
         hit = (
             top_exact.join(cand.select("cid", "list_id"), "cid")
