@@ -55,15 +55,6 @@ def spark_h52_sql(expr: str) -> str:
     return f"CAST(conv(substring(md5({expr}), 1, 13), 16, 10) AS BIGINT)"
 
 
-def h52_mod_p(col: Column) -> Column:
-    return h52(col) % F.lit(MERSENNE_P)
-
-
-def perm_hash(x_mod_p: Column, a: int, b: int) -> Column:
-    """(a*x + b) mod P over a pre-reduced hash column."""
-    return (F.lit(a) * x_mod_p + F.lit(b)) % F.lit(MERSENNE_P)
-
-
 def duckdb_h52(expr: str) -> str:
     """DuckDB SQL computing the same 52-bit md5-prefix hash."""
     return (
@@ -72,11 +63,3 @@ def duckdb_h52(expr: str) -> str:
         + "),1,13),'.'), c -> cast(strpos('0123456789abcdef', c) - 1 as bigint)),"
         " (a,b) -> a*16+b)"
     )
-
-
-def duckdb_h52_mod_p(expr: str) -> str:
-    return f"({duckdb_h52(expr)} % {MERSENNE_P})"
-
-
-def duckdb_perm_hash(x_expr: str, a: int, b: int) -> str:
-    return f"(({a} * {x_expr} + {b}) % {MERSENNE_P})"

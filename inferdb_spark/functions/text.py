@@ -3,9 +3,10 @@
 All pure JVM-side regex/array expressions, so they vectorize and have
 exact DuckDB-SQL oracles.  Tokenization = lowercase, strip
 non-alphanumerics, split on whitespace — deliberately simple and portable.
-The n-gram shingles exist only as SQL text (`*_ngrams_sql`, wrapped in
-F.expr by callers); `normalize` and `tokens` still have a Column form
-next to their SQL text because Column code composes them.
+The word tokenizer (`normalize_sql`, `tokens_sql`) and the n-gram
+shingles (`*_ngrams_sql`) exist only as SQL text, wrapped in F.expr by
+callers; `duckdb_normalize`/`duckdb_tokens` are its DuckDB-dialect
+oracle form.
 """
 
 from __future__ import annotations
@@ -37,36 +38,18 @@ def bind_once(col: Column, build) -> Column:
     return F.element_at(F.transform(F.array(col), build), 1)
 
 
-def normalize(col: Column) -> Column:
-    """lowercase + keep [a-z0-9 ] + collapse whitespace + trim."""
-    c = F.regexp_replace(F.lower(col), "[^a-z0-9 ]", " ")
-    c = F.regexp_replace(c, " +", " ")
-    return F.trim(c)
-
-
-def tokens(col: Column) -> Column:
-    """array<string> of normalized word tokens (empty array for blank text)."""
-    n = normalize(col)
-    return F.when(F.length(n) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(n, " ")
-    )
-
-
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 # --- SQL-text expressions ----------------------------------------------
-# The n-gram shingles (and the fingerprints built on them in
-# operators/dedup.py) are written once, as SQL text: callers wrap them in
-# F.expr, so a hot call site pays ONE JVM-side parse instead of hundreds
-# of py4j round trips per construction.
+# The word tokenizer, the n-gram shingles and the fingerprints built on
+# them in operators/dedup.py are written once, as SQL text: callers wrap
+# them in F.expr, so a hot call site pays ONE JVM-side parse instead of
+# hundreds of py4j round trips per construction.  `expr` is a SQL
+# expression, usually a backquoted column name.
 
 _EMPTY_STR_ARR = "CAST(array() AS ARRAY<STRING>)"
 
 
 def normalize_sql(expr: str) -> str:
-    """SQL text of :func:`normalize` (same regex passes, same order)."""
+    """lowercase + keep [a-z0-9 ] + collapse space runs + trim."""
     return (
         "trim(regexp_replace(regexp_replace(lower("
         + expr
@@ -74,14 +57,19 @@ def normalize_sql(expr: str) -> str:
     )
 
 
-def tokens_sql(expr: str) -> str:
-    """SQL text of :func:`tokens`: the normalized text split on single
-    spaces, an empty array for blank text."""
-    n = normalize_sql(expr)
+def _split_sql(n: str) -> str:
+    """The already-normalized text `n` split on single spaces, an empty
+    array for blank text."""
     return (
         f"CASE WHEN length({n}) = 0 THEN {_EMPTY_STR_ARR} "
         f"ELSE split({n}, ' ') END"
     )
+
+
+def tokens_sql(expr: str) -> str:
+    """array<string> of normalized word tokens (empty array for blank
+    text)."""
+    return _split_sql(normalize_sql(expr))
 
 
 def char_ngrams_sql(expr: str, n: int) -> str:
@@ -121,8 +109,8 @@ def word_ngrams_sql(expr: str, n: int) -> str:
     )
 
 
-def stopword_ratio(col: Column) -> Column:
-    t = tokens(col)
+def stopword_ratio(expr: str) -> Column:
+    t = F.expr(tokens_sql(expr))
     sw = F.size(F.filter(t, lambda w: w.isin(STOPWORDS)))
     return F.when(F.size(t) > 0, sw / F.size(t)).otherwise(F.lit(0.0))
 
@@ -139,8 +127,8 @@ def alpha_ratio(col: Column) -> Column:
     return F.when(total > 0, alpha / total).otherwise(F.lit(0.0))
 
 
-def mean_word_length(col: Column) -> Column:
-    t = tokens(col)
+def mean_word_length(expr: str) -> Column:
+    t = F.expr(tokens_sql(expr))
     return F.when(
         F.size(t) > 0,
         F.aggregate(t, F.lit(0), lambda acc, w: acc + F.length(w)).cast("double")
@@ -148,31 +136,46 @@ def mean_word_length(col: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def text_stats(col: Column) -> Column:
+def text_stats(expr: str) -> Column:
     """Fused text statistics in ONE normalize + ONE token pass:
     struct(n_tokens, stopword_hits, char_sum).
 
     The individual metric functions above each re-run normalize (2 regex
     passes) — fine standalone, 4× wasteful when computing a metric panel.
-    Ratios derive from the struct fields afterwards.
+    The normalized text is bound once as `nv` and its token array as `t`
+    (the :func:`bind_once` shape).  Ratios derive from the struct fields
+    afterwards.
     """
+    sw = ", ".join(f"'{w}'" for w in STOPWORDS)
+    stats = (
+        "named_struct('n_tokens', size(t), "
+        f"'stopword_hits', size(filter(t, w -> w IN ({sw}))), "
+        "'char_sum', aggregate(t, 0, (acc, w) -> acc + length(w)))"
+    )
+    toks = f"element_at(transform(array({_split_sql('nv')}), t -> {stats}), 1)"
+    return F.expr(
+        f"element_at(transform(array({normalize_sql(expr)}), nv -> {toks}), 1)"
+    )
 
-    def with_tokens(t: Column) -> Column:
-        return F.struct(
-            F.size(t).alias("n_tokens"),
-            F.size(F.filter(t, lambda w: w.isin(STOPWORDS))).alias("stopword_hits"),
-            F.aggregate(t, F.lit(0), lambda acc, w: acc + F.length(w)).alias(
-                "char_sum"
-            ),
-        )
 
-    def with_norm(norm: Column) -> Column:
-        toks = F.when(F.length(norm) == 0, F.array().cast("array<string>")).otherwise(
-            F.split(norm, " ")
-        )
-        return F.element_at(F.transform(F.array(toks), with_tokens), 1)
+# --- DuckDB oracle form of the word tokenizer ----------------------------
 
-    return bind_once(normalize(col), with_norm)
+
+def duckdb_normalize(expr: str) -> str:
+    """DuckDB SQL of :func:`normalize_sql`."""
+    return (
+        f"trim(regexp_replace(regexp_replace(lower({expr}), '[^a-z0-9 ]', ' ', 'g'),"
+        " ' +', ' ', 'g'))"
+    )
+
+
+def duckdb_tokens(expr: str) -> str:
+    """DuckDB SQL of :func:`tokens_sql`."""
+    n = duckdb_normalize(expr)
+    return (
+        f"(CASE WHEN length({n}) = 0 THEN CAST([] AS VARCHAR[]) "
+        f"ELSE string_split({n}, ' ') END)"
+    )
 
 
 # GPT-2-style pre-tokenizer pattern, restricted to a lookahead-free subset

@@ -75,15 +75,12 @@ def gate(name: str, oracle: str | None = None):
         # build therefore drops every cached relation left over from the
         # PREVIOUS gate; the current gate's caches live exactly until the
         # next build.  Correctness is cache-transparent, so an earlier
-        # not-yet-collected DataFrame merely recomputes.  Opt out with
-        # GATE_CLEAR_CACHE=0.
+        # not-yet-collected DataFrame merely recomputes.
         import functools
-        import os
 
         @functools.wraps(fn_inner)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            if os.environ.get("GATE_CLEAR_CACHE", "1") != "0":
-                spark.catalog.clearCache()
+            spark.catalog.clearCache()
             return fn_inner(spark, sf_dir)
 
         wrapped.__gate_inner__ = fn_inner
@@ -152,10 +149,7 @@ def _ensure_registered() -> None:
         "inferdb_spark.gate_r11b",
         "inferdb_spark.gate_r11c",
     ):
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass
+        importlib.import_module(mod)
 
 
 # Names listed here are emitted FIRST by queries()/oracle_sql().  The driver
@@ -1181,7 +1175,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean word length — all JVM-side expressions (no UDF).  Uses the fused
     text_stats struct (one normalize + one token pass for the whole panel)."""
     d = _t(spark, sf_dir, "documents")
-    st = d.select("doc_id", F.col("text"), TXT.text_stats(F.col("text")).alias("s"))
+    st = d.select("doc_id", F.col("text"), TXT.text_stats("`text`").alias("s"))
     n = F.col("s.n_tokens")
     return st.select(
         "doc_id",

@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.hashing import duckdb_h52
+from inferdb_spark.functions.text import duckdb_normalize, duckdb_tokens
 from inferdb_spark.gate import gate
 from inferdb_spark.gate_llm4 import _tri_doc_scores_cte
 from inferdb_spark.gate_llm3 import SD_CENTROIDS, SD_DIM, _SD_CENT_SQL
-from inferdb_spark.gate_prep import _d_tokens
 
 # ---------------------------------------------------------------------------
 # CCNet perplexity head/middle/tail bucketing (Wenzek et al. 2020) over the
@@ -96,7 +96,7 @@ EXPORT_SHARDS = 16
     WITH m AS (
       SELECT CAST({duckdb_h52("CAST(doc_id AS VARCHAR)")} % {EXPORT_SHARDS}
                  AS INT) AS shard_id,
-             CAST(length({_d_tokens('text')}) AS BIGINT) AS tok,
+             CAST(length({duckdb_tokens('text')}) AS BIGINT) AS tok,
              {duckdb_h52('text')} AS h
       FROM documents
     )
@@ -348,7 +348,7 @@ def _fert_chain_sql() -> str:
     oracle=f"""
     WITH w AS (
       SELECT source, t AS word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT source, unnest({_d_tokens('text')}) AS t FROM documents)
+        SELECT source, unnest({duckdb_tokens('text')}) AS t FROM documents)
       GROUP BY source, t
     ),
     seg AS (
@@ -373,12 +373,12 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     word counts and the segmentation cost is vocabulary-sized, so the
     eval is corpus-size-independent after one aggregation.  Exact
     integers end to end (milli-fertility by nonneg integer division)."""
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
     from inferdb_spark.operators.bpe_train import bpe_apply
 
     d = load_table(spark, sf_dir, "documents")
     w = (
-        d.select("source", F.explode(_tokens(F.col("text"))).alias("word"))
+        d.select("source", F.explode(F.expr(tokens_sql("`text`"))).alias("word"))
         .groupBy("source", "word")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
@@ -464,14 +464,12 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # character-entropy quality signal (operators/textprep.char_entropy)
 
-from inferdb_spark.gate_prep import _D_NORM  # noqa: E402
-
 
 @gate(
     "char_entropy_quality",
     oracle=f"""
     WITH nt AS (
-      SELECT doc_id, {_D_NORM.format(c='text')} AS t FROM documents
+      SELECT doc_id, {duckdb_normalize('text')} AS t FROM documents
     ),
     ch AS (
       SELECT doc_id,
@@ -524,7 +522,7 @@ NOV_N = 8
 @gate(
     "ngram_novelty",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, {_d_tokens('text')} AS t FROM documents),
+    WITH tok AS (SELECT doc_id, {duckdb_tokens('text')} AS t FROM documents),
     post AS (
       SELECT DISTINCT doc_id, gh FROM (
         SELECT doc_id, {duckdb_h52('g')} AS gh FROM (
@@ -599,7 +597,7 @@ E2E_BUDGET = 2000
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT doc_id, {_d_tokens('text')} AS t FROM s2))
+          FROM (SELECT doc_id, {duckdb_tokens('text')} AS t FROM s2))
       )
     ),
     eg AS (
@@ -609,7 +607,7 @@ E2E_BUDGET = 2000
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT eval_id, {_d_tokens('text')} AS t FROM ev))
+          FROM (SELECT eval_id, {duckdb_tokens('text')} AS t FROM ev))
       )
     ),
     hits AS (
@@ -818,7 +816,7 @@ def _stage_documents(spark: SparkSession, sf_dir: str):
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT doc_id, {_d_tokens('text')} AS t FROM s1))
+          FROM (SELECT doc_id, {duckdb_tokens('text')} AS t FROM s1))
       )
     ),
     eg AS (
@@ -828,7 +826,7 @@ def _stage_documents(spark: SparkSession, sf_dir: str):
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT eval_id, {_d_tokens('text')} AS t FROM ev))
+          FROM (SELECT eval_id, {duckdb_tokens('text')} AS t FROM ev))
       )
     ),
     hits AS (
@@ -934,7 +932,7 @@ def q_stream_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT doc_id, {_d_tokens('text')} AS t FROM s1))
+          FROM (SELECT doc_id, {duckdb_tokens('text')} AS t FROM s1))
       )
     ),
     eg AS (
@@ -944,7 +942,7 @@ def q_stream_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT eval_id, {_d_tokens('text')} AS t FROM ev))
+          FROM (SELECT eval_id, {duckdb_tokens('text')} AS t FROM ev))
       )
     ),
     hits AS (

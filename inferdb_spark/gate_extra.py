@@ -7,16 +7,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
+from inferdb_spark.functions.text import duckdb_tokens
 from inferdb_spark.gate import QTY_SPLITS, _bin_expr_spark, _bin_expr_sql, gate
 from inferdb_spark.gate_ml import MC_B, MC_COEF, _mc_scores_sql
-from inferdb_spark.gate_prep import _PLANES_SQL, _d_tokens, PLANES
+from inferdb_spark.gate_prep import _PLANES_SQL, PLANES
 from inferdb_spark.operators import similarity as SIM
 
 
 @gate(
     "token_histogram",
     oracle=f"""
-    WITH tok AS (SELECT unnest({_d_tokens('text')}) AS token FROM documents)
+    WITH tok AS (SELECT unnest({duckdb_tokens('text')}) AS token FROM documents)
     SELECT token, CAST(count(*) AS BIGINT) AS n
     FROM tok GROUP BY token
     HAVING count(*) >= 10
@@ -26,11 +27,11 @@ def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary histogram: explode tokens → count (the canonical
     shuffle-on-token wordcount; map-side partial aggregation keeps the
     shuffle proportional to VOCABULARY, not corpus size)."""
-    from inferdb_spark.functions.text import tokens
+    from inferdb_spark.functions.text import tokens_sql
 
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(tokens(F.col("text"))).alias("token"))
+        d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= 10)
@@ -469,7 +470,7 @@ def q_lead_lag_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 @gate(
     "tfidf_top_terms",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_d_tokens('text')}) AS term FROM documents),
+    WITH tok AS (SELECT doc_id, unnest({duckdb_tokens('text')}) AS term FROM documents),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
     dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
     n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
@@ -494,11 +495,11 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB.  Ranking uses pure-integer ordering (tf desc, rarity asc, term
     asc) so the top-k set is engine-exact; the float tfidf is a rounded
     output value, never a sort key."""
-    from inferdb_spark.functions.text import tokens
+    from inferdb_spark.functions.text import tokens_sql
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens_sql("`text`"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = (
         tf.groupBy("term").agg(F.count("*").alias("df")).filter(F.col("df") >= 10)

@@ -113,7 +113,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from inferdb_spark.functions.hashing import duckdb_h52 as _d_h52
-from inferdb_spark.gate_prep import _d_tokens
+from inferdb_spark.functions.text import duckdb_tokens
 
 TM_ALPHA = 0.5
 TM_TARGET = 500  # permille
@@ -200,7 +200,7 @@ _FTQ_WQ_SQL = "[" + ", ".join(str(int(round(w * 1_000_000))) for w in FTQ_W) + "
     "fasttext_quality_score",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_d_tokens('text')}) AS term
+      SELECT doc_id, unnest({duckdb_tokens('text')}) AS term
       FROM documents WHERE doc_id % 7 = 0
     ),
     h AS (SELECT doc_id, {_d_h52('term')} AS hv FROM tok),
@@ -383,10 +383,9 @@ BPE_APPLY_MERGES = [("e", "r"), ("e", "r"), ("t", "h"), ("th", "e"), ("o", "r")]
 
 
 def _bpe_fit_oracle() -> str:
-    from inferdb_spark.gate_prep import _d_tokens as dt
     from inferdb_spark.operators.bpe_train import fit_bpe_sql
 
-    return fit_bpe_sql(BPE_N_MERGES, "documents", dt("text"))
+    return fit_bpe_sql(BPE_N_MERGES, "documents")
 
 
 @gate("bpe_fit_merges", oracle=_bpe_fit_oracle())
@@ -413,7 +412,7 @@ def q_bpe_fit_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
       SELECT DISTINCT t AS word FROM (
-        SELECT unnest({_d_tokens('text')}) AS t FROM documents
+        SELECT unnest({duckdb_tokens('text')}) AS t FROM documents
       )
     ),
     seg AS (
@@ -436,11 +435,11 @@ def q_bpe_segment_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol string — a pure projection over the distinct-word relation;
     the multi-char merge chain ('t h'->'th', 'th e'->'the') pins ordered
     application semantics cross-engine."""
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
     from inferdb_spark.operators.bpe_train import bpe_apply
 
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(F.explode(_tokens(F.col("text"))).alias("word")).distinct()
+    words = d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("word")).distinct()
     seg = bpe_apply(F.col("word"), BPE_APPLY_MERGES)
     return words.select(
         "word",
@@ -457,7 +456,7 @@ PACK_W = 256
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             CAST(length({_d_tokens('text')}) AS BIGINT) AS nt
+             CAST(length({duckdb_tokens('text')}) AS BIGINT) AS nt
       FROM documents
     ),
     b AS (
@@ -487,11 +486,11 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens, emit one row per (doc, window) overlap — the training-batch
     layout step.  One per-group window prefix-sum, all-integer output;
     for a single huge source, pre-shard the group key (docstring)."""
-    from inferdb_spark.functions.text import token_count
+    from inferdb_spark.functions.text import tokens_sql
     from inferdb_spark.operators.textprep import sequence_packing
 
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", token_count(F.col("text")).alias("n_toks_in")
+        "doc_id", "source", F.size(F.expr(tokens_sql("`text`"))).alias("n_toks_in")
     )
     return sequence_packing(
         d, "doc_id", "n_toks_in", "source", PACK_W
@@ -579,7 +578,7 @@ ZIPF_TOP = 50
     oracle=f"""
     WITH tf AS (
       SELECT t AS term, CAST(count(*) AS BIGINT) AS freq
-      FROM (SELECT unnest({_d_tokens('text')}) AS t FROM documents)
+      FROM (SELECT unnest({duckdb_tokens('text')}) AS t FROM documents)
       GROUP BY t
     ),
     ranked AS (
@@ -617,11 +616,11 @@ def q_zipf_law_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-relation job; everything after is vocab-sized."""
     from pyspark.sql.window import Window
 
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
 
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select(F.explode(_tokens(F.col("text"))).alias("term"))
+        d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("freq"))
     )
@@ -838,8 +837,8 @@ DSIR_K = 50
     oracle=f"""
     WITH tgt AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
     raw AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-    t_tok AS (SELECT unnest({_d_tokens('text')}) AS term FROM tgt),
-    r_tok AS (SELECT doc_id, unnest({_d_tokens('text')}) AS term FROM raw),
+    t_tok AS (SELECT unnest({duckdb_tokens('text')}) AS term FROM tgt),
+    r_tok AS (SELECT doc_id, unnest({duckdb_tokens('text')}) AS term FROM raw),
     t_b AS (SELECT {_d_h52('term')} % {DSIR_DIM} AS bucket,
                    CAST(count(*) AS BIGINT) AS t_n
             FROM t_tok GROUP BY bucket),

@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
+from inferdb_spark.functions.text import duckdb_tokens
 from inferdb_spark.gate import gate
-from inferdb_spark.gate_prep import _d_tokens
 
 SSD_K = 8  # token window width for exact-substring dedup
 
@@ -22,7 +22,7 @@ SSD_K = 8  # token window width for exact-substring dedup
 @gate(
     "substring_dedup",
     oracle=f"""
-    WITH d AS (SELECT doc_id, {_d_tokens('text')} AS a FROM documents),
+    WITH d AS (SELECT doc_id, {duckdb_tokens('text')} AS a FROM documents),
     grams AS (
       SELECT doc_id, s.pos, s.gh FROM (
         SELECT doc_id,
@@ -139,7 +139,7 @@ def _uni_oracle(body: str) -> str:
 
     return (
         "WITH w AS (SELECT t AS word, CAST(count(*) AS BIGINT) AS cnt FROM ("
-        f"SELECT unnest({_d_tokens('text')}) AS t FROM documents) "
+        f"SELECT unnest({duckdb_tokens('text')}) AS t FROM documents) "
         f"WHERE length(t) <= {UNI_W} GROUP BY t),\n"
         f"ps AS (SELECT * FROM (VALUES {_UNI_PS_SQL}) AS t(piece, score_q)),\n"
         + viterbi_sql(UNI_W, UNI_L)
@@ -170,10 +170,10 @@ def q_unigram_segment_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inferdb_spark.operators.unigram_lm import unigram_viterbi
 
     d = load_table(spark, sf_dir, "documents")
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
 
     words = (
-        d.select(F.explode(_tokens(F.col("text"))).alias("word"))
+        d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("word"))
         .where(F.length("word") <= UNI_W)
         .distinct()
     )
@@ -212,12 +212,12 @@ def q_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-round fit with seeding/pruning is pytest-parity-checked against
     a pure-Python twin).  Per-round cluster cost is vocabulary-sized;
     driver sees one piece table per round."""
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
     from inferdb_spark.operators.unigram_lm import unigram_em_round
 
     d = load_table(spark, sf_dir, "documents")
     words = (
-        d.select(F.explode(_tokens(F.col("text"))).alias("word"))
+        d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("word"))
         .where(F.length("word") <= UNI_W)
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -237,7 +237,7 @@ def _unigram_fit_oracle() -> str:
 
     return (
         "WITH w AS (SELECT t AS word, CAST(count(*) AS BIGINT) AS cnt FROM ("
-        f"SELECT unnest({_d_tokens('text')}) AS t FROM documents) "
+        f"SELECT unnest({duckdb_tokens('text')}) AS t FROM documents) "
         f"WHERE length(t) <= {UNI_W} GROUP BY t),\n"
         + fit_unigram_sql(
             n_rounds=UFR_ROUNDS,
@@ -291,7 +291,7 @@ WP_N_MERGES = 8
 def _wordpiece_fit_oracle() -> str:
     from inferdb_spark.operators.wordpiece_train import fit_wordpiece_sql
 
-    return fit_wordpiece_sql(WP_N_MERGES, tokens_sql=_d_tokens("text"))
+    return fit_wordpiece_sql(WP_N_MERGES)
 
 
 @gate("wordpiece_fit_merges", oracle=_wordpiece_fit_oracle())
@@ -337,7 +337,7 @@ def _wordpiece_segment_oracle() -> str:
 
     return (
         "WITH w AS (SELECT t AS word, CAST(count(*) AS BIGINT) AS cnt FROM ("
-        f"SELECT unnest({_d_tokens('text')}) AS t FROM documents) "
+        f"SELECT unnest({duckdb_tokens('text')}) AS t FROM documents) "
         f"WHERE length(t) <= {UNI_W} GROUP BY t),\n"
         f"wpv AS (SELECT * FROM (VALUES {_WP_VOCAB_SQL}) AS t(piece)),\n"
         + wordpiece_segment_sql("wpv", UNI_W, WP_L)
@@ -356,12 +356,12 @@ def q_wordpiece_segment_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the BERT rule; '##w' is deliberately absent from the vocab so it
     fires).  Map-only at any scale.  The oracle replays the greedy state
     machine one CTE per character position."""
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
     from inferdb_spark.operators.wordpiece_train import wordpiece_apply
 
     d = load_table(spark, sf_dir, "documents")
     words = (
-        d.select(F.explode(_tokens(F.col("text"))).alias("word"))
+        d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("word"))
         .where(F.length("word") <= UNI_W)
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -406,7 +406,7 @@ def _tri_doc_scores_cte() -> str:
     split — reused by trigram_backoff_lm and perplexity_bucket_select
     (gate_curate)."""
     return f"""
-    tok AS (SELECT doc_id, {_d_tokens('text')} AS t FROM documents),
+    tok AS (SELECT doc_id, {duckdb_tokens('text')} AS t FROM documents),
     trw AS (SELECT t FROM tok WHERE doc_id % 10 != 0),
     tew AS (SELECT doc_id, t FROM tok WHERE doc_id % 10 = 0),
     trp AS (

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.hashing import MERSENNE_P, duckdb_h52, perm_params
+from inferdb_spark.functions.text import duckdb_normalize, duckdb_tokens
 from inferdb_spark.gate import gate
 from inferdb_spark.operators import dedup as DD
 from inferdb_spark.operators import similarity as SIM
@@ -32,22 +33,11 @@ PLANES = SIM.make_hyperplanes(8, EMB_DIM, seed=42)
 
 # DuckDB fragments -----------------------------------------------------------
 
-_D_NORM = (
-    "trim(regexp_replace(regexp_replace(lower({c}), '[^a-z0-9 ]', ' ', 'g'),"
-    " ' +', ' ', 'g'))"
-)
-
-
 from inferdb_spark.functions.hashing import duckdb_h52 as _d_md5_52  # shared fragment
 
 
-def _d_tokens(c: str) -> str:
-    n = _D_NORM.format(c=c)
-    return f"(CASE WHEN length({n}) = 0 THEN CAST([] AS VARCHAR[]) ELSE string_split({n}, ' ') END)"
-
-
 def _d_char_shingles(c: str, n: int) -> str:
-    norm = _D_NORM.format(c=c)
+    norm = duckdb_normalize(c)
     return (
         f"list_distinct(list_transform(generate_series(1, length({norm}) - {n - 1}),"
         f" i -> substr({norm}, i, {n})))"
@@ -172,7 +162,7 @@ def q_ngram_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _d_token_hashes = (
-    f"list_transform({_d_tokens('text')}, t -> {_d_md5_52('t')})"
+    f"list_transform({duckdb_tokens('text')}, t -> {_d_md5_52('t')})"
 )
 _d_simhash_terms = " + ".join(
     f"(CASE WHEN list_sum(list_transform(th, x -> CASE WHEN (x >> {j}) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN CAST({2**j} AS BIGINT) ELSE 0 END)"
@@ -208,7 +198,7 @@ def q_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id,
            CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform({_d_tokens('text')}, t -> {_d_md5_52('t')} % {FP_P})),
+                list_transform({duckdb_tokens('text')}, t -> {_d_md5_52('t')} % {FP_P})),
                 (acc, x) -> (acc * {FP_BASE} + x) % {FP_P}) AS BIGINT) AS fingerprint
     FROM documents
     """,
@@ -219,7 +209,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        TP.rolling_fingerprint(F.col("text"), FP_BASE, FP_P).alias("fingerprint"),
+        TP.rolling_fingerprint("`text`", FP_BASE, FP_P).alias("fingerprint"),
     )
 
 
@@ -242,7 +232,7 @@ _lang_rows = " UNION ALL ".join(
 @gate(
     "lang_id",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, {_d_tokens('text')} AS toks FROM documents),
+    WITH tok AS (SELECT doc_id, {duckdb_tokens('text')} AS toks FROM documents),
     scores AS (SELECT doc_id, {_lang_score_sql} FROM tok),
     longf AS ({_lang_rows}),
     m AS (SELECT doc_id, max(score) AS ms FROM longf GROUP BY 1),
@@ -261,7 +251,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID (argmax, alphabetic tiebreak, 'und'
     when no profile matches)."""
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", TP.detect_language(F.col("text")).alias("lang_pred"))
+    return d.select("doc_id", TP.detect_language("`text`").alias("lang_pred"))
 
 
 # ---------------------------------------------------------------------------
@@ -389,7 +379,7 @@ def q_embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab_id_assignment",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_d_tokens('text')}) AS term FROM documents
+      SELECT doc_id, unnest({duckdb_tokens('text')}) AS term FROM documents
     ),
     counts AS (
       SELECT term, count(*) AS n FROM tok GROUP BY term HAVING count(*) >= 5
@@ -429,7 +419,7 @@ def q_vocab_id_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "feature_hashing",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_d_tokens('text')}) AS term
+      SELECT doc_id, unnest({duckdb_tokens('text')}) AS term
       FROM documents WHERE doc_id % 10 = 0
     ),
     h AS (SELECT doc_id, {_d_md5_52('term')} AS hv FROM tok),
@@ -466,7 +456,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @gate(
     "bigram_lm_score",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, {_d_tokens('text')} AS t FROM documents),
+    WITH tok AS (SELECT doc_id, {duckdb_tokens('text')} AS t FROM documents),
     dp AS (
       SELECT doc_id, b['w1'] AS w1, b['w2'] AS w2
       FROM (
@@ -654,13 +644,13 @@ def _d_word_gram_hashes(tok_expr: str, n: int) -> str:
       SELECT doc_id AS eval_id, substr(text, 21, 100) AS text
       FROM documents WHERE doc_id % 13 = 0
     ),
-    evt AS (SELECT eval_id, {_d_tokens('text')} AS t FROM ev),
+    evt AS (SELECT eval_id, {duckdb_tokens('text')} AS t FROM ev),
     evg AS (
       SELECT DISTINCT eval_id, gh FROM (
         SELECT eval_id, unnest({_d_word_gram_hashes('t', DECON_N)}) AS gh FROM evt
       )
     ),
-    ct AS (SELECT doc_id, {_d_tokens('text')} AS t FROM documents),
+    ct AS (SELECT doc_id, {duckdb_tokens('text')} AS t FROM documents),
     cg AS (
       SELECT DISTINCT doc_id, gh FROM (
         SELECT doc_id, unnest({_d_word_gram_hashes('t', DECON_N)}) AS gh FROM ct
@@ -747,7 +737,7 @@ BOILER_TOPN = 20
 @gate(
     "boilerplate_ngrams",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, {_d_tokens('text')} AS t FROM documents),
+    WITH tok AS (SELECT doc_id, {duckdb_tokens('text')} AS t FROM documents),
     grams AS (
       SELECT DISTINCT doc_id, g FROM (
         SELECT doc_id,
@@ -921,7 +911,7 @@ from inferdb_spark.functions.text import BPE_SPLIT_RE as _BPE_RE
       SELECT doc_id,
              list_filter(regexp_extract_all(lower(text), '{_BPE_RE.replace("'", "''")}'),
                          x -> trim(x) <> '') AS bt,
-             {_d_tokens('text')} AS wt
+             {duckdb_tokens('text')} AS wt
       FROM documents
     )
     SELECT doc_id,
@@ -940,13 +930,13 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     subword token cost when budgeting a training mixture; pure projection,
     fused into the scan.
     """
-    from inferdb_spark.functions.text import bpe_token_count, bpe_tokens, token_count
+    from inferdb_spark.functions.text import bpe_token_count, bpe_tokens, tokens_sql
 
     d = load_table(spark, sf_dir, "documents")
     bt = F.filter(bpe_tokens(F.col("text")), lambda t: F.trim(t) != "")
     return d.select(
         "doc_id",
-        token_count(F.col("text")).cast("long").alias("ws_tokens"),
+        F.size(F.expr(tokens_sql("`text`"))).cast("long").alias("ws_tokens"),
         F.size(bt).cast("long").alias("bpe_tokens"),
         F.size(F.array_distinct(bt)).cast("long").alias("bpe_distinct"),
     )

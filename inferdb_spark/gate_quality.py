@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from inferdb_spark.gate import LIN_COEF, LIN_INTERCEPT, gate
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.hashing import duckdb_h52
+from inferdb_spark.functions.text import duckdb_normalize
 
 # ---------------------------------------------------------------------------
 # isotonic calibration
@@ -108,17 +109,13 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WIN_K, _WIN_W = 5, 4
-_D_NORM_TEXT = (
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),"
-    " ' +', ' ', 'g'))"
-)
 
 
 @gate(
     "winnowing_fingerprints",
     oracle=f"""
 WITH n AS (
-  SELECT doc_id, {_D_NORM_TEXT} AS t FROM documents WHERE doc_id < 200
+  SELECT doc_id, {duckdb_normalize('text')} AS t FROM documents WHERE doc_id < 200
 ),
 g AS (
   SELECT doc_id, u.i AS pos, substr(t, u.i, {_WIN_K}) AS gram

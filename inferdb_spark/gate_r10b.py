@@ -30,13 +30,13 @@ from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.hashing import duckdb_h52, h52
+from inferdb_spark.functions.text import duckdb_tokens
 from inferdb_spark.gate import gate
 from inferdb_spark.gate_curate import (
     E2E_DECON_N,
     E2E_DECON_SHARED,
     E2E_MIN_TOKENS,
 )
-from inferdb_spark.gate_prep import _d_tokens
 from inferdb_spark.gate_r7g import _SC_SQL, _scored
 
 # ---------------------------------------------------------------------------
@@ -63,7 +63,7 @@ _E2E_S3_CTES = f"""corpus AS (SELECT * FROM documents WHERE doc_id % 50 != 0),
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT doc_id, {_d_tokens('text')} AS t FROM s2))
+          FROM (SELECT doc_id, {duckdb_tokens('text')} AS t FROM s2))
       )
     ),
     eg AS (
@@ -73,7 +73,7 @@ _E2E_S3_CTES = f"""corpus AS (SELECT * FROM documents WHERE doc_id % 50 != 0),
                  unnest(list_transform(
                    range(1, greatest(length(t) - {E2E_DECON_N - 2}, 1)),
                    i -> array_to_string(t[i:i+{E2E_DECON_N - 1}], ' '))) AS g
-          FROM (SELECT eval_id, {_d_tokens('text')} AS t FROM ev))
+          FROM (SELECT eval_id, {duckdb_tokens('text')} AS t FROM ev))
       )
     ),
     hits AS (

@@ -39,8 +39,8 @@ from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.hashing import duckdb_h52, h52
+from inferdb_spark.functions.text import duckdb_tokens
 from inferdb_spark.gate import gate
-from inferdb_spark.gate_prep import _d_tokens
 
 # ---------------------------------------------------------------------------
 # shared match relation: consecutive same-customer orders
@@ -621,7 +621,7 @@ _DCG_TERM = (
 @gate(
     "ndcg_at_k",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_d_tokens('text')}) AS term
+    WITH tok AS (SELECT doc_id, unnest({duckdb_tokens('text')}) AS term
                  FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
            FROM tok WHERE term IN {_RANK_QUERY!r} GROUP BY doc_id, term),
@@ -670,10 +670,10 @@ def q_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs has undefined NDCG).  Scale: the postings relation is pruned
     to the query terms BEFORE any window; the per-term top-{_RANK_K}
     windows run on the pruned relation (the window_topk pattern)."""
-    from inferdb_spark.functions.text import tokens
+    from inferdb_spark.functions.text import tokens_sql
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens_sql("`text`"))).alias("term"))
     tf = (
         tok.where(F.col("term").isin(*_RANK_QUERY))
         .groupBy("doc_id", "term")
@@ -725,7 +725,7 @@ def q_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 @gate(
     "mrr_first_relevant",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_d_tokens('text')}) AS term
+    WITH tok AS (SELECT doc_id, unnest({duckdb_tokens('text')}) AS term
                  FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
            FROM tok WHERE term IN {_RANK_QUERY!r} GROUP BY doc_id, term),
@@ -754,10 +754,10 @@ def q_mrr_first_relevant(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: ranks are exact; one division, 6dp.  Scale: postings
     pruned to query terms before the per-term window; min(r) is a
     domain-bounded reduce."""
-    from inferdb_spark.functions.text import tokens
+    from inferdb_spark.functions.text import tokens_sql
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens_sql("`text`"))).alias("term"))
     tf = (
         tok.where(F.col("term").isin(*_RANK_QUERY))
         .groupBy("doc_id", "term")

@@ -18,9 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
-from inferdb_spark.functions.text import tokens
+from inferdb_spark.functions.text import duckdb_tokens, tokens_sql
 from inferdb_spark.gate import gate
-from inferdb_spark.gate_prep import _d_tokens
 from inferdb_spark.operators import mf as MF
 from inferdb_spark.operators import softmax as SM
 from inferdb_spark.operators.sketch import mg_heavy_hitters, mg_shard_summaries
@@ -157,7 +156,7 @@ _MG_D_SHARD = (
     "mg_heavy_hitters",
     oracle=f"""
     WITH tok AS (
-      SELECT {_MG_D_SHARD} AS shard, unnest({_d_tokens('text')}) AS term
+      SELECT {_MG_D_SHARD} AS shard, unnest({duckdb_tokens('text')}) AS term
       FROM documents
     ),
     counts AS (
@@ -197,7 +196,7 @@ def q_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shard, term) count — the exact-GROUP-BY substitute at 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
+        F.col("doc_id"), F.explode(F.expr(tokens_sql("`text`"))).alias("term")
     )
     summaries = mg_shard_summaries(
         tok, F.col("doc_id"), F.col("term"), n_shards=MG_SHARDS, capacity=MG_CAP

@@ -738,7 +738,7 @@ def q_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(TXT.tokens(F.col("text"))).alias("term"))
+        docs.select(F.explode(F.expr(TXT.tokens_sql("`text`"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("c"))
     )
@@ -843,7 +843,7 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from inferdb_spark.operators.textprep import _bigram_structs
 
-    toks = docs.select(TXT.tokens(F.col("text")).alias("t"))
+    toks = docs.select(F.expr(TXT.tokens_sql("`text`")).alias("t"))
     pairs = toks.select(F.explode(_bigram_structs("t")).alias("b")).select(
         "b.w1", "b.w2"
     )

@@ -349,7 +349,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inferdb_spark.functions import text as TXT
 
     docs = load_table(spark, sf_dir, "documents")
-    tc = F.size(TXT.tokens(F.col("text")))
+    tc = F.size(F.expr(TXT.tokens_sql("`text`")))
     rated = docs.select(
         F.when(F.col("n_chars") < _KAPPA_CHARS[0], 0)
         .when(F.col("n_chars") < _KAPPA_CHARS[1], 1)

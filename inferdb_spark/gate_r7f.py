@@ -23,14 +23,6 @@ from inferdb_spark.catalog import load_table
 from inferdb_spark.functions import text as TXT
 from inferdb_spark.gate import gate
 
-_D_TOKENS = (
-    "(CASE WHEN length(trim(regexp_replace(regexp_replace("
-    "lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) = 0 "
-    "THEN CAST([] AS VARCHAR[]) "
-    "ELSE string_split(trim(regexp_replace(regexp_replace("
-    "lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') END)"
-)
-
 _HEAPS_CKPTS = 10
 
 
@@ -38,7 +30,7 @@ _HEAPS_CKPTS = 10
     "heaps_law_curve",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_D_TOKENS}) AS term FROM documents
+      SELECT doc_id, unnest({TXT.duckdb_tokens('text')}) AS term FROM documents
     ),
     mx AS (SELECT CAST(max(doc_id) + 1 AS BIGINT) AS m FROM documents),
     firsts AS (
@@ -101,7 +93,7 @@ def q_heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are exact BIGINTs and the slope is one fixed-order division.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(TXT.tokens(F.col("text"))).alias("term"))
+    tok = docs.select("doc_id", F.explode(F.expr(TXT.tokens_sql("`text`"))).alias("term"))
     tok.cache()
     mx = docs.agg((F.max("doc_id") + 1).cast("long").alias("m"))
     firsts = tok.groupBy("term").agg(
@@ -166,7 +158,7 @@ _ZIPF_TOP = 100
     "zipf_slope_fit",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({_D_TOKENS}) AS term FROM documents
+      SELECT unnest({TXT.duckdb_tokens('text')}) AS term FROM documents
     ),
     counts AS (SELECT term, CAST(count(*) AS BIGINT) AS freq
                FROM tok GROUP BY term),
@@ -210,7 +202,7 @@ def q_zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(TXT.tokens(F.col("text"))).alias("term"))
+        docs.select(F.explode(F.expr(TXT.tokens_sql("`text`"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("freq"))
     )

@@ -23,15 +23,6 @@ from inferdb_spark.catalog import load_table
 from inferdb_spark.functions import text as TXT
 from inferdb_spark.gate import gate
 
-# DuckDB twin of TXT.tokens (the gate_r7f convention)
-_D_TOKENS = (
-    "(CASE WHEN length(trim(regexp_replace(regexp_replace("
-    "lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) = 0 "
-    "THEN CAST([] AS VARCHAR[]) "
-    "ELSE string_split(trim(regexp_replace(regexp_replace("
-    "lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') END)"
-)
-
 _BLEU_FINAL = (
     "CAST(round(CASE WHEN num1 = 0 OR num2 = 0 THEN 0.0 ELSE "
     "(CASE WHEN c_len < r_len THEN exp(1.0 - CAST(r_len AS DOUBLE) / c_len) "
@@ -129,7 +120,7 @@ def gram_overlap_stats(spark, sf_dir: str, halves, ns=(1, 2)):
     "bleu_self_halves",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, {_D_TOKENS} AS t FROM documents
+      SELECT doc_id, {TXT.duckdb_tokens('text')} AS t FROM documents
     ),
     halves AS (
       SELECT doc_id,
@@ -194,7 +185,7 @@ def q_bleu_self_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel, no global relation anywhere; the gram
     shuffle width scales with input size (_gram_parallelism)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", TXT.tokens(F.col("text")).alias("t"))
+    toks = docs.select("doc_id", F.expr(TXT.tokens_sql("`text`")).alias("t"))
     halves = toks.select(
         "doc_id",
         F.expr("slice(t, 1, size(t) div 2)").alias("cand"),

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions import text as TXT
 from inferdb_spark.gate import gate
-from inferdb_spark.gate_r7i import _spark_grams, _D_TOKENS, _duck_grams
+from inferdb_spark.gate_r7i import _spark_grams, _duck_grams
 
 # ---------------------------------------------------------------------------
 # Cronbach's alpha: internal consistency of k = 3 order-size "items"
@@ -300,7 +300,7 @@ _ROUGE_OUT = [
     "rouge_n_halves",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, {_D_TOKENS} AS t FROM documents
+      SELECT doc_id, {TXT.duckdb_tokens('text')} AS t FROM documents
     ),
     halves AS (
       SELECT doc_id,
@@ -372,7 +372,7 @@ def q_rouge_n_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: keys on (doc_id, gram) throughout — embarrassingly parallel,
     no global relation."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", TXT.tokens(F.col("text")).alias("t"))
+    toks = docs.select("doc_id", F.expr(TXT.tokens_sql("`text`")).alias("t"))
     halves = toks.select(
         "doc_id",
         F.expr("slice(t, 1, size(t) div 2)").alias("cand"),

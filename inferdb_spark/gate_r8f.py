@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions import text as TXT
 from inferdb_spark.gate import gate
-from inferdb_spark.gate_r7i import _D_TOKENS
 
 # ---------------------------------------------------------------------------
 # Brown-Forsythe (median-centered Levene) test
@@ -519,7 +518,7 @@ _READ_SCORES = [
     "readability_scores",
     oracle=f"""
     WITH counts AS (
-      SELECT {', '.join(_read_sql(f"len({_D_TOKENS})", ", 'g'"))}
+      SELECT {', '.join(_read_sql(f"len({TXT.duckdb_tokens('text')})", ", 'g'"))}
       FROM documents
     )
     SELECT {', '.join(_READ_SCORES)} FROM counts ORDER BY doc_id
@@ -543,7 +542,7 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     score formulas run once in shared SQL.  Scale: pure per-row
     projection, embarrassingly parallel."""
     docs = load_table(spark, sf_dir, "documents")
-    counts = docs.withColumn("n_words_raw", F.size(TXT.tokens(F.col("text")))).selectExpr(
+    counts = docs.withColumn("n_words_raw", F.size(F.expr(TXT.tokens_sql("`text`")))).selectExpr(
         *_read_sql("n_words_raw", "")
     )
     return counts.selectExpr(*_READ_SCORES).orderBy("doc_id")

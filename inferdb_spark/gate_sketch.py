@@ -26,9 +26,9 @@ from pyspark.sql.window import Window
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.hashing import duckdb_h52, h52
-from inferdb_spark.functions.text import tokens
+from inferdb_spark.functions.text import duckdb_tokens, tokens_sql
 from inferdb_spark.gate import gate
-from inferdb_spark.gate_prep import _d_tokens, _d_word_gram_hashes
+from inferdb_spark.gate_prep import _d_word_gram_hashes
 from inferdb_spark.operators.sketch import (
     H52_SPACE,
     bloom_build,
@@ -131,7 +131,7 @@ BM25_TOPN = 20
 @gate(
     "bm25_ranked_retrieval",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_d_tokens('text')}) AS term FROM documents),
+    WITH tok AS (SELECT doc_id, unnest({duckdb_tokens('text')}) AS term FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
            FROM tok GROUP BY doc_id, term),
     dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
@@ -176,7 +176,7 @@ def q_bm25_ranked_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inferdb_spark.scale import right_size_cached
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens_sql("`text`"))).alias("term"))
     # ONE tokenize pass: dl and dfreq both derive from the (much smaller)
     # tf relation — dl = Σ tf per doc — and tf feeds scoring, so cache it.
     # right_size_cached: tf cached at the session shuffle width left six
@@ -241,7 +241,7 @@ OVL_N = 5  # word n-gram size
 @gate(
     "kmv_pairwise_overlap",
     oracle=f"""
-    WITH tok AS (SELECT lang, {_d_tokens('text')} AS t FROM documents),
+    WITH tok AS (SELECT lang, {duckdb_tokens('text')} AS t FROM documents),
     gh AS (
       SELECT DISTINCT lang, gh FROM (
         SELECT lang, unnest({_d_word_gram_hashes('t', OVL_N)}) AS gh FROM tok
@@ -477,7 +477,7 @@ def _d_cms_pos(val_expr: str) -> str:
 @gate(
     "cms_term_frequency",
     oracle=f"""
-    WITH tok AS (SELECT unnest({_d_tokens('text')}) AS term FROM documents),
+    WITH tok AS (SELECT unnest({duckdb_tokens('text')}) AS term FROM documents),
     pos AS (
       SELECT i - 1 AS row, p[i] AS col
       FROM (SELECT {_d_cms_pos('term')} AS p FROM tok) t,
@@ -517,7 +517,7 @@ def q_cms_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE (r10): spread() before this tokenize REFUTED by alternating
     # A/B (min 1.97 -> 2.29 s) — same tokenize->groupBy shape as
     # fit_vocab; the refutation note there carries the analysis.
-    tok = d.select(F.explode(tokens(F.col("text"))).alias("term"))
+    tok = d.select(F.explode(F.expr(tokens_sql("`text`"))).alias("term"))
     cms = cms_build(tok, F.col("term"), CMS_D, CMS_W)
     probes = spark.createDataFrame([(t,) for t in CMS_PROBES], "probe string")
     est = cms_estimate(cms, probes, F.col("probe"), CMS_D, CMS_W)

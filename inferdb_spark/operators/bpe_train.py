@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from inferdb_spark.functions.text import duckdb_tokens, tokens_sql
+
 
 def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """(word, cnt, seq): distinct words with counts and the initial
@@ -42,9 +44,7 @@ def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     pass of Sennrich BPE ('aaaa' -> [aa, aa], 'aaa' -> [aa, a]).  A
     space-delimited form would share the boundary space between
     occurrences and under-merge runs of repeated symbols."""
-    from inferdb_spark.functions.text import tokens
-
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("word"))
+    words = df.select(F.explode(F.expr(tokens_sql(f"`{text_col}`"))).alias("word"))
     vocab = words.groupBy("word").agg(F.count("*").cast("long").alias("cnt"))
     chars = F.expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
@@ -163,13 +163,11 @@ def bpe_apply(word_col: Column, merges: list[tuple[str, str]]) -> Column:
 def fit_bpe_sql(
     n_merges: int = 8,
     table: str = "documents",
-    tokens_sql: str | None = None,
 ) -> str:
     """DuckDB oracle replaying the ENTIRE BPE fit: chained CTE rounds of
     pair-count -> argmax -> literal replace, emitting the learned merge
-    table (round, a, b, c).  `tokens_sql` must be a DuckDB expression
-    yielding the word array per row (the shared tokenizer twin)."""
-    assert tokens_sql is not None
+    table (round, a, b, c).  Words come from :func:`duckdb_tokens` over
+    `table`.text."""
     sy = "string_split(trim(seq, '|'), '||')"
     pair_tpl = (
         "SELECT p.a, p.b, CAST(sum(cnt) AS BIGINT) AS c FROM ("
@@ -182,7 +180,7 @@ def fit_bpe_sql(
     )
     ctes = [
         f"w AS MATERIALIZED (SELECT t AS word, CAST(count(*) AS BIGINT) AS cnt "
-        f"FROM (SELECT unnest({tokens_sql}) AS t FROM {table}) GROUP BY t)",
+        f"FROM (SELECT unnest({duckdb_tokens('text')}) AS t FROM {table}) GROUP BY t)",
         "v0 AS MATERIALIZED (SELECT word, cnt, '|' || "
         "array_to_string(regexp_extract_all(word, '.'), '||') || '|' AS seq "
         "FROM w)",

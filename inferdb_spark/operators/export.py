@@ -45,12 +45,12 @@ def sharded_export_manifest(
     One map-side-combinable aggregation; every column is exact-integer
     (counts, token counts, XOR fingerprint), so the manifest replays
     bit-identically cross-engine and across retries."""
-    from inferdb_spark.functions.text import token_count
+    from inferdb_spark.functions.text import tokens_sql
 
     return (
         df.select(
             shard_assign(F.col(id_col), n_shards).alias("shard_id"),
-            token_count(F.col(text_col)).cast("long").alias("_tok"),
+            F.size(F.expr(tokens_sql(f"`{text_col}`"))).cast("long").alias("_tok"),
             h52(F.col(text_col)).alias("_h"),
         )
         .groupBy("shard_id")

@@ -145,20 +145,34 @@ def _sql_dlit(x: float) -> str:
     return r if ("e" in r or "E" in r or "n" in r) else r + "D"
 
 
+def _dlit_array_sql(c: list[float]) -> str:
+    """SQL array of DOUBLE literals (see :func:`_sql_dlit`)."""
+    return "array(" + ", ".join(_sql_dlit(x) for x in c) + ")"
+
+
+def _sq_l2_sql(v: str, arr: str) -> str:
+    """Squared L2 distance between two SQL double arrays: the single
+    definition of the centroid distance fold (IVF and SemDeDup)."""
+    return (
+        f"aggregate(zip_with({v}, {arr}, (a, b) -> (a - b) * (a - b)), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def _dot_sql(v: str, arr: str) -> str:
+    """Dot product of two SQL double arrays (the vector.dot fold)."""
+    return f"aggregate(zip_with({v}, {arr}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+
+
 def _ivf_entries_sql(vec_sql: str, centroids: list[list[float]]) -> str:
     """SQL array of one (d, list_id) struct per literal centroid, d the
-    squared L2 distance from the vector — the single definition of the
-    IVF distance fold.  Struct field order makes array_min / array_sort
-    break distance ties on the lower list id."""
+    squared L2 distance from the vector.  Struct field order makes
+    array_min / array_sort break distance ties on the lower list id."""
     v = f"CAST({vec_sql} AS ARRAY<DOUBLE>)"
-    entries = []
-    for i, c in enumerate(centroids):
-        arr = "array(" + ", ".join(_sql_dlit(x) for x in c) + ")"
-        d = (
-            f"aggregate(zip_with({v}, {arr}, (a, b) -> (a - b) * (a - b)), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-        entries.append(f"named_struct('d', {d}, 'list_id', {i})")
+    entries = [
+        f"named_struct('d', {_sq_l2_sql(v, _dlit_array_sql(c))}, 'list_id', {i})"
+        for i, c in enumerate(centroids)
+    ]
     return "array(" + ", ".join(entries) + ")"
 
 
@@ -215,14 +229,7 @@ def pq_encode_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
 
 def _hyperplane_projs_sql(v: str, planes: list[list[float]]) -> list[str]:
     """Per-plane projection expressions (the vector.dot fold)."""
-    projs = []
-    for p in planes:
-        arr = "array(" + ", ".join(_sql_dlit(x) for x in p) + ")"
-        projs.append(
-            f"aggregate(zip_with({v}, {arr}, (x, y) -> x * y), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-    return projs
+    return [_dot_sql(v, _dlit_array_sql(p)) for p in planes]
 
 
 def _hyperplane_bucket_sql_from(projs: list[str]) -> str:
@@ -434,35 +441,35 @@ def pq_adc_topk(
     )
 
 
-def assign_with_centroid_cosine(
-    vec_col: Column, centroids: list[list[float]]
-) -> Column:
-    """struct(cluster, ccos_q): nearest literal centroid by squared L2
-    (lowest-id tiebreak) plus the micro-unit-quantized cosine to that
-    centroid — one projection, no join, no shuffle.  Quantizing ccos to
-    BIGINT micro-units (floor(x*1e6 + 0.5)) makes downstream ORDERING on
-    it engine-portable (cross-engine float ULPs cannot flip a rank)."""
-    v = as_double_array(vec_col)
+def assign_with_centroid_cosine_sql(
+    vec_sql: str, centroids: list[list[float]]
+) -> str:
+    """struct(cluster, ccos_q) of a SQL vector expression: nearest literal
+    centroid by squared L2 (lowest-id tiebreak) plus the
+    micro-unit-quantized cosine to that centroid (0 when either norm is
+    0) — one projection, no join, no shuffle.  Quantizing ccos to BIGINT
+    micro-units (floor(x*1e6 + 0.5)) makes downstream ORDERING on it
+    engine-portable (cross-engine float ULPs cannot flip a rank)."""
+
+    def norm_sql(a: str) -> str:
+        return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
+
+    v = f"CAST({vec_sql} AS ARRAY<DOUBLE>)"
+    nv = norm_sql(v)
     entries = []
     for i, c in enumerate(centroids):
-        clit = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, clit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        arr = _dlit_array_sql(c)
+        nc = norm_sql(arr)
+        ccos = (
+            f"CASE WHEN {nv} > 0 AND {nc} > 0 "
+            f"THEN {_dot_sql(v, arr)} / ({nv} * {nc}) ELSE 0.0D END"
         )
-        ccos = cosine_similarity(v, clit)
         entries.append(
-            F.struct(
-                d.alias("d"),
-                F.lit(i).alias("cluster"),
-                F.floor(ccos * F.lit(1000000.0) + F.lit(0.5))
-                .cast("long")
-                .alias("ccos_q"),
-            )
+            f"named_struct('d', {_sq_l2_sql(v, arr)}, 'cluster', {i}, "
+            f"'ccos_q', CAST(floor({ccos} * 1000000.0D + 0.5D) AS BIGINT))"
         )
-    best = F.array_min(F.array(*entries))
-    return F.struct(best["cluster"].alias("cluster"), best["ccos_q"].alias("ccos_q"))
+    best = "array_min(array(" + ", ".join(entries) + "))"
+    return f"named_struct('cluster', {best}.cluster, 'ccos_q', {best}.ccos_q)"
 
 
 def semantic_dedup(
@@ -501,7 +508,7 @@ def semantic_dedup(
     a = df.select(
         F.col(id_col),
         as_double_array(F.col(vec_col)).alias("_v"),
-        assign_with_centroid_cosine(F.col(vec_col), centroids).alias("_asg"),
+        F.expr(assign_with_centroid_cosine_sql(f"`{vec_col}`", centroids)).alias("_asg"),
     ).select(
         F.col(id_col),
         F.col("_v"),
@@ -947,8 +954,8 @@ def semantic_dedup_incremental(
             df.select(
                 F.col(id_col),
                 as_double_array(F.col(vec_col)).alias("_v"),
-                assign_with_centroid_cosine(
-                    F.col(vec_col), centroids
+                F.expr(
+                    assign_with_centroid_cosine_sql(f"`{vec_col}`", centroids)
                 ).alias("_asg"),
             )
             .select(

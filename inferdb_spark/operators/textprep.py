@@ -14,8 +14,7 @@ from inferdb_spark.functions.text import (
     mean_word_length,
     punct_ratio,
     stopword_ratio,
-    token_count,
-    tokens,
+    tokens_sql,
 )
 
 # tiny per-language stopword profiles (public, standard closed-class words)
@@ -28,9 +27,9 @@ LANG_PROFILES: dict[str, list[str]] = {
 }
 
 
-def _lang_hits_struct(text_col: Column) -> Column:
+def _lang_hits_struct(text_sql: str) -> Column:
     """ONE tokenize pass producing struct(n, <hits per language>) — per-lang
-    `tokens()` calls would re-run normalize+split per profile (see
+    tokenizations would re-run normalize+split per profile (see
     pyspark-perf notes on subtree re-evaluation)."""
     from inferdb_spark.functions.text import bind_once
 
@@ -48,23 +47,14 @@ def _lang_hits_struct(text_col: Column) -> Column:
             ],
         )
 
-    return bind_once(tokens(text_col), build)
+    return bind_once(F.expr(tokens_sql(text_sql)), build)
 
 
-def lang_scores(text_col: Column) -> dict[str, Column]:
-    """Per-language stopword hit ratio (n-gram-free heuristic language ID:
-    fraction of tokens in the language's closed-class profile)."""
-    s = _lang_hits_struct(text_col)
-    n = s["n"]
-    return {
-        lang: F.when(n > 0, s[f"h_{lang}"].cast("double") / n).otherwise(F.lit(0.0))
-        for lang in sorted(LANG_PROFILES)
-    }
-
-
-def detect_language(text_col: Column) -> Column:
-    """argmax over language scores; ties break alphabetically ('und' =
-    undetermined when every score is 0)."""
+def detect_language(text_sql: str) -> Column:
+    """argmax over per-language stopword hit ratios (n-gram-free heuristic
+    language ID: fraction of tokens in the language's closed-class
+    profile); ties break alphabetically ('und' = undetermined when every
+    score is 0)."""
     from inferdb_spark.functions.text import bind_once
 
     ordered = sorted(LANG_PROFILES)
@@ -88,20 +78,20 @@ def detect_language(text_col: Column) -> Column:
 
     # bind the hits struct once: `pick` references it 2× per language, which
     # would otherwise re-run the tokenize pipeline 10×
-    return bind_once(_lang_hits_struct(text_col), pick)
+    return bind_once(_lang_hits_struct(text_sql), pick)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-signal columns: length, tokens, ratios — one projection."""
-    c = F.col(text_col)
+    c, t = F.col(text_col), f"`{text_col}`"
     return df.withColumns(
         {
             "n_chars_q": F.length(c),
-            "n_tokens": token_count(c),
-            "stopword_ratio": stopword_ratio(c),
+            "n_tokens": F.size(F.expr(tokens_sql(t))),
+            "stopword_ratio": stopword_ratio(t),
             "punct_ratio": punct_ratio(c),
             "alpha_ratio": alpha_ratio(c),
-            "mean_word_len": mean_word_length(c),
+            "mean_word_len": mean_word_length(t),
         }
     )
 
@@ -124,13 +114,13 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return q.withColumn("quality_score", score)
 
 
-def rolling_fingerprint(text_col: Column, base: int = 257, p: int = 1000000007) -> Column:
+def rolling_fingerprint(text_sql: str, base: int = 257, p: int = 1000000007) -> Column:
     """Polynomial rolling hash over word tokens mod a prime — a stable
     document fingerprint: fp = Σ h(tok_i)·base^(n-1-i) mod p, folded
     left-to-right as fp = fp*base + h(tok) (mod p).  Pure integer math, so
     any engine reproduces it exactly."""
     th = F.transform(
-        tokens(text_col),
+        F.expr(tokens_sql(text_sql)),
         lambda t: F.conv(F.substring(F.md5(t), 1, 13), 16, 10).cast("long") % F.lit(p),
     )
     return F.aggregate(
@@ -167,9 +157,9 @@ def winnowing_fingerprints(
     from pyspark.sql.window import Window
 
     from inferdb_spark.functions.hashing import h52
-    from inferdb_spark.functions.text import normalize
+    from inferdb_spark.functions.text import normalize_sql
 
-    norm = normalize(F.col(text_col))
+    norm = F.expr(normalize_sql(f"`{text_col}`"))
     grams = F.expr(
         f"transform(sequence(1, greatest(length({'_norm'}) - {k - 1}, 0)),"
         f" i -> substring({'_norm'}, i, {k}))"
@@ -209,7 +199,7 @@ def build_vocab(
     # immediate map-side-combined groupBy gains less from parallelism
     # than the extra exchange + 32-task scheduling costs.
     counts = (
-        df.select(F.explode(TXT.tokens(F.col(text_col))).alias("term"))
+        df.select(F.explode(F.expr(TXT.tokens_sql(f"`{text_col}`"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= min_count)
@@ -230,7 +220,9 @@ def apply_vocab(
     strategy from stats otherwise."""
     from inferdb_spark.functions import text as TXT
 
-    toks = df.select(F.col(id_col), F.explode(TXT.tokens(F.col(text_col))).alias("term"))
+    toks = df.select(
+        F.col(id_col), F.explode(F.expr(TXT.tokens_sql(f"`{text_col}`"))).alias("term")
+    )
     return toks.join(F.broadcast(vocab.select("term", "term_id")), "term", "left")
 
 
@@ -250,7 +242,9 @@ def hash_features(
     from inferdb_spark.functions import text as TXT
     from inferdb_spark.functions.hashing import h52
 
-    toks = df.select(F.col(id_col), F.explode(TXT.tokens(F.col(text_col))).alias("term"))
+    toks = df.select(
+        F.col(id_col), F.explode(F.expr(TXT.tokens_sql(f"`{text_col}`"))).alias("term")
+    )
     h = h52(F.col("term"))
     signed = toks.select(
         F.col(id_col),
@@ -299,7 +293,7 @@ def bigram_counts(df: DataFrame, text_col: str = "text") -> tuple[DataFrame, Dat
     # a wash-to-regression (the three vocab-bound aggregates over the
     # small cached relation pay 32-task scheduling overhead per pass that
     # exceeds the single-task tokenize it parallelizes) — reverted.
-    toks = df.select(TXT.tokens(F.col(text_col)).alias("t")).cache()
+    toks = df.select(F.expr(TXT.tokens_sql(f"`{text_col}`")).alias("t")).cache()
     pairs = toks.select(F.explode(_bigram_structs("t")).alias("b")).select(
         "b.w1", "b.w2"
     )
@@ -334,7 +328,7 @@ def bigram_logprob_score(
 
     # bind the tokenization ONCE per row (HOF trap: an expensive subtree
     # referenced inside a per-element lambda re-evaluates per element)
-    toks = df.select(F.col(id_col), TXT.tokens(F.col(text_col)).alias("t"))
+    toks = df.select(F.col(id_col), F.expr(TXT.tokens_sql(f"`{text_col}`")).alias("t"))
     doc_pairs = toks.select(
         F.col(id_col), F.explode(_bigram_structs("t")).alias("b")
     ).select(id_col, "b.w1", "b.w2")
@@ -408,7 +402,7 @@ def repetition_features(
     """
     from inferdb_spark.functions.text import word_ngrams_sql
 
-    t = tokens(F.col(text_col))
+    t = F.expr(tokens_sql(f"`{text_col}`"))
     out = df.select(
         F.col(id_col),
         t.alias("t"),
@@ -817,7 +811,7 @@ def hashed_linear_text_score(
     # the SQL twin's LEFT JOIN + coalesce)
     margin_q = F.coalesce(
         F.aggregate(
-            TXT.tokens(F.col(text_col)),
+            F.expr(TXT.tokens_sql(f"`{text_col}`")),
             F.lit(0).cast("long"),
             lambda acc, t: acc + _term_weight(t),
         ),
@@ -925,7 +919,7 @@ def dsir_bucket_weights(
     def bucket_counts(df: DataFrame, name: str) -> DataFrame:
         # spread: cores-x tokenize+hash (guide §2.2); exact-int counts.
         toks = spread(df.select(F.col(text_col))).select(
-            F.explode(TXT.tokens(F.col(text_col))).alias("term")
+            F.explode(F.expr(TXT.tokens_sql(f"`{text_col}`"))).alias("term")
         )
         return (
             toks.select((h52(F.col("term")) % dim).alias("bucket"))
@@ -989,7 +983,7 @@ def dsir_select(
     w = dsir_bucket_weights(target, raw, text_col, dim)
     # spread: cores-x tokenize+hash (guide §2.2); exact-int scores.
     toks = spread(raw.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.explode(TXT.tokens(F.col(text_col))).alias("_term")
+        F.col(id_col), F.explode(F.expr(TXT.tokens_sql(f"`{text_col}`"))).alias("_term")
     ).select(F.col(id_col), (h52(F.col("_term")) % dim).alias("bucket"))
     scored = (
         toks.join(F.broadcast(w), "bucket")
@@ -1057,7 +1051,7 @@ def substring_dedup(
 
     from inferdb_spark.scale import spread
 
-    arr = tokens(F.col(text_col))
+    arr = F.expr(tokens_sql(f"`{text_col}`"))
     # spread: the k-gram md5 transform is the heavy map work (guide §2.2)
     base = spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("_id"), arr.alias("_a")
@@ -1187,7 +1181,7 @@ def ngram_lm_counts(
     # (trigram_backoff_lm 2.0-2.3 -> 3.0-3.6 s; perplexity_bucket_select
     # 2.7-3.3 -> 3.9-5.3 s): the vocab-bound aggregates pay 32-task
     # scheduling per pass over a tiny cached relation.  Reverted.
-    toks = df.select(TXT.tokens(F.col(text_col)).alias("t")).cache()
+    toks = df.select(F.expr(TXT.tokens_sql(f"`{text_col}`")).alias("t")).cache()
     tri = (
         toks.select(F.explode(_trigram_structs("t")).alias("g"))
         .groupBy("g.w1", "g.w2", "g.w3")
@@ -1256,7 +1250,7 @@ def stupid_backoff_score(
     u2 = unigrams.select(F.col("w").alias("u2w"), F.col("c1").alias("c2"))
     u3 = unigrams.select(F.col("w").alias("u3w"), F.col("c1").alias("c3"))
 
-    toks = df.select(F.col(id_col), TXT.tokens(F.col(text_col)).alias("t"))
+    toks = df.select(F.col(id_col), F.expr(TXT.tokens_sql(f"`{text_col}`")).alias("t"))
     pos = toks.select(
         F.col(id_col), F.explode(_trigram_structs("t")).alias("g")
     ).select(id_col, "g.w1", "g.w2", "g.w3")
@@ -1361,7 +1355,7 @@ def char_entropy(
     final division is integer (nonnegative operands).  Two shuffles
     ((doc, char) counts, then per-doc agg); at 100 TB the first groupBy
     map-side-combines to ~37 rows per doc per partition."""
-    from inferdb_spark.functions.text import bind_once, normalize
+    from inferdb_spark.functions.text import bind_once, normalize_sql
 
     # bind the normalized text once — referencing it inside the
     # per-character lambda would re-run the two regex passes per char.
@@ -1369,7 +1363,7 @@ def char_entropy(
     # than yielding empty, so an empty normalized doc would emit two
     # phantom '' characters without it.
     ch_arr = bind_once(
-        normalize(F.col(text_col)),
+        F.expr(normalize_sql(f"`{text_col}`")),
         lambda nt: F.when(
             F.length(nt) >= 1,
             F.transform(

@@ -179,10 +179,10 @@ def fit_unigram_lm(
     (n DESC, piece ASC).  Driver traffic: one vocab-sized piece table
     per round (pytest checks exact equality against a pure-Python twin).
     """
-    from inferdb_spark.functions.text import tokens
+    from inferdb_spark.functions.text import tokens_sql
 
     L = int(max_piece_len)
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("word"))
+    words = df.select(F.explode(F.expr(tokens_sql(f"`{text_col}`"))).alias("word"))
     if max_word_len is not None:
         words = words.where(F.length("word") <= int(max_word_len))
     words = (

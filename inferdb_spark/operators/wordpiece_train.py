@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from inferdb_spark.functions.text import duckdb_tokens, tokens_sql
 from inferdb_spark.operators.bpe_train import _pair_counts
 
 MICRO = 1_000_000
@@ -55,9 +56,7 @@ def _wp_word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     the rest ##-marked; every symbol '|'-wrapped so a literal replace of
     '|a||b|' is the exact non-overlapping merge pass (see
     bpe_train._word_vocab for the wrapping argument)."""
-    from inferdb_spark.functions.text import tokens
-
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("word"))
+    words = df.select(F.explode(F.expr(tokens_sql(f"`{text_col}`"))).alias("word"))
     vocab = words.groupBy("word").agg(F.count("*").cast("long").alias("cnt"))
     syms = F.expr(
         "transform(sequence(1, length(word)), i -> "
@@ -235,18 +234,15 @@ def wordpiece_apply(
 def fit_wordpiece_sql(
     n_merges: int,
     table: str = "documents",
-    tokens_sql: str | None = None,
 ) -> str:
     """DuckDB oracle replaying the ENTIRE WordPiece fit: chained CTE
     rounds of pair-count -> symbol-count -> quantized-ln-ratio argmax ->
     literal replace, emitting the learned merge table
-    (round, a, b, c, score_q).  `tokens_sql` must be a DuckDB expression
-    yielding the word array per row (the shared tokenizer twin).  The
-    coalesce('') exhaustion guard is the fit_bpe_sql one: an exhausted
-    round degenerates the search pattern to '||||', which cannot occur in
-    a wrapped-symbol seq, so later rounds pass through — matching the
-    Spark early break."""
-    assert tokens_sql is not None
+    (round, a, b, c, score_q).  Words come from :func:`duckdb_tokens`
+    over `table`.text.  The coalesce('') exhaustion guard is the
+    fit_bpe_sql one: an exhausted round degenerates the search pattern to
+    '||||', which cannot occur in a wrapped-symbol seq, so later rounds
+    pass through — matching the Spark early break."""
     sy = "string_split(trim(seq, '|'), '||')"
     pair_tpl = (
         "SELECT p.a, p.b, CAST(sum(cnt) AS BIGINT) AS c FROM ("
@@ -264,7 +260,7 @@ def fit_wordpiece_sql(
     )
     ctes = [
         f"w AS MATERIALIZED (SELECT t AS word, CAST(count(*) AS BIGINT) AS cnt "
-        f"FROM (SELECT unnest({tokens_sql}) AS t FROM {table}) GROUP BY t)",
+        f"FROM (SELECT unnest({duckdb_tokens('text')}) AS t FROM {table}) GROUP BY t)",
         "v0 AS MATERIALIZED (SELECT word, cnt, '|' || array_to_string("
         "list_transform(generate_series(1, length(word)), i -> "
         "CASE WHEN i = 1 THEN substring(word, i, 1) "

@@ -119,7 +119,7 @@ def test_detect_language(spark):
         (2, "xyzzy plugh qwerty"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.lang for r in df.select("doc_id", TP.detect_language(F.col("text")).alias("lang")).collect()}
+    out = {r.doc_id: r.lang for r in df.select("doc_id", TP.detect_language("`text`").alias("lang")).collect()}
     assert out[0] == "en"
     assert out[1] == "de"
     assert out[2] == "und"
@@ -140,7 +140,7 @@ def test_rolling_fingerprint_order_sensitive(spark):
         [(0, "alpha beta gamma"), (1, "gamma beta alpha"), (2, "alpha beta gamma")],
         "doc_id long, text string",
     )
-    fps = {r.doc_id: r.fp for r in df.select("doc_id", TP.rolling_fingerprint(F.col("text")).alias("fp")).collect()}
+    fps = {r.doc_id: r.fp for r in df.select("doc_id", TP.rolling_fingerprint("`text`").alias("fp")).collect()}
     assert fps[0] == fps[2] != fps[1]
 
 

@@ -1,4 +1,5 @@
 import math
+import re
 
 from pyspark.sql import functions as F
 
@@ -47,9 +48,30 @@ def test_compass_quadrant(spark):
     assert got == ["N", "E", "S", "W", "N"]
 
 
+def _py_normalize(text):
+    """Python reference of normalize_sql."""
+    return re.sub(" +", " ", re.sub("[^a-z0-9 ]", " ", text.lower())).strip(" ")
+
+
+def _py_tokens(text):
+    """Python reference of tokens_sql: [] for blank text."""
+    n = _py_normalize(text)
+    return n.split(" ") if n else []
+
+
+_TEXTS = [
+    "",
+    "?!, ...",
+    "a   b    c",
+    "  MiXeD CaSe, Words!  ",
+    "Café ÜBER naïve straße, 2024",
+    "The quick brown fox is in the box\tand\nit was",
+]
+
+
 def test_tokens_and_ngrams(spark):
     df = spark.createDataFrame([("The quick, brown FOX!",), ("",)], "t string")
-    toks = [r[0] for r in df.select(TXT.tokens(F.col("t"))).collect()]
+    toks = [r[0] for r in df.select(F.expr(TXT.tokens_sql("`t`"))).collect()]
     assert toks[0] == ["the", "quick", "brown", "fox"]
     assert toks[1] == []
     ng = df.select(F.expr(TXT.word_ngrams_sql("`t`", 2))).first()[0]
@@ -60,23 +82,34 @@ def test_tokens_and_ngrams(spark):
     assert cg == ["abc", "bcd"]
 
 
-def test_tokens_and_normalize_sql_match_column_forms(spark):
-    """normalize / tokens keep a Column form next to their SQL text; both
-    must agree on blank, punctuation-only, repeated-space and mixed-case
-    text."""
-    rows = [("",), ("?!, ...",), ("a   b    c",), ("  MiXeD CaSe, Words!  ",), (None,)]
-    got = spark.createDataFrame(rows, "t string").select(
-        TXT.normalize(F.col("t")).alias("n_col"),
-        F.expr(TXT.normalize_sql("`t`")).alias("n_sql"),
-        TXT.tokens(F.col("t")).alias("t_col"),
-        F.expr(TXT.tokens_sql("`t`")).alias("t_sql"),
+def test_tokens_and_normalize_sql_match_python_reference(spark):
+    """normalize_sql / tokens_sql against the Python reference on blank,
+    punctuation-only, repeated-space, mixed-case and non-ASCII text; NULL
+    text stays NULL."""
+    got = spark.createDataFrame([(t,) for t in _TEXTS] + [(None,)], "t string").select(
+        F.expr(TXT.normalize_sql("`t`")).alias("n"),
+        F.expr(TXT.tokens_sql("`t`")).alias("toks"),
     ).collect()
-    for r in got:
-        assert r["n_col"] == r["n_sql"]
-        assert r["t_col"] == r["t_sql"]
-    assert [r["t_sql"] for r in got[:4]] == [
-        [], [], ["a", "b", "c"], ["mixed", "case", "words"]
+    assert [r["n"] for r in got[:-1]] == [_py_normalize(t) for t in _TEXTS]
+    assert [r["toks"] for r in got[:-1]] == [_py_tokens(t) for t in _TEXTS]
+    assert got[1]["toks"] == [] and got[4]["toks"][:2] == ["caf", "ber"]
+    assert (got[-1]["n"], got[-1]["toks"]) == (None, None)
+
+
+def test_text_stats_matches_python_reference(spark):
+    """text_stats = (token count, stopword hits, summed token length)
+    over the Python reference tokens."""
+    got = spark.createDataFrame([(t,) for t in _TEXTS], "t string").select(
+        TXT.text_stats("`t`").alias("s")
+    ).collect()
+    want = [
+        (len(toks), sum(w in TXT.STOPWORDS for w in toks), sum(map(len, toks)))
+        for toks in map(_py_tokens, _TEXTS)
     ]
+    assert [
+        (r["s"]["n_tokens"], r["s"]["stopword_hits"], r["s"]["char_sum"]) for r in got
+    ] == want
+    assert want[5][1] == 7  # the, is, in, the, and, it, was
 
 
 def test_h52_range_and_determinism(spark):

@@ -165,7 +165,7 @@ def test_ams_f2_exact_and_ratio(spark, sf_dir):
 
     row = q_ams_f2_sketch(spark, sf_dir).first()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = docs.select(F.explode(TXT.tokens(F.col("text"))).alias("t")).collect()
+    toks = docs.select(F.explode(F.expr(TXT.tokens_sql("`text`"))).alias("t")).collect()
     c = Counter(r["t"] for r in toks)
     exact = sum(v * v for v in c.values())
     assert row["exact_f2"] == exact
@@ -183,7 +183,7 @@ def test_kneser_ney_formula_spotcheck(spark, sf_dir):
     out = q_kneser_ney_bigram(spark, sf_dir).collect()
     assert len(out) == 50
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = docs.select(TXT.tokens(F.col("text")).alias("t"))
+    toks = docs.select(F.expr(TXT.tokens_sql("`text`")).alias("t"))
     pairs = [
         (r["b"]["w1"], r["b"]["w2"])
         for r in toks.select(F.explode(_bigram_structs("t")).alias("b")).collect()

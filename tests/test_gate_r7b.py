@@ -78,7 +78,7 @@ def test_cohens_kappa_matches_sklearnless_reference(spark, sf_dir):
     row = q_cohens_kappa(spark, sf_dir).first()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rated = docs.select(
-        "n_chars", F.size(TXT.tokens(F.col("text"))).alias("tc")
+        "n_chars", F.size(F.expr(TXT.tokens_sql("`text`"))).alias("tc")
     ).collect()
     pairs = []
     for r in rated:

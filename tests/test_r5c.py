@@ -338,3 +338,25 @@ def test_gate_name_collision_raises():
     # idempotent re-registration of the SAME function is allowed
     fn = G._QUERIES["dedup_exact"]
     assert G.gate("dedup_exact")(fn) is fn
+
+
+def test_gate_module_import_error_propagates(monkeypatch):
+    """A listed gate module that fails to import must raise, not silently
+    drop all of its gates from queries()/oracle_sql()."""
+    import importlib
+
+    import pytest as _pt
+
+    import inferdb_spark.gate as G
+
+    real = importlib.import_module
+    broken = "inferdb_spark.gate_r11c"
+
+    def fake_import(name, *args, **kwargs):
+        if name == broken:
+            raise ModuleNotFoundError(f"No module named {name!r}", name=name)
+        return real(name, *args, **kwargs)
+
+    monkeypatch.setattr(importlib, "import_module", fake_import)
+    with _pt.raises(ModuleNotFoundError, match="gate_r11c"):
+        G._ensure_registered()

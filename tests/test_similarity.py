@@ -134,6 +134,60 @@ def test_ivf_and_pq_sql_match_numpy_argmin(spark):
     assert all(r["a"] != 4 and 7 not in r["codes"] for r in rows)
 
 
+def test_centroid_cosine_assignment_sql_matches_numpy(spark):
+    """assign_with_centroid_cosine_sql against a numpy argmin over the
+    same squared-L2 folds, plus the micro-unit cosine to the chosen
+    centroid.  Centroid 5 repeats centroid 1 (an exact distance tie: the
+    lower id wins) and centroid 6 is the zero vector, so the zero vector
+    and a near-zero vector land on a zero-norm centroid (ccos_q 0)."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from inferdb_spark.operators.similarity import assign_with_centroid_cosine_sql
+
+    rng = np.random.RandomState(5)
+    cents = [
+        [round(float(x), 3) for x in rng.uniform(-1, 1, 8)] for _ in range(5)
+    ]
+    cents += [list(cents[1]), [0.0] * 8]
+    vecs = [[float(x) for x in v] for v in rng.uniform(-1, 1, size=(120, 8))]
+    vecs[0] = [0.0] * 8
+    vecs[1] = [0.01] * 8
+    vecs[2] = [x + 0.001 for x in cents[1]]
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(len(vecs)), "embedding": vecs})
+    )
+    rows = df.select(
+        "vec_id",
+        F.expr(assign_with_centroid_cosine_sql("`embedding`", cents)).alias("a"),
+    ).collect()
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    def ccos_q(v, c):
+        nv = math.sqrt(fold(x * x for x in v))
+        nc = math.sqrt(fold(x * x for x in c))
+        cos = fold(a * b for a, b in zip(v, c)) / (nv * nc) if nv > 0 and nc > 0 else 0.0
+        return math.floor(cos * 1e6 + 0.5)
+
+    for r in rows:
+        v = vecs[r["vec_id"]]
+        k = int(np.argmin([_sq_l2(v, c) for c in cents]))
+        assert (r["a"]["cluster"], r["a"]["ccos_q"]) == (k, ccos_q(v, cents[k]))
+    by_id = {r["vec_id"]: r["a"] for r in rows}
+    assert (by_id[0]["cluster"], by_id[0]["ccos_q"]) == (6, 0)
+    assert (by_id[1]["cluster"], by_id[1]["ccos_q"]) == (6, 0)
+    assert by_id[2]["cluster"] == 1 and by_id[2]["ccos_q"] > 999000
+    assert all(r["a"]["cluster"] != 5 for r in rows)
+
+
 def _sign_bit_reference(v, planes, n_probe):
     """Python multi-probe: own sign bucket, then bucket ^ 2^i for the
     (n_probe - 1) planes with the smallest (|proj|, i)."""

@@ -207,11 +207,11 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_cms_overestimates_only_and_merges(docs, spark):
-    from inferdb_spark.functions.text import tokens as _tokens
+    from inferdb_spark.functions.text import tokens_sql
     from inferdb_spark.operators.sketch import cms_build, cms_estimate, cms_merge
 
     d, w = 4, 512
-    tok = docs.select(F.explode(_tokens(F.col("text"))).alias("t")).cache()
+    tok = docs.select(F.explode(F.expr(tokens_sql("`text`"))).alias("t")).cache()
     cms = cms_build(tok, F.col("t"), d, w)
     probes = tok.select(F.col("t").alias("probe")).distinct()
     est = {

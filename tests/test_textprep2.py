@@ -320,7 +320,6 @@ def test_bpe_sql_oracle_pair_exhaustion(spark):
     import duckdb
     import pandas as pd
 
-    from inferdb_spark.gate_prep import _d_tokens
     from inferdb_spark.operators.bpe_train import fit_bpe_merges, fit_bpe_sql
 
     pdf = pd.DataFrame({"doc_id": [0, 1], "text": ["ab ab", "ab cd"]})
@@ -329,7 +328,7 @@ def test_bpe_sql_oracle_pair_exhaustion(spark):
     assert 0 < len(merges) < 10  # genuinely exhausts
     con = duckdb.connect()
     con.register("documents", pdf)
-    sql = fit_bpe_sql(10, "documents", _d_tokens("text"))
+    sql = fit_bpe_sql(10, "documents")
     got = con.execute(sql).fetchall()
     exp = [(i, a, b, c) for i, (a, b, c) in enumerate(merges)]
     assert [tuple(r) for r in got] == exp

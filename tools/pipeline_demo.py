@@ -76,7 +76,7 @@ def main() -> None:
     stage("near-dedup", canonical,
           "LSH candidates -> Jaccard>=0.8 verify -> CC -> 1 rep/cluster")
 
-    lang = canonical.withColumn("lang_pred", detect_language(F.col("text")))
+    lang = canonical.withColumn("lang_pred", detect_language("`text`"))
     en = lang.filter(F.col("lang_pred").isin("en", "und"))
     stage("lang-filter", en, "stopword-profile language ID (en + und kept: "
           "the synthetic corpus is mostly profile-less word salad)")

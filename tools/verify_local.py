@@ -39,7 +39,7 @@ def duck_run(sql: str, sf_dir: str) -> pd.DataFrame:
     return con.execute(sql).df()
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
+def canonical_frame(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if pd.api.types.is_integer_dtype(df[c]):
@@ -79,7 +79,7 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
     if len(sdf) != len(ddf):
         problems.append(f"row count: spark={len(sdf)} duck={len(ddf)}")
         return problems
-    s, d = normalize(sdf), normalize(ddf)
+    s, d = canonical_frame(sdf), canonical_frame(ddf)
     for c in s.columns:
         sv, dv = s[c], d[c]
         if pd.api.types.is_float_dtype(sv):
