@@ -67,9 +67,6 @@ def fit_index_pipeline(
 
     t0 = time.perf_counter()
     index = build_index(train, selected, target, task=task, agg_mode=agg_mode)
-    index.kv.cache().count()
-    for pa in index.prefix_aggs.values():
-        pa.cache().count()
     timings["index_build_s"] = time.perf_counter() - t0
     enc.unpersist()
     return IndexPipeline(

@@ -29,6 +29,7 @@ from inferdb_spark.functions import text as TXT
 from inferdb_spark.functions.datetime_fns import day_name, is_weekend, pg_isodow, week_hour
 from inferdb_spark.functions.geo import spherical_distance
 from inferdb_spark.functions.math_fns import crazy_exp, ln1p_compat, sigmoid
+from inferdb_spark.operators.binning import BinSpec
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
@@ -260,13 +261,6 @@ def _bin_expr_sql(col: str, splits: list[float]) -> str:
     """DuckDB bin id: #{s : col > s} — matches BinSpec.expr exactly."""
     terms = " + ".join(f"CAST({col} > {s!r} AS INT)" for s in splits)
     return f"({terms})"
-
-
-def _bin_expr_spark(col: str, splits: list[float]) -> F.Column:
-    e = F.lit(0)
-    for s in splits:
-        e = e + F.when(F.col(col) > F.lit(s), 1).otherwise(0)
-    return e.cast("int")
 
 
 # ---------------------------------------------------------------------------
@@ -606,9 +600,9 @@ def q_index_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
         F.concat_ws(
             ".",
-            _bin_expr_spark("l_quantity", QTY_SPLITS).cast("string"),
-            _bin_expr_spark("l_discount", DISC_SPLITS).cast("string"),
-            _bin_expr_spark("l_tax", TAX_SPLITS).cast("string"),
+            BinSpec("l_quantity", splits=QTY_SPLITS).expr().cast("string"),
+            BinSpec("l_discount", splits=DISC_SPLITS).expr().cast("string"),
+            BinSpec("l_tax", splits=TAX_SPLITS).expr().cast("string"),
         ).alias("key"),
     )
 
@@ -625,9 +619,9 @@ def q_index_kv_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values aggregate as integer cents (exact) and divide once."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 != 0)
     enc = li.select(
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("b1"),
-        _bin_expr_spark("l_discount", DISC_SPLITS).alias("b2"),
-        _bin_expr_spark("l_tax", TAX_SPLITS).alias("b3"),
+        BinSpec("l_quantity", splits=QTY_SPLITS).expr().alias("b1"),
+        BinSpec("l_discount", splits=DISC_SPLITS).expr().alias("b2"),
+        BinSpec("l_tax", splits=TAX_SPLITS).expr().alias("b3"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
     return (
@@ -657,9 +651,9 @@ def q_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = li.select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
         (F.col("l_orderkey") % 5 != 0).alias("is_train"),
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("b1"),
-        _bin_expr_spark("l_discount", DISC_SPLITS).alias("b2"),
-        _bin_expr_spark("l_tax", TAX_SPLITS).alias("b3"),
+        BinSpec("l_quantity", splits=QTY_SPLITS).expr().alias("b1"),
+        BinSpec("l_discount", splits=DISC_SPLITS).expr().alias("b2"),
+        BinSpec("l_tax", splits=TAX_SPLITS).expr().alias("b3"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
     train = base.filter("is_train")

@@ -8,10 +8,11 @@ from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.text import duckdb_tokens
-from inferdb_spark.gate import QTY_SPLITS, _bin_expr_spark, _bin_expr_sql, gate
+from inferdb_spark.gate import QTY_SPLITS, _bin_expr_sql, gate
 from inferdb_spark.gate_ml import MC_B, MC_COEF, _mc_scores_sql
 from inferdb_spark.gate_prep import _PLANES_SQL, PLANES
 from inferdb_spark.operators import similarity as SIM
+from inferdb_spark.operators.binning import BinSpec
 
 
 @gate(
@@ -107,7 +108,7 @@ def q_distinct_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     key = F.concat_ws(
         ".",
-        _bin_expr_spark("l_quantity", QTY_SPLITS).cast("string"),
+        BinSpec("l_quantity", splits=QTY_SPLITS).expr().cast("string"),
         (F.col("l_linenumber") % 4).cast("string"),
     )
     return li.agg(

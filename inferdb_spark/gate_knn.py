@@ -13,9 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
-from inferdb_spark.gate import QTY_SPLITS, _bin_expr_spark, _bin_expr_sql, gate
+from inferdb_spark.gate import QTY_SPLITS, _bin_expr_sql, gate
 from inferdb_spark.operators import knn as KNN
 from inferdb_spark.operators import naive_bayes as NB
+from inferdb_spark.operators.binning import BinSpec
 
 K_NEIGHBORS = 5
 
@@ -177,7 +178,7 @@ def _nb_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
         F.col("l_returnflag").alias("y"),
         F.col("l_linestatus").cast("string").alias("ls"),
-        _bin_expr_spark("l_quantity", QTY_SPLITS).cast("string").alias("qb"),
+        BinSpec("l_quantity", splits=QTY_SPLITS).expr().cast("string").alias("qb"),
         (F.col("l_discount") >= 0.05).cast("int").cast("string").alias("db"),
         F.col("l_orderkey").alias("ok"),
     )

@@ -13,11 +13,11 @@ from inferdb_spark.gate import (
     DISC_SPLITS,
     QTY_SPLITS,
     TAX_SPLITS,
-    _bin_expr_spark,
     _bin_expr_sql,
     gate,
 )
 from inferdb_spark.operators import featurize as FZ
+from inferdb_spark.operators.binning import BinSpec
 
 # dyadic LR weights for the query-integration demo (label ~ returnflag)
 LIN_COEF_Q, LIN_COEF_D, LIN_COEF_T, LIN_B = 0.0625, -8.0, 12.0, -1.5
@@ -55,7 +55,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5 adjustment (src/optimizer.py:53-82) — one groupBy + tiny cross join."""
     li = load_table(spark, sf_dir, "lineitem")
     enc = li.select(
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("bin"),
+        BinSpec("l_quantity", splits=QTY_SPLITS).expr().alias("bin"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
     )
     tot = enc.agg(F.count("*").alias("tn"), F.sum("y").alias("te"))
@@ -407,7 +407,6 @@ def q_index_score_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak) with mode-based prefix fallback (src/transpiler.py:986-992 +
     inference_trie majority DFS) — the row-weighted aggregation mode, all
     integer counts so the hash comparison is exact."""
-    from inferdb_spark.operators.binning import BinSpec
     from inferdb_spark.operators.index import build_index
     from inferdb_spark.operators.scoring import index_score
 
@@ -709,9 +708,9 @@ def q_query_integration(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = li.select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
         (F.col("l_orderkey") % 5 != 0).alias("is_train"),
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("b1"),
-        _bin_expr_spark("l_discount", DISC_SPLITS).alias("b2"),
-        _bin_expr_spark("l_tax", TAX_SPLITS).alias("b3"),
+        BinSpec("l_quantity", splits=QTY_SPLITS).expr().alias("b1"),
+        BinSpec("l_discount", splits=DISC_SPLITS).expr().alias("b2"),
+        BinSpec("l_tax", splits=TAX_SPLITS).expr().alias("b3"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         "l_returnflag",
     )

@@ -119,8 +119,8 @@ HOUR_SPLITS_SQL = "CAST(hour(ts) > 5 AS INT) + CAST(hour(ts) > 11 AS INT) + CAST
 def q_stream_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned-index scoring applied to a REAL STREAM: the kv index +
     prefix aggregates are built in batch, the test rows arrive as a
-    streaming DataFrame, and the identical operator graph (translate →
-    stream-batch broadcast joins → coalesce) scores them microbatch by
+    streaming DataFrame, and the identical operator (one projection over
+    the index's dense lookup table) scores them microbatch by
     microbatch.  Oracle = the batch semantics — streaming must not change
     a single prediction."""
     from inferdb_spark.operators.binning import BinSpec
@@ -142,7 +142,6 @@ def q_stream_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     train = ev2.filter(F.col("event_id") % 3 != 0)
     index = build_index(train, specs, "cents", task="regression", agg_mode="rows")
-    index.kv.cache().count()
 
     stage, schema = _stage_events(spark, sf_dir)
     stream = (

@@ -7,17 +7,20 @@ binary search (sql_scripts/binary_search_numeric.sql).  Spark-first design:
 - *fit* runs as Spark aggregations (quantile pre-bins via exact/approx
   percentile, per-prebin target stats via one groupBy) — only tiny aggregate
   results reach the driver, so fitting scales to arbitrarily large tables.
-- *apply* is a vectorized expression per column: a chained `F.when` for few
-  splits, `Bucketizer` semantics either way (half-open intervals, unseen
-  categorical values -> extra bin, matching src/encoder.py:113-126).
+- *apply* is one SQL expression per column, `BinSpec.expr_sql()`: a sum of
+  `CAST(c > s AS INT)` terms for numeric specs, `IN` lists for categorical
+  ones (half-open intervals, unseen categorical values -> extra bin,
+  matching src/encoder.py:113-126).  `BinSpec.expr()` parses that text, so
+  binning, index build and index scoring share the one definition.
 
-A BinSpec is a plain, serializable description — the analog of the
-reference burning fitted splits into SQL literals (src/transpiler.py:
-1122-1166), except we emit Column trees instead of SQL strings.
+A BinSpec is a plain, serializable description, and `expr_sql()` is the
+reference's fitted splits burnt into SQL literals (src/transpiler.py:
+1122-1166).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -48,18 +51,38 @@ class BinSpec:
     def n_bins(self) -> int:
         return len(self.splits) + 1 if self.kind == "numeric" else len(self.groups) + 1
 
-    def expr(self, col: Column | None = None) -> Column:
-        """Bin-id expression (IntegerType)."""
-        c = F.col(self.column) if col is None else col
+    def expr_sql(self) -> str:
+        """Bin-id expression as Spark SQL text (INT)."""
+        c = _sql_ident(self.column)
         if self.kind == "numeric":
-            e = F.lit(0)
-            for s in self.splits:
-                e = e + F.when(c > F.lit(float(s)), 1).otherwise(0)
-            return F.when(c.isNull(), F.lit(self.null_bin)).otherwise(e).cast("int")
-        e = F.lit(len(self.groups))  # unseen -> extra bin
-        for i in reversed(range(len(self.groups))):
-            e = F.when(c.cast("string").isin(self.groups[i]), F.lit(i)).otherwise(e)
-        return F.when(c.isNull(), F.lit(self.null_bin)).otherwise(e).cast("int")
+            terms = " + ".join(f"CAST({c} > {_sql_double(s)} AS INT)" for s in self.splits)
+            return f"CASE WHEN {c} IS NULL THEN {self.null_bin} ELSE ({terms or 0}) END"
+        whens = "".join(
+            f" WHEN CAST({c} AS STRING) IN ({', '.join(map(_sql_string, g))}) THEN {i}"
+            for i, g in enumerate(self.groups)
+        )  # first matching group wins; unseen -> extra bin
+        return f"CASE WHEN {c} IS NULL THEN {self.null_bin}{whens} ELSE {len(self.groups)} END"
+
+    def expr(self) -> Column:
+        """Bin-id expression (IntegerType)."""
+        return F.expr(self.expr_sql())
+
+
+def _sql_ident(name: str) -> str:
+    """Backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_double(x: float) -> str:
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _sql_string(v: str | None) -> str:
+    """Spark SQL string literal; quotes and backslashes are backslash-escaped."""
+    if v is None:
+        return "NULL"
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def fit_quantile_bins(
@@ -181,8 +204,8 @@ def apply_bins_bucketizer(
 ) -> DataFrame:
     """Bucketizer-based application for WIDE feature sets (SURVEY.md §7
     known-hard 3: MNIST-class tables with hundreds of columns would blow
-    whole-stage-codegen's 64KB method limit as when-chains; Bucketizer is
-    the reference's binary_search_numeric.sql, vectorized).
+    whole-stage-codegen's 64KB method limit as comparison sums; Bucketizer
+    is the reference's binary_search_numeric.sql, vectorized).
 
     Multi-column Bucketizer bins all numeric specs in ONE pass.  Bucketizer
     uses [lo, hi) half-open buckets on sorted split boundaries; BinSpec

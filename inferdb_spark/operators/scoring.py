@@ -6,10 +6,14 @@ translated ⟕ kv ON key, with a plpgsql prefix_search on miss
 COO joins and matmul-as-join (src/transpiler.py:1603-1835).
 
 Spark design:
-- index_score: ONE pass over the scan side — project bin keys, then a chain
-  of broadcast hash joins (kv + one per prefix length) and a single
-  coalesce.  All joins broadcast (index relations are tiny), so the plan
-  has no shuffle on the big side; at 100 TB this is a map-only stage.
+- index_score: ONE projection over the scan side.  The index stores its
+  populated bin domain as a dense array (operators/index.py), so the
+  prediction is `element_at(<array literal>, <mixed-radix bin index> + 1)`:
+  no join, no shuffle, no broadcast, one Spark job per query — the
+  reference's fitted values burnt into SQL literals (src/transpiler.py:
+  1122-1166), fused into one expression.  An index whose domain is too
+  large for a literal keeps the chain of broadcast hash joins (kv + one per
+  prefix length) and a single coalesce; both paths are map-only.
 - linear: dense path = a literal dot-product projection (no join, no
   shuffle); COO path kept for reference parity with sparse one-hot inputs.
 - MLP: relational matmul parity path + a Pandas-UDF numpy fast path.
@@ -33,20 +37,27 @@ def translate(df: DataFrame, index: KVIndex, key_col: str = "key") -> DataFrame:
 
 
 def index_score(
-    df: DataFrame,
-    index: KVIndex,
-    prediction_col: str = "prediction",
-    keep_bin_cols: bool = False,
+    df: DataFrame, index: KVIndex, prediction_col: str = "prediction"
 ) -> DataFrame:
-    """translate → broadcast kv probe → prefix-fallback coalesce.
+    """Exact-key probe with prefix fallback: prediction = coalesce(exact,
+    prefix_{k-1}, ..., prefix_1, global), the reference's exact match +
+    prefix_search (precomputed prefix aggregates replace the per-miss
+    rescan loop).  Adds only `prediction_col`.
 
-    Equivalent to the reference's exact-match + prefix_search fallback, but
-    with the O(key_len) per-miss rescan loop replaced by precomputed prefix
-    aggregates: prediction = coalesce(exact, prefix_{k-1}, ..., prefix_1,
-    global).  Every join is a broadcast hash join on a tiny build side.
+    With `index.table` set this is one projection over the dense table.
+    Otherwise the bin keys are projected and probed through broadcast hash
+    joins; their helper columns must not clash with input columns.
     """
+    if index.table is not None:
+        return df.withColumn(prediction_col, F.expr(index.lookup_sql))
     k = index.depth
-    bin_cols = [s.column + BIN_SUFFIX for s in index.specs]
+    helpers = ["key", "_v_exact"] + [f"prefix_{L}" for L in range(1, k)] + [
+        f"_v_p{L}" for L in range(1, k)
+    ] + [s.column + BIN_SUFFIX for s in index.specs]
+    taken = {c.lower() for c in df.columns}
+    clash = [c for c in helpers if c.lower() in taken]
+    if clash:
+        raise ValueError(f"index_score: input column {clash[0]!r} clashes with a join helper")
     t = translate(df, index)
     out = t.join(F.broadcast(index.kv.withColumnRenamed("value", "_v_exact")), "key", "left")
     fallback_cols: list[Column] = [F.col("_v_exact")]
@@ -59,12 +70,7 @@ def index_score(
         fallback_cols.append(F.col(f"_v_p{L}"))
     fallback_cols.append(F.lit(index.global_value))
     out = out.withColumn(prediction_col, F.coalesce(*fallback_cols))
-    drop = ["key", "_v_exact"] + [f"prefix_{L}" for L in range(1, k)] + [
-        f"_v_p{L}" for L in range(1, k)
-    ]
-    if not keep_bin_cols:
-        drop += bin_cols
-    return out.drop(*drop)
+    return out.drop(*helpers)
 
 
 # ---------------------------------------------------------------------------

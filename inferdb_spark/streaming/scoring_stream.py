@@ -1,11 +1,13 @@
 """Structured Streaming extensions (SURVEY.md §2.9: the reference has no
 streaming; these are the declared stretch goals, built Spark-native).
 
-Index scoring (translate → broadcast kv probe → coalesce fallback) is
-STATELESS, so the exact same operator graph from operators/scoring.py runs
-unchanged on a streaming DataFrame — the kv/prefix DataFrames are batch
-relations on the build side of stream-batch joins, which Structured
-Streaming broadcasts per microbatch.
+Index scoring is STATELESS, so the exact same operator from
+operators/scoring.py runs unchanged on a streaming DataFrame.  For an index
+with a dense lookup table it is one projection whose table is an array
+literal in the plan: no stream-batch join and no per-microbatch broadcast.
+An index over the dense cap scores through stream-batch broadcast joins
+against its kv/prefix relations, which Structured Streaming re-broadcasts
+per microbatch.
 
 Also provided: watermarked windowed aggregation and a custom stateful
 operator (running per-key mean via applyInPandasWithState) as the
@@ -34,8 +36,8 @@ def stream_from_parquet_dir(
 
 
 def score_stream(stream_df: DataFrame, index: KVIndex) -> DataFrame:
-    """Stateless streaming scoring: identical operator composition as batch
-    (stream-batch broadcast joins; no watermark needed)."""
+    """Stateless streaming scoring: the batch operator unchanged (no
+    watermark needed)."""
     return index_score(stream_df, index)
 
 

@@ -27,6 +27,18 @@ def test_numeric_binspec_nulls(spark):
     assert [r[0] for r in df.select(spec.expr()).collect()] == [0, 1]
 
 
+def test_expr_sql_quotes_names_and_keeps_split_literals_exact(spark):
+    """Odd column names, exponent and infinite splits: the SQL text must
+    bin exactly as #{s : x > s} over the same doubles."""
+    splits = [-2.5e-07, 0.1 + 0.2, 1e16, float("inf")]
+    xs = [None, -1e-7, -2.5e-07, 0.3, 0.30000000000000004, 1e16, 1.0000000000000002e16, float("inf")]
+    df = spark.createDataFrame([(x,) for x in xs], "`a b``c` double")
+    spec = BinSpec(column="a b`c", splits=splits, null_bin=2)
+    got = [r[0] for r in df.select(spec.expr()).collect()]
+    assert got == [2 if x is None else sum(x > s for s in splits) for x in xs]
+    assert dict(df.select(spec.expr().alias("b")).dtypes)["b"] == "int"
+
+
 def test_categorical_binspec_unseen_goes_to_extra_bin(spark):
     df = spark.createDataFrame([("a",), ("b",), ("zz",), (None,)], "c string")
     spec = BinSpec(column="c", kind="categorical", groups=[["a"], ["b", "x"]])

@@ -3,12 +3,16 @@ re-implementation of the reference trie semantics (src/inference_trie.py:
 60-98): exact key hit -> leaf value; miss -> aggregate over the values of
 all keys under the deepest matching prefix; no match at all -> global."""
 
+import math
+import random
+import struct
 from collections import Counter
 
-from pyspark.sql import functions as F
+import pytest
 
+from inferdb_spark.operators import index as IDX
 from inferdb_spark.operators.binning import BinSpec
-from inferdb_spark.operators.index import build_index, index_size_info
+from inferdb_spark.operators.index import build_index, index_size_info, load_index, save_index
 from inferdb_spark.operators.scoring import index_score, translate
 
 
@@ -95,12 +99,179 @@ def test_index_size_info(spark):
     assert 0 < info["filling_degree"] < 1
 
 
-def test_index_score_plan_is_broadcast_only(spark):
-    """Scale check: the scoring plan must contain no sort-merge join — every
-    probe is a broadcast hash join so the big side streams map-only."""
+# ---------------------------------------------------------------------------
+# both scoring branches: the dense lookup table (one projection) and, over
+# the dense cap, the broadcast-join chain — each against the trie
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(params=["dense", "joins"])
+def branch(request, monkeypatch):
+    if request.param == "joins":
+        monkeypatch.setattr(IDX, "DENSE_CAP", 1)
+    return request.param
+
+
+def _build(train, specs, target, branch, **kw):
+    idx = build_index(train, specs, target, **kw)
+    assert (idx.table is None) == (branch == "joins")
+    return idx
+
+
+def _py_bin(spec: BinSpec, v) -> int:
+    if v is None:
+        return spec.null_bin
+    if spec.kind == "numeric":
+        return sum(1 for s in spec.splits if v > s)
+    return next((i for i, g in enumerate(spec.groups) if v in g), len(spec.groups))
+
+
+def _same(a: float, b: float) -> bool:
+    return a == b or (math.isnan(a) and math.isnan(b)) or abs(a - b) <= 1e-9 * max(1.0, abs(b))
+
+
+def _assert_trie(idx, test) -> list:
+    """Score `test` and check every row against the trie walk; a NULL kv
+    value counts as a missing key, as coalesce treats it."""
+    kv = {r.key: r.value for r in idx.kv.collect() if r.value is not None}
+    rows = index_score(test, idx).collect()
+    assert len(rows) == test.count()
+    for r in rows:
+        key = ".".join(str(_py_bin(s, r[s.column])) for s in idx.specs)
+        want = _python_trie_predict(kv, key, idx.task, idx.global_value)
+        assert _same(r.prediction, want), (key, r.prediction, want)
+    return rows
+
+
+SPECS3 = [
+    BinSpec(column="x", splits=[5.0, 15.0, 25.0]),
+    BinSpec(column="z", splits=[50.0, 150.0]),
+    BinSpec(column="w", splits=[0.5]),
+]
+XS, ZS, WS = [1.0, 10.0, 20.0, 30.0], [1.0, 100.0, 200.0], [0.0, 1.0]
+
+
+def _grid(spark, extra=()):
+    """Every bin tuple of SPECS3 once, plus `extra` (x, z, w) rows."""
+    rows = [(x, z, w) for x in XS for z in ZS for w in WS] + list(extra)
+    return spark.createDataFrame(rows, "x double, z double, w double")
+
+
+def _mk_train3(spark, task):
+    """Three rows per stored key; x bin 3 never stored (global fallback),
+    other keys held out so both prefix levels serve misses.  Equal counts
+    and class-pure keys make the "rows" aggregates equal the trie's."""
+    rows = []
+    for a, x in enumerate(XS[:3]):
+        for b, z in enumerate(ZS):
+            for c, w in enumerate(WS):
+                if (a * 7 + b * 3 + c) % 4 == 0 or (a, b) == (1, 2):
+                    continue
+                for i in range(3):
+                    y = (a + 2 * b + c) % 3 if task == "classification" else a * 2 + b * 3 + c * 0.5 + i
+                    rows.append((x, z, w, float(y)))
+    return spark.createDataFrame(rows, "x double, z double, w double, y double")
+
+
+@pytest.mark.parametrize("task", ["regression", "classification"])
+@pytest.mark.parametrize("agg_mode", ["keys", "rows"])
+def test_index_score_matches_trie_on_whole_domain(spark, branch, task, agg_mode):
+    idx = _build(_mk_train3(spark, task), SPECS3, "y", branch, task=task, agg_mode=agg_mode)
+    rows = _assert_trie(idx, _grid(spark, [(None, 100.0, 1.0), (20.0, None, None)]))
+    assert len({r.prediction for r in rows}) > 2
+
+
+@pytest.mark.parametrize("null_bin", [0, 4])
+def test_null_feature_scores_through_null_bin(spark, branch, null_bin):
+    # x last: its domain (5 with null_bin 4) is the stride of the z bin
+    specs = [SPECS3[1], BinSpec(column="x", splits=[5.0, 15.0, 25.0], null_bin=null_bin)]
+    rows = [(x, z, float(i + 10 * j)) for i, x in enumerate([None, 1.0, 10.0]) for j, z in enumerate(ZS)]
+    train = spark.createDataFrame(rows, "x double, z double, y double")
+    idx = _build(train, specs, "y", branch)
+    assert any(r.key.endswith(f".{null_bin}") for r in idx.kv.collect())
+    test = spark.createDataFrame([(None, z) for z in ZS] + [(30.0, 1.0)], "x double, z double")
+    _assert_trie(idx, test)
+
+
+def test_null_target_key_falls_through_to_prefix(spark, branch):
+    rows = [(1.0, 1.0, None), (1.0, 1.0, None), (1.0, 100.0, 4.0), (1.0, 200.0, 9.0), (10.0, 1.0, 2.0)]
+    train = spark.createDataFrame(rows, "x double, z double, y double")
+    specs = SPECS3[:2]
+    idx = _build(train, specs, "y", branch, agg_mode="rows")
+    assert {r.key: r.value for r in idx.kv.collect()}["0.0"] is None
+    test = spark.createDataFrame([(1.0, 1.0)], "x double, z double")
+    assert index_score(test, idx).first().prediction == 6.5  # prefix "0": (4 + 9) / 2
+    _assert_trie(idx, test)
+
+
+def test_categorical_spec_unseen_and_escaped_values(spark, branch):
+    quote, backslash = "it's", "b\\c"
+    spec = BinSpec(column="s", kind="categorical", groups=[["a", quote], [backslash, "d"]])
+    rows = [("a", 1.0), (quote, 3.0), (backslash, 10.0), ("d", 20.0), ("zz", 100.0)]
+    train = spark.createDataFrame(rows, "s string, y double")
+    idx = _build(train, [spec], "y", branch)
+    assert {r.key: r.value for r in idx.kv.collect()} == {"0": 2.0, "1": 15.0, "2": 100.0}
+    test = spark.createDataFrame([(v,) for v in [quote, backslash, "a", "unseen", None]], "s string")
+    got = {r.s: r.prediction for r in _assert_trie(idx, test)}
+    assert got == {quote: 2.0, backslash: 15.0, "a": 2.0, "unseen": 100.0, None: 2.0}
+
+
+def test_special_kv_values_bit_equal_on_both_branches(spark, monkeypatch):
+    r17 = random.Random(7).random() * 1e3
+    targets = [[float("nan")], [float("inf")], [float("-inf")], [-5e-324, 0.0], [r17]]
+    rows = [(float(10 * i), y) for i, ys in enumerate(targets) for y in ys]
+    train = spark.createDataFrame(rows, "x double, y double")
+    spec = [BinSpec(column="x", splits=[5.0, 15.0, 25.0, 35.0])]
+    test = spark.createDataFrame([(float(10 * i),) for i in range(len(targets))], "x double")
+
+    def bits(idx):
+        pred = [r.prediction for r in index_score(test, idx).orderBy("x").collect()]
+        return [struct.pack("<d", p) for p in pred]
+
+    dense = build_index(train, spec, "y")
+    monkeypatch.setattr(IDX, "DENSE_CAP", 1)
+    joins = build_index(train, spec, "y")
+    assert dense.table is not None and joins.table is None
+    want = [float("nan"), float("inf"), float("-inf"), -0.0, r17]
+    assert bits(dense) == bits(joins)
+    assert bits(dense)[1:] == [struct.pack("<d", v) for v in want[1:]]
+    assert math.isnan(struct.unpack("<d", bits(dense)[0])[0])
+
+
+def test_save_load_roundtrip_scores_identically(spark, branch, tmp_path):
+    idx = _build(_mk_train3(spark, "regression"), SPECS3, "y", branch)
+    save_index(idx, str(tmp_path / "idx"))
+    loaded = load_index(spark, str(tmp_path / "idx"))
+    assert loaded.table == idx.table
+    test = _grid(spark)
+    assert sorted(index_score(test, loaded).collect()) == sorted(index_score(test, idx).collect())
+    _assert_trie(loaded, test)
+
+
+def test_input_columns_survive_scoring(spark, branch):
+    """Scoring adds only the prediction column; over the cap, an input
+    column that would clash with a join helper is an error, not a silent
+    overwrite."""
     train = _mk_train(spark)
-    idx = build_index(train, SPECS, "y", task="regression")
+    idx = _build(train, SPECS, "y", branch)
+    test = spark.createDataFrame([(31.0, 201.0, "mine")], "x double, z double, key string")
+    if branch == "joins":
+        with pytest.raises(ValueError, match="'key'"):
+            index_score(test, idx)
+        return
+    out = index_score(test, idx)
+    assert out.columns == ["x", "z", "key", "prediction"]
+    assert out.first().key == "mine"
+
+
+def test_index_score_plan_shape(spark, branch):
+    """Scale check: the dense lookup is a projection (no join, no shuffle);
+    over the cap every probe is a broadcast hash join, so the big side
+    streams map-only either way."""
+    idx = _build(_mk_train(spark), SPECS, "y", branch)
     test = spark.createDataFrame([(31.0, 201.0)], "x double, z double")
     plan = index_score(test, idx)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    if branch == "dense":
+        assert "Join" not in plan and "Exchange" not in plan
+    else:
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
