@@ -48,11 +48,8 @@ def entry(spark: SparkSession) -> DataFrame:
     test = li.filter(F.col("l_orderkey") % 5 == 0)
 
     features = ["l_quantity", "l_discount", "l_tax", "l_linenumber"]
-    specs = [fit_supervised_bins(train, c, "target", max_bins=6) for c in features]
-    enc = apply_bins(train, specs).cache()
-    selected = greedy_select(enc, specs, "target", task="regression")
-    if not selected:  # degenerate data guard
-        selected = specs[:2]
+    specs = fit_supervised_bins(train, features, "target", max_bins=6)
+    selected = greedy_select(apply_bins(train, specs), specs, "target", task="regression")
     index = build_index(train, selected, "target", task="regression")
     scored = index_score(test, index)
     return scored.select("row_id", "prediction", F.col("target").alias("actual"))

@@ -2,9 +2,10 @@
 (`Standalone(...)` / `InferDB(...)` constructors + `create_report*`,
 src/transpiler.py:2999-3320, 1392-1448).
 
-`fit_index_pipeline` is the full flagship flow: fit target-aware bins,
-greedy-select index features by IV, build the kv index (+ prefix
-aggregates), and return a scorer.  `standalone_report` additionally fits an
+`fit_index_pipeline` is the full flagship flow: fit target-aware bins for
+all numeric features at once, greedy-select index features by IV from one
+collected key-count table, build the kv index (+ prefix aggregates), and
+return a scorer.  `standalone_report` additionally fits an
 MLlib baseline model and emits the reference-style comparison row: metrics
 for model vs index, build runtimes, artifact sizes.
 """
@@ -47,28 +48,21 @@ def fit_index_pipeline(
 ) -> IndexPipeline:
     """encode → select → build, with per-stage wall times (the reference
     reports encoding/solution/index-build runtimes, src/transpiler.py:
-    3310-3316)."""
+    3310-3316).  Raises ValueError when no feature is given."""
     timings: dict[str, float] = {}
     t0 = time.perf_counter()
-    specs = [
-        fit_supervised_bins(train, c, target, max_bins=max_bins)
-        for c in numeric_features
-    ]
+    specs = fit_supervised_bins(train, numeric_features, target, max_bins=max_bins)
     for c in categorical_features or []:
         specs.append(fit_categorical_bins(train, c, target, max_groups=max_bins))
     timings["encode_s"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    enc = apply_bins(train, specs).cache()
-    selected = greedy_select(enc, specs, target, task=task)
-    if not selected:
-        selected = specs[: max(1, min(2, len(specs)))]
+    selected = greedy_select(apply_bins(train, specs), specs, target, task=task)
     timings["solution_s"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
     index = build_index(train, selected, target, task=task, agg_mode=agg_mode)
     timings["index_build_s"] = time.perf_counter() - t0
-    enc.unpersist()
     return IndexPipeline(
         index=index, specs_all=specs, task=task, target=target, timings=timings
     )

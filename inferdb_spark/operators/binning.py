@@ -4,9 +4,10 @@ The reference fits target-aware optimal bins per column (optbinning) on the
 driver, then discretizes rows with generated CASE-WHEN SQL or a plpgsql
 binary search (sql_scripts/binary_search_numeric.sql).  Spark-first design:
 
-- *fit* runs as Spark aggregations (quantile pre-bins via exact/approx
-  percentile, per-prebin target stats via one groupBy) — only tiny aggregate
-  results reach the driver, so fitting scales to arbitrarily large tables.
+- *fit* runs as Spark aggregations (all columns' quantile pre-bins from ONE
+  exact multi-column percentile pass, per-prebin target stats via one
+  groupBy per column) — only tiny aggregate results reach the driver, so
+  fitting scales to arbitrarily large tables.
 - *apply* is one SQL expression per column, `BinSpec.expr_sql()`: a sum of
   `CAST(c > s AS INT)` terms for numeric specs, `IN` lists for categorical
   ones (half-open intervals, unseen categorical values -> extra bin,
@@ -51,6 +52,11 @@ class BinSpec:
     def n_bins(self) -> int:
         return len(self.splits) + 1 if self.kind == "numeric" else len(self.groups) + 1
 
+    @property
+    def domain(self) -> int:
+        """Number of bin ids the spec can produce, its null bin included."""
+        return max(self.n_bins, self.null_bin + 1)
+
     def expr_sql(self) -> str:
         """Bin-id expression as Spark SQL text (INT)."""
         c = _sql_ident(self.column)
@@ -85,15 +91,22 @@ def _sql_string(v: str | None) -> str:
     return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _quantile_bins(
+    df: DataFrame, columns: list[str], n_bins: int, relative_error: float = 0.0
+) -> list[BinSpec]:
+    """Equi-depth bins of each column from one multi-column approxQuantile
+    pass; relative_error=0 is exact (distributed exact percentile — a single
+    pass + small state).  NULLs are ignored per column."""
+    probs = [i / n_bins for i in range(1, n_bins)]
+    qs = df.approxQuantile(columns, probs, relative_error)
+    return [BinSpec(column=c, splits=sorted(set(q))) for c, q in zip(columns, qs)]
+
+
 def fit_quantile_bins(
     df: DataFrame, column: str, n_bins: int, relative_error: float = 0.0
 ) -> BinSpec:
-    """Equi-depth bins from (approx)Quantile; relative_error=0 is exact
-    (distributed exact percentile — a single pass + small state)."""
-    probs = [i / n_bins for i in range(1, n_bins)]
-    qs = df.approxQuantile(column, probs, relative_error)
-    splits = sorted(set(qs))
-    return BinSpec(column=column, kind="numeric", splits=splits)
+    """Equi-depth bins of one column."""
+    return _quantile_bins(df, [column], n_bins, relative_error)[0]
 
 
 def fit_width_bins(df: DataFrame, column: str, n_bins: int) -> BinSpec:
@@ -109,43 +122,43 @@ def fit_width_bins(df: DataFrame, column: str, n_bins: int) -> BinSpec:
 
 def fit_supervised_bins(
     df: DataFrame,
-    column: str,
+    columns: list[str],
     target: str,
     max_bins: int = 8,
     pre_bins: int = 64,
     min_frac: float = 0.01,
-    outlier_detector: str | None = None,
-) -> BinSpec:
+) -> list[BinSpec]:
     """Target-aware binning — the optbinning stand-in (SURVEY.md §7 item 2).
 
-    1. quantile pre-bin into `pre_bins` buckets (Spark exact percentile);
-    2. one groupBy(prebin) -> (count, mean(target)) — tiny result to driver;
+    1. quantile pre-bin every column into `pre_bins` buckets (one exact
+       multi-column percentile pass);
+    2. per column one groupBy(prebin) -> (count, mean(target)) — tiny
+       result to driver; NULL feature values count in the null_bin;
     3. greedily merge the adjacent pair with the most similar target mean
        (count-weighted) until `max_bins` remain; pairs below `min_frac`
        support merge first.
 
-    Only step 3 runs on the driver, over <= pre_bins rows of aggregates, so
-    the fit is insensitive to table size.  outlier_detector='range'
-    excludes IQR-range outliers from the fit (the reference passes it on
-    every optbinning call, src/encoder.py:38-44).
+    Only step 3 runs on the driver, over <= pre_bins rows of aggregates per
+    column, so the fit is insensitive to table size.
     """
-    if outlier_detector == "range":
-        from inferdb_spark.operators.optimal_binning import iqr_range_filter
+    pres = _quantile_bins(df, columns, pre_bins)
+    return [_merge_prebins(df, pre, target, max_bins, min_frac) for pre in pres]
 
-        df = iqr_range_filter(df, column)
-    pre = fit_quantile_bins(df, column, pre_bins)
+
+def _merge_prebins(
+    df: DataFrame, pre: BinSpec, target: str, max_bins: int, min_frac: float
+) -> BinSpec:
     if not pre.splits:
         return pre
     stats = (
         df.select(pre.expr().alias("b"), F.col(target).cast("double").alias("y"))
         .groupBy("b")
         .agg(F.count("*").alias("n"), F.avg("y").alias("m"))
-        .orderBy("b")
         .collect()
     )
-    # contiguous runs over observed pre-bins; edges between run i and i+1
-    # correspond to pre.splits boundary indices
-    bins = [[r.b, r.n, r.m] for r in stats]
+    # contiguous runs over observed pre-bins, sorted by id; edges between
+    # run i and i+1 correspond to pre.splits boundary indices
+    bins = sorted([r.b, r.n, r.m] for r in stats)
     total = sum(r.n for r in stats)
 
     def merge_cost(i: int) -> float:
@@ -164,7 +177,7 @@ def fit_supervised_bins(
     # next group) - 1
     kept_upper = [b[0] for b in bins[:-1]]
     splits = [pre.splits[u] for u in kept_upper if u < len(pre.splits)]
-    return BinSpec(column=column, kind="numeric", splits=sorted(set(splits)))
+    return BinSpec(column=pre.column, kind="numeric", splits=sorted(set(splits)))
 
 
 def fit_categorical_bins(

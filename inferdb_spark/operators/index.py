@@ -51,21 +51,6 @@ BIN_SUFFIX = "_bin"
 DENSE_CAP = 1 << 16
 
 
-def _mode_value(df: DataFrame, group_cols: list[str], value: str = "value") -> DataFrame:
-    """Majority vote with lowest-value tiebreak (deterministic analog of the
-    reference's pandas idxmax first-occurrence, src/transpiler.py:986-992 —
-    SURVEY.md §7 known-hard 4)."""
-    counted = df.groupBy(*group_cols, value).agg(F.count("*").alias("cnt"))
-    return counted.groupBy(*group_cols).agg(
-        F.max_by(F.col(value), F.struct(F.col("cnt"), -F.col(value))).alias(value)
-    )
-
-
-def _bin_domain(spec: BinSpec) -> int:
-    """Number of bin ids the spec can produce, its null bin included."""
-    return max(spec.n_bins, spec.null_bin + 1)
-
-
 @dataclass
 class KVIndex:
     """Built index artifacts.
@@ -96,7 +81,7 @@ class KVIndex:
         terms, stride = [], 1
         for s in reversed(self.specs):
             terms.append(f"({s.expr_sql()}) * {stride}")
-            stride *= _bin_domain(s)
+            stride *= s.domain
         arr = f"from_json('{json.dumps(self.table)}', 'array<double>')"
         return f"element_at({arr}, {' + '.join(reversed(terms))} + 1)"
 
@@ -110,7 +95,7 @@ def _fill_table(
     """Dense lookup table over the bin domain, or None over DENSE_CAP.
     Levels are tried deepest first; a NULL value falls through to the next
     level, as coalesce does."""
-    dims = [_bin_domain(s) for s in specs]
+    dims = [s.domain for s in specs]
     if math.prod(dims) > DENSE_CAP:
         return None
     levels = [kv, *(prefix_aggs[L] for L in sorted(prefix_aggs, reverse=True))]

@@ -65,7 +65,7 @@ def test_fit_supervised_bins_monotone_target(spark):
     # y strongly depends on x: supervised bins should separate low/high x
     rows = [(float(i), 0.0 if i < 500 else 100.0) for i in range(1000)]
     df = spark.createDataFrame(rows, "x double, y double")
-    spec = fit_supervised_bins(df, "x", "y", max_bins=4, pre_bins=16)
+    (spec,) = fit_supervised_bins(df, ["x"], "y", max_bins=4, pre_bins=16)
     assert 1 <= len(spec.splits) <= 3
     # some split must separate the two regimes near 500
     assert any(400 <= s <= 600 for s in spec.splits)
@@ -111,3 +111,41 @@ def test_wide_schema_binning_784_columns(spark):
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b
     assert len(rows_a) == 50
+
+
+def _null_frame(spark):
+    # `a` is 40% NULL, and its NULL rows carry target 1
+    rows = []
+    for i in range(1000):
+        a = float(i % 100) if i % 5 >= 2 else None
+        b = float((i * 37) % 1000)
+        rows.append((a, b, 1.0 if a is None or a >= 50 else 0.0))
+    return spark.createDataFrame(rows, "a double, b double, y double")
+
+
+def test_fit_supervised_bins_list_ignores_nulls_per_column(spark):
+    df = _null_frame(spark)
+    a, b = fit_supervised_bins(df, ["a", "b"], "y", max_bins=8, pre_bins=8)
+    (b_alone,) = fit_supervised_bins(df, ["b"], "y", max_bins=8, pre_bins=8)
+    assert b.splits == b_alone.splits
+    # no merge at max_bins == pre_bins: the splits are a's own pre-bins
+    assert a.splits == fit_quantile_bins(df, "a", 8).splits
+    assert len(a.splits) == 7
+
+
+def test_fit_supervised_bins_counts_null_rows_in_null_bin(spark):
+    df = _null_frame(spark)
+    pre = fit_quantile_bins(df, "a", 4).splits
+    a, _ = fit_supervised_bins(df, ["a", "b"], "y", max_bins=3, pre_bins=4)
+    # the NULL rows (target 1) lift pre-bin 0's mean, so the two pure-1
+    # upper pre-bins merge first; without them the two pure-0 lower ones do
+    assert a.splits == pre[:2]
+    (a_non_null,) = fit_supervised_bins(df.where("a IS NOT NULL"), ["a"], "y", max_bins=3, pre_bins=4)
+    assert a_non_null.splits == pre[1:]
+
+
+def test_fit_supervised_bins_job_count(spark, job_count):
+    df = _null_frame(spark)
+    cols = ["a", "b"]
+    n = job_count(lambda: fit_supervised_bins(df, cols, "y", max_bins=4, pre_bins=16))
+    assert n <= 2 + 2 * len(cols)

@@ -142,7 +142,7 @@ def test_dp_unconstrained_objective_dominance(spark):
 
     df = make_pm25_like(spark, n=4000)
     col, pre_bins, max_bins = "weekofyear", 24, 5
-    greedy = fit_supervised_bins(df, col, "target", max_bins=max_bins, pre_bins=pre_bins)
+    (greedy,) = fit_supervised_bins(df, [col], "target", max_bins=max_bins, pre_bins=pre_bins)
     optimal = fit_optimal_bins(
         df, col, "target", task="regression", max_bins=max_bins,
         pre_bins=pre_bins, monotonic=None, min_frac=0.0,

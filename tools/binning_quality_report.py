@@ -101,19 +101,19 @@ def compare_binning(
     out: dict = {"task": task, "features": features}
     specs = {}
     for method in ("greedy", "optimal"):
-        fitted = []
-        for c in features:
-            if method == "greedy":
-                s = fit_supervised_bins(
-                    train, c, "target", max_bins=max_bins, pre_bins=pre_bins
-                )
-            else:
-                s = fit_optimal_bins(
+        if method == "greedy":
+            fitted = fit_supervised_bins(
+                train, features, "target", max_bins=max_bins, pre_bins=pre_bins
+            )
+        else:
+            fitted = [
+                fit_optimal_bins(
                     train, c, "target",
                     task="classification" if task == "classification" else "regression",
                     max_bins=max_bins, pre_bins=pre_bins,
                 )
-            fitted.append(s)
+                for c in features
+            ]
         specs[method] = fitted
         index = build_index(train, fitted, "target", task=task)
         scored = index_score(test, index)
