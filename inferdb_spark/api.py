@@ -97,7 +97,7 @@ def standalone_report(
         )
         metric_name = "accuracy"
     idx_runtime = time.perf_counter() - t0
-    info = index_size_info(pipe.index, spark)
+    info = index_size_info(pipe.index)
     rows.append(
         (
             "index",
@@ -154,7 +154,7 @@ def register_pipeline_views(
     names = []
     stages = {
         f"{prefix}_input": df,
-        f"{prefix}_translated": translate(df, pipe.index),
+        f"{prefix}_translated": translate(df, pipe.index.specs),
         f"{prefix}_scored": pipe.score(df),
     }
     for name, stage_df in stages.items():

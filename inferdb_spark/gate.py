@@ -30,6 +30,8 @@ from inferdb_spark.functions.datetime_fns import day_name, is_weekend, pg_isodow
 from inferdb_spark.functions.geo import spherical_distance
 from inferdb_spark.functions.math_fns import crazy_exp, ln1p_compat, sigmoid
 from inferdb_spark.operators.binning import BinSpec
+from inferdb_spark.operators.index import KVIndex, build_index
+from inferdb_spark.operators.scoring import index_score, score_linear_coo, sparsify_coo, translate
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
@@ -579,6 +581,34 @@ _IDX_ORACLE_COMMON = f"""
 """
 
 
+# the index's bin specs: the oracle's b1, b2, b3
+IDX_SPECS = [
+    BinSpec("l_quantity", splits=QTY_SPLITS),
+    BinSpec("l_discount", splits=DISC_SPLITS),
+    BinSpec("l_tax", splits=TAX_SPLITS),
+]
+
+
+def _idx_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem with the oracle's row id, train flag and target in integer
+    cents (exact sums, one division at the end on both sides)."""
+    return _t(spark, sf_dir, "lineitem").select(
+        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
+        (F.col("l_orderkey") % 5 != 0).alias("is_train"),
+        *(s.column for s in IDX_SPECS),
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+    )
+
+
+def _idx_build(rows: DataFrame) -> KVIndex:
+    """The shipped build over the train rows, row-weighted prefix values
+    (exact integer arithmetic; operators/index.py for the unweighted
+    reference-parity mode)."""
+    return build_index(
+        rows.filter("is_train"), IDX_SPECS, "cents", task="regression", agg_mode="rows"
+    )
+
+
 @gate(
     "index_translate",
     oracle=f"""
@@ -595,16 +625,7 @@ _IDX_ORACLE_COMMON = f"""
 def q_index_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `{x}_translate()` stage (P5): bin-encode + compound key as one
     narrow projection (src/transpiler.py:1101-1274)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
-        F.concat_ws(
-            ".",
-            BinSpec("l_quantity", splits=QTY_SPLITS).expr().cast("string"),
-            BinSpec("l_discount", splits=DISC_SPLITS).expr().cast("string"),
-            BinSpec("l_tax", splits=TAX_SPLITS).expr().cast("string"),
-        ).alias("key"),
-    )
+    return translate(_idx_rows(spark, sf_dir), IDX_SPECS).select("row_id", "key")
 
 
 @gate(
@@ -615,23 +636,9 @@ def q_index_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_index_kv_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kv build: groupBy(key) -> mean (A1, src/transpiler.py:993-996).
-    Values aggregate as integer cents (exact) and divide once."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 != 0)
-    enc = li.select(
-        BinSpec("l_quantity", splits=QTY_SPLITS).expr().alias("b1"),
-        BinSpec("l_discount", splits=DISC_SPLITS).expr().alias("b2"),
-        BinSpec("l_tax", splits=TAX_SPLITS).expr().alias("b3"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    return (
-        enc.groupBy("b1", "b2", "b3")
-        .agg((F.sum("cents").cast("double") / F.count("*")).alias("v"))
-        .select(
-            F.concat_ws(".", "b1", "b2", "b3").alias("key"),
-            (F.col("v") / 100).alias("value"),
-        )
-    )
+    """kv build: groupBy(key) -> mean (A1, src/transpiler.py:993-996)."""
+    kv = _idx_build(_idx_rows(spark, sf_dir)).kv
+    return kv.select("key", (F.col("value") / 100).alias("value"))
 
 
 @gate(
@@ -642,56 +649,15 @@ def q_index_kv_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full index scoring: translate → broadcast kv probe → prefix-fallback
-    coalesce (J1+J2) — the Spark redesign of exact-match + prefix_search
-    (src/transpiler.py:1054-1099, sql_scripts/prefix_search.sql).
-    Row-weighted prefix aggregates (exact integer arithmetic; see
-    operators/index.py for the unweighted reference-parity mode)."""
-    li = _t(spark, sf_dir, "lineitem")
-    base = li.select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
-        (F.col("l_orderkey") % 5 != 0).alias("is_train"),
-        BinSpec("l_quantity", splits=QTY_SPLITS).expr().alias("b1"),
-        BinSpec("l_discount", splits=DISC_SPLITS).expr().alias("b2"),
-        BinSpec("l_tax", splits=TAX_SPLITS).expr().alias("b3"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    train = base.filter("is_train")
-    test = base.filter(~F.col("is_train"))
-    # ONE aggregation of the train scan; prefix levels and the global mean
-    # all roll up from the tiny per-key stats (at 100 TB the fact table is
-    # read once for the whole index build)
-    kvstats = train.groupBy("b1", "b2", "b3").agg(
-        F.sum("cents").alias("s"), F.count("*").alias("c")
-    )
-    kvstats = kvstats.cache()  # materialized stage: kv/p2/p1/global all read it
-    kv = kvstats.select(
-        F.concat_ws(".", "b1", "b2", "b3").alias("key"),
-        (F.col("s").cast("double") / F.col("c")).alias("v_exact"),
-    )
-    p2 = (
-        kvstats.groupBy("b1", "b2")
-        .agg((F.sum("s").cast("double") / F.sum("c")).alias("v_p2"))
-        .select(F.concat_ws(".", "b1", "b2").alias("prefix_2"), "v_p2")
-    )
-    p1 = (
-        kvstats.groupBy("b1")
-        .agg((F.sum("s").cast("double") / F.sum("c")).alias("v_p1"))
-        .select(F.col("b1").cast("string").alias("prefix_1"), "v_p1")
-    )
-    g = kvstats.agg((F.sum("s").cast("double") / F.sum("c")).alias("g"))
-    scored = (
-        test.withColumn("key", F.concat_ws(".", "b1", "b2", "b3"))
-        .withColumn("prefix_2", F.concat_ws(".", "b1", "b2"))
-        .withColumn("prefix_1", F.col("b1").cast("string"))
-        .join(F.broadcast(kv), "key", "left")
-        .join(F.broadcast(p2), "prefix_2", "left")
-        .join(F.broadcast(p1), "prefix_1", "left")
-        .crossJoin(F.broadcast(g))
-    )
+    """Full index scoring: build, then translate → exact key → prefix
+    fallback → global, the Spark redesign of exact-match + prefix_search
+    (src/transpiler.py:1054-1099, sql_scripts/prefix_search.sql) as the
+    one projection over the dense lookup table."""
+    rows = _idx_rows(spark, sf_dir)
+    scored = index_score(rows.filter(~F.col("is_train")), _idx_build(rows))
     return scored.select(
         "row_id",
-        (F.coalesce("v_exact", "v_p2", "v_p1", "g") / 100).alias("prediction"),
+        (F.col("prediction") / 100).alias("prediction"),
         (F.col("cents").cast("double") / 100).alias("actual"),
     )
 
@@ -1020,25 +986,16 @@ def q_linear_score_coo(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a row's single partition, and with ≤3 exact addends the sum is
     order-insensitive here (weights chosen dyadic; rounding 6dp belt+braces).
     """
+    cols = list(LIN_COEF)
     li = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
-        "l_quantity", "l_discount", "l_tax",
+        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"), *cols
     )
-    from inferdb_spark.operators.scoring import sparsify_coo
-
-    coo = sparsify_coo(li, ["l_quantity", "l_discount", "l_tax"])
-    spark_coef = li.sparkSession.createDataFrame(
-        [(0, LIN_COEF["l_quantity"]), (1, LIN_COEF["l_discount"]), (2, LIN_COEF["l_tax"])],
-        "col_id int, coef double",
+    coef = spark.createDataFrame(
+        [(i, LIN_COEF[c]) for i, c in enumerate(cols)], "col_id int, coef double"
     )
-    return (
-        coo.join(F.broadcast(spark_coef), "col_id")
-        .groupBy("row_id")
-        .agg(
-            F.round(F.sum(F.col("val") * F.col("coef")) + F.lit(LIN_INTERCEPT), 6)
-            .cast("double")
-            .alias("score")
-        )
+    scored = score_linear_coo(sparsify_coo(li, cols), coef, LIN_INTERCEPT)
+    return scored.select(
+        "row_id", F.round(F.col("prediction"), 6).cast("double").alias("score")
     )
 
 

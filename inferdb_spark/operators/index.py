@@ -5,16 +5,19 @@ per row, with a plpgsql loop that repeatedly truncates the key and rescans
 on a miss (src/transpiler.py:1004-1099, sql_scripts/prefix_search.sql).
 
 Spark redesign: the per-row fallback loop is replaced by BUILD-TIME prefix
-aggregates — for every prefix length L we precompute the aggregated value
-over keys sharing that prefix, so a lookup is coalesce(exact, prefix_{k-1},
-..., prefix_1, global).  The build then goes one step further, as the
+aggregates — for every prefix length L the aggregated value over keys
+sharing that prefix, so a lookup is coalesce(exact, prefix_{k-1}, ...,
+prefix_1, global).  Every level is one roll-up of the per-key aggregate
+over the bin columns: the build is one aggregate relation whose level-k
+rows are the keys, level-L rows the prefix_L values and the level-0 row
+the global value.  The build then goes one step further, as the
 reference's populate_paths does (src/transpiler.py:930-938): when the bin
-domain is small (at most DENSE_CAP tuples) it evaluates that coalesce for
-EVERY bin tuple on the driver and stores the result as `KVIndex.table`, a
-dense row-major array.  Scoring is then one projection,
-`element_at(<table literal>, <mixed-radix bin index> + 1)` — no join, no
-per-row control flow, no Spark job beyond the scan.  Larger domains keep
-the kv and prefix relations as broadcast join sides.
+domain is small (at most DENSE_CAP tuples) one collect of that relation
+evaluates the coalesce for EVERY bin tuple on the driver and stores the
+result as `KVIndex.table`, a dense row-major array.  Scoring is then one
+projection, `element_at(<table literal>, <mixed-radix bin index> + 1)` — no
+join, no per-row control flow, no Spark job beyond the scan.  Larger
+domains keep the kv and prefix relations as broadcast join sides.
 
 Fallback semantics follow the reference TRIE (component-wise prefixes,
 aggregate over the values of keys under the node — src/inference_trie.py:
@@ -86,22 +89,24 @@ class KVIndex:
         return f"element_at({arr}, {' + '.join(reversed(terms))} + 1)"
 
 
+def _domain_size(specs: list[BinSpec]) -> int:
+    """Number of bin tuples the specs can produce, null bins included."""
+    return math.prod(s.domain for s in specs)
+
+
 def _fill_table(
-    specs: list[BinSpec],
-    kv: DataFrame,
-    prefix_aggs: dict[int, DataFrame],
-    global_value: float,
-) -> list[float] | None:
-    """Dense lookup table over the bin domain, or None over DENSE_CAP.
+    specs: list[BinSpec], levels: dict[int, dict[str, float | None]], global_value: float
+) -> list[float]:
+    """Dense lookup table over the bin domain from the per-level
+    {key: value} dicts (L = len(specs) the keys, 1..L-1 the prefixes).
     Levels are tried deepest first; a NULL value falls through to the next
     level, as coalesce does."""
-    dims = [s.domain for s in specs]
-    if math.prod(dims) > DENSE_CAP:
-        return None
-    levels = [kv, *(prefix_aggs[L] for L in sorted(prefix_aggs, reverse=True))]
-    maps = [{k: v for k, v in df.collect() if v is not None} for df in levels]
+    maps = [
+        {key: v for key, v in levels[L].items() if v is not None}
+        for L in range(len(specs), 0, -1)
+    ]
     table = []
-    for bins in itertools.product(*map(range, dims)):
+    for bins in itertools.product(*(range(s.domain) for s in specs)):
         key, v = ".".join(map(str, bins)), global_value
         for m in maps:
             if key in m:
@@ -119,100 +124,71 @@ def build_index(
     task: str = "regression",
     agg_mode: str = "keys",
 ) -> KVIndex:
-    """kv build = one groupBy over the encoded training rows
-    (src/transpiler.py:986-996: mean for regression, majority for
-    classification), plus one tiny groupBy per prefix length.
+    """kv build (src/transpiler.py:986-996: mean for regression, majority
+    for classification) with every prefix level, as ONE aggregate
+    relation: a groupBy of the encoded training rows into per-key stats,
+    rolled up over the bin columns.  A row of level L = k − Σ grouping(bin)
+    carries the prefix_L aggregate under the key of its L leading bins
+    (concat_ws skips the rolled-up NULLs); level k holds the keys, level 0
+    the global value.
 
-    The encoded frame is aggregated once into per-key stats; prefix
-    aggregates derive from that small result, never rescanning the base
-    table — at 100 TB the base data is read exactly once.
+    The base table is read once; every level derives from the tiny
+    per-key result.  The relation is cached: under DENSE_CAP one collect of
+    it fills `table`; over the cap the collect of the global row alone
+    materializes it for the join sides.
     """
     k = len(specs)
+    bins = [s.column + BIN_SUFFIX for s in specs]
     enc = apply_bins(train, specs, BIN_SUFFIX)
-    bin_cols = [s.column + BIN_SUFFIX for s in specs]
     y = F.col(target).cast("double")
+    level = F.lit(k) - F.bit_count(F.grouping_id())
 
     if task == "regression":
         # count(y), not count(*): null targets must not dilute the mean
         # (pandas .mean() semantics, src/transpiler.py:993-996)
-        per_key = enc.groupBy(*bin_cols).agg(
-            F.sum(y).alias("s"), F.count(y).alias("c")
-        )
-        per_key.cache()
-        kv = per_key.select(
-            key_expr(specs, BIN_SUFFIX).alias("key"),
-            (F.col("s") / F.col("c")).alias("value"),
-        )
-        prefix_aggs: dict[int, DataFrame] = {}
-        for L in range(1, k):
-            pcols = bin_cols[:L]
-            pkey = key_expr(specs[:L], BIN_SUFFIX)
-            if agg_mode == "rows":
-                agg = per_key.groupBy(*pcols).agg(
-                    (F.sum("s") / F.sum("c")).alias("value")
-                )
-            else:  # unweighted over keys (trie semantics)
-                agg = per_key.groupBy(*pcols).agg(
-                    F.avg(F.col("s") / F.col("c")).alias("value")
-                )
-            prefix_aggs[L] = agg.select(pkey.alias(f"prefix_{L}"), "value")
-        if agg_mode == "rows":
-            g = per_key.agg((F.sum("s") / F.sum("c")).alias("g")).first()["g"]
-        else:
-            g = per_key.agg(F.avg(F.col("s") / F.col("c")).alias("g")).first()["g"]
+        per_key = enc.groupBy(*bins).agg(F.sum(y).alias("s"), F.count(y).alias("c"))
+        mean = F.sum("s") / F.sum("c")  # row-weighted; at level k the key's own s / c
+        if agg_mode == "keys":  # unweighted over the keys' means (trie semantics);
+            # level k keeps s / c, as an avg of a -0.0 mean would give 0.0
+            mean = F.when(level == k, mean).otherwise(F.avg(F.col("s") / F.col("c")))
+        agg = per_key.rollup(*bins).agg(level.alias("level"), mean.alias("value"))
     else:
-        per_key_cls = enc.groupBy(*bin_cols, y.cast("long").alias("value")).agg(
+        # majority, lowest-class tiebreak
+        vote = F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value")))
+        per_key = enc.groupBy(*bins, y.cast("long").alias("value")).agg(
             F.count("*").alias("cnt")
         )
-        per_key_cls.cache()
-        # majority per key, lowest-class tiebreak
-        kv_bins = per_key_cls.groupBy(*bin_cols).agg(
-            F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value"))).alias(
-                "value"
-            )
-        )
-        kv = kv_bins.select(
-            key_expr(specs, BIN_SUFFIX).alias("key"),
-            F.col("value").cast("double").alias("value"),
-        )
-        prefix_aggs = {}
-        for L in range(1, k):
-            pcols = bin_cols[:L]
-            pkey = key_expr(specs[:L], BIN_SUFFIX)
-            if agg_mode == "rows":
-                src = per_key_cls.groupBy(*pcols, "value").agg(
-                    F.sum("cnt").alias("cnt")
-                )
-            else:  # majority over per-key majority values (trie semantics)
-                src = kv_bins.groupBy(*pcols, "value").agg(F.count("*").alias("cnt"))
-            agg = src.groupBy(*pcols).agg(
-                F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value"))).alias(
-                    "value"
-                )
-            )
-            prefix_aggs[L] = agg.select(
-                pkey.alias(f"prefix_{L}"), F.col("value").cast("double").alias("value")
-            )
-        if agg_mode == "rows":
-            counts = per_key_cls.groupBy("value").agg(F.sum("cnt").alias("cnt"))
-        else:
-            counts = kv_bins.groupBy("value").agg(F.count("*").alias("cnt"))
-        g = counts.select(
-            F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value")))
-        ).first()[0]
+        if agg_mode == "keys":  # each key votes once, for its majority (trie semantics)
+            per_key = per_key.groupBy(*bins).agg(vote.alias("value"), F.lit(1).alias("cnt"))
+        counts = per_key.groupingSets(
+            [bins[:L] + ["value"] for L in range(k + 1)], *bins, "value"
+        ).agg(level.alias("level"), F.sum("cnt").alias("cnt"))
+        agg = counts.groupBy("level", *bins).agg(vote.cast("double").alias("value"))
 
+    levels = agg.select(
+        "level", key_expr(specs, BIN_SUFFIX).alias("key"), "value"
+    ).cache()
+    dense = _domain_size(specs) <= DENSE_CAP
+    by_level: dict[int, dict[str, float | None]] = {L: {} for L in range(k + 1)}
+    for L, key, v in (levels if dense else levels.where(F.col("level") == 0)).collect():
+        by_level[L][key] = v
+    g = by_level.pop(0).get("")
     g = float(g) if g is not None else 0.0
-    # cached first, so the collect that fills the table also materializes
-    # them; a collect of uncached relations re-runs their AQE stages later
-    rels = [kv, *prefix_aggs.values()]
-    for df in rels:
-        df.cache()
-    table = _fill_table(specs, kv, prefix_aggs, g)
-    if table is None:  # over the cap they are the broadcast join sides
-        for df in rels:
-            df.count()
+
+    kv = levels.where(F.col("level") == k).select("key", "value")
+    prefix_aggs = {
+        L: levels.where(F.col("level") == L).select(F.col("key").alias(f"prefix_{L}"), "value")
+        for L in range(1, k)
+    }
+    for df in (kv, *prefix_aggs.values()):  # the join sides over the cap;
+        df.cache()  # lazy, filled from `levels` on first read
     return KVIndex(
-        specs=specs, task=task, kv=kv, prefix_aggs=prefix_aggs, global_value=g, table=table
+        specs=specs,
+        task=task,
+        kv=kv,
+        prefix_aggs=prefix_aggs,
+        global_value=g,
+        table=_fill_table(specs, by_level, g) if dense else None,
     )
 
 
@@ -256,39 +232,42 @@ def load_index(spark: SparkSession, path: str) -> KVIndex:
         L: spark.read.parquet(os.path.join(path, f"prefix_{L}"))
         for L in spec["prefix_lengths"]
     }
+    table = None
+    if _domain_size(specs) <= DENSE_CAP:
+        levels = {L: dict(df.collect()) for L, df in [(len(specs), kv), *prefix_aggs.items()]}
+        table = _fill_table(specs, levels, spec["global_value"])
     return KVIndex(
         specs=specs,
         task=spec["task"],
         kv=kv,
         prefix_aggs=prefix_aggs,
         global_value=spec["global_value"],
-        table=_fill_table(specs, kv, prefix_aggs, spec["global_value"]),
+        table=table,
     )
 
 
 def unseen_paths(index: KVIndex) -> DataFrame:
     """All bin-id combinations NOT present in the kv relation — the
     reference's populate_paths set difference (src/transpiler.py:930-938,
-    J10/U1): cross join of the tiny per-feature bin domains, then an
-    anti join against the stored keys."""
+    J10/U1): cross join of the tiny per-feature bin domains (null bins
+    included), then an anti join against the stored keys."""
     spark = index.kv.sparkSession
     domain = None
     for s in index.specs:
         d = spark.createDataFrame(
-            [(b,) for b in range(s.n_bins)], f"`{s.column}{BIN_SUFFIX}` int"
+            [(b,) for b in range(s.domain)], f"`{s.column}{BIN_SUFFIX}` int"
         )
         domain = d if domain is None else domain.crossJoin(d)
     all_keys = domain.select(key_expr(index.specs, BIN_SUFFIX).alias("key"))
     return all_keys.join(index.kv.select("key"), "key", "left_anti")
 
 
-def index_size_info(index: KVIndex, spark: SparkSession) -> dict:
+def index_size_info(index: KVIndex) -> dict:
     """Stored paths / possible paths / filling degree
-    (src/optimizer.py:225-231, 268-276)."""
+    (src/optimizer.py:225-231, 268-276); the possible paths count the
+    null bins, as the dense table does."""
     stored = index.kv.count()
-    possible = 1
-    for s in index.specs:
-        possible *= s.n_bins
+    possible = _domain_size(index.specs)
     return {
         "stored_paths": stored,
         "possible_paths": possible,

@@ -25,15 +25,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from inferdb_spark.functions.math_fns import relu, sigmoid
-from inferdb_spark.operators.binning import apply_bins, key_expr
+from inferdb_spark.operators.binning import BinSpec, apply_bins, key_expr
 from inferdb_spark.operators.index import BIN_SUFFIX, KVIndex
 
 
-def translate(df: DataFrame, index: KVIndex, key_col: str = "key") -> DataFrame:
+def translate(df: DataFrame, specs: list[BinSpec], key_col: str = "key") -> DataFrame:
     """Bin-encode + compound key — the `{x}_translate()` stage
-    (src/transpiler.py:1101-1274) as one narrow projection."""
-    enc = apply_bins(df, index.specs, BIN_SUFFIX)
-    return enc.withColumn(key_col, key_expr(index.specs, BIN_SUFFIX))
+    (src/transpiler.py:1101-1274) as one narrow projection.  Takes an
+    index's `specs`, the only part of it the stage reads."""
+    enc = apply_bins(df, specs, BIN_SUFFIX)
+    return enc.withColumn(key_col, key_expr(specs, BIN_SUFFIX))
 
 
 def index_score(
@@ -58,7 +59,7 @@ def index_score(
     clash = [c for c in helpers if c.lower() in taken]
     if clash:
         raise ValueError(f"index_score: input column {clash[0]!r} clashes with a join helper")
-    t = translate(df, index)
+    t = translate(df, index.specs)
     out = t.join(F.broadcast(index.kv.withColumnRenamed("value", "_v_exact")), "key", "left")
     fallback_cols: list[Column] = [F.col("_v_exact")]
     for L in range(k - 1, 0, -1):

@@ -74,6 +74,12 @@ def test_unseen_paths(spark):
     idx = build_index(train, specs, "y")
     missing = {r.key for r in unseen_paths(idx).collect()}
     assert missing == {"0.1", "1.0", "1.1", "2.1"}
+    # null_bin = n_bins: the NULL x bin 3 is a path of the domain too
+    train = spark.createDataFrame([(0.0, 0.0, 1.0), (None, 0.0, 2.0)], "x double, z double, y double")
+    specs[0] = BinSpec(column="x", splits=[1.5, 3.5], null_bin=3)
+    idx = build_index(train, specs, "y")
+    missing = {r.key for r in unseen_paths(idx).collect()}
+    assert missing == {"0.1", "1.0", "1.1", "2.0", "2.1", "3.1"}
 
 
 def test_iv_multiclass_prefers_informative_feature(spark):

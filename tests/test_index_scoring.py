@@ -59,7 +59,7 @@ def test_regression_index_matches_python_trie(spark):
     scored = {
         (r.x, r.z): r.prediction for r in index_score(test, idx).collect()
     }
-    t = translate(test, idx).select("x", "z", "key").collect()
+    t = translate(test, idx.specs).select("x", "z", "key").collect()
     for r in t:
         expected = _python_trie_predict(kv, r.key, "regression", idx.global_value)
         assert abs(scored[(r.x, r.z)] - expected) < 1e-9, r.key
@@ -93,10 +93,14 @@ def test_unseen_key_falls_back_to_prefix_then_global(spark):
 def test_index_size_info(spark):
     train = _mk_train(spark)
     idx = build_index(train, SPECS, "y", task="regression")
-    info = index_size_info(idx, spark)
+    info = index_size_info(idx)
     assert info["possible_paths"] == 4 * 3
     assert info["stored_paths"] == 11  # one combination held out
     assert 0 < info["filling_degree"] < 1
+    # null_bin = n_bins: NULL x is a bin of its own, stored and possible
+    train = spark.createDataFrame([(1.0, 1.0), (10.0, 2.0), (None, 3.0)], "x double, y double")
+    idx = build_index(train, [BinSpec(column="x", splits=[5.0], null_bin=2)], "y")
+    assert index_size_info(idx) == {"stored_paths": 3, "possible_paths": 3, "filling_degree": 1.0}
 
 
 # ---------------------------------------------------------------------------
@@ -179,6 +183,92 @@ def test_index_score_matches_trie_on_whole_domain(spark, branch, task, agg_mode)
     idx = _build(_mk_train3(spark, task), SPECS3, "y", branch, task=task, agg_mode=agg_mode)
     rows = _assert_trie(idx, _grid(spark, [(None, 100.0, 1.0), (20.0, None, None)]))
     assert len({r.prediction for r in rows}) > 2
+
+
+def _vote(counts: Counter):
+    """Majority with the lowest-class tiebreak; a NULL class loses ties,
+    as it sorts first in Spark's struct(cnt, -class) order."""
+    return max(counts.items(), key=lambda t: (t[1], -math.inf if t[0] is None else -t[0]))[0]
+
+
+def _py_levels(rows, specs, task, agg_mode) -> dict[int, dict[str, float | None]]:
+    """Every level of the index from the raw (features..., y) rows, as a
+    plain roll-up: level L maps each L-bin prefix to the aggregate of the
+    keys under it (L = len(specs) the keys, L = 0 the global value)."""
+    keys: dict[tuple, list] = {}
+    for *xs, y in rows:
+        keys.setdefault(tuple(_py_bin(s, x) for s, x in zip(specs, xs)), []).append(y)
+
+    def key_value(ys):
+        if task == "classification":
+            return _vote(Counter(None if y is None else int(y) for y in ys))
+        ys = [y for y in ys if y is not None]
+        return sum(ys) / len(ys) if ys else None
+
+    out = {}
+    for L in range(len(specs) + 1):
+        under: dict[str, list] = {}
+        for key, ys in keys.items():
+            under.setdefault(".".join(map(str, key[:L])), []).append(ys)
+        if agg_mode == "rows" or L == len(specs):
+            out[L] = {p: key_value([y for ys in yss for y in ys]) for p, yss in under.items()}
+        elif task == "classification":
+            out[L] = {p: _vote(Counter(key_value(ys) for ys in yss)) for p, yss in under.items()}
+        else:
+            means = {p: [m for m in map(key_value, yss) if m is not None] for p, yss in under.items()}
+            out[L] = {p: sum(ms) / len(ms) if ms else None for p, ms in means.items()}
+    return out
+
+
+def _rollup_rows(task):
+    """Random rows over SPECS3 (NULL x and NULL targets included), plus a
+    class tie under x bin 3 and a key whose targets are all NULL."""
+    rng = random.Random(5)
+    ys = [None, 0, 1, 2] if task == "classification" else [None, 0.5, 1.0, 3.0, 7.5]
+    rows = [
+        (rng.choice(XS[:3] + [None]), rng.choice(ZS), rng.choice(WS), rng.choice(ys))
+        for _ in range(120)
+    ]
+    return rows + [(30.0, 1.0, 0.0, 2), (30.0, 1.0, 0.0, 1), (30.0, 100.0, 1.0, None)]
+
+
+@pytest.mark.parametrize("task", ["regression", "classification"])
+@pytest.mark.parametrize("agg_mode", ["keys", "rows"])
+def test_every_level_matches_python_rollup(spark, branch, task, agg_mode):
+    rows = _rollup_rows(task)
+    train = spark.createDataFrame(
+        [(x, z, w, None if y is None else float(y)) for x, z, w, y in rows],
+        "x double, z double, w double, y double",
+    )
+    idx = _build(train, SPECS3, "y", branch, task=task, agg_mode=agg_mode)
+    want = _py_levels(rows, SPECS3, task, agg_mode)
+    got = {3: dict(idx.kv.collect()), **{L: dict(df.collect()) for L, df in idx.prefix_aggs.items()}}
+    assert sorted(got) == [1, 2, 3]
+    for L, level in got.items():
+        assert level.keys() == want[L].keys(), L
+        for key, v in level.items():
+            w = want[L][key]
+            assert (v is None and w is None) or _same(v, w), (L, key, v, w)
+    g = want[0][""]
+    assert _same(idx.global_value, 0.0 if g is None else g)
+    if task == "classification":
+        assert got[3]["3.0.0"] == 1.0  # the tie goes to the lowest class
+    assert got[3]["3.1.1"] is None
+
+
+@pytest.mark.parametrize("k", [2, 4])
+@pytest.mark.parametrize("task,agg_mode", [
+    ("regression", "keys"), ("regression", "rows"),
+    ("classification", "keys"), ("classification", "rows"),
+])
+def test_build_index_job_count(spark, job_count, k, task, agg_mode):
+    """Every level comes from one cached aggregate and one collect, so the
+    build's job count does not grow with the number of levels."""
+    rng = random.Random(k)
+    rows = [tuple(float(rng.randrange(8)) for _ in range(5)) for _ in range(400)]
+    train = spark.createDataFrame(rows, "a double, b double, c double, d double, y double")
+    specs = [BinSpec(column=c, splits=[1.5, 3.5, 5.5]) for c in "abcd"][:k]
+    assert job_count(lambda: build_index(train, specs, "y", task=task, agg_mode=agg_mode)) <= 6
 
 
 @pytest.mark.parametrize("null_bin", [0, 4])

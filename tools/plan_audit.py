@@ -3,8 +3,7 @@
 Run: python3 tools/plan_audit.py [sf_dir]   (exit 1 on any failed check)
 
 Checks the properties a 100 TB deployment depends on: filters/pruning
-pushed into the parquet scan, broadcast-only joins in the hand-written
-index scoring, a join-free projection for operator index scoring,
+pushed into the parquet scan, a join-free projection for index scoring,
 TakeOrderedAndProject for top-k (no global sort), zero-Exchange projection
 scoring, two-phase aggregation.
 """
@@ -38,8 +37,7 @@ def main() -> int:
         ("column-pruned ReadSchema", lambda p: "ReadSchema" in p),
     ])
     audit("index_score", [
-        ("broadcast hash joins only", lambda p: "BroadcastHashJoin" in p and "SortMergeJoin" not in p),
-        ("kv stats read from materialized stage", lambda p: "InMemoryTableScan" in p),
+        ("dense-table lookup: projection only (no Join, no Exchange)", lambda p: "Join" not in p and "Exchange" not in p),
     ])
     audit("index_score_classification", [
         ("dense-table lookup: projection only (no join, no shuffle)", lambda p: "Join" not in p and "Exchange" not in p),

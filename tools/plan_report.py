@@ -15,7 +15,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 QUERIES = [
-    "index_score",          # broadcast-only scoring path
+    "index_score",          # dense-table lookup: one projection
     "pricing_summary",      # pushed filters + two-phase agg
     "funnel_stages",        # chained windows, one shuffle
     "interval_join_counts", # banded range join

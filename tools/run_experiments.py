@@ -151,7 +151,7 @@ def sparsity_experiment(spark, sf: str) -> None:
     pipe = fit_index_pipeline(
         li, ["l_quantity", "l_discount", "l_tax"], "target", task="regression"
     )
-    info = index_size_info(pipe.index, spark)
+    info = index_size_info(pipe.index)
     print("== sparsity / filling degree (lineitem index) ==")
     print(info)
 
