@@ -1,10 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry(spark)` runs the flagship learned-index pipeline (fit supervised
-bins → IV-greedy feature selection → kv build → broadcast-join scoring with
-prefix fallback) on sf0.001.  `queries()`/`oracle_sql()` expose one named
-query per implemented operator family (SURVEY.md §2) with DuckDB oracles —
-see inferdb_spark/gate.py for the cross-engine determinism engineering.
+bins → IV-greedy feature selection → kv build with every prefix level →
+scoring as one lookup into the index's filled table) on sf0.001.
+`queries()`/`oracle_sql()` expose one named query per implemented operator
+family (SURVEY.md §2) with DuckDB oracles — see inferdb_spark/gate.py for
+the cross-engine determinism engineering.
 """
 
 from __future__ import annotations
@@ -27,16 +28,13 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: end-to-end learned-index regression on sf0.001 lineitem.
 
     Mirrors the reference's Standalone entry point (src/transpiler.py:
-    2999-3115): encode features with target-aware bins, select index
-    features greedily by IV, build the kv index + prefix aggregates, score
-    the held-out split via broadcast joins, and return per-row predictions.
+    2999-3115) through `api.fit_index_pipeline`: encode features with
+    target-aware bins, select index features greedily by IV, build the kv
+    index + prefix aggregates, score the held-out split, and return
+    per-row predictions.
     """
+    from inferdb_spark.api import fit_index_pipeline
     from inferdb_spark.catalog import load_table
-    from inferdb_spark.operators.binning import fit_supervised_bins
-    from inferdb_spark.operators.index import build_index
-    from inferdb_spark.operators.iv import greedy_select
-    from inferdb_spark.operators.binning import apply_bins
-    from inferdb_spark.operators.scoring import index_score
     from inferdb_spark.session import ensure_session_conf
 
     ensure_session_conf(spark)
@@ -48,10 +46,9 @@ def entry(spark: SparkSession) -> DataFrame:
     test = li.filter(F.col("l_orderkey") % 5 == 0)
 
     features = ["l_quantity", "l_discount", "l_tax", "l_linenumber"]
-    specs = fit_supervised_bins(train, features, "target", max_bins=6)
-    selected = greedy_select(apply_bins(train, specs), specs, "target", task="regression")
-    index = build_index(train, selected, "target", task="regression")
-    scored = index_score(test, index)
+    scored = fit_index_pipeline(
+        train, features, "target", task="regression", max_bins=6
+    ).score(test)
     return scored.select("row_id", "prediction", F.col("target").alias("actual"))
 
 

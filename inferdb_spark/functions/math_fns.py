@@ -8,8 +8,6 @@ Reference parity notes (cited file:line are in /root/reference):
   capped at 700 to avoid overflow; reference also caps 6000-batch variant).
 - sigmoid: src/transpiler.py:1612,1646; sql_scripts/nn_inference.sql:27,43.
 - relu: GREATEST(0, x) — src/transpiler.py:1741-1743,1794.
-- log-target transform + overflow-clipped inverse: src/transpiler.py:61-64,
-  577-580.
 - WoE safe division + 0.5 adjustment: src/optimizer.py:53,61-71.
 """
 
@@ -48,18 +46,6 @@ def crazy_exp(x: ColumnOrName, cap: float = 700.0) -> Column:
     )
 
 
-def log_target(y: ColumnOrName) -> Column:
-    """Regression targets are modeled in log space (src/transpiler.py:61-64)."""
-    return F.log(_c(y))
-
-
-def inverse_log_target(p: ColumnOrName, clip: float = 700.0) -> Column:
-    """exp with overflow clip, the reference's inverse transform
-    (src/transpiler.py:577-580)."""
-    p = _c(p)
-    return F.exp(F.least(p, F.lit(float(clip))))
-
-
 def safe_div(num: ColumnOrName, den: ColumnOrName, default: float = 0.0) -> Column:
     """n/d with d==0 -> default (src/optimizer.py:61-71 pattern)."""
     num, den = _c(num), _c(den)
@@ -74,8 +60,3 @@ def ln1p_compat(x: ColumnOrName) -> Column:
     different ULPs than DuckDB's ln(1+x) oracle — use the literal form.
     """
     return F.log(F.lit(1.0) + _c(x))
-
-
-def rmsle_term(pred: ColumnOrName, actual: ColumnOrName) -> Column:
-    d = ln1p_compat(pred) - ln1p_compat(actual)
-    return d * d

@@ -860,7 +860,11 @@ def q_stream_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (both are content functions), which is exactly why the chain is
     safe to run incrementally."""
     from inferdb_spark.operators.textprep import ngram_hash_postings
-    from inferdb_spark.streaming.scoring_stream import curation_stream
+    from inferdb_spark.streaming.scoring_stream import (
+        curation_stream,
+        run_stream_to_memory,
+        stream_from_parquet_dir,
+    )
 
     global _stream_cur_counter
     _stream_cur_counter += 1
@@ -879,11 +883,8 @@ def q_stream_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram_lists = [sorted(v) for _, v in sorted(eval_grams.items())]
 
     stage, schema = _stage_documents(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .where(F.col("doc_id") % 50 != 0)
+    stream = stream_from_parquet_dir(spark, stage, schema).where(
+        F.col("doc_id") % 50 != 0
     )
     curated = curation_stream(
         stream,
@@ -893,14 +894,7 @@ def q_stream_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_shared=E2E_DECON_SHARED,
         bounded_state=False,
     )
-    q = (
-        curated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    run_stream_to_memory(curated, name, "append")
     out = spark.sql(f"select * from {name}")
     return out.select(
         "content_h",
@@ -979,6 +973,7 @@ def q_stream_decon_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inferdb_spark.operators.textprep import ngram_hash_postings
     from inferdb_spark.streaming.scoring_stream import (
         curation_stream_foreach_batch,
+        stream_from_parquet_dir,
     )
 
     global _stream_cur_counter
@@ -995,11 +990,8 @@ def q_stream_decon_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_postings = ngram_hash_postings(evald, "eval_id", "text", E2E_DECON_N)
 
     stage, schema = _stage_documents(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .where(F.col("doc_id") % 50 != 0)
+    stream = stream_from_parquet_dir(spark, stage, schema).where(
+        F.col("doc_id") % 50 != 0
     )
     q = curation_stream_foreach_batch(
         stream,

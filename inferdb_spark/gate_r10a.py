@@ -1,4 +1,4 @@
-"""Round-10 STAGED gates, batch 1: paired nonparametrics (Wilcoxon
+"""Round-10 gates, batch 1: paired nonparametrics (Wilcoxon
 signed-rank, sign test), multi-lag white-noise testing (Ljung-Box),
 bidirectional lag-1 Granger causality, and the uniform quantile
 transform — the next members of the repo's time-series and paired-

@@ -1,7 +1,4 @@
-"""Round-10 gate queries, batch c — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol; activate at
-round-10 open via tools/activate_staged.py --modules gate_r10b
-gate_r10c gate_r10d ...).
+"""Round-10 gate queries, batch c.
 
 Unit-root / long-run-variance econometrics over the shared weekly
 kilodollar revenue series (gate_r8e._weekly_kd), completing the

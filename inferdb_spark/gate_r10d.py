@@ -1,5 +1,4 @@
-"""Round-10 gate queries, batch d — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-10 gate queries, batch d.
 
 Ordered-alternative / distribution-distance / graph-structure
 completions:

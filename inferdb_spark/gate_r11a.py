@@ -1,5 +1,4 @@
-"""Round-11 gate queries, batch a — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-11 gate queries, batch a.
 
 Preference-learning and ranking-evaluation operators — the statistics
 an LLM-training pipeline runs over pairwise human/model preferences and

@@ -1,5 +1,4 @@
-"""Round-11 gate queries, batch b — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-11 gate queries, batch b.
 
 Parametric distribution fits and concentration/diversity indices — the
 method-of-moments companions to the nonparametric families already

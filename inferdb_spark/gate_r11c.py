@@ -1,5 +1,4 @@
-"""Round-11 gate queries, batch c — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-11 gate queries, batch c.
 
 Sparse-regression and survey-weighting trainers, replayed exactly:
 

@@ -324,7 +324,10 @@ def q_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from inferdb_spark.gate_stream import _stage_events
-    from inferdb_spark.streaming.scoring_stream import page_hinkley_stream
+    from inferdb_spark.streaming.scoring_stream import (
+        page_hinkley_stream,
+        stream_from_parquet_dir,
+    )
 
     global _sph_counter
     _sph_counter += 1
@@ -334,13 +337,8 @@ def q_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(run_dir, "ckpt")
 
     stage, schema = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     q = page_hinkley_stream(
-        stream,
+        stream_from_parquet_dir(spark, stage, schema),
         out_path,
         ckpt,
         mu0_cents=_SPH_MU0,

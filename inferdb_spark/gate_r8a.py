@@ -1,12 +1,4 @@
-"""Round-8 gate queries, batch 1 — STAGED, NOT YET REGISTERED.
-
-Round 7 closed with its driver window exactly full (50 never-checked
-gates), so these are written, tested, and oracle-verified NOW
-(tools/verify_staged.py) but imported by ``gate._ensure_registered``
-only at round-8 open, when the window has drained.  To activate: add
-``inferdb_spark.gate_r8a`` to ``_ensure_registered`` and insert the
-names into ``gate._PRIORITY`` above the backfill block (run
-``tools/driver_window_check.py --emit-priority``).
+"""Round-8 gate queries, batch 1.
 
 Contents (the COVERAGE.md round-8 backlog, evaluation/monitoring half):
 

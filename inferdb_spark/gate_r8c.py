@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 3 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 3.
 
 Contents (COVERAGE.md round-8 backlog, DB-operator/text half):
 

@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 4 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 4.
 
 Information-theoretic feature selection:
 
@@ -8,7 +7,7 @@ Information-theoretic feature selection:
   target, every mutual information an exact nano-quantized BIGINT and
   the greedy replayed step-by-step in the oracle
 
-(This batch originally also staged ordered-funnel, retention-cohort,
+(This batch originally also held ordered-funnel, retention-cohort,
 and Markov-transition gates; they were dropped before registration as
 semantic duplicates of the existing gate:funnel_stages,
 gate:cohort_retention, and gate:event_transitions.)

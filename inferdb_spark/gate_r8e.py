@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 5 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 5.
 
 Regression diagnostics and classical tests over the weekly / monthly
 revenue series (all domain-bounded relations — weeks and months, never

@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 6 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 6.
 
 Group-comparison tests, graph link prediction, and text readability:
 

@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 7 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 7.
 
 Business-analytics classics:
 

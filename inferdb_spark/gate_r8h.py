@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 8 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 8.
 
 The two hardest members of the regression/forecasting family:
 

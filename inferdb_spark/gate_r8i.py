@@ -1,8 +1,7 @@
-"""Round-8 gate queries, batch 9 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 9.
 
 The k-group comparison trio over the five order-priority groups (one
-per inference family, completing the set the staged
+per inference family, completing the set the
 gate:levene_brown_forsythe opened):
 
 - anova_oneway_priority — parametric one-way F on group MEANS
@@ -330,7 +329,7 @@ def q_bartlett_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bartlett's test of equal variances across the five priority
     groups: T = [(N-k) ln(s_p^2) - sum_g (n_g-1) ln(s_g^2)] / C with
     the standard correction C — the parametric (normality-assuming)
-    sibling of the staged gate:levene_brown_forsythe (report both: when
+    sibling of gate:levene_brown_forsythe (report both: when
     they disagree, the data is non-normal and Brown-Forsythe wins).
 
     Determinism: per-group variances come from exact BIGINT moments in

@@ -1,5 +1,4 @@
-"""Round-8 gate queries, batch 10 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 10.
 
 - bfs_shortest_paths    — single-source BFS over the part co-purchase
                           graph (the missing member of the graph family:

@@ -1,7 +1,6 @@
-"""Round-8 gate queries, batch 11 — STAGED, NOT YET REGISTERED (see
-gate_r8a module docstring for the staging protocol).
+"""Round-8 gate queries, batch 11.
 
-Completions of the inference families opened by earlier staged batches:
+Completions of the inference families opened by earlier round-8 batches:
 
 - dunn_posthoc_pairs  — WHICH groups differ after Kruskal-Wallis says
                         SOME do: pairwise Dunn z on the same bin-domain
@@ -82,7 +81,7 @@ _DUNN_OUT = [
 def q_dunn_posthoc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunn's post-hoc test: all 10 pairwise mean-rank comparisons
     between the five priority groups, on the SAME bin-domain midrank
-    relations as the staged gate:kruskal_wallis_binned (imported, not
+    relations as gate:kruskal_wallis_binned (imported, not
     re-derived) — KW answers "do ANY groups differ", Dunn answers
     WHICH, with the tie-corrected rank variance and a Bonferroni
     critical value {z!r} (alpha 0.05 over 10 pairs) decided on the

@@ -1,4 +1,4 @@
-"""Round-9 STAGED gates, batch 1: the shortlist-based ranking evaluation —
+"""Round-9 gates, batch 1: the shortlist-based ranking evaluation —
 the scale default the round-7 verdict asked for (#6).
 
 `ranking_eval_metrics` (gate_r5c) evaluates retrieval EXACTLY: every query

@@ -1,4 +1,4 @@
-"""Round-9 STAGED gates, batch 2: the two-group inference family the
+"""Round-9 gates, batch 2: the two-group inference family the
 round-7/8 batteries still lacked — Welch's t, standardized effect sizes,
 Cliff's delta, the G-test, and the one-way intraclass correlation.
 

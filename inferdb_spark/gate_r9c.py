@@ -1,4 +1,4 @@
-"""Round-9 STAGED gates, batch 3: annotation reliability (Krippendorff's
+"""Round-9 gates, batch 3: annotation reliability (Krippendorff's
 alpha), market/corpus concentration indices, cascade/persistence retrieval
 metrics (ERR@10, RBP), and the Box-Cox transform selector.
 

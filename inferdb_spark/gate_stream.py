@@ -15,6 +15,10 @@ from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
 from inferdb_spark.gate import gate
+from inferdb_spark.streaming.scoring_stream import (
+    run_stream_to_memory,
+    stream_from_parquet_dir,
+)
 
 _counter = 0
 
@@ -54,11 +58,7 @@ def q_stream_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     _counter += 1
     name = f"gate_stream_out_{_counter}"
     stage, schema = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(stage)
-    )
+    stream = stream_from_parquet_dir(spark, stage, schema, 2)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -67,14 +67,7 @@ def q_stream_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    run_stream_to_memory(agg, name, "complete")
     out = spark.sql(f"select * from {name}")
     return out.select(
         (F.unix_timestamp(F.col("window.start")) / 3600).cast("long").alias("hour_bucket"),
@@ -145,22 +138,16 @@ def q_stream_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage, schema = _stage_events(spark, sf_dir)
     stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 2).parquet(stage)
-    )
-    stream = (
-        stream.filter(F.col("event_id") % 3 == 0)
+        stream_from_parquet_dir(spark, stage, schema, 2)
+        .filter(F.col("event_id") % 3 == 0)
         .withColumn("hour_f", F.hour("ts").cast("double"))
     )
     scored = index_score(stream, index)
-    q = (
-        scored.select("event_id", (F.col("prediction") / 100).alias("prediction"))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+    run_stream_to_memory(
+        scored.select("event_id", (F.col("prediction") / 100).alias("prediction")),
+        name,
+        "append",
     )
-    q.processAllAvailable()
-    q.stop()
     return spark.sql(f"select event_id, prediction from {name}")
 
 
@@ -229,25 +216,13 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     _counter += 1
     name = f"gate_stream_dedup_{_counter}"
     stage, schema = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    keyed = stream.withColumn(
+    keyed = stream_from_parquet_dir(spark, stage, schema).withColumn(
         "day_bucket", F.floor(F.unix_timestamp("ts") / 86400).cast("long")
     )
     dd = dedup_stream(
         keyed, ["user_id", "event_type", "day_bucket"], bounded_state=False
     )
-    q = (
-        dd.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    run_stream_to_memory(dd, name, "append")
     out = spark.sql(f"select * from {name}")
     return out.select(
         F.col("user_id").cast("long").alias("user_id"),

@@ -4,79 +4,15 @@ The reference benchmarks PGML (`pgml.train/predict_batch`,
 src/transpiler.py:2032-2124) and Apache MADlib (`mlp_*`, `tree_*`,
 `logregr_*`, `linregr_*`, src/transpiler.py:2338-2753) as in-DB training
 engines.  On Spark the idiomatic equivalent is MLlib: fit on a DataFrame,
-score with `model.transform`.
-
-Beyond wrapping fit/transform, this module TRANSPILES fitted linear models
-back into pure Column expressions (`linear_model_to_expression`) — the
+score with `model.transform`.  A fitted linear model's coefficients
+score without MLlib through `operators.scoring.score_linear_dense`, the
 Spark twin of the reference's model→SQL codegen (src/transpiler.py:
-1529-1694): scoring then needs no MLlib at all, just a projection that
-serializes with the plan and broadcasts as literals.
+1529-1694).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-@dataclass
-class FittedLinear:
-    feature_cols: list[str]
-    coef: list[float]
-    intercept: float
-    kind: str  # "linear" | "logistic"
-
-
-def _assemble(df: DataFrame, feature_cols: list[str], out: str = "_features"):
-    from pyspark.ml.feature import VectorAssembler
-
-    return VectorAssembler(inputCols=feature_cols, outputCol=out).transform(df)
-
-
-def fit_linear_regression(
-    df: DataFrame, feature_cols: list[str], label: str, **kw
-) -> FittedLinear:
-    from pyspark.ml.regression import LinearRegression
-
-    m = LinearRegression(
-        featuresCol="_features", labelCol=label, **kw
-    ).fit(_assemble(df, feature_cols))
-    return FittedLinear(
-        feature_cols, [float(c) for c in m.coefficients], float(m.intercept), "linear"
-    )
-
-
-def fit_logistic_regression(
-    df: DataFrame, feature_cols: list[str], label: str, **kw
-) -> FittedLinear:
-    from pyspark.ml.classification import LogisticRegression
-
-    m = LogisticRegression(
-        featuresCol="_features", labelCol=label, **kw
-    ).fit(_assemble(df, feature_cols))
-    return FittedLinear(
-        feature_cols, [float(c) for c in m.coefficients], float(m.intercept), "logistic"
-    )
-
-
-def linear_model_to_expression(model: FittedLinear) -> F.Column:
-    """Fitted model -> scoring Column (the model→plan 'transpilation').
-    Scoring becomes a map-only projection; no MLlib dependency at runtime."""
-    from inferdb_spark.functions.math_fns import sigmoid
-
-    z = F.lit(model.intercept)
-    for c, w in zip(model.feature_cols, model.coef):
-        if w != 0.0:
-            z = z + F.col(c) * F.lit(w)
-    return sigmoid(z) if model.kind == "logistic" else z
-
-
-def score_with_expression(
-    df: DataFrame, model: FittedLinear, prediction_col: str = "prediction"
-) -> DataFrame:
-    return df.withColumn(prediction_col, linear_model_to_expression(model))
 
 
 # --- estimator zoo (the MADlib/PGML model matrix, src/transpiler.py:2382-2753)
@@ -106,6 +42,7 @@ def fit_predict_mllib(
         RandomForestClassifier,
     )
     from pyspark.ml.clustering import KMeans
+    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import (
         DecisionTreeRegressor,
         GBTRegressor,
@@ -132,7 +69,7 @@ def fit_predict_mllib(
     kwargs = dict(featuresCol="_features", predictionCol=prediction_col, **kw)
     if algorithm not in ("kmeans",):
         kwargs["labelCol"] = label
-    est = cls(**kwargs)
-    model = est.fit(_assemble(train, feature_cols))
-    scored = model.transform(_assemble(test, feature_cols))
+    assemble = VectorAssembler(inputCols=feature_cols, outputCol="_features")
+    model = cls(**kwargs).fit(assemble.transform(train))
+    scored = model.transform(assemble.transform(test))
     return scored.drop("_features", "rawPrediction", "probability")

@@ -109,17 +109,6 @@ def fit_quantile_bins(
     return _quantile_bins(df, [column], n_bins, relative_error)[0]
 
 
-def fit_width_bins(df: DataFrame, column: str, n_bins: int) -> BinSpec:
-    """Equi-width bins from global min/max (one tiny aggregate)."""
-    lo, hi = df.agg(F.min(column), F.max(column)).first()
-    if lo is None or hi is None or hi <= lo:
-        return BinSpec(column=column, kind="numeric", splits=[])
-    w = (hi - lo) / n_bins
-    return BinSpec(
-        column=column, kind="numeric", splits=[lo + w * i for i in range(1, n_bins)]
-    )
-
-
 def fit_supervised_bins(
     df: DataFrame,
     columns: list[str],
@@ -210,56 +199,6 @@ def fit_categorical_bins(
 def apply_bins(df: DataFrame, specs: list[BinSpec], suffix: str = "_bin") -> DataFrame:
     """Add one int bin-id column per spec — a single projection, no shuffle."""
     return df.withColumns({s.column + suffix: s.expr() for s in specs})
-
-
-def apply_bins_bucketizer(
-    df: DataFrame, specs: list[BinSpec], suffix: str = "_bin"
-) -> DataFrame:
-    """Bucketizer-based application for WIDE feature sets (SURVEY.md §7
-    known-hard 3: MNIST-class tables with hundreds of columns would blow
-    whole-stage-codegen's 64KB method limit as comparison sums; Bucketizer
-    is the reference's binary_search_numeric.sql, vectorized).
-
-    Multi-column Bucketizer bins all numeric specs in ONE pass.  Bucketizer
-    uses [lo, hi) half-open buckets on sorted split boundaries; BinSpec
-    semantics are #{s : x > s}, i.e. buckets (-inf, s0], (s0, s1], ... — we
-    negate inputs and splits to flip interval closure, then remap ids
-    (Bucketizer on -x with splits -s_rev gives bucket j == n-1-bin).
-    Categorical specs fall back to the expression path (they are never the
-    wide ones).
-    """
-    from pyspark.ml.feature import Bucketizer
-
-    numeric = [s for s in specs if s.kind == "numeric" and s.splits]
-    rest = [s for s in specs if s not in numeric]
-    out = df
-    if numeric:
-        in_cols, buck_cols, splits_arr = [], [], []
-        tmp = {}
-        for s in numeric:
-            neg = f"_neg_{s.column}"
-            tmp[neg] = -F.coalesce(
-                F.col(s.column).cast("double"), F.lit(float("-inf"))
-            )  # null -> -(-inf) = +inf -> last negated bucket -> bin 0 == null_bin
-            in_cols.append(neg)
-            buck_cols.append(f"_buck_{s.column}")
-            splits_arr.append(
-                [float("-inf")] + [-x for x in reversed(s.splits)] + [float("inf")]
-            )
-        out = out.withColumns(tmp)
-        buck = Bucketizer(
-            splitsArray=splits_arr, inputCols=in_cols, outputCols=buck_cols
-        )
-        out = buck.transform(out)
-        remap = {
-            s.column
-            + suffix: (F.lit(len(s.splits)) - F.col(f"_buck_{s.column}")).cast("int")
-            for s in numeric
-        }
-        out = out.withColumns(remap).drop(*in_cols, *buck_cols)
-    if rest:
-        out = out.withColumns({s.column + suffix: s.expr() for s in rest})
-    return out
 
 
 def key_expr(specs: list[BinSpec], suffix: str = "_bin") -> Column:

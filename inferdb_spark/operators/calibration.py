@@ -81,26 +81,3 @@ def isotonic_fit(
         (F.col("s") / F.col("n")).alias("rate"),
         "iso_rate",
     )
-
-
-def calibrate_scores(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    splits: list[float],
-    ascending: bool = True,
-) -> DataFrame:
-    """End-to-end: bin scores on literal splits -> one groupBy -> isotonic
-    fit -> broadcast the B-row calibration map back onto the rows."""
-    bin_expr = F.lit(0)
-    for t in splits:
-        bin_expr = bin_expr + F.when(F.col(score_col) > F.lit(float(t)), 1).otherwise(0)
-    binned = df.withColumn("bin", bin_expr.cast("int"))
-    aggs = binned.groupBy("bin").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col(label_col).cast("double")).alias("s"),
-    )
-    iso = isotonic_fit(aggs, "bin", "n", "s", ascending=ascending)
-    return binned.join(
-        F.broadcast(iso.select("bin", "iso_rate")), "bin", "left"
-    ).withColumnRenamed("iso_rate", "calibrated")

@@ -9,10 +9,10 @@ This module is the transpiled-training route: one Lloyd iteration is
               literals burned into the expression — no join at all)
     update  = groupBy(cluster) -> per-feature sums + count
 
-so a full fit is a driver loop of K-row aggregates over the scan — the
-same shape MADlib's kmeans uses internally, and the natural 100 TB plan:
-each iteration is one map-side-combined aggregation; nothing wider than
-k·p numbers ever crosses the network.
+so a fit is a driver loop of K-row aggregates over the scan (gate:
+kmeans_lloyd_step runs one step) — the natural 100 TB plan: each
+iteration is one map-side-combined aggregation; nothing wider than k·p
+numbers ever crosses the network.
 
 Determinism: features are integer-scaled BIGINTs, distances are exact
 integer arithmetic, assignment ties break to the lowest cluster id, and
@@ -53,51 +53,3 @@ def lloyd_update(
         F.count("*").alias("n"),
         *[F.sum(f"_f{i}").alias(f"sum_{i}") for i in range(len(feature_cols))],
     )
-
-
-def fit_kmeans_lloyd(
-    df: DataFrame,
-    feature_cols: list[str],
-    init_centers: list[list[int]],
-    n_iter: int = 10,
-) -> list[list[int]]:
-    """Driver loop over lloyd_update aggregates.  Integer centroids
-    (round-half-up) keep every iteration bit-reproducible; an empty cluster
-    keeps its previous center (MLlib drops it — we pin the stabler rule).
-    Converges (stops early) when no centroid moves on the integer grid."""
-    centers = [list(map(int, c)) for c in init_centers]
-    p = len(feature_cols)
-    for _ in range(n_iter):
-        stats = {
-            r["cluster"]: r for r in lloyd_update(df, feature_cols, centers).collect()
-        }
-        new_centers = []
-        for cid, old in enumerate(centers):
-            r = stats.get(cid)
-            if r is None or r["n"] == 0:
-                new_centers.append(list(old))
-            else:
-                new_centers.append(
-                    [int((r[f"sum_{i}"] + r["n"] // 2) // r["n"]) for i in range(p)]
-                )
-        if new_centers == centers:
-            break
-        centers = new_centers
-    return centers
-
-
-def within_cluster_ssd(
-    df: DataFrame, feature_cols: list[str], centers: list[list[int]]
-) -> DataFrame:
-    """Total within-cluster squared distance (the KMeans objective) as one
-    exact-integer aggregate — the convergence/quality metric."""
-    cols = [F.col(c) for c in feature_cols]
-    entries = []
-    for center in centers:
-        d = F.lit(0).cast("long")
-        for col, c in zip(cols, center):
-            delta = col.cast("long") - F.lit(int(c)).cast("long")
-            d = d + delta * delta
-        entries.append(d)
-    min_d = F.array_min(F.array(*entries))
-    return df.agg(F.sum(min_d).alias("ssd"), F.count("*").alias("n"))

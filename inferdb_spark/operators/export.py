@@ -11,10 +11,11 @@ SQL strings); this is beyond-reference pipeline completion.
 
 Spark-first: shard id is the repo's portable 52-bit md5-prefix hash
 (functions/hashing.h52 — identical in DuckDB, so the manifest is
-oracle-checkable) mod n_shards; the manifest is ONE aggregation; the
-writer is a hash-repartition + partitionBy parquet write, which scales
-to any corpus (each executor writes only its shard slice, no global
-sort, no driver traffic).
+oracle-checkable) mod n_shards, and the manifest is ONE aggregation.  A
+release writes `shard_assign` as the partition column of a
+hash-repartition + partitionBy parquet write, which scales to any corpus
+(each executor writes only its shard slice, no global sort, no driver
+traffic).
 
 Checksum: bit_xor of per-doc h52(text) — commutative/associative (so
 partition- and retry-order-independent) and overflow-free at any row
@@ -60,22 +61,3 @@ def sharded_export_manifest(
             F.expr("bit_xor(_h)").cast("long").alias("checksum"),
         )
     )
-
-
-def write_sharded(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    n_shards: int = 16,
-) -> DataFrame:
-    """Write `df` as `path/shard_id=K/` parquet, one directory per shard,
-    and return the manifest relation for the written rows.  The
-    repartition keys on shard_id, so each output task owns whole shards
-    (no small-file explosion: files-per-shard = 1 at any scale unless a
-    shard exceeds executor memory, in which case raise n_shards — the
-    shard count, not the corpus, is the knob)."""
-    out = df.withColumn("shard_id", shard_assign(F.col(id_col), n_shards))
-    out.repartition(int(n_shards), F.col("shard_id")).write.partitionBy(
-        "shard_id"
-    ).mode("overwrite").parquet(path)
-    return sharded_export_manifest(df, id_col=id_col, n_shards=n_shards)

@@ -10,20 +10,10 @@ scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from inferdb_spark.functions.datetime_fns import datetime_features
 from inferdb_spark.functions.geo import euclidean_distance_sq
-
-
-def add_datetime_features(
-    df: DataFrame, ts_col: str, prefix: str = ""
-) -> DataFrame:
-    """hour/minute/month/week/dow/isodow/day_name/weekend/week_hour
-    (create_featurizer_pg.py:236-241)."""
-    feats = datetime_features(F.col(ts_col))
-    return df.withColumns({prefix + k: v for k, v in feats.items()})
 
 
 def assign_nearest_cluster(
@@ -66,27 +56,6 @@ def fit_kmeans_centers(
         vec.transform(df.select(lat_col, lon_col).na.drop())
     )
     return [(float(c[0]), float(c[1])) for c in model.clusterCenters()]
-
-
-def route_aggregates(
-    train: DataFrame,
-    group_cols: list[str],
-    agg_map: dict[str, str],
-) -> DataFrame:
-    """Per-route aggregate table (A10, nyc_rides_featurizer.py:266-304):
-    groupBy(route) -> mean speed/duration/count...  Returned small frame is
-    meant to be broadcast-joined onto the scoring stream (J6)."""
-    aggs = []
-    for col, how in agg_map.items():
-        if how == "mean":
-            aggs.append(F.avg(col).alias(f"avg_{col}"))
-        elif how == "count":
-            aggs.append(F.count(col).alias(f"cnt_{col}"))
-        elif how == "sum":
-            aggs.append(F.sum(col).alias(f"sum_{col}"))
-        else:
-            raise ValueError(f"unknown agg {how!r}")
-    return train.groupBy(*group_cols).agg(*aggs)
 
 
 def join_route_aggregates(

@@ -57,8 +57,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-IMAGE_FEATURE_SCHEMA = "content_id long, n_bytes long, mean_byte double, feat array<double>"
-
 IMAGE_STATS_SCHEMA = (
     "content_id long, fmt string, width int, height int, "
     "mean_r double, mean_g double, mean_b double, feat array<double>"
@@ -222,56 +220,6 @@ def _fake_decode(payload: bytes) -> list[float]:
     n = len(payload)
     chunks = [payload[i * n // 8 : (i + 1) * n // 8] for i in range(8)]
     return [sum(c) / (len(c) * 255.0) if c else 0.0 for c in chunks]
-
-
-def extract_image_features(
-    df: DataFrame, fake: bool = False, batch_size_hint: int | None = None
-) -> DataFrame:
-    """Byte-level feature extraction via mapInPandas.
-
-    fake=True runs the deterministic structural fake (legacy dataflow
-    path).  fake=False decodes for REAL via media_codecs (BMP/PPM native;
-    PNG/JPEG via optional PIL) and folds the decoded pixel statistics into
-    the same (n_bytes, mean_byte, feat[8]) shape; undecodable payloads
-    raise ValueError naming the sniffed format.
-    """
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, n_bytes, mean_byte = [], [], []
-            for p in pdf["payload"]:
-                p = bytes(p) if p is not None else b""
-                n_bytes.append(len(p))
-                if fake:
-                    feats.append(_fake_decode(p))
-                    mean_byte.append(sum(p) / len(p) if p else 0.0)
-                else:
-                    img = MC.decode_image_any(p)  # raises for undecodable
-                    gray = img.mean(axis=2).ravel()
-                    n = len(gray)
-                    chunk = max(1, n // 8)
-                    feats.append(
-                        [
-                            float(gray[k * chunk : (k + 1) * chunk].mean()) / 255.0
-                            if len(gray[k * chunk : (k + 1) * chunk])
-                            else 0.0
-                            for k in range(8)
-                        ]
-                    )
-                    mean_byte.append(float(img.mean()))
-            yield pd.DataFrame(
-                {
-                    "content_id": pdf["content_id"],
-                    "n_bytes": n_bytes,
-                    "mean_byte": mean_byte,
-                    "feat": feats,
-                }
-            )
-
-    return df.select("content_id", "payload").mapInPandas(
-        run, schema=IMAGE_FEATURE_SCHEMA
-    )
 
 
 # ---------------------------------------------------------------------------

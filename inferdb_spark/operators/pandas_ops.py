@@ -1,69 +1,15 @@
-"""Arrow-batched Python escape hatches: cogrouped applyInPandas and
-Python UDTFs.
+"""Python UDTFs: the Arrow-batched escape hatch on the SQL surface.
 
-These complete the UDF-surface matrix (SURVEY §2.10): F3's set-returning
-SQL functions (`RETURNS SETOF record`, src/transpiler.py:653-666) map to
-Python UDTFs on the SQL surface, and per-group pandas logic that has no
-relational decomposition maps to (co)grouped applyInPandas.  Both are the
-SLOW path — everything in the engine's hot loops stays as Column
-expressions — but they are the contract for user extensions Spark can't
-express relationally.
-
-Scale notes: cogrouped applyInPandas shuffles both sides once on the key
-and streams Arrow batches per key-group — the per-group pandas frames
-must fit in executor memory, so it suits many-small-groups workloads
-(per-entity timelines), NOT giant single keys; the window-based
-relational asof_join (relational_ext.py) has no such per-key bound and is
-preferred when semantics allow.  UDTF row expansion is lazy per input
-row, no state.
+F3's set-returning SQL functions (`RETURNS SETOF record`,
+src/transpiler.py:653-666) map to Python UDTFs (SURVEY §2.10).  This is
+the SLOW path — everything in the engine's hot loops stays as Column
+expressions — but it is the contract for user extensions Spark can't
+express relationally.  UDTF row expansion is lazy per input row, no
+state.  Per-key as-of lookups use the window-based
+relational_ext.asof_join, which has no per-key memory bound.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def cogroup_merge_asof(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    right_value: str,
-) -> DataFrame:
-    """Per-key pandas merge_asof via cogrouped applyInPandas: for each
-    left row, the latest right value with right_ts <= left_ts (backward
-    search).  Semantics identical to relational_ext.asof_join on a
-    single value column; provided as the canonical cogroup example and
-    cross-checked against it in tests."""
-    import pandas as pd
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields
-    ) + f", {right_value} {right.schema[right_value].dataType.simpleString()}"
-
-    lcols = list(left.columns)
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty:
-            return pd.DataFrame(columns=[*lcols, right_value])
-        l = l.sort_values(left_ts)
-        if r.empty:
-            out = l.copy()
-            out[right_value] = None
-            return out[[*lcols, right_value]]
-        r = r.sort_values(right_ts)[[right_ts, right_value]]
-        out = pd.merge_asof(
-            l, r, left_on=left_ts, right_on=right_ts, direction="backward"
-        )
-        return out[[*lcols, right_value]]
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(key))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 def make_prefix_udtf():

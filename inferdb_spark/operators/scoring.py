@@ -86,7 +86,7 @@ def score_linear_dense(
     intercept: float,
     link: str = "identity",
     prediction_col: str = "prediction",
-) -> Column | DataFrame:
+) -> DataFrame:
     """Dense linear scorer: Σ w_i·f_i + b as ONE projection expression.
 
     The Spark-optimal translation of the reference's coefficient-table join

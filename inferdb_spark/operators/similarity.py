@@ -333,37 +333,6 @@ def ivf_search(
     )
 
 
-def cosine_topk_pandas(
-    df: DataFrame,
-    vec_col: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """numpy variant for very wide embeddings: per-partition vectorized
-    cosine + local top-k, then global top-k — Arrow-batched, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    def part(batches):
-        for pdf in batches:
-            if len(pdf) == 0:  # np.stack rejects empty partitions
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(M, axis=1)
-            sims = np.where(norms > 0, (M @ q) / (norms * qn + 1e-300), 0.0)
-            top = np.argsort(-sims)[:k]
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy()[top], "cosine": sims[top]})
-
-    local = df.select(id_col, vec_col).mapInPandas(
-        part, schema=f"{id_col} long, cosine double"
-    )
-    return local.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — the memory-compression tier of ANN
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 Node = dict[str, Any]
@@ -90,21 +90,6 @@ def gbt_sql(
     if link == "sigmoid":
         return f"(1.0 / (1.0 + exp(-{z})))"
     return z
-
-
-def score_tree(df: DataFrame, tree: Node, out: str = "prediction") -> DataFrame:
-    return df.withColumn(out, tree_to_expression(tree))
-
-
-def score_gbt(
-    df: DataFrame,
-    trees: list[Node],
-    weights: list[float] | None = None,
-    base: float = 0.0,
-    link: str | None = None,
-    out: str = "prediction",
-) -> DataFrame:
-    return df.withColumn(out, gbt_expression(trees, weights, base, link))
 
 
 def tree_depth(node: Node) -> int:

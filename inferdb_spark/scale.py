@@ -51,30 +51,6 @@ def salted_aggregate(
     return p1.groupBy(*group_cols).agg(*phase2_aggs)
 
 
-def salted_join_hot_keys(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    hot_keys: list,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Manual salt-join for a KNOWN hot-key list (when AQE skew-join can't
-    kick in, e.g. pre-3.0 sinks or broadcast-ineligible dims): fact rows on
-    hot keys get a random salt, the dim's hot rows are replicated across
-    all salts, then a plain equi join on (key, salt)."""
-    hot = F.col(key).isin(hot_keys)
-    fact_s = fact.withColumn(
-        "_salt",
-        F.when(hot, (F.rand(seed=7) * salt_buckets).cast("int")).otherwise(F.lit(0)),
-    )
-    salts = F.when(
-        F.col(key).isin(hot_keys),
-        F.sequence(F.lit(0), F.lit(salt_buckets - 1)),
-    ).otherwise(F.array(F.lit(0)))
-    dim_s = dim.withColumn("_salt", F.explode(salts))
-    return fact_s.join(dim_s, [key, "_salt"]).drop("_salt")
-
-
 def write_bucketed(
     df: DataFrame, table_name: str, bucket_cols: list[str], n_buckets: int = 64
 ) -> None:

@@ -40,22 +40,3 @@ def incremental_kv_stats(
         )
         .withColumn("value", F.col("s") / F.col("c"))
     )
-
-
-def run_incremental_kv(
-    stream_df: DataFrame,
-    specs: list[BinSpec],
-    target: str,
-    query_name: str,
-) -> None:
-    """Drive the incremental build to completion on a finite source
-    (memory sink, complete mode); production would foreachBatch-upsert."""
-    kv = incremental_kv_stats(stream_df, specs, target)
-    q = (
-        kv.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()

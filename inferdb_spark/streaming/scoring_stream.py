@@ -9,18 +9,17 @@ An index over the dense cap scores through stream-batch broadcast joins
 against its kv/prefix relations, which Structured Streaming re-broadcasts
 per microbatch.
 
-Also provided: watermarked windowed aggregation and a custom stateful
-operator (running per-key mean via applyInPandasWithState) as the
-canonical patterns for late-data handling and custom state.
+Also provided: a custom stateful operator (running per-key mean via
+applyInPandasWithState), exact and watermark-bounded dedup, session
+windows, idempotent foreachBatch sinks and drift monitors, plus the
+file-source/memory-sink pair (`stream_from_parquet_dir`,
+`run_stream_to_memory`) every streaming gate runs through.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from inferdb_spark.operators.index import KVIndex
-from inferdb_spark.operators.scoring import index_score
 
 
 def stream_from_parquet_dir(
@@ -32,38 +31,6 @@ def stream_from_parquet_dir(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path_glob_dir)
-    )
-
-
-def score_stream(stream_df: DataFrame, index: KVIndex) -> DataFrame:
-    """Stateless streaming scoring: the batch operator unchanged (no
-    watermark needed)."""
-    return index_score(stream_df, index)
-
-
-def windowed_event_aggregate(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked sliding-window aggregation — the late-data-tolerant
-    groupBy.  Late rows beyond the watermark are dropped; state for closed
-    windows is evicted (bounded state at any scale)."""
-    win = (
-        F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
-    )
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(win, F.col(key_col))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(value_col).alias("total"),
-            F.avg(value_col).alias("mean"),
-        )
     )
 
 
@@ -121,36 +88,6 @@ def dedup_stream(
             ts_col, watermark
         ).dropDuplicatesWithinWatermark(id_cols)
     return stream_df.dropDuplicates(id_cols)
-
-
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    left_ts: str,
-    right_ts: str,
-    watermark: str = "10 minutes",
-    tolerance_seconds: int = 3600,
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream equi join bounded by a time-range condition.
-
-    Both inputs are watermarked and the join condition constrains
-    right_ts to [left_ts, left_ts + tolerance]; together these let the
-    engine evict buffered rows once the watermark passes the tolerance
-    horizon — WITHOUT the range condition a stream-stream join must
-    retain both sides' state forever, which is a leak, not an operator.
-    Column names (other than key/ts) must be disjoint between the sides.
-    """
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
-    cond = (
-        (l[key_col] == r[key_col])
-        & (r[right_ts] >= l[left_ts])
-        & (r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {int(tolerance_seconds)} SECOND"))
-    )
-    joined = l.join(r, cond, how)
-    return joined.drop(r[key_col])
 
 
 def foreach_batch_parquet_sink(
@@ -291,44 +228,6 @@ def curation_stream(
     return dedup_stream(
         keyed, ["content_h"], ts_col=ts_col, watermark=watermark,
         bounded_state=bounded_state,
-    )
-
-
-def ewma_per_key(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "v",
-    order_cols: tuple[str, str] = ("tsu", "event_id"),
-    alpha: float = 0.5,
-    timeout: str = "NoTimeout",
-) -> DataFrame:
-    """Streaming twin of gate_r5b.q_ewma_smoothing: exponential smoothing
-    with O(1) state per key (the running_mean_per_key pattern), versus the
-    batch fold whose state is the whole value list.  Rows are folded in
-    (order_cols) order WITHIN each delivered micro-batch; cross-batch
-    order is the source's delivery contract (the parity test feeds files
-    in timestamp order) — the same in-order requirement every streaming
-    EWMA has.  alpha=0.5 keeps every multiply exact in binary, so
-    run-to-completion output is bit-identical to the batch fold."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    output_schema = f"{key_col} long, n long, ewma double"
-    state_schema = "n long, e double"
-
-    def update(key, pdfs, state: GroupState):
-        n, e = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(list(order_cols))
-            for x in pdf[value_col].astype(float):
-                e = x if n == 0 else alpha * x + (1.0 - alpha) * e
-                n += 1
-        state.update((n, e))
-        yield pd.DataFrame({key_col: [key[0]], "n": [n], "ewma": [e]})
-
-    timeout_conf = getattr(GroupStateTimeout, timeout, GroupStateTimeout.NoTimeout)
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update, output_schema, state_schema, "update", timeout_conf
     )
 
 
@@ -508,85 +407,6 @@ def page_hinkley_stream(
             .alias("first_alarm_h"),
         )
         out.write.mode("overwrite").parquet(path)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def js_drift_stream(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    ref_bins: dict,
-    bin_expr: str,
-    filter_expr: str | None = None,
-):
-    """Streaming Jensen-Shannon drift monitor against a FIXED reference
-    histogram (the production deployment of gate:js_divergence_drift —
-    the reference is a training-time artifact passed in as literals; the
-    stream only accumulates the CURRENT sample's bin counts).
-
-    Same replay-idempotent state discipline as page_hinkley_stream: each
-    microbatch overwrites its OWN batch_id partition of per-bin partial
-    counts, the monitor re-reads the merged per-bin relation — bounded
-    by the bin domain, never by events — joins the literal reference,
-    recomputes JSD with the exact SAME nano-quantized term SQL the batch
-    gate uses, and overwrites the 1-row summary at `path`.  After the
-    last trigger the summary equals the batch computation over
-    everything seen, for ANY file/trigger interleaving (bin partials
-    re-merge additively; every term is an exact BIGINT).
-
-    Returns the started StreamingQuery.
-    """
-    from inferdb_spark.gate_r7g import _JS_TP, _JS_TQ
-
-    state = path + "_state"
-    ref_rows = sorted((int(b), int(c)) for b, c in ref_bins.items())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur = batch_df.filter(filter_expr) if filter_expr else batch_df
-        per_bin = (
-            cur.selectExpr(f"{bin_expr} AS bin")
-            .groupBy("bin")
-            .agg(F.count("*").cast("long").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            per_bin.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state)
-        )
-        merged = (
-            spark.read.parquet(state)
-            .groupBy("bin")
-            .agg(F.sum("cnt").cast("long").alias("cnt_c"))
-        )
-        ref = spark.createDataFrame(ref_rows, "bin long, cnt_r long")
-        full = (
-            merged.join(F.broadcast(ref), "bin", "full")
-            .fillna(0, subset=["cnt_r", "cnt_c"])
-        )
-        tot = full.agg(
-            F.sum("cnt_r").cast("long").alias("n_r"),
-            F.sum("cnt_c").cast("long").alias("n_c"),
-        )
-        terms = full.crossJoin(F.broadcast(tot)).selectExpr(
-            f"{_JS_TP} AS tp_u", f"{_JS_TQ} AS tq_u", "n_r", "n_c"
-        )
-        summary = terms.agg(
-            F.round((F.sum("tp_u") + F.sum("tq_u")) / 2.0 / 1000000000.0, 6)
-            .cast("double")
-            .alias("jsd"),
-            F.first("n_r").cast("long").alias("n_ref"),
-            F.first("n_c").cast("long").alias("n_cur"),
-            F.count("*").cast("long").alias("n_bins"),
-        )
-        summary.write.mode("overwrite").parquet(path)
 
     return (
         stream_df.writeStream.foreachBatch(write_batch)

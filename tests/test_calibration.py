@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from inferdb_spark.operators.calibration import calibrate_scores, isotonic_fit
+from inferdb_spark.operators.calibration import isotonic_fit
 
 
 def _pava(y: np.ndarray, w: np.ndarray) -> np.ndarray:
@@ -63,22 +63,6 @@ def test_isotonic_descending(spark):
     # matches PAVA on the reversed sequence
     expect = _pava(np.array([0.9, 0.4, 0.5, 0.2]), np.full(4, 10.0))[::-1]
     np.testing.assert_allclose(sorted(got), sorted(expect), rtol=1e-9)
-
-
-def test_calibrate_scores_end_to_end(spark):
-    rng = np.random.RandomState(42)
-    n = 2000
-    score = rng.uniform(0, 1, n)
-    label = (rng.uniform(size=n) < np.clip(score * 0.8 + 0.1, 0, 1)).astype(int)
-    df = spark.createDataFrame(
-        [(float(a), int(b)) for a, b in zip(score, label)], "score double, y int"
-    )
-    out = calibrate_scores(df, "score", "y", splits=[0.2, 0.4, 0.6, 0.8])
-    rows = out.select("bin", "calibrated").distinct().orderBy("bin").collect()
-    cal = [r.calibrated for r in rows]
-    assert len(cal) == 5
-    assert all(cal[i] <= cal[i + 1] + 1e-12 for i in range(4))  # monotone
-    assert out.count() == n  # row-preserving
 
 
 def test_pav_replay_equals_relational_minimax(spark):

@@ -1,4 +1,4 @@
-"""Unit tests for operators/cluster.py (relational Lloyd KMeans) and
+"""Unit tests for operators/cluster.py (one relational Lloyd step) and
 linreg.fit_pca_exact (moments-based PCA fit)."""
 
 import numpy as np
@@ -21,60 +21,25 @@ def _blobs(spark, centers, n_per=50, spread=20, seed=3):
     return spark.createDataFrame(rows, "x long, y long"), rows
 
 
-def test_lloyd_recovers_blob_centers(spark):
-    true_centers = [(100, 100), (1000, 200), (500, 900)]
-    df, _ = _blobs(spark, true_centers)
-    fitted = CL.fit_kmeans_lloyd(
-        df, ["x", "y"], init_centers=[[0, 0], [800, 0], [0, 800]], n_iter=15
-    )
-    for (tx, ty), (fx, fy) in zip(sorted(true_centers), sorted(fitted)):
-        assert abs(tx - fx) <= 15 and abs(ty - fy) <= 15
-
-
 def test_lloyd_matches_python_reference(spark):
-    # bit-exact parity with a driver-side re-implementation of the same
-    # integer Lloyd rule (argmin lowest-id, round-half-up integer centroid)
+    # bit-exact parity of one lloyd_update step with a driver-side
+    # re-implementation of the same integer rule (argmin, lowest-id
+    # tie-break: the duplicate center 2 never wins a row)
     df, rows = _blobs(spark, [(0, 0), (400, 400)], n_per=30, seed=9)
-    init = [[50, 50], [300, 300]]
-    got = CL.fit_kmeans_lloyd(df, ["x", "y"], init, n_iter=8)
-
-    centers = [list(c) for c in init]
-    for _ in range(8):
-        sums = {i: [0, 0, 0] for i in range(len(centers))}
-        for x, y in rows:
-            best = min(
-                range(len(centers)),
-                key=lambda i: ((x - centers[i][0]) ** 2 + (y - centers[i][1]) ** 2, i),
-            )
-            s = sums[best]
-            s[0] += x
-            s[1] += y
-            s[2] += 1
-        new = []
-        for i, c in enumerate(centers):
-            if sums[i][2] == 0:
-                new.append(list(c))
-            else:
-                n = sums[i][2]
-                new.append([(sums[i][0] + n // 2) // n, (sums[i][1] + n // 2) // n])
-        if new == centers:
-            break
-        centers = new
-    assert got == centers
-
-
-def test_empty_cluster_keeps_center(spark):
-    df = spark.createDataFrame([(0, 0), (2, 2)], "x long, y long")
-    fitted = CL.fit_kmeans_lloyd(
-        df, ["x", "y"], init_centers=[[1, 1], [9999, 9999]], n_iter=3
-    )
-    assert fitted[1] == [9999, 9999]
-
-
-def test_within_cluster_ssd(spark):
-    df = spark.createDataFrame([(0, 0), (10, 0)], "x long, y long")
-    row = CL.within_cluster_ssd(df, ["x", "y"], [[0, 0], [10, 0]]).collect()[0]
-    assert row["ssd"] == 0 and row["n"] == 2
+    centers = [[50, 50], [300, 300], [50, 50]]
+    got = {
+        r["cluster"]: (r["n"], r["sum_0"], r["sum_1"])
+        for r in CL.lloyd_update(df, ["x", "y"], centers).collect()
+    }
+    want = {}
+    for x, y in rows:
+        best = min(
+            range(len(centers)),
+            key=lambda i: ((x - centers[i][0]) ** 2 + (y - centers[i][1]) ** 2, i),
+        )
+        n, sx, sy = want.get(best, (0, 0, 0))
+        want[best] = (n + 1, sx + x, sy + y)
+    assert got == want and set(got) == {0, 1}
 
 
 def test_fit_pca_exact_matches_numpy(spark):

@@ -1,4 +1,4 @@
-"""Bucketizer wide path, index persistence, multiclass IV, datetime
+"""Bin ids against #{s : x > s}, index persistence, multiclass IV, datetime
 imputation, unseen paths, standalone report, CSV source."""
 
 import shutil
@@ -7,11 +7,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from inferdb_spark.api import fit_index_pipeline, standalone_report
-from inferdb_spark.operators.binning import (
-    BinSpec,
-    apply_bins,
-    apply_bins_bucketizer,
-)
+from inferdb_spark.operators.binning import BinSpec, apply_bins
 from inferdb_spark.operators.index import (
     build_index,
     load_index,
@@ -27,7 +23,7 @@ from inferdb_spark.operators.preprocess import (
 from inferdb_spark.operators.scoring import index_score
 
 
-def test_bucketizer_matches_expression_path(spark):
+def test_apply_bins_matches_python_bin_ids(spark):
     rows = [(float(i % 53), float((i * 7) % 101), None if i % 11 == 0 else float(i % 17)) for i in range(300)]
     df = spark.createDataFrame(rows, "a double, b double, c double")
     specs = [
@@ -35,17 +31,20 @@ def test_bucketizer_matches_expression_path(spark):
         BinSpec(column="b", splits=[25.0, 50.0, 75.0]),
         BinSpec(column="c", splits=[5.0, 10.0]),  # has nulls -> null_bin 0
     ]
-    expr = apply_bins(df, specs).select("a_bin", "b_bin", "c_bin").collect()
-    buck = apply_bins_bucketizer(df, specs).select("a_bin", "b_bin", "c_bin").collect()
-    assert [tuple(r) for r in expr] == [tuple(r) for r in buck]
+    got = [tuple(r) for r in apply_bins(df, specs).select("a_bin", "b_bin", "c_bin").collect()]
+    want = [
+        tuple(0 if x is None else sum(x > s for s in spec.splits) for x, spec in zip(row, specs))
+        for row in rows
+    ]
+    assert got == want
 
 
-def test_bucketizer_boundary_semantics(spark):
+def test_apply_bins_boundary_semantics(spark):
     # boundary values: x == split must land in the LOWER bin (x > s counts)
     df = spark.createDataFrame([(10.0,), (10.000001,)], "a double")
     spec = BinSpec(column="a", splits=[10.0, 20.0])
-    got = [r.a_bin for r in apply_bins_bucketizer(df, [spec]).collect()]
-    assert got == [0, 1]
+    got = [r.a_bin for r in apply_bins(df, [spec]).collect()]
+    assert got == [sum(x > s for s in spec.splits) for x in (10.0, 10.000001)] == [0, 1]
 
 
 def test_index_save_load_roundtrip(spark):

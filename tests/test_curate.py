@@ -50,34 +50,6 @@ def test_perplexity_bucket_per_source_independent(spark):
     ]
 
 
-def test_write_sharded_roundtrip(spark, tmp_path):
-    from inferdb_spark.operators.export import (
-        sharded_export_manifest,
-        write_sharded,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc text number {i}") for i in range(200)],
-        "doc_id: long, text: string",
-    )
-    path = str(tmp_path / "shards")
-    manifest = write_sharded(df, path, n_shards=8).collect()
-    assert sum(r["n_docs"] for r in manifest) == 200
-    back = spark.read.parquet(path)
-    assert back.count() == 200
-    # written shard dirs match the manifest's shard ids and counts
-    got = {
-        r["shard_id"]: r["count"]
-        for r in back.groupBy("shard_id").count().collect()
-    }
-    assert got == {r["shard_id"]: r["n_docs"] for r in manifest}
-    # manifest of the re-read data is identical (determinism round-trip)
-    again = sharded_export_manifest(
-        back.select("doc_id", "text"), n_shards=8
-    ).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, manifest))
-
-
 def test_l_diversity_row_level(spark):
     from inferdb_spark.operators.validate import l_diversity_suppress
 

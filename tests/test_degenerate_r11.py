@@ -1,4 +1,4 @@
-"""Degenerate-input battery for the r11 staged-gate fragments.
+"""Degenerate-input battery for the r11 gate fragments.
 
 Same contract as tests/test_degenerate_r10.py: drive the SHARED SQL
 fragments with moment rows that zero each denominator — collect() must

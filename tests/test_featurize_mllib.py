@@ -1,14 +1,16 @@
 from pyspark.sql import functions as F
 
 from inferdb_spark import mllib_bridge as MB
+from inferdb_spark.functions.datetime_fns import datetime_features
 from inferdb_spark.operators import featurize as FZ
+from inferdb_spark.operators.scoring import score_linear_dense
 
 
 def test_datetime_features(spark):
     df = spark.createDataFrame([("2024-01-01 13:45:00",)], "s string").select(
         F.col("s").cast("timestamp").alias("ts")
     )
-    out = FZ.add_datetime_features(df, "ts").first()
+    out = df.withColumns(datetime_features(F.col("ts"))).first()
     assert (out.hour, out.minute, out.month) == (13, 45, 1)
     assert out.isodow == 1 and out.day_name == "Monday" and out.is_weekend == 0
     assert out.week_hour == 13
@@ -25,7 +27,7 @@ def test_route_aggregates_and_join(spark):
     train = spark.createDataFrame(
         [(1, "a", 10.0), (1, "a", 20.0), (2, "b", 5.0)], "r int, t string, v double"
     )
-    routes = FZ.route_aggregates(train, ["r", "t"], {"v": "mean"})
+    routes = train.groupBy("r", "t").agg(F.avg("v").alias("avg_v"))
     test = spark.createDataFrame([(1, "a"), (9, "z")], "r int, t string")
     out = FZ.join_route_aggregates(test, routes, ["r", "t"], fill={"avg_v": 0.0})
     got = {(r.r, r.t): r.avg_v for r in out.collect()}
@@ -61,9 +63,14 @@ def test_fit_pca_and_kmeans_roundtrip(spark):
 def test_mllib_linear_transpile_to_expression(spark):
     rows = [(float(i), float(2 * i + 3) + 0.01 * ((i * 7) % 5 - 2)) for i in range(100)]
     df = spark.createDataFrame(rows, "x double, y double")
-    m = MB.fit_linear_regression(df, ["x"], "y")
-    assert abs(m.coef[0] - 2.0) < 0.05 and abs(m.intercept - 3.0) < 0.2
-    scored = MB.score_with_expression(df, m)
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import LinearRegression
+
+    vec = VectorAssembler(inputCols=["x"], outputCol="_features")
+    m = LinearRegression(featuresCol="_features", labelCol="y").fit(vec.transform(df))
+    coef, intercept = [float(c) for c in m.coefficients], float(m.intercept)
+    assert abs(coef[0] - 2.0) < 0.05 and abs(intercept - 3.0) < 0.2
+    scored = score_linear_dense(df, ["x"], coef, intercept)
     r = scored.filter(F.col("x") == 10.0).first()
     assert abs(r.prediction - 23.0) < 0.3
     # the scoring plan must be a pure projection: no MLlib UDF, no shuffle

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-10 gates
+"""Third-implementation checks for the round-10 gates
 (inferdb_spark/gate_r10a.py): pure-python recomputation from the raw
 parquet, independent of both the Spark plans and the DuckDB oracles.
 """

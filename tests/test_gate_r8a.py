@@ -1,7 +1,7 @@
-"""Third-implementation checks for the STAGED round-8 batch-1 gates
+"""Third-implementation checks for the round-8 batch-1 gates
 (inferdb_spark/gate_r8a.py): every Spark result is recomputed with a
 pure-python reference directly off the parquet, independent of both the
-Spark plan and the DuckDB oracle (which tools/verify_staged.py compares
+Spark plan and the DuckDB oracle (which tools/verify_local.py compares
 separately), so a shared-misconception bug in the gate/oracle pair can't
 hide.
 

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-2 gates
+"""Third-implementation checks for the round-8 batch-2 gates
 (inferdb_spark/gate_r8b.py) — pure-python references off the parquet,
 independent of both the Spark plans and the DuckDB oracles.
 

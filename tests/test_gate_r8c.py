@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-3 gates
+"""Third-implementation checks for the round-8 batch-3 gates
 (inferdb_spark/gate_r8c.py): pure-python soundex/geohash/HITS
 recomputations off the parquet, independent of Spark plans and DuckDB
 oracles.

@@ -1,4 +1,4 @@
-"""Third-implementation check for the STAGED round-8 batch-4 gate
+"""Third-implementation check for the round-8 batch-4 gate
 (inferdb_spark/gate_r8d.py): a sklearn-free MI + greedy replay for
 mRMR, independent of the Spark plan and DuckDB oracle.
 """

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-5 gates
+"""Third-implementation checks for the round-8 batch-5 gates
 (inferdb_spark/gate_r8e.py): numpy/pure-python recomputations of the
 regression-diagnostic and time-series statistics off the parquet.
 """

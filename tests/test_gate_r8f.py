@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-6 gates
+"""Third-implementation checks for the round-8 batch-6 gates
 (inferdb_spark/gate_r8f.py): literal pure-python recomputations — a
 sorted-median Levene, a per-block midrank Friedman, a row-level Cochran
 Q, an adjacency-dict link-prediction pass, and a regex readability

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-7 gates
+"""Third-implementation checks for the round-8 batch-7 gates
 (inferdb_spark/gate_r8g.py): numpy OLS for Chow, a literal cumulative
 scan for ABC, and a full-sort quantile replay for RFM (the point: the
 gate's count-bisection thresholds equal literal sorted-order ranks).

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-8 gates
+"""Third-implementation checks for the round-8 batch-8 gates
 (inferdb_spark/gate_r8h.py): a literal sequential Holt-Winters replay
 (the fold must equal the textbook loop) and a numpy-free Breusch-Pagan
 recomputation.

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-9 gates
+"""Third-implementation checks for the round-8 batch-9 gates
 (inferdb_spark/gate_r8i.py): pure-python ANOVA, a literal full-rank
 Kruskal-Wallis on the binned variable, and a scipy-free Bartlett
 recomputation.

@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-10 gates
+"""Third-implementation checks for the round-8 batch-10 gates
 (inferdb_spark/gate_r8j.py): a literal queue-based BFS, a textbook
 Cochran-Armitage recomputation, and a full-resolution (unbinned) KS
 bound check for the hash-uniformity gate.

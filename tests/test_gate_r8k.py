@@ -1,4 +1,4 @@
-"""Third-implementation checks for the STAGED round-8 batch-11 gates
+"""Third-implementation checks for the round-8 batch-11 gates
 (inferdb_spark/gate_r8k.py): full-rank Dunn replay, a sorted-median
 Mood recomputation, numpy partial correlation, and a literal
 Durbin-Levinson recursion on brute-force ACF values.

@@ -1,7 +1,7 @@
-"""Third-implementation checks for the STAGED round-9 gates
+"""Third-implementation checks for the round-9 gates
 (inferdb_spark/gate_r9a/b/c.py): pure-python recomputation of every
 statistic from the raw parquet, independent of both the Spark plans and
-the DuckDB oracles that verify_staged compares.
+the DuckDB oracles that tools/verify_local.py compares.
 """
 
 from __future__ import annotations

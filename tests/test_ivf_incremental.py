@@ -11,7 +11,11 @@ from inferdb_spark.operators.similarity import (
     ivf_build,
     ivf_search,
 )
-from inferdb_spark.streaming.index_maintenance import run_incremental_kv
+from inferdb_spark.streaming.index_maintenance import incremental_kv_stats
+from inferdb_spark.streaming.scoring_stream import (
+    run_stream_to_memory,
+    stream_from_parquet_dir,
+)
 
 
 def _embeddings(spark, n=300, dim=8):
@@ -65,12 +69,10 @@ def test_incremental_kv_matches_batch_rebuild(spark):
     tmp = tempfile.mkdtemp(prefix="inc_kv_")
     try:
         df.repartition(5).write.mode("overwrite").parquet(tmp)
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+        stream = stream_from_parquet_dir(spark, tmp, df.schema)
+        run_stream_to_memory(
+            incremental_kv_stats(stream, specs, "y"), "inc_kv_out", "complete"
         )
-        run_incremental_kv(stream, specs, "y", "inc_kv_out")
         streamed = {
             r.key: (r.s, r.c, r.value)
             for r in spark.sql("select * from inc_kv_out").collect()

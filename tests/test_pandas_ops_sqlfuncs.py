@@ -1,42 +1,11 @@
-"""Cogrouped applyInPandas, Python UDTF, and SQL-defined functions."""
+"""Python UDTF and SQL-defined functions."""
 
 from __future__ import annotations
-
-from datetime import datetime
 
 from pyspark.sql import functions as F
 
 from inferdb_spark.functions.sqlfuncs import register_sql_functions
-from inferdb_spark.operators.pandas_ops import (
-    cogroup_merge_asof,
-    register_udtfs,
-)
-from inferdb_spark.operators.relational_ext import asof_join
-
-
-def test_cogroup_merge_asof_matches_relational(spark):
-    left = spark.createDataFrame(
-        [(u, i, datetime(2024, 1, 1, h)) for u in (1, 2) for i, h in enumerate([1, 5, 9])],
-        "k int, ev int, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1, 0), 10.0), (1, datetime(2024, 1, 1, 6), 20.0),
-         (2, datetime(2024, 1, 1, 2), 30.0), (3, datetime(2024, 1, 1, 0), 99.0)],
-        "k int, rts timestamp, val double",
-    )
-    got = sorted(
-        (r["k"], r["ev"], r["val"])
-        for r in cogroup_merge_asof(left, right, "k", "ts", "rts", "val").collect()
-    )
-    want = sorted(
-        (r["k"], r["ev"], r["val_asof"])
-        for r in asof_join(
-            left, right, on=["k"], left_ts="ts", right_ts="rts", right_values=["val"]
-        ).collect()
-    )
-    assert got == want
-    # user 1 at 01:00 -> 10.0; at 09:00 -> 20.0; user 2 at 01:00 -> no match
-    assert (1, 0, 10.0) in got and (1, 2, 20.0) in got and (2, 0, None) in got
+from inferdb_spark.operators.pandas_ops import register_udtfs
 
 
 def test_udtf_key_prefixes(spark):

@@ -213,62 +213,3 @@ def test_power_iteration_matches_numpy(spark):
     assert got == {i: int(vq[i]) for i in range(3)}
     # dominant direction: item 1 (largest diagonal + couplings) leads
     assert got[1] == 1_000_000 and got[1] >= got[0] >= got[2]
-
-
-def test_streaming_ewma_equals_batch_fold(spark):
-    """ewma_per_key run to completion == the batch aggregate-HOF fold,
-    bit-for-bit (alpha = 0.5 multiplies are exact), with time-ordered
-    file delivery (one file per trigger)."""
-    import shutil
-    import tempfile
-
-    from inferdb_spark.streaming import scoring_stream as SS
-
-    tmp = tempfile.mkdtemp(prefix="inferdb_stream_ewma_")
-    try:
-        rows = [
-            (i % 5, i * 1000, i, float(((i * 37) % 100) / 4.0))
-            for i in range(60)
-        ]
-        df = spark.createDataFrame(rows, "user_id long, tsu long, event_id long, v double")
-        # two time-ordered files: first half, second half
-        df.filter(F.col("event_id") < 30).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        df.filter(F.col("event_id") >= 30).coalesce(1).write.mode(
-            "append"
-        ).parquet(tmp)
-        stream = SS.stream_from_parquet_dir(spark, tmp, df.schema, 1)
-        out = SS.ewma_per_key(stream, "user_id", "v")
-        SS.run_stream_to_memory(out, "ewma_out", output_mode="update")
-        import pandas as pd
-
-        got_df = spark.sql(
-            "select * from ewma_out"
-        ).toPandas().sort_values("n").groupby("user_id").last()
-        got = {int(k): float(v) for k, v in got_df["ewma"].items()}
-
-        # batch fold
-        lists = (
-            df.select(
-                "user_id",
-                F.struct("tsu", F.col("event_id").alias("eid"), "v").alias("s"),
-            )
-            .groupBy("user_id")
-            .agg(F.sort_array(F.collect_list("s")).alias("ss"))
-            .select(
-                "user_id", F.transform(F.col("ss"), lambda s: s["v"]).alias("vals")
-            )
-        )
-        folded = F.aggregate(
-            F.slice(F.col("vals"), 2, F.size("vals") - 1),
-            F.element_at(F.col("vals"), 1),
-            lambda acc, x: F.lit(0.5) * x + F.lit(0.5) * acc,
-        )
-        want = {
-            r["user_id"]: r["e"]
-            for r in lists.select("user_id", folded.alias("e")).collect()
-        }
-        assert got == want
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -1,10 +1,6 @@
 from pyspark.sql import functions as F
 
-from inferdb_spark.scale import (
-    salted_aggregate,
-    salted_join_hot_keys,
-    stage_to_parquet,
-)
+from inferdb_spark.scale import salted_aggregate, stage_to_parquet
 
 
 def test_salted_aggregate_matches_plain(spark):
@@ -29,19 +25,6 @@ def test_salted_aggregate_mean(spark):
     df = spark.createDataFrame([("a", 1.0), ("a", 3.0), ("b", 10.0)], "k string, v double")
     out = {r.k: r.mean_v for r in salted_aggregate(df, ["k"], {"v": "mean"}).collect()}
     assert out == {"a": 2.0, "b": 10.0}
-
-
-def test_salted_join_hot_keys_matches_plain(spark):
-    fact = spark.createDataFrame(
-        [("hot", i) for i in range(1000)] + [("cold", i) for i in range(100)],
-        "k string, v int",
-    )
-    dim = spark.createDataFrame([("hot", 1), ("cold", 2), ("unused", 3)], "k string, d int")
-    plain = fact.join(dim, "k").groupBy("k").agg(F.count("*").alias("n"), F.sum("d").alias("s"))
-    salted = salted_join_hot_keys(fact, dim, "k", ["hot"], 8).groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("d").alias("s")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_stage_to_parquet_roundtrip(spark, tmp_path):

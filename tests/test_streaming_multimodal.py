@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from inferdb_spark.operators import multimodal as MM
 from inferdb_spark.operators.binning import BinSpec
 from inferdb_spark.operators.index import build_index
+from inferdb_spark.operators.scoring import index_score
 from inferdb_spark.streaming import scoring_stream as SS
 
 
@@ -27,40 +28,13 @@ def test_streaming_index_score_matches_batch(spark):
         idx = build_index(batch, specs, "y", task="regression")
         stream = SS.stream_from_parquet_dir(spark, tmp, batch.schema, 2)
         assert stream.isStreaming
-        scored = SS.score_stream(stream, idx)
-        SS.run_stream_to_memory(scored, "scored_out", output_mode="append")
+        SS.run_stream_to_memory(index_score(stream, idx), "scored_out", output_mode="append")
         got = {
             r.row_id: r.prediction
             for r in spark.sql("select * from scored_out").collect()
         }
-        from inferdb_spark.operators.scoring import index_score
-
         want = {r.row_id: r.prediction for r in index_score(batch, idx).collect()}
         assert got == want  # stream scoring == batch scoring, row for row
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_streaming_windowed_aggregate(spark):
-    tmp = tempfile.mkdtemp(prefix="inferdb_stream_w_")
-    try:
-        rows = [
-            (i, f"2024-01-01 00:{i % 50:02d}:00", "a" if i % 2 == 0 else "b", float(i))
-            for i in range(100)
-        ]
-        df = spark.createDataFrame(rows, "id long, ts_s string, event_type string, value double").select(
-            "id", F.col("ts_s").cast("timestamp").alias("ts"), "event_type", "value"
-        )
-        df.coalesce(2).write.mode("overwrite").parquet(tmp)
-        stream = SS.stream_from_parquet_dir(spark, tmp, df.schema, 1)
-        agg = SS.windowed_event_aggregate(stream, "ts", "event_type", "value", "10 minutes")
-        # complete mode: the memory sink holds the FULL final state (update
-        # mode appends one row per per-trigger revision -> double counting)
-        SS.run_stream_to_memory(agg, "win_out", output_mode="complete")
-        out = spark.sql("select * from win_out").collect()
-        assert out and all(r.n > 0 for r in out)
-        total = sum(r.n for r in out)
-        assert total == 100
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -81,27 +55,13 @@ def test_streaming_stateful_running_mean(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_multimodal_feature_extraction_fake(spark):
-    media = MM.synthesize_media_table(spark, 32)
-    feats = MM.extract_image_features(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 32
-    assert all(len(r.feat) == 8 for r in rows)
-    assert all(0.0 <= x <= 1.0 for r in rows for x in r.feat)
-    # deterministic: same input -> same features
-    again = MM.extract_image_features(media, fake=True).collect()
-    assert sorted((r.content_id, tuple(r.feat)) for r in rows) == sorted(
-        (r.content_id, tuple(r.feat)) for r in again
-    )
-
-
 def test_multimodal_undecodable_payload_raises(spark):
     import pytest
 
     # synthesize_media_table payloads are raw bytes, not a decodable format
     media = MM.synthesize_media_table(spark, 4)
     with pytest.raises(Exception) as ei:
-        MM.extract_image_features(media, fake=False).collect()
+        MM.image_stats(media).collect()
     assert "unsupported image payload" in str(ei.value)
 
 
@@ -120,7 +80,7 @@ def test_multimodal_compressed_needs_optional_dep(spark):
         [(0, "image", png_stub, (1, 1, None, None, "png"))], MM.MEDIA_SCHEMA
     )
     with pytest.raises(Exception) as ei:
-        MM.extract_image_features(media, fake=False).collect()
+        MM.image_stats(media).collect()
     assert "PNG missing IHDR" in str(ei.value)
 
     jpeg_stub = b"\xff\xd8\xff\xe0" + bytes(64)
@@ -128,7 +88,7 @@ def test_multimodal_compressed_needs_optional_dep(spark):
         [(0, "image", jpeg_stub, (1, 1, None, None, "jpeg"))], MM.MEDIA_SCHEMA
     )
     with pytest.raises(Exception) as ei:
-        MM.extract_image_features(media_j, fake=False).collect()
+        MM.image_stats(media_j).collect()
     assert "requires PIL" in str(ei.value)
 
 
@@ -262,49 +222,6 @@ def test_streaming_foreach_batch_sink_idempotent(spark):
         assert sunk.select("batch_id").distinct().count() >= 2
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stream_stream_join_matches_batch(spark):
-    """views ⋈ purchases within 30 min per user: streaming result ==
-    batch join, and the range condition bounds join state."""
-    tmp_v = tempfile.mkdtemp(prefix="inferdb_ss_v_")
-    tmp_p = tempfile.mkdtemp(prefix="inferdb_ss_p_")
-    try:
-        views = spark.createDataFrame(
-            [(u, f"2024-01-01 00:{m:02d}:00") for u in range(5) for m in (0, 10, 40)],
-            "user_id int, ts_s string",
-        ).select("user_id", F.col("ts_s").cast("timestamp").alias("view_ts"))
-        buys = spark.createDataFrame(
-            [(u, f"2024-01-01 00:{m:02d}:30") for u in range(5) for m in (15, 55)],
-            "user_id int, ts_s string",
-        ).select("user_id", F.col("ts_s").cast("timestamp").alias("buy_ts"))
-        views.coalesce(1).write.mode("overwrite").parquet(tmp_v)
-        buys.coalesce(1).write.mode("overwrite").parquet(tmp_p)
-
-        sv = SS.stream_from_parquet_dir(spark, tmp_v, views.schema, 1)
-        sp = SS.stream_from_parquet_dir(spark, tmp_p, buys.schema, 1)
-        joined = SS.stream_stream_join(
-            sv, sp, "user_id", "view_ts", "buy_ts",
-            watermark="2 hours", tolerance_seconds=1800,
-        )
-        SS.run_stream_to_memory(joined, "ssj_out", output_mode="append")
-        got = sorted(
-            (r.user_id, str(r.view_ts), str(r.buy_ts))
-            for r in spark.sql("select * from ssj_out").collect()
-        )
-        want = sorted(
-            (r.user_id, str(r.view_ts), str(r.buy_ts))
-            for r in views.join(
-                buys,
-                (views.user_id == buys.user_id)
-                & (buys.buy_ts >= views.view_ts)
-                & (buys.buy_ts <= views.view_ts + F.expr("INTERVAL 1800 SECOND")),
-            ).drop(buys.user_id).collect()
-        )
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(tmp_v, ignore_errors=True)
-        shutil.rmtree(tmp_p, ignore_errors=True)
 
 
 def test_session_window_stream_matches_batch(spark):

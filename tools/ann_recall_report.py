@@ -24,9 +24,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def recall(got_ids: list[int], truth_ids: list[int]) -> float:

@@ -165,9 +165,11 @@ def _prebin_upper(pre, b: int) -> float:
 
 
 def main() -> None:
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
     from inferdb_spark.session import get_spark
 
     spark = get_spark()
@@ -211,7 +213,7 @@ def main() -> None:
         "`fit_optimal_bins` for split-semantics parity.",
         "",
     ]
-    with open("/root/repo/BINNING_QUALITY.md", "w") as f:
+    with open(os.path.join(repo, "BINNING_QUALITY.md"), "w") as f:
         f.write("\n".join(lines))
     print("\n".join(lines))
 

@@ -4,7 +4,7 @@
 The driver ships read-only parquet at /root/testdata/sf{0.001,0.01,0.1};
 the scale-ramp validation (BASELINE.md "sf1" section) needs a 10x dataset.
 We must not write to /root/testdata, so this writes under the repo
-(default /root/repo/.data/sf1, git-ignored).
+(default `.data/sf1` in this checkout, git-ignored).
 
 Method: key-shifted replication, the standard way to scale a star schema
 without breaking referential integrity:
@@ -31,6 +31,8 @@ import argparse
 import os
 
 import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SHIFT = 10_000_000  # > any base key at sf0.1 (max is o_orderkey=150000)
 
@@ -116,7 +118,7 @@ def scale_table(con, src_dir: str, out_dir: str, table: str, factor: int) -> Non
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.data/sf1")
+    ap.add_argument("--out", default=os.path.join(REPO, ".data", "sf1"))
     ap.add_argument("--factor", type=int, default=10)
     args = ap.parse_args()
     os.makedirs(args.out, exist_ok=True)

@@ -10,9 +10,11 @@ strategies, exchange placement.
 from __future__ import annotations
 
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 QUERIES = [
     "index_score",          # dense-table lookup: one projection
@@ -71,7 +73,7 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(QUERIES)} plans)")
 

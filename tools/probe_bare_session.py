@@ -1,6 +1,7 @@
 # Probe: mimic the DRIVER's session — plain builder, none of our configs.
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]")
          .appName("bare-driver-sim").config("spark.ui.enabled","false").getOrCreate())

@@ -10,6 +10,7 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -18,7 +19,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def duck_run(sql: str, sf_dir: str) -> pd.DataFrame:
