@@ -239,17 +239,7 @@ def q_media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame.  One input row fans out to n_frames/2 rows — the flatMap shape
     a real frame sampler has, with decode verified against pure SQL."""
     media = MM.synthesize_real_media(spark, _ids(spark, sf_dir, 60), kind="rawv")
-    with_meta = media.withColumn(
-        "meta",
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(0).cast("long").alias("duration_ms"),
-            F.lit("rawv").alias("codec"),
-        ),
-    )
-    frames = MM.sample_video_frames(with_meta, every_ms=200)
+    frames = MM.sample_video_frames(media, every_ms=200)
     return frames.select(
         F.col("content_id").cast("long").alias("content_id"),
         F.col("frame_idx").cast("long").alias("frame_idx"),

@@ -7,17 +7,19 @@ on a miss (src/transpiler.py:1004-1099, sql_scripts/prefix_search.sql).
 Spark redesign: the per-row fallback loop is replaced by BUILD-TIME prefix
 aggregates — for every prefix length L the aggregated value over keys
 sharing that prefix, so a lookup is coalesce(exact, prefix_{k-1}, ...,
-prefix_1, global).  Every level is one roll-up of the per-key aggregate
-over the bin columns: the build is one aggregate relation whose level-k
-rows are the keys, level-L rows the prefix_L values and the level-0 row
-the global value.  The build then goes one step further, as the
-reference's populate_paths does (src/transpiler.py:930-938): when the bin
-domain is small (at most DENSE_CAP tuples) one collect of that relation
+prefix_1, global).  The build is one groupBy job that collects the
+per-key table the feature selection uses (`iv.key_table`); the driver
+rolls it up (`iv.rollup`) into every level: level k the keys, level L the
+prefix_L values, level 0 the global value.  The build then goes one step
+further, as the reference's populate_paths does (src/transpiler.py:
+930-938): when the bin domain is small (at most DENSE_CAP tuples) it
 evaluates the coalesce for EVERY bin tuple on the driver and stores the
 result as `KVIndex.table`, a dense row-major array.  Scoring is then one
 projection, `element_at(<table literal>, <mixed-radix bin index> + 1)` — no
 join, no per-row control flow, no Spark job beyond the scan.  Larger
-domains keep the kv and prefix relations as broadcast join sides.
+domains probe the kv and prefix relations as broadcast join sides.
+Nothing is cached: those relations are local relations over the driver
+levels.
 
 Fallback semantics follow the reference TRIE (component-wise prefixes,
 aggregate over the values of keys under the node — src/inference_trie.py:
@@ -40,10 +42,11 @@ import math
 from dataclasses import dataclass, field
 from functools import cached_property
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from inferdb_spark.operators.binning import BinSpec, apply_bins, key_expr
+from inferdb_spark.operators.iv import key_table, rollup
 
 BIN_SUFFIX = "_bin"
 # Largest bin domain stored as a dense table.  Per 2,000-key lookup on
@@ -58,11 +61,11 @@ DENSE_CAP = 1 << 16
 class KVIndex:
     """Built index artifacts.
 
-    `kv` (key, value) and `prefix_aggs` (L -> (prefix_L, value)) are small
-    cached DataFrames; keys are dot-joined bin ids.  `table` holds the
-    lookup result of every bin tuple of the domain in row-major order — the
-    exact value, else the deepest non-NULL prefix value, else
-    `global_value` — or None when the domain exceeds DENSE_CAP.
+    `kv` (key, value) and `prefix_aggs` (L -> (prefix_L, value)) are local
+    relations, collected with no Spark job; keys are dot-joined bin ids.
+    `table` holds the lookup result of every bin tuple of the domain in
+    row-major order — the exact value, else the deepest non-NULL prefix
+    value, else `global_value` — or None when the domain exceeds DENSE_CAP.
     """
 
     specs: list[BinSpec]
@@ -117,6 +120,48 @@ def _fill_table(
     return table
 
 
+def _level(rows: list, L: int, k: int, task: str) -> dict[tuple, float | None]:
+    """Value of every L-bin prefix of a `key_table` over k bins: Σs / Σc
+    for regression, else the majority class — the lowest on a tie, a NULL
+    class losing every tie."""
+    if task == "regression":
+        groups = rollup(rows, list(range(L)), k)
+        return {p: s / c if c else None for p, (_, c, s) in groups.items()}
+    best: dict[tuple, tuple] = {}
+    for (*p, cls), (n,) in rollup(rows, [*range(L), k], k + 1).items():
+        rank = (n, -math.inf if cls is None else -cls, cls)
+        best[tuple(p)] = max(best.get(tuple(p), rank), rank)
+    return {p: rank[2] for p, rank in best.items()}
+
+
+def _from_levels(
+    spark: SparkSession,
+    specs: list[BinSpec],
+    task: str,
+    levels: dict[int, dict[str, float | None]],
+    global_value: float,
+) -> KVIndex:
+    """KVIndex over the per-level {key: value} dicts (L = len(specs) the
+    keys, 1..L-1 the prefixes): `kv` and `prefix_aggs` as local relations
+    (an Arrow table becomes a LocalRelation: no job to create or collect,
+    nothing cached), `table` filled under DENSE_CAP."""
+
+    def local(L: int, name: str) -> DataFrame:
+        cols = {name: pa.array(list(levels[L]), pa.string()),
+                "value": pa.array(list(levels[L].values()), pa.float64())}
+        return spark.createDataFrame(pa.table(cols))
+
+    k, dense = len(specs), _domain_size(specs) <= DENSE_CAP
+    return KVIndex(
+        specs=specs,
+        task=task,
+        kv=local(k, "key"),
+        prefix_aggs={L: local(L, f"prefix_{L}") for L in range(1, k)},
+        global_value=global_value,
+        table=_fill_table(specs, levels, global_value) if dense else None,
+    )
+
+
 def build_index(
     train: DataFrame,
     specs: list[BinSpec],
@@ -125,71 +170,31 @@ def build_index(
     agg_mode: str = "keys",
 ) -> KVIndex:
     """kv build (src/transpiler.py:986-996: mean for regression, majority
-    for classification) with every prefix level, as ONE aggregate
-    relation: a groupBy of the encoded training rows into per-key stats,
-    rolled up over the bin columns.  A row of level L = k − Σ grouping(bin)
-    carries the prefix_L aggregate under the key of its L leading bins
-    (concat_ws skips the rolled-up NULLs); level k holds the keys, level 0
-    the global value.
-
-    The base table is read once; every level derives from the tiny
-    per-key result.  The relation is cached: under DENSE_CAP one collect of
-    it fills `table`; over the cap the collect of the global row alone
-    materializes it for the join sides.
+    for classification) with every prefix level.  One groupBy job collects
+    the per-key table — (*bins, n, count(y), sum(y)) for regression,
+    (*bins, class, n) for classification; count(y), not count(*), so null
+    targets do not dilute the mean (pandas .mean() semantics,
+    src/transpiler.py:993-996).  The driver rolls it up into levels k..0.
+    In "keys" mode each key first becomes one unit row carrying its own
+    value, so the same formula averages, or votes, over keys (trie
+    semantics).
     """
     k = len(specs)
     bins = [s.column + BIN_SUFFIX for s in specs]
-    enc = apply_bins(train, specs, BIN_SUFFIX)
-    y = F.col(target).cast("double")
-    level = F.lit(k) - F.bit_count(F.grouping_id())
-
-    if task == "regression":
-        # count(y), not count(*): null targets must not dilute the mean
-        # (pandas .mean() semantics, src/transpiler.py:993-996)
-        per_key = enc.groupBy(*bins).agg(F.sum(y).alias("s"), F.count(y).alias("c"))
-        mean = F.sum("s") / F.sum("c")  # row-weighted; at level k the key's own s / c
-        if agg_mode == "keys":  # unweighted over the keys' means (trie semantics);
-            # level k keeps s / c, as an avg of a -0.0 mean would give 0.0
-            mean = F.when(level == k, mean).otherwise(F.avg(F.col("s") / F.col("c")))
-        agg = per_key.rollup(*bins).agg(level.alias("level"), mean.alias("value"))
-    else:
-        # majority, lowest-class tiebreak
-        vote = F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value")))
-        per_key = enc.groupBy(*bins, y.cast("long").alias("value")).agg(
-            F.count("*").alias("cnt")
-        )
-        if agg_mode == "keys":  # each key votes once, for its majority (trie semantics)
-            per_key = per_key.groupBy(*bins).agg(vote.alias("value"), F.lit(1).alias("cnt"))
-        counts = per_key.groupingSets(
-            [bins[:L] + ["value"] for L in range(k + 1)], *bins, "value"
-        ).agg(level.alias("level"), F.sum("cnt").alias("cnt"))
-        agg = counts.groupBy("level", *bins).agg(vote.cast("double").alias("value"))
-
-    levels = agg.select(
-        "level", key_expr(specs, BIN_SUFFIX).alias("key"), "value"
-    ).cache()
-    dense = _domain_size(specs) <= DENSE_CAP
-    by_level: dict[int, dict[str, float | None]] = {L: {} for L in range(k + 1)}
-    for L, key, v in (levels if dense else levels.where(F.col("level") == 0)).collect():
-        by_level[L][key] = v
-    g = by_level.pop(0).get("")
-    g = float(g) if g is not None else 0.0
-
-    kv = levels.where(F.col("level") == k).select("key", "value")
-    prefix_aggs = {
-        L: levels.where(F.col("level") == L).select(F.col("key").alias(f"prefix_{L}"), "value")
-        for L in range(1, k)
+    shape = "regression" if task == "regression" else "multiclass"
+    rows = key_table(apply_bins(train, specs, BIN_SUFFIX), bins, target, shape)
+    if agg_mode == "keys":
+        keyed = _level(rows, k, k, task).items()
+        if shape == "regression":  # a NULL mean counts in n only, as avg() skips it
+            rows = [(*p, 1, int(v is not None), v) for p, v in keyed]
+        else:
+            rows = [(*p, v, 1) for p, v in keyed]
+    levels = {
+        L: {".".join(map(str, p)): v for p, v in _level(rows, L, k, task).items()}
+        for L in range(k + 1)
     }
-    for df in (kv, *prefix_aggs.values()):  # the join sides over the cap;
-        df.cache()  # lazy, filled from `levels` on first read
-    return KVIndex(
-        specs=specs,
-        task=task,
-        kv=kv,
-        prefix_aggs=prefix_aggs,
-        global_value=g,
-        table=_fill_table(specs, by_level, g) if dense else None,
-    )
+    g = levels.pop(0).get("")
+    return _from_levels(train.sparkSession, specs, task, levels, 0.0 if g is None else float(g))
 
 
 def save_index(index: KVIndex, path: str) -> dict:
@@ -227,23 +232,9 @@ def load_index(spark: SparkSession, path: str) -> KVIndex:
     with open(os.path.join(path, "spec.json")) as f:
         spec = json.load(f)
     specs = [BinSpec(**s) for s in spec["specs"]]
-    kv = spark.read.parquet(os.path.join(path, "kv"))
-    prefix_aggs = {
-        L: spark.read.parquet(os.path.join(path, f"prefix_{L}"))
-        for L in spec["prefix_lengths"]
-    }
-    table = None
-    if _domain_size(specs) <= DENSE_CAP:
-        levels = {L: dict(df.collect()) for L, df in [(len(specs), kv), *prefix_aggs.items()]}
-        table = _fill_table(specs, levels, spec["global_value"])
-    return KVIndex(
-        specs=specs,
-        task=spec["task"],
-        kv=kv,
-        prefix_aggs=prefix_aggs,
-        global_value=spec["global_value"],
-        table=table,
-    )
+    names = {len(specs): "kv", **{L: f"prefix_{L}" for L in spec["prefix_lengths"]}}
+    levels = {L: dict(spark.read.parquet(os.path.join(path, n)).collect()) for L, n in names.items()}
+    return _from_levels(spark, specs, spec["task"], levels, spec["global_value"])
 
 
 def unseen_paths(index: KVIndex) -> DataFrame:
@@ -265,8 +256,9 @@ def unseen_paths(index: KVIndex) -> DataFrame:
 def index_size_info(index: KVIndex) -> dict:
     """Stored paths / possible paths / filling degree
     (src/optimizer.py:225-231, 268-276); the possible paths count the
-    null bins, as the dense table does."""
-    stored = index.kv.count()
+    null bins, as the dense table does.  A built or loaded `kv` is a local
+    relation, so the count runs no Spark job."""
+    stored = len(index.kv.collect())
     possible = _domain_size(index.specs)
     return {
         "stored_paths": stored,

@@ -8,11 +8,13 @@ then reordered by bin count ascending (src/optimizer.py:210-211).
 
 Spark-first: the IV of any subset is a driver roll-up of one key-count
 table (per full key over all candidate bins), collected in ONE groupBy job;
-over KEY_TABLE_CAP each evaluation collects its own subset table.  One
-definition per formula, on the driver: 0.5-adjusted WoE with safe division
-(src/optimizer.py:53, 61-82), its one-vs-rest sum for multiclass (:83-98),
-Σ|m_bin − M|·n_bin/N for regression (:99-102).  NULLs follow SQL: a NULL
-target counts in n, not in a sum; a bin whose sum is NULL drops out.
+over KEY_TABLE_CAP each evaluation collects its own subset table.  The
+index build (operators/index.py) uses the same `key_table` and `rollup`.
+One definition per formula, on the driver: 0.5-adjusted WoE with safe
+division (src/optimizer.py:53, 61-82), its one-vs-rest sum for multiclass
+(:83-98), Σ|m_bin − M|·n_bin/N for regression (:99-102).  NULLs follow
+SQL: a NULL target counts in n, not in a sum; a bin whose sum is NULL
+drops out.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from inferdb_spark.operators.binning import BinSpec
 KEY_TABLE_CAP = 1 << 16
 
 
-def _collect(encoded: DataFrame, bin_cols: list[str], target: str, task: str) -> list:
+def key_table(encoded: DataFrame, bin_cols: list[str], target: str, task: str) -> list:
     """One groupBy job: rows (*bins, [class,] n, *counts) — classification
     (events), multiclass per class (none), regression (count(y), sum(y))."""
     y = F.col(target).cast("long" if task == "multiclass" else "double")
@@ -47,7 +49,7 @@ def _add(a, b):
     return a if b is None else b if a is None else a + b
 
 
-def _rollup(rows: list, keep: list[int], width: int) -> dict[tuple, list]:
+def rollup(rows: list, keep: list[int], width: int) -> dict[tuple, list]:
     """Sum the counts after the first `width` columns of `rows` onto the key
     columns at positions `keep`."""
     out: dict[tuple, list] = {}
@@ -110,12 +112,12 @@ def _table_iv(rows: list, task: str, idx, width: int) -> float:
     """IV of the bin columns at positions `idx` of a collected table with
     `width` bin columns."""
     keep = [*idx, width] if task == "multiclass" else list(idx)
-    return _FORMULAS[task](_rollup(rows, keep, width + (task == "multiclass")))
+    return _FORMULAS[task](rollup(rows, keep, width + (task == "multiclass")))
 
 
 def _iv(encoded: DataFrame, bin_cols: list[str], target: str, task: str) -> float:
     width = len(bin_cols)
-    return _table_iv(_collect(encoded, bin_cols, target, task), task, range(width), width)
+    return _table_iv(key_table(encoded, bin_cols, target, task), task, range(width), width)
 
 
 def iv_classification(encoded: DataFrame, bin_cols: list[str], target: str) -> float:
@@ -142,7 +144,7 @@ def _subset_iv(encoded: DataFrame, specs: list[BinSpec], target: str, task: str,
         raise ValueError("feature selection needs at least one feature")
     cols = [s.column + suffix for s in specs]
     if math.prod(s.domain for s in specs) <= KEY_TABLE_CAP:
-        rows = _collect(encoded, cols, target, task)
+        rows = key_table(encoded, cols, target, task)
         yield lambda idx: _table_iv(rows, task, idx, len(cols))
         return
     owned = encoded.storageLevel == StorageLevel.NONE

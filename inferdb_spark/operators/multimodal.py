@@ -10,7 +10,6 @@ real on the executors; round 5 promotes PNG into the same always-on path
 decode only when PIL/ffmpeg are importable; their NotImplementedError
 branch is the *fallback* for compressed formats without the optional
 dependency — not the only path.
-The deterministic `fake=True` structural path is kept for dataflow tests.
 
 100 TB design rules (unchanged):
 - media bytes travel ONCE through any plan stage (binary columns are
@@ -31,7 +30,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from inferdb_spark.functions import media_codecs as MC
@@ -66,23 +64,6 @@ AUDIO_STATS_SCHEMA = (
     "content_id long, sample_rate int, n_samples long, n_channels int, "
     "duration_ms long, rms double, zero_crossings long"
 )
-
-
-def synthesize_media_table(spark, n: int = 64, media_type: str = "image") -> DataFrame:
-    """Deterministic fake media rows for dataflow tests (payload = raw bytes,
-    NOT a decodable format — pair with fake=True paths)."""
-    rows = []
-    for i in range(n):
-        payload = bytes((i * 7 + j * 13) % 256 for j in range(128 + (i % 5) * 32))
-        rows.append(
-            (
-                i,
-                media_type,
-                payload,
-                (64 + i % 8, 48 + i % 6, 16000, 1000 + i, "raw"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -212,16 +193,6 @@ def image_stats(df: DataFrame, grid: int = 2) -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes) -> list[float]:
-    """Deterministic stand-in decoder: 8 structural statistics of the byte
-    stream.  Clearly NOT a real decode — kept for dataflow-only tests."""
-    if payload is None or len(payload) == 0:
-        return [0.0] * 8
-    n = len(payload)
-    chunks = [payload[i * n // 8 : (i + 1) * n // 8] for i in range(8)]
-    return [sum(c) / (len(c) * 255.0) if c else 0.0 for c in chunks]
-
-
 # ---------------------------------------------------------------------------
 # audio features
 # ---------------------------------------------------------------------------
@@ -271,15 +242,12 @@ def audio_stats(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def sample_video_frames(
-    df: DataFrame, every_ms: int = 1000, fake: bool = False
-) -> DataFrame:
+def sample_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling: one input row -> N frame rows (flatMap shape).
 
-    fake=False decodes RAWV containers for REAL (raw-RGB frame dumps) and
-    emits one row per sampled frame with its 8-dim gray block feature;
-    compressed video (h264 etc.) raises NotImplementedError naming ffmpeg.
-    fake=True keeps the metadata-driven structural path.
+    Decodes RAWV containers for REAL (raw-RGB frame dumps) and emits one
+    row per sampled frame with its 8-dim gray block feature; compressed
+    video (h264 etc.) raises NotImplementedError naming ffmpeg.
     """
     import pandas as pd
 
@@ -294,20 +262,8 @@ def sample_video_frames(
                 "content_id": [], "frame_idx": [], "ts_ms": [],
                 "frame_px_sum": [], "frame_feat": [],
             }
-            for cid, dur, payload in zip(
-                pdf["content_id"], pdf["duration_ms"], pdf["payload"]
-            ):
+            for cid, payload in zip(pdf["content_id"], pdf["payload"]):
                 p = bytes(payload) if payload is not None else b""
-                if fake:
-                    n_frames = max(1, int(dur) // every_ms)
-                    base = _fake_decode(p)
-                    for k in range(n_frames):
-                        out_rows["content_id"].append(cid)
-                        out_rows["frame_idx"].append(k)
-                        out_rows["ts_ms"].append(k * every_ms)
-                        out_rows["frame_px_sum"].append(0)
-                        out_rows["frame_feat"].append([x * (k + 1) for x in base])
-                    continue
                 fmt = MC.sniff_media_format(p)
                 if fmt != "rawv":
                     raise NotImplementedError(
@@ -332,10 +288,7 @@ def sample_video_frames(
                     out_rows["frame_feat"].append(feat)
             yield pd.DataFrame(out_rows)
 
-    flat = df.select(
-        "content_id", F.col("meta.duration_ms").alias("duration_ms"), "payload"
-    )
-    return flat.mapInPandas(run, schema=schema)
+    return df.select("content_id", "payload").mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -343,28 +296,23 @@ def sample_video_frames(
 # ---------------------------------------------------------------------------
 
 
-def resize_images(df: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     """Resize dataflow: binary in -> binary out + updated metadata.
 
-    fake=False decodes (BMP/PPM native, PNG/JPEG via optional PIL),
+    Decodes (BMP/PPM native, PNG/JPEG via optional PIL),
     nearest-neighbor-resizes in numpy, and re-encodes as BMP — a real
-    binary->binary media transform.  fake=True keeps the legacy
-    truncate/pad structural path.
+    binary->binary media transform.
     """
     import pandas as pd
 
     schema = "content_id long, payload binary, width int, height int"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height // 64
         for pdf in batches:
             resized = []
             for p in pdf["payload"]:
                 if p is None:
                     resized.append(None)
-                elif fake:
-                    p = bytes(p)
-                    resized.append(p[:target] + bytes(max(0, target - len(p))))
                 else:
                     img = MC.decode_image_any(bytes(p))
                     resized.append(MC.encode_bmp(MC.resize_nearest(img, width, height)))

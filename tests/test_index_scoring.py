@@ -262,13 +262,25 @@ def test_every_level_matches_python_rollup(spark, branch, task, agg_mode):
     ("classification", "keys"), ("classification", "rows"),
 ])
 def test_build_index_job_count(spark, job_count, k, task, agg_mode):
-    """Every level comes from one cached aggregate and one collect, so the
-    build's job count does not grow with the number of levels."""
+    """Every level is rolled up on the driver from one collected key table,
+    so the build is one groupBy job whatever the number of levels."""
     rng = random.Random(k)
     rows = [tuple(float(rng.randrange(8)) for _ in range(5)) for _ in range(400)]
     train = spark.createDataFrame(rows, "a double, b double, c double, d double, y double")
     specs = [BinSpec(column=c, splits=[1.5, 3.5, 5.5]) for c in "abcd"][:k]
-    assert job_count(lambda: build_index(train, specs, "y", task=task, agg_mode=agg_mode)) <= 6
+    assert job_count(lambda: build_index(train, specs, "y", task=task, agg_mode=agg_mode)) <= 2
+
+
+def test_build_index_leaves_no_cache(spark, branch):
+    """The build caches nothing: no relation in the cache manager and no
+    RDD left in block storage, on both scoring branches."""
+    sc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    idx = _build(_mk_train3(spark, "regression"), SPECS3, "y", branch)
+    _assert_trie(idx, _grid(spark))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {i.id() for i in sc.getRDDStorageInfo()} == before
 
 
 @pytest.mark.parametrize("null_bin", [0, 4])
