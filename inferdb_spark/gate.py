@@ -260,7 +260,8 @@ ORDER_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"
 
 
 def _bin_expr_sql(col: str, splits: list[float]) -> str:
-    """DuckDB bin id: #{s : col > s} — matches BinSpec.expr exactly."""
+    """DuckDB bin id: #{s : col > s}, the same ids as BinSpec.expr's CASE
+    chain.  It stays a sum so that the oracle text does not change."""
     terms = " + ".join(f"CAST({col} > {s!r} AS INT)" for s in splits)
     return f"({terms})"
 

@@ -5,14 +5,16 @@ driver, then discretizes rows with generated CASE-WHEN SQL or a plpgsql
 binary search (sql_scripts/binary_search_numeric.sql).  Spark-first design:
 
 - *fit* runs as Spark aggregations (all columns' quantile pre-bins from ONE
-  exact multi-column percentile pass, per-prebin target stats via one
-  groupBy per column) — only tiny aggregate results reach the driver, so
-  fitting scales to arbitrarily large tables.
-- *apply* is one SQL expression per column, `BinSpec.expr_sql()`: a sum of
-  `CAST(c > s AS INT)` terms for numeric specs, `IN` lists for categorical
-  ones (half-open intervals, unseen categorical values -> extra bin,
-  matching src/encoder.py:113-126).  `BinSpec.expr()` parses that text, so
-  binning, index build and index scoring share the one definition.
+  exact multi-column percentile pass, every column's per-prebin target
+  stats from ONE groupBy over a `stack` of the pre-bin ids) — only tiny
+  aggregate results reach the driver, so fitting scales to arbitrarily
+  large tables.
+- *apply* is one SQL expression per column, `BinSpec.expr_sql()`: the
+  reference's `CASE WHEN c <= s_i THEN i` chain over the sorted splits for
+  numeric specs, `IN` lists for categorical ones (half-open intervals,
+  unseen categorical values -> extra bin, matching src/encoder.py:113-126).
+  `BinSpec.expr()` parses that text, so binning, index build and index
+  scoring share the one definition.
 
 A BinSpec is a plain, serializable description, and `expr_sql()` is the
 reference's fitted splits burnt into SQL literals (src/transpiler.py:
@@ -58,11 +60,17 @@ class BinSpec:
         return max(self.n_bins, self.null_bin + 1)
 
     def expr_sql(self) -> str:
-        """Bin-id expression as Spark SQL text (INT)."""
+        """Bin-id expression as Spark SQL text (INT).
+
+        Numeric: the first i with c <= s_i over the splits in Spark's order
+        (NaN last), which is #{s : c > s}.  A chain, not a sum of
+        `CAST(c > s AS INT)` terms: at 64 pre-bins the sum's generated code
+        outgrows the JIT's method limit and runs ~20x slower."""
         c = _sql_ident(self.column)
         if self.kind == "numeric":
-            terms = " + ".join(f"CAST({c} > {_sql_double(s)} AS INT)" for s in self.splits)
-            return f"CASE WHEN {c} IS NULL THEN {self.null_bin} ELSE ({terms or 0}) END"
+            ordered = sorted(self.splits, key=lambda s: (math.isnan(s), s))
+            whens = "".join(f" WHEN {c} <= {_sql_double(s)} THEN {i}" for i, s in enumerate(ordered))
+            return f"CASE WHEN {c} IS NULL THEN {self.null_bin}{whens} ELSE {len(ordered)} END"
         whens = "".join(
             f" WHEN CAST({c} AS STRING) IN ({', '.join(map(_sql_string, g))}) THEN {i}"
             for i, g in enumerate(self.groups)
@@ -121,8 +129,9 @@ def fit_supervised_bins(
 
     1. quantile pre-bin every column into `pre_bins` buckets (one exact
        multi-column percentile pass);
-    2. per column one groupBy(prebin) -> (count, mean(target)) — tiny
-       result to driver; NULL feature values count in the null_bin;
+    2. one groupBy(column, prebin) -> (count, mean(target)) over a `stack`
+       of every column's pre-bin id — one job, a tiny result to the
+       driver; NULL feature values count in the null_bin;
     3. greedily merge the adjacent pair with the most similar target mean
        (count-weighted) until `max_bins` remain; pairs below `min_frac`
        support merge first.
@@ -131,24 +140,28 @@ def fit_supervised_bins(
     column, so the fit is insensitive to table size.
     """
     pres = _quantile_bins(df, columns, pre_bins)
-    return [_merge_prebins(df, pre, target, max_bins, min_frac) for pre in pres]
+    # columns whose pre-bins have no split stay as they are, out of the stack
+    stats: dict[int, list] = {i: [] for i, p in enumerate(pres) if p.splits}
+    if stats:
+        pairs = ", ".join(f"{i}, {pres[i].expr_sql()}" for i in stats)
+        y = F.col(target).cast("double").alias("y")
+        rows = (
+            df.select(F.expr(f"stack({len(stats)}, {pairs}) AS (f, b)"), y)
+            .groupBy("f", "b")
+            .agg(F.count("*").alias("n"), F.avg("y").alias("m"))
+            .collect()
+        )
+        for r in rows:
+            stats[r.f].append([r.b, r.n, r.m])
+    return [_merge_prebins(p, stats[i], max_bins, min_frac) if i in stats else p for i, p in enumerate(pres)]
 
 
-def _merge_prebins(
-    df: DataFrame, pre: BinSpec, target: str, max_bins: int, min_frac: float
-) -> BinSpec:
-    if not pre.splits:
-        return pre
-    stats = (
-        df.select(pre.expr().alias("b"), F.col(target).cast("double").alias("y"))
-        .groupBy("b")
-        .agg(F.count("*").alias("n"), F.avg("y").alias("m"))
-        .collect()
-    )
+def _merge_prebins(pre: BinSpec, stats: list[list], max_bins: int, min_frac: float) -> BinSpec:
+    """Merge one column's observed pre-bins, `[id, count, mean]` rows."""
     # contiguous runs over observed pre-bins, sorted by id; edges between
     # run i and i+1 correspond to pre.splits boundary indices
-    bins = sorted([r.b, r.n, r.m] for r in stats)
-    total = sum(r.n for r in stats)
+    bins = sorted(stats)
+    total = sum(b[1] for b in bins)
 
     def merge_cost(i: int) -> float:
         (_, n1, m1), (_, n2, m2) = bins[i], bins[i + 1]

@@ -1,3 +1,7 @@
+import math
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from inferdb_spark.catalog import load_table
@@ -136,8 +140,47 @@ def test_fit_supervised_bins_counts_null_rows_in_null_bin(spark):
     assert a_non_null.splits == pre[1:]
 
 
-def test_fit_supervised_bins_job_count(spark, job_count):
-    df = _null_frame(spark)
-    cols = ["a", "b"]
+@pytest.mark.parametrize("n_cols", [1, 2, 4])
+def test_fit_supervised_bins_job_count(spark, job_count, n_cols):
+    """Two jobs for the pre-bin quantiles and two for the one stats groupBy,
+    whatever the column count.  A constant column has one pre-bin split; an
+    all-NULL one has none and stays out of the stats job."""
+    xs = [f"x{j}" for j in range(n_cols)]
+    df = spark.createDataFrame(
+        [(*(float((i * (j + 7)) % 101) for j in range(n_cols)), 3.0, None, float(i % 2)) for i in range(400)],
+        ", ".join(f"{c} double" for c in [*xs, "k", "z", "y"]),
+    )
+    cols = [*xs, "k", "z"]
     n = job_count(lambda: fit_supervised_bins(df, cols, "y", max_bins=4, pre_bins=16))
-    assert n <= 2 + 2 * len(cols)
+    assert n <= 4
+
+
+def _spark_gt(x: float, s: float) -> bool:
+    """x > s in Spark's double order: NaN is above +inf and equal to itself,
+    and -0.0 equals 0.0."""
+    return not math.isnan(s) and (math.isnan(x) or x > s)
+
+
+def test_numeric_chain_equals_count_of_splits_below(spark):
+    """The CASE chain over splits given in any order, with duplicates,
+    infinities and NaN, bins every value as #{s : x > s} under Spark's
+    comparison; NULL goes to a non-zero null_bin."""
+    rng = random.Random(7)
+    special = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 1e300, -2.5]
+    specs = []
+    for k in range(60):
+        splits = [
+            rng.choice(special) if rng.random() < 0.4 else rng.randint(-4, 4) / 2
+            for _ in range(rng.randint(0, 9))
+        ]
+        splits += rng.sample(splits, min(len(splits), k % 3))  # duplicates
+        rng.shuffle(splits)
+        specs.append(BinSpec(column="x", splits=splits, null_bin=1 + k % 5))
+    on_splits = {s for spec in specs for s in spec.splits if not math.isnan(s)}
+    xs = [None, *special, *on_splits, *(math.nextafter(s, math.inf) for s in on_splits), 0.3, -7.0]
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    got = df.select("x", *[spec.expr().alias(f"b{i}") for i, spec in enumerate(specs)]).collect()
+    for row in got:
+        x = row[0]
+        want = [spec.null_bin if x is None else sum(_spark_gt(x, s) for s in spec.splits) for spec in specs]
+        assert list(row[1:]) == want, x
