@@ -43,16 +43,17 @@ _MC_BIN_SQL = " + ".join(
 def q_multiclass_prebin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(prebin, class) counts — the ONE aggregation
     MulticlassOptimalBinning's fit ships through the shuffle
-    (operators/optimal_binning.multiclass_prebin_relation; reference fits
-    MulticlassOptimalBinning at src/encoder.py:49-55).  Output is
-    <= pre_bins x n_classes rows whatever the table size."""
-    from inferdb_spark.operators.optimal_binning import (
-        multiclass_prebin_relation,
-    )
+    (operators/binning._prebin_stats, the stack groupBy behind every
+    numeric fit; reference fits MulticlassOptimalBinning at
+    src/encoder.py:49-55).  Output is <= pre_bins x n_classes rows
+    whatever the table size."""
+    from inferdb_spark.operators.binning import _prebin_stats
 
     li = load_table(spark, sf_dir, "lineitem")
     pre = BinSpec(column="l_quantity", kind="numeric", splits=MC_EDGES)
-    return multiclass_prebin_relation(li, pre, "l_returnflag").select(
+    return _prebin_stats(
+        li, {0: pre.expr_sql()}, F.col("l_returnflag").cast("string"), [F.count("*").alias("n")], by_class=True
+    ).select(
         F.col("b").cast("int").alias("b"),
         F.col("y"),
         F.col("n").cast("long").alias("n"),

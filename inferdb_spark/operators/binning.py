@@ -143,17 +143,26 @@ def fit_supervised_bins(
     # columns whose pre-bins have no split stay as they are, out of the stack
     stats: dict[int, list] = {i: [] for i, p in enumerate(pres) if p.splits}
     if stats:
-        pairs = ", ".join(f"{i}, {pres[i].expr_sql()}" for i in stats)
-        y = F.col(target).cast("double").alias("y")
-        rows = (
-            df.select(F.expr(f"stack({len(stats)}, {pairs}) AS (f, b)"), y)
-            .groupBy("f", "b")
-            .agg(F.count("*").alias("n"), F.avg("y").alias("m"))
-            .collect()
-        )
-        for r in rows:
+        y = F.col(target).cast("double")
+        aggs = [F.count("*").alias("n"), F.avg("y").alias("m")]
+        for r in _prebin_stats(df, {i: pres[i].expr_sql() for i in stats}, y, aggs).collect():
             stats[r.f].append([r.b, r.n, r.m])
     return [_merge_prebins(p, stats[i], max_bins, min_frac) if i in stats else p for i, p in enumerate(pres)]
+
+
+def _prebin_stats(
+    df: DataFrame, prebins: dict[int, str], y: Column, aggs: list[Column], by_class: bool = False
+) -> DataFrame:
+    """`aggs` per (f, b[, y]) over one `stack` of every column's pre-bin id:
+    f a key of `prebins`, b the value of its SQL expression, y the target
+    `y` (a group key too when `by_class`).  One shuffle for all columns."""
+    pairs = ", ".join(f"{f}, {e}" for f, e in prebins.items())
+    keys = ["f", "b", "y"] if by_class else ["f", "b"]
+    return (
+        df.select(F.expr(f"stack({len(prebins)}, {pairs}) AS (f, b)"), y.alias("y"))
+        .groupBy(*keys)
+        .agg(*aggs)
+    )
 
 
 def _merge_prebins(pre: BinSpec, stats: list[list], max_bins: int, min_frac: float) -> BinSpec:

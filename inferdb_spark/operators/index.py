@@ -45,7 +45,7 @@ from functools import cached_property
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from inferdb_spark.operators.binning import BinSpec, apply_bins, key_expr
+from inferdb_spark.operators.binning import BinSpec, apply_bins
 from inferdb_spark.operators.iv import key_table, rollup
 
 BIN_SUFFIX = "_bin"
@@ -97,6 +97,11 @@ def _domain_size(specs: list[BinSpec]) -> int:
     return math.prod(s.domain for s in specs)
 
 
+def _domain_keys(specs: list[BinSpec]):
+    """Dot-joined key of every bin tuple of the domain, row-major."""
+    return (".".join(map(str, bins)) for bins in itertools.product(*(range(s.domain) for s in specs)))
+
+
 def _fill_table(
     specs: list[BinSpec], levels: dict[int, dict[str, float | None]], global_value: float
 ) -> list[float]:
@@ -109,8 +114,8 @@ def _fill_table(
         for L in range(len(specs), 0, -1)
     ]
     table = []
-    for bins in itertools.product(*(range(s.domain) for s in specs)):
-        key, v = ".".join(map(str, bins)), global_value
+    for key in _domain_keys(specs):
+        v = global_value
         for m in maps:
             if key in m:
                 v = m[key]
@@ -240,17 +245,11 @@ def load_index(spark: SparkSession, path: str) -> KVIndex:
 def unseen_paths(index: KVIndex) -> DataFrame:
     """All bin-id combinations NOT present in the kv relation — the
     reference's populate_paths set difference (src/transpiler.py:930-938,
-    J10/U1): cross join of the tiny per-feature bin domains (null bins
-    included), then an anti join against the stored keys."""
-    spark = index.kv.sparkSession
-    domain = None
-    for s in index.specs:
-        d = spark.createDataFrame(
-            [(b,) for b in range(s.domain)], f"`{s.column}{BIN_SUFFIX}` int"
-        )
-        domain = d if domain is None else domain.crossJoin(d)
-    all_keys = domain.select(key_expr(index.specs, BIN_SUFFIX).alias("key"))
-    return all_keys.join(index.kv.select("key"), "key", "left_anti")
+    J10/U1): the driver walks the bin domain (null bins included) minus
+    the stored keys, and returns a local relation (no Spark job)."""
+    stored = {r.key for r in index.kv.collect()}
+    keys = [key for key in _domain_keys(index.specs) if key not in stored]
+    return index.kv.sparkSession.createDataFrame(pa.table({"key": pa.array(keys, pa.string())}))
 
 
 def index_size_info(index: KVIndex) -> dict:

@@ -1,33 +1,39 @@
 """Optimal supervised binning — the optbinning-grade path (SURVEY.md §7.2).
 
 The reference fits `optbinning.OptimalBinning` / `ContinuousOptimalBinning`
-per feature (/root/reference/src/encoder.py:35-97): CART-style pre-binning,
-then an optimal merge under a monotonic-trend constraint (classification
-maximizes IV, regression minimizes within-bin variance).  Round 1 shipped
-a greedy adjacent-merge stand-in (binning.py:fit_supervised_bins); this
-module closes the quality gap with an EXACT segmentation:
+/ `MulticlassOptimalBinning` per feature (/root/reference/src/encoder.py:
+35-97): pre-binning, then an optimal merge under a monotonic-trend
+constraint (classification maximizes IV, regression minimizes within-bin
+variance).  `binning.fit_supervised_bins` is a greedy adjacent-merge
+stand-in; this module closes the quality gap with an EXACT segmentation
+over the same distributed front:
 
-- *fit* stays fully distributed: quantile pre-binning (Spark exact
-  percentile) + ONE groupBy producing <= pre_bins rows of sufficient
-  statistics (n, sum_y, sum_y2, n_pos) — table size never touches the
-  driver;
+- *fit* stays fully distributed and takes every column at once, as
+  `fit_supervised_bins` does: one exact multi-column percentile pass for
+  the quantile pre-bins, then ONE groupBy over a `stack` of every column's
+  pre-bin id producing <= pre_bins rows per column of sufficient
+  statistics (n, sum_y, sum_y2, n_pos; per class for multiclass) — table
+  size never touches the driver, and the job count does not grow with the
+  column count;
 - the driver then solves the optimal contiguous-partition problem exactly
   by dynamic programming over those aggregates: O(P^2 * K) states/
   transitions with interval costs from prefix sums (P = pre_bins <= 64,
   K = max_bins <= 16 — microseconds);
 - objective: regression = minimal total within-bin SSE (what
   ContinuousOptimalBinning's variance criterion targets); classification =
-  maximal Information Value (OptimalBinning's default);
+  maximal Information Value (OptimalBinning's default); multiclass =
+  maximal Σ one-vs-rest IV;
 - constraints mirrored from optbinning: minimum bin support
   (`min_frac`), and a monotonic bin-mean / event-rate trend with
-  'auto' direction chosen by the support-weighted sign of the
-  prebin-level trend (optbinning's monotonic_trend='auto_heuristic').
+  'auto' direction (optbinning's monotonic_trend='auto_heuristic'); one
+  relaxation ladder (`_solve`) serves numeric, multiclass and categorical
+  fits.
 
 Exactness: for the chosen K and the given pre-bins, no partition has
 lower SSE / higher IV (property-tested against brute-force enumeration in
 tests/test_binning_quality.py).  tests also measure end-model quality
 (index RMSLE / accuracy) greedy vs optimal on the creditcard-like and
-pm25-like fixtures; deltas recorded in BINNING_QUALITY.md.
+pm25-like fixtures; figures recorded in BINNING_QUALITY.md.
 """
 
 from __future__ import annotations
@@ -38,7 +44,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from inferdb_spark.operators.binning import BinSpec, fit_quantile_bins
+from inferdb_spark.operators.binning import (
+    BinSpec,
+    _prebin_stats,
+    _quantile_bins,
+    _sql_double,
+    _sql_ident,
+)
 
 
 @dataclass
@@ -50,30 +62,6 @@ class _PrebinStats:
     sum_y: list[float]
     sum_y2: list[float]
     n_pos: list[int]
-
-
-def _collect_prebin_stats(
-    df: DataFrame, pre: BinSpec, target: str
-) -> _PrebinStats:
-    rows = (
-        df.select(pre.expr().alias("b"), F.col(target).cast("double").alias("y"))
-        .groupBy("b")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("y") * F.col("y")).alias("sy2"),
-            F.sum(F.when(F.col("y") > 0, 1).otherwise(0)).alias("np"),
-        )
-        .orderBy("b")
-        .collect()
-    )
-    return _PrebinStats(
-        ids=[r.b for r in rows],
-        n=[r.n for r in rows],
-        sum_y=[float(r.sy) for r in rows],
-        sum_y2=[float(r.sy2) for r in rows],
-        n_pos=[int(r.np) for r in rows],
-    )
 
 
 def _auto_trend(stats: _PrebinStats, task: str) -> int:
@@ -236,40 +224,48 @@ def _solve_partition(
     return sign * c, ends
 
 
+def _solve(stats, task: str, k: int, min_frac: float, trends: list) -> list[int]:
+    """Segment ends of the task's best partition of `stats` at the first
+    feasible rung: the candidate `trends` under the min_frac support floor,
+    then no trend under it, then neither (a single segment is always
+    feasible).  optbinning relaxes before it fails, and a trend
+    infeasibility must not silently void min_frac."""
+    if task == "multiclass":
+        (P, value, mean, support), minimize = _segment_gain_iv_multiclass(stats), False
+    elif task == "classification":
+        (P, value, mean, support), minimize = _segment_gain_iv(stats), False
+    else:
+        (P, value, mean, support), minimize = _segment_cost_sse(stats), True
+    min_support = max(1, int(math.ceil(min_frac * sum(stats.n))))
+    for rung in ([(t, min_support) for t in trends], [(None, min_support)], [(None, 1)]):
+        sols = [
+            s
+            for t, ms in rung
+            if (s := _solve_partition(P, k, value, mean, support, minimize, ms, t)) is not None
+        ]
+        if sols:
+            return (min if minimize else max)(sols, key=lambda s: s[0])[1]
+    raise AssertionError("a single segment is always feasible")
+
+
+def _iqr_bounds(df: DataFrame, columns: list[str], k: float = 1.5) -> list[tuple[float, float] | None]:
+    """[Q1 - k*IQR, Q3 + k*IQR] of every column from one select of exact
+    interpolated percentiles (the (n-1)*p rule of DuckDB's quantile_cont,
+    so the bounds are engine-portable); None for an all-NULL column."""
+    quartiles = F.array(F.lit(0.25), F.lit(0.75))
+    row = df.select(*(F.percentile(F.col(c).cast("double"), quartiles) for c in columns)).first()
+    return [None if q is None else (q[0] - k * (q[1] - q[0]), q[1] + k * (q[1] - q[0])) for q in row]
+
+
 def iqr_range_filter(
     df: DataFrame, column: str, k: float = 1.5
 ) -> DataFrame:
-    """optbinning's `outlier_detector='range'` pre-filter: drop fit rows
-    outside [Q1 - k*IQR, Q3 + k*IQR] (interquartile-range method).  Only
-    the FIT sees the filtered relation; transform still routes outliers
-    into the edge bins.  Every reference optbinning call passes this
-    (/root/reference/src/encoder.py:38-44).  One exact interpolated
-    percentile aggregate (same (n-1)*p definition as DuckDB
-    quantile_cont, so the bounds are engine-portable); the filter is a
-    pushed-down predicate on the scan."""
-    row = df.select(
-        F.percentile(
-            F.col(column).cast("double"), F.array(F.lit(0.25), F.lit(0.75))
-        ).alias("q")
-    ).first()
-    q1, q3 = float(row["q"][0]), float(row["q"][1])
-    lo, hi = q1 - k * (q3 - q1), q3 + k * (q3 - q1)
-    return df.where(
-        (F.col(column) >= F.lit(float(lo))) & (F.col(column) <= F.lit(float(hi)))
-    )
-
-
-def multiclass_prebin_relation(
-    df: DataFrame, pre: BinSpec, target: str
-) -> DataFrame:
-    """The distributed half of the multiclass fit as a relation:
-    ONE groupBy(prebin, class) -> counts, <= pre_bins x n_classes rows
-    (map-side combined, scale-independent output)."""
-    return (
-        df.select(pre.expr().alias("b"), F.col(target).cast("string").alias("y"))
-        .groupBy("b", "y")
-        .agg(F.count("*").alias("n"))
-    )
+    """optbinning's `outlier_detector='range'` pre-filter as a relation:
+    drop rows outside [Q1 - k*IQR, Q3 + k*IQR] (interquartile-range
+    method) with a pushed-down predicate on the scan.  Every reference
+    optbinning call passes it (/root/reference/src/encoder.py:38-44)."""
+    ((lo, hi),) = _iqr_bounds(df, [column], k)
+    return df.where(F.col(column).between(lo, hi))
 
 
 def categorical_stats_relation(
@@ -308,23 +304,38 @@ class _MulticlassStats:
         self.ids, self.n, self.cls, self.classes = ids, n, cls, classes
 
 
-def _collect_prebin_multiclass_stats(
-    df: DataFrame, pre: BinSpec, target: str
-) -> _MulticlassStats:
-    """ONE groupBy(prebin, class) -> counts; <= pre_bins x n_classes rows
-    reach the driver — scale-independent like the binary collector."""
-    rows = multiclass_prebin_relation(df, pre, target).orderBy("b", "y").collect()
-    classes = sorted({r.y for r in rows})
-    by_bin: dict[int, dict] = {}
-    for r in rows:
-        by_bin.setdefault(r.b, {})[r.y] = int(r.n)
-    ids = sorted(by_bin)
-    return _MulticlassStats(
-        ids=ids,
-        n=[sum(by_bin[b].values()) for b in ids],
-        cls=[by_bin[b] for b in ids],
-        classes=classes,
-    )
+def _numeric_stats(df: DataFrame, prebins: dict[int, str], target: str, task: str) -> dict:
+    """Every column's pre-bin statistics from ONE groupBy over a `stack` of
+    the `prebins` id expressions (`binning._prebin_stats`): <= pre_bins
+    rows per column (x n_classes for multiclass) reach the driver, which
+    sorts them.  A NULL pre-bin id (a masked row) drops out.  Multiclass: a
+    NULL target counts in its bin's n and is never a class (the policy of
+    `iv._iv_multiclass`)."""
+    if task == "multiclass":
+        y, aggs = F.col(target).cast("string"), [F.count("*").alias("n")]
+    else:  # a NULL target counts in n and adds 0 to the sums
+        y = F.coalesce(F.col(target).cast("double"), F.lit(0.0))
+        aggs = [
+            F.count("*").alias("n"),
+            F.sum("y").alias("sy"),
+            F.sum(F.col("y") * F.col("y")).alias("sy2"),
+            F.sum(F.when(F.col("y") > 0, 1).otherwise(0)).alias("np"),
+        ]
+    rows: dict[int, list] = {f: [] for f in prebins}
+    for r in _prebin_stats(df, prebins, y, aggs, by_class=task == "multiclass").collect():
+        if r.b is not None:
+            rows[r.f].append(r)
+    if task != "multiclass":  # (b, n, sy, sy2, np) rows sorted by b
+        return {f: _PrebinStats(*map(list, zip(*(r[1:] for r in sorted(rs))))) for f, rs in rows.items()}
+    out = {}
+    for f, rs in rows.items():
+        by_bin: dict[int, dict] = {}
+        for r in rs:
+            by_bin.setdefault(r.b, {})[r.y] = r.n
+        ids = sorted(by_bin)
+        cls = [by_bin[b] for b in ids]
+        out[f] = _MulticlassStats(ids, [sum(c.values()) for c in cls], cls, sorted({r.y for r in rs} - {None}))
+    return out
 
 
 def _segment_gain_iv_multiclass(stats: _MulticlassStats):
@@ -371,7 +382,7 @@ def _segment_gain_iv_multiclass(stats: _MulticlassStats):
 
 def fit_optimal_bins(
     df: DataFrame,
-    column: str,
+    columns: list[str],
     target: str,
     task: str = "regression",
     max_bins: int = 8,
@@ -379,8 +390,10 @@ def fit_optimal_bins(
     min_frac: float = 0.01,
     monotonic: str | int | None = "auto",
     outlier_detector: str | None = None,
-) -> BinSpec:
-    """Fit optbinning-semantics optimal bins, fully scalable.
+) -> list[BinSpec]:
+    """Fit optbinning-semantics optimal bins of every column, fully scalable:
+    one quantile pass and one stats job whatever the column count (one
+    more percentile select with `outlier_detector='range'`).
 
     task='regression' minimizes within-bin SSE (ContinuousOptimalBinning);
     task='classification' maximizes IV (OptimalBinning);
@@ -388,102 +401,62 @@ def fit_optimal_bins(
     reference /root/reference/src/encoder.py:49-55 — there the trend
     constraint is per-class, here it is unconstrained by default:
     documented divergence, the split *objective* matches).  monotonic:
-    'auto' picks the trend direction heuristically, +1/-1 force it, None
-    drops the constraint.  outlier_detector='range' excludes IQR-range
-    outliers from the fit (src/encoder.py:38-44).  Falls back to the
-    unconstrained optimum if the monotone problem is infeasible under the
-    support constraint (again matching optbinning, which relaxes before
-    failing).
+    'auto' picks the trend heuristically, +1/-1 force it, None drops the
+    constraint.  outlier_detector='range' fits each column only on its
+    rows inside the IQR range (src/encoder.py:38-44): the column is masked
+    with `CASE WHEN c BETWEEN lo AND hi` in both passes, so a NULL or
+    outlying value leaves that column's fit only.  Without it a NULL
+    feature counts in pre-bin 0, its null bin.  Falls back to the
+    unconstrained optimum if the trend is infeasible under the support
+    constraint (again matching optbinning, which relaxes before failing).
     """
+    masks = [None] * len(columns)
     if outlier_detector == "range":
-        df = iqr_range_filter(df, column)
-    pre = fit_quantile_bins(df, column, pre_bins)
-    if not pre.splits:
-        return pre
-    if task == "multiclass":
-        mstats = _collect_prebin_multiclass_stats(df, pre, target)
-        if len(mstats.ids) <= 1:
-            return BinSpec(column=column, kind="numeric", splits=[])
-        P, value, mean, support = _segment_gain_iv_multiclass(mstats)
-        total = sum(mstats.n)
-        min_support = max(1, int(math.ceil(min_frac * total)))
-        # multiclass 'auto' = no trend (per-class monotonicity is not a
-        # single-sequence constraint); forced +1/-1 constrains the share
-        # of classes[0] (lexicographically first — document your class
-        # labels accordingly)
-        trends: list = (
-            [None] if monotonic in ("auto", None) else [int(monotonic)]
-        )
-        sol = None
-        for t in trends:
-            sol = _solve_partition(
-                P, max_bins, value, mean, support, False, min_support, t
-            )
-            if sol is not None:
-                break
-        # relaxation mirrors the binary path: drop the trend FIRST (keep
-        # the support floor), only then drop support — a forced-trend
-        # infeasibility must not silently void min_frac
-        if sol is None and trends != [None]:
-            sol = _solve_partition(
-                P, max_bins, value, mean, support, False, min_support, None
-            )
-        if sol is None:
-            sol = _solve_partition(P, max_bins, value, mean, support, False, 1, None)
-        assert sol is not None
-        _, ends = sol
-        splits = [
-            pre.splits[mstats.ids[t]]
-            for t in ends[:-1]
-            if mstats.ids[t] < len(pre.splits)
+        masks = [
+            b and f"{_sql_ident(c)} BETWEEN {_sql_double(b[0])} AND {_sql_double(b[1])}"
+            for c, b in zip(columns, _iqr_bounds(df, columns))
         ]
-        return BinSpec(column=column, kind="numeric", splits=sorted(set(splits)))
-    stats = _collect_prebin_stats(df, pre, target)
-    if len(stats.ids) <= 1:
-        return BinSpec(column=column, kind="numeric", splits=[])
 
-    if task == "classification":
-        P, value, mean, support = _segment_gain_iv(stats)
-        minimize = False
-    else:
-        P, value, mean, support = _segment_cost_sse(stats)
-        minimize = True
+    def masked(i: int, expr: str) -> str:
+        return f"CASE WHEN {masks[i]} THEN {expr} END" if masks[i] else expr
 
-    total = sum(stats.n)
-    min_support = max(1, int(math.ceil(min_frac * total)))
+    quantile_df = df
+    if any(masks):
+        quantile_df = df.select(*(F.expr(masked(i, _sql_ident(c))).alias(c) for i, c in enumerate(columns)))
+    pres = _quantile_bins(quantile_df, columns, pre_bins)
+    # columns whose pre-bins have no split stay as they are, out of the stack
+    prebins = {i: masked(i, p.expr_sql()) for i, p in enumerate(pres) if p.splits}
+    stats = _numeric_stats(df, prebins, target, task) if prebins else {}
+    return [
+        _optimal_split(p, stats[i], task, max_bins, min_frac, monotonic) if i in stats else p
+        for i, p in enumerate(pres)
+    ]
 
-    if monotonic == "auto":
+
+def _optimal_split(
+    pre: BinSpec, stats, task: str, max_bins: int, min_frac: float, monotonic: str | int | None
+) -> BinSpec:
+    """Solve one column over its observed pre-bins."""
+    if len(stats.ids) <= 1 or task == "multiclass" and not stats.classes:
+        return BinSpec(column=pre.column, kind="numeric", splits=[])
+    if task == "multiclass":
+        # 'auto' = no trend (per-class monotonicity is not a single-sequence
+        # constraint); forced +1/-1 constrains the share of classes[0]
+        # (lexicographically first — document your class labels accordingly)
+        trends: list = [None] if monotonic in ("auto", None) else [int(monotonic)]
+    elif monotonic == "auto":
         # auto_heuristic: best feasible unimodal shape by objective.  Peak
         # subsumes ascending (empty falling leg) and valley subsumes
         # descending, so {peak, valley} covers all four monotone shapes.
-        candidates: list = ["peak", "valley"]
-    elif monotonic in (1, -1):
-        candidates = [int(monotonic)]
+        trends = ["peak", "valley"]
     else:
-        candidates = [None]
-
-    sols = [
-        s
-        for t in candidates
-        if (s := _solve_partition(P, max_bins, value, mean, support, minimize, min_support, t))
-        is not None
-    ]
-    sol = (min if minimize else max)(sols, key=lambda s: s[0]) if sols else None
-    if sol is None and candidates != [None]:  # relax monotonicity
-        sol = _solve_partition(P, max_bins, value, mean, support, minimize, min_support, None)
-    if sol is None:  # relax support
-        sol = _solve_partition(P, max_bins, value, mean, support, minimize, 1, None)
-    assert sol is not None  # k>=1 single segment is always feasible
-    _, ends = sol
+        trends = [int(monotonic)] if monotonic in (1, -1) else [None]
+    ends = _solve(stats, task, max_bins, min_frac, trends)
     # segment end t (observed-prebin position) -> boundary after prebin id
     # stats.ids[t]; pre.splits index == that prebin id (bin i upper edge is
     # splits[i]) — identical mapping to fit_supervised_bins
-    splits = [
-        pre.splits[stats.ids[t]]
-        for t in ends[:-1]
-        if stats.ids[t] < len(pre.splits)
-    ]
-    return BinSpec(column=column, kind="numeric", splits=sorted(set(splits)))
+    splits = [pre.splits[stats.ids[t]] for t in ends[:-1] if stats.ids[t] < len(pre.splits)]
+    return BinSpec(column=pre.column, kind="numeric", splits=sorted(set(splits)))
 
 
 def fit_optimal_categorical_bins(
@@ -524,9 +497,9 @@ def fit_optimal_categorical_bins(
                 F.when(F.col(target).cast("double") > 0, 1).otherwise(0)
             ).alias("np"),
         )
-        .orderBy("v")
         .collect()
     )
+    rows.sort(key=lambda r: r.v)
     if len(rows) <= 1:
         return BinSpec(
             column=column, kind="categorical", groups=[[r.v for r in rows]] if rows else []
@@ -560,22 +533,9 @@ def fit_optimal_categorical_bins(
         sum_y2=[c[3] for c in cats],
         n_pos=[c[4] for c in cats],
     )
-    if task == "classification":
-        P, value, mean, support = _segment_gain_iv(stats)
-        minimize = False
-    else:
-        P, value, mean, support = _segment_cost_sse(stats)
-        minimize = True
-    min_support = max(1, int(math.ceil(min_frac * total)))
     # mean-ordered sequence => the trend is ascending by construction;
     # no extra constraint needed
-    sol = _solve_partition(
-        P, max_bins, value, mean, support, minimize, min_support, None
-    )
-    if sol is None:
-        sol = _solve_partition(P, max_bins, value, mean, support, minimize, 1, None)
-    assert sol is not None
-    _, ends = sol
+    ends = _solve(stats, "classification" if task == "classification" else "regression", max_bins, min_frac, [None])
     groups: list[list[str]] = []
     start = 0
     for e in ends:

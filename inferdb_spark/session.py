@@ -49,7 +49,7 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS) which the vectorized parquet
         # reader rejects; read as long and convert (see catalog.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _half_of_physical_memory()))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -57,6 +57,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _half_of_physical_memory() -> str:
+    """Default driver heap: half the host's physical memory, so a long
+    local run cannot grow its heap past what the machine holds."""
+    return f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 2 >> 20}m"
 
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:

@@ -132,7 +132,7 @@ def test_dp_unconstrained_objective_dominance(spark):
         fit_supervised_bins,
     )
     from inferdb_spark.operators.optimal_binning import (
-        _collect_prebin_stats,
+        _numeric_stats,
         _segment_cost_sse,
     )
     import sys
@@ -143,12 +143,12 @@ def test_dp_unconstrained_objective_dominance(spark):
     df = make_pm25_like(spark, n=4000)
     col, pre_bins, max_bins = "weekofyear", 24, 5
     (greedy,) = fit_supervised_bins(df, [col], "target", max_bins=max_bins, pre_bins=pre_bins)
-    optimal = fit_optimal_bins(
-        df, col, "target", task="regression", max_bins=max_bins,
+    (optimal,) = fit_optimal_bins(
+        df, [col], "target", task="regression", max_bins=max_bins,
         pre_bins=pre_bins, monotonic=None, min_frac=0.0,
     )
     pre = fit_quantile_bins(df, col, pre_bins)
-    stats = _collect_prebin_stats(df, pre, "target")
+    stats = _numeric_stats(df, {0: pre.expr_sql()}, "target", "regression")[0]
     _P, cost, _m, _s = _segment_cost_sse(stats)
     id2pos = {b: i for i, b in enumerate(stats.ids)}
 
@@ -185,8 +185,8 @@ def test_fit_optimal_bins_end_to_end(spark):
     from tools.binning_quality_report import make_creditcard_like
 
     df = make_creditcard_like(spark, n=4000)
-    spec = fit_optimal_bins(
-        df, "f0", "target", task="classification", max_bins=5, pre_bins=24
+    (spec,) = fit_optimal_bins(
+        df, ["f0"], "target", task="classification", max_bins=5, pre_bins=24
     )
     assert spec.kind == "numeric"
     assert 1 <= len(spec.splits) <= 4
@@ -249,8 +249,8 @@ def test_fit_optimal_bins_multiclass_end_to_end(spark):
     noise = rng.rand(n) < 0.05
     y = np.where(noise, rng.choice(["a", "b", "c"], n), y)
     df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y})).localCheckpoint()
-    spec = fit_optimal_bins(
-        df, "x", "y", task="multiclass", max_bins=4, pre_bins=32
+    (spec,) = fit_optimal_bins(
+        df, ["x"], "y", task="multiclass", max_bins=4, pre_bins=32
     )
     assert spec.splits, "multiclass fit produced no splits"
     assert any(abs(s - 10) < 1.5 for s in spec.splits), spec.splits
@@ -320,10 +320,87 @@ def test_outlier_range_filter_parity(spark):
     df_clean = spark.createDataFrame(clean).localCheckpoint()
     df_dirty = spark.createDataFrame(dirty).localCheckpoint()
     kw = dict(task="regression", max_bins=4, pre_bins=16)
-    s_clean = fit_optimal_bins(df_clean, "x", "y", **kw)
-    s_filtered = fit_optimal_bins(
-        df_dirty, "x", "y", outlier_detector="range", **kw
+    (s_clean,) = fit_optimal_bins(df_clean, ["x"], "y", **kw)
+    (s_filtered,) = fit_optimal_bins(
+        df_dirty, ["x"], "y", outlier_detector="range", **kw
     )
-    s_unfiltered = fit_optimal_bins(df_dirty, "x", "y", **kw)
+    (s_unfiltered,) = fit_optimal_bins(df_dirty, ["x"], "y", **kw)
     assert s_filtered.splits == s_clean.splits
     assert s_unfiltered.splits != s_clean.splits
+
+
+def _mixed_frame(spark, n=2000):
+    """x0 with NULLs and far outliers, x1 clean, k constant; a numeric
+    target y and a class label c with NULLs."""
+    rows = []
+    for i in range(n):
+        x0 = None if i % 9 == 0 else (1e6 if i % 97 == 0 else float((i * 13) % 101))
+        x1 = float((i * 7) % 89)
+        y = float((x1 > 40) * 2 + (i % 3))
+        c = None if i % 11 == 0 else ("a" if x1 < 30 else "b" if (x0 or 0) < 50 else "c")
+        rows.append((x0, x1, 3.0, y, c))
+    return spark.createDataFrame(rows, "x0 double, x1 double, k double, y double, c string")
+
+
+_TARGETS = {"regression": "y", "classification": "y", "multiclass": "c"}
+
+
+@pytest.mark.parametrize("outlier_detector", [None, "range"])
+@pytest.mark.parametrize("task", ["regression", "classification", "multiclass"])
+def test_fit_optimal_bins_columns_fit_independently(spark, task, outlier_detector):
+    """A multi-column fit equals one-column fits: a NULL or outlying x0
+    leaves only x0's fit, and the constant column keeps no split."""
+    df = _mixed_frame(spark).localCheckpoint()
+    cols = ["x0", "x1", "k"]
+    kw = dict(task=task, max_bins=4, pre_bins=16, outlier_detector=outlier_detector)
+    together = fit_optimal_bins(df, cols, _TARGETS[task], **kw)
+    alone = [fit_optimal_bins(df, [c], _TARGETS[task], **kw)[0] for c in cols]
+    assert [s.column for s in together] == cols
+    assert [s.splits for s in together] == [s.splits for s in alone]
+    assert together[2].splits == []
+    assert together[0].splits and together[1].splits
+    if outlier_detector == "range":
+        assert max(together[0].splits) < 1e6
+
+
+@pytest.mark.parametrize("n_cols", [1, 2, 4])
+@pytest.mark.parametrize("task", ["regression", "classification", "multiclass"])
+def test_fit_optimal_bins_job_count(spark, job_count, task, n_cols):
+    """One quantile pass and one stats job whatever the column count; the
+    range mode adds one percentile select, a global aggregate whose shuffle
+    map stage adaptive execution runs as a job of its own."""
+    xs = [f"x{j}" for j in range(n_cols)]
+    df = spark.createDataFrame(
+        [(*(float((i * (j + 7)) % 101) for j in range(n_cols)), float(i % 2), "ab"[i % 2]) for i in range(400)],
+        ", ".join(f"{c} double" for c in xs) + ", y double, c string",
+    )
+    kw = dict(task=task, max_bins=4, pre_bins=16)
+    target = "c" if task == "multiclass" else "y"
+    assert job_count(lambda: fit_optimal_bins(df, xs, target, **kw)) <= 4
+    assert job_count(lambda: fit_optimal_bins(df, xs, target, outlier_detector="range", **kw)) <= 6
+
+
+def test_fit_optimal_bins_null_targets(spark):
+    """Multiclass: a NULL target counts in its bin's n and is never a class,
+    as in iv._iv_multiclass; an all-NULL target leaves no split.  Regression:
+    a pre-bin whose targets are all NULL fits with zero sums."""
+    from pyspark.sql import functions as F
+
+    from inferdb_spark.operators.binning import fit_quantile_bins
+    from inferdb_spark.operators.optimal_binning import _numeric_stats
+
+    rows = [
+        (float(i), None if i % 7 == 0 else "abc"[(i // 34) % 3], None if i < 20 else float(i // 50))
+        for i in range(100)
+    ]
+    df = spark.createDataFrame(rows, "x double, c string, y double")
+    (spec,) = fit_optimal_bins(df, ["x"], "c", task="multiclass", max_bins=3, pre_bins=8)
+    assert 1 <= len(spec.splits) <= 2
+    pre = fit_quantile_bins(df, "x", 8)
+    stats = _numeric_stats(df, {0: pre.expr_sql()}, "c", "multiclass")[0]
+    assert stats.classes == ["a", "b", "c"]
+    assert sum(stats.n) == 100
+    none = df.withColumn("c", F.lit(None).cast("string"))
+    assert fit_optimal_bins(none, ["x"], "c", task="multiclass", max_bins=3, pre_bins=8)[0].splits == []
+    (spec,) = fit_optimal_bins(df, ["x"], "y", task="regression", max_bins=3, pre_bins=8)
+    assert spec.splits

@@ -66,7 +66,7 @@ def test_index_save_load_roundtrip(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_unseen_paths(spark):
+def test_unseen_paths(spark, job_count):
     rows = [(0.0, 0.0, 1.0), (4.0, 0.0, 2.0)]  # only 2 of 3*2 paths stored
     train = spark.createDataFrame(rows, "x double, z double, y double")
     specs = [BinSpec(column="x", splits=[1.5, 3.5]), BinSpec(column="z", splits=[1.5])]
@@ -79,6 +79,7 @@ def test_unseen_paths(spark):
     idx = build_index(train, specs, "y")
     missing = {r.key for r in unseen_paths(idx).collect()}
     assert missing == {"0.1", "1.0", "1.1", "2.0", "2.1", "3.1"}
+    assert job_count(lambda: unseen_paths(idx).collect()) == 0
 
 
 def test_iv_multiclass_prefers_informative_feature(spark):

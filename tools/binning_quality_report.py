@@ -83,20 +83,24 @@ def compare_binning(
 ) -> dict:
     """Fit greedy vs optimal bins on train, build the kv index with each,
     score test, return end metrics + in-sample objective values."""
-    from inferdb_spark.operators.binning import apply_bins, fit_supervised_bins
+    from inferdb_spark.operators.binning import _quantile_bins, fit_supervised_bins
     from inferdb_spark.operators.index import build_index
     from inferdb_spark.operators.metrics import rmsle
     from inferdb_spark.operators.optimal_binning import (
-        _collect_prebin_stats,
+        _numeric_stats,
         _segment_cost_sse,
         _segment_gain_iv,
         fit_optimal_bins,
     )
-    from inferdb_spark.operators.binning import fit_quantile_bins
     from inferdb_spark.operators.scoring import index_score
 
     train = df.filter(F.col("row_id") % 5 != 0).cache()
     test = df.filter(F.col("row_id") % 5 == 0)
+    objective_task = "classification" if task == "classification" else "regression"
+    # the shared prebin space both fits start from: one quantile pass and
+    # one stats job over every feature
+    pres = _quantile_bins(train, features, pre_bins)
+    stats = _numeric_stats(train, {i: p.expr_sql() for i, p in enumerate(pres)}, "target", objective_task)
 
     out: dict = {"task": task, "features": features}
     specs = {}
@@ -106,14 +110,10 @@ def compare_binning(
                 train, features, "target", max_bins=max_bins, pre_bins=pre_bins
             )
         else:
-            fitted = [
-                fit_optimal_bins(
-                    train, c, "target",
-                    task="classification" if task == "classification" else "regression",
-                    max_bins=max_bins, pre_bins=pre_bins,
-                )
-                for c in features
-            ]
+            fitted = fit_optimal_bins(
+                train, features, "target", task=objective_task,
+                max_bins=max_bins, pre_bins=pre_bins,
+            )
         specs[method] = fitted
         index = build_index(train, fitted, "target", task=task)
         scored = index_score(test, index)
@@ -131,21 +131,15 @@ def compare_binning(
             out[f"{method}_accuracy"] = float(acc)
         # in-sample objective on the SAME prebin partition space
         obj = 0.0
-        for c, s in zip(features, fitted):
-            pre = fit_quantile_bins(train, c, pre_bins)
-            stats = _collect_prebin_stats(train, pre, "target")
+        for i, (pre, s) in enumerate(zip(pres, fitted)):
             if task == "classification":
-                P, gain, _m, _s = _segment_gain_iv(stats)
+                P, gain, _m, _s = _segment_gain_iv(stats[i])
             else:
-                P, gain, _m, _s = _segment_cost_sse(stats)
-            # segment boundaries of fitted spec in prebin space
-            id2pos = {b: i for i, b in enumerate(stats.ids)}
+                P, gain, _m, _s = _segment_cost_sse(stats[i])
             # map each observed prebin to its fitted bin, accumulate spans
             spans: dict[int, list[int]] = {}
-            for b, pos in id2pos.items():
-                fitted_bin = sum(
-                    1 for sp in s.splits if pre.splits and _prebin_upper(pre, b) > sp
-                )
+            for pos, b in enumerate(stats[i].ids):
+                fitted_bin = sum(1 for sp in s.splits if _prebin_upper(pre, b) > sp)
                 spans.setdefault(fitted_bin, []).append(pos)
             for poss in spans.values():
                 obj += gain(min(poss), max(poss))
@@ -162,6 +156,15 @@ def _prebin_upper(pre, b: int) -> float:
     if b >= len(pre.splits):
         return pre.splits[-1] + 1.0
     return (pre.splits[b - 1] + pre.splits[b]) / 2.0
+
+
+def _reading(metric: str, greedy: float, optimal: float, higher_better: bool, fmt: str) -> str:
+    """One line saying which method the figure favors."""
+    if greedy == optimal:
+        return f"- {metric}: a tie ({greedy:{fmt}})"
+    dp_wins = (optimal > greedy) == higher_better
+    win, lose = (optimal, greedy) if dp_wins else (greedy, optimal)
+    return f"- {metric} favors {'the DP' if dp_wins else 'greedy'} ({win:{fmt}} vs {lose:{fmt}})"
 
 
 def main() -> None:
@@ -185,7 +188,7 @@ def main() -> None:
         "# BINNING_QUALITY — greedy merge vs exact-DP optimal bins",
         "",
         "Protocol: same quantile pre-bins (48), same features, same kv-index",
-        "build and broadcast-join scoring; only split placement differs.",
+        "build and scoring; only split placement differs.",
         "`objective` is the in-sample criterion on the shared prebin space",
         "(classification: total IV, higher better; regression: total",
         "within-bin SSE, lower better) — the DP is provably optimal there",
@@ -207,10 +210,17 @@ def main() -> None:
         "min-support + monotone/peak/valley trend constraints) EXACTLY —",
         "brute-force-verified; greedy is unconstrained, so its raw SSE can",
         "sit below the trend-constrained optimum while producing",
-        "non-monotone bins an optbinning user would never see.  End-model",
-        "metrics favor the DP on both fixtures (IV and RMSLE).  A user",
-        "porting a reference (optbinning) model should fit with",
-        "`fit_optimal_bins` for split-semantics parity.",
+        "non-monotone bins an optbinning user would never see.  On these",
+        "figures:",
+        "",
+        _reading("creditcard_like accuracy", cc["greedy_accuracy"], cc["optimal_accuracy"], True, ".4f"),
+        _reading("creditcard_like IV", cc["greedy_objective"], cc["optimal_objective"], True, ".4f"),
+        _reading("pm25_like RMSLE", pm["greedy_rmsle"], pm["optimal_rmsle"], False, ".4f"),
+        _reading("pm25_like SSE", pm["greedy_objective"], pm["optimal_objective"], False, ".1f"),
+        "",
+        "A user porting a reference (optbinning) model should fit with",
+        "`fit_optimal_bins` for split-semantics parity, whichever method",
+        "the end metric favors on a given fixture.",
         "",
     ]
     with open(os.path.join(repo, "BINNING_QUALITY.md"), "w") as f:
