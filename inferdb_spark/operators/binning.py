@@ -203,9 +203,14 @@ def fit_categorical_bins(
     stats = (
         df.groupBy(F.col(column).cast("string").alias("v"))
         .agg(F.count("*").alias("n"), F.avg(F.col(target).cast("double")).alias("m"))
-        .orderBy("m", "v")
         .collect()
     )
+    # Spark's ascending order for (m, v), sorted here rather than by an
+    # orderBy job: NULL first, NaN last, strings by code point (UTF-8 order)
+    stats.sort(key=lambda r: (
+        (0,) if r.m is None else (2,) if math.isnan(r.m) else (1, r.m),
+        (0,) if r.v is None else (1, r.v),
+    ))
     total = sum(r.n for r in stats) or 1
     groups: list[list[str]] = [[]]
     acc = 0

@@ -80,6 +80,41 @@ def test_fit_categorical_bins_orders_by_target(spark):
     assert spec.groups[0] == ["lo"]
 
 
+def test_fit_categorical_bins_sorts_as_spark_does(spark):
+    """The driver sort keeps Spark's ascending (mean, value) order: a NULL
+    mean (all-NULL target) first, NaN last, a NULL category first among
+    equal means, strings by code point."""
+    nan = float("nan")
+    rows = (
+        [("b", 1.0), ("a", 1.0), (None, 1.0), ("Z", 0.5), ("é", 0.5), ("e", 0.5)]
+        + [("nul", None), ("nan", nan), ("-z", -0.0), ("+z", 0.0), ("lo", -2.0)]
+    ) * 3
+    df = spark.createDataFrame(rows, "c string, y double")
+    spark_order = [
+        r.v
+        for r in df.groupBy(F.col("c").cast("string").alias("v"))
+        .agg(F.count("*").alias("n"), F.avg(F.col("y").cast("double")).alias("m"))
+        .orderBy("m", "v")
+        .collect()
+    ]
+    spec = fit_categorical_bins(df, "c", "y", max_groups=len(spark_order))
+    assert [v for g in spec.groups for v in g] == spark_order
+    assert spark_order[0] == "nul" and spark_order[-1] == "nan"
+    groups = fit_categorical_bins(df, "c", "y", max_groups=4).groups
+    assert len(groups) == 4 and [v for g in groups for v in g] == spark_order
+
+
+def test_fit_categorical_bins_job_count(spark, job_count):
+    """One groupBy and a collect: 2 jobs, no sort job."""
+    rows = [(f"c{i % 37}", float(i % 5)) for i in range(2000)]
+    df = spark.createDataFrame(rows, "c string, y double").cache()
+    df.count()
+    try:
+        assert job_count(lambda: fit_categorical_bins(df, "c", "y")) == 2
+    finally:
+        df.unpersist()
+
+
 def test_key_expr_format(spark):
     df = spark.createDataFrame([(1.0, 30.0)], "a double, b double")
     specs = [BinSpec(column="a", splits=[0.5]), BinSpec(column="b", splits=[10.0, 20.0])]

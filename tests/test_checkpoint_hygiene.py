@@ -59,9 +59,12 @@ def test_wordpiece_fit_leaves_at_most_final_checkpoint(spark):
     assert residual <= 1, f"wordpiece fit leaked {residual} checkpoints"
 
 
-def test_bpe_fit_leaves_at_most_final_checkpoint(spark):
+def test_bpe_fit_leaves_at_most_final_checkpoint(spark, monkeypatch):
+    from inferdb_spark.operators import bpe_train
     from inferdb_spark.operators.bpe_train import fit_bpe_merges
 
+    # the Spark rounds: the driver rounds checkpoint nothing to leak
+    monkeypatch.setattr(bpe_train, "_DRIVER_SYMBOL_CAP", 0)
     df = _docs(spark)
     residual = _residual_after(
         spark, lambda: fit_bpe_merges(df, "text", n_merges=9,
@@ -82,9 +85,12 @@ def test_unigram_fit_leaves_nothing(spark):
     assert residual == 0, f"unigram fit leaked {residual} checkpoints"
 
 
-def test_connected_components_leaves_at_most_final_labels(spark):
+def test_connected_components_leaves_at_most_final_labels(spark, monkeypatch):
+    from inferdb_spark.operators import graph
     from inferdb_spark.operators.graph import connected_components
 
+    # the Spark loop: the driver solve checkpoints nothing to leak
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 200, 2)] + [(1, 2), (3, 4), (101, 102)],
         ["src", "dst"],

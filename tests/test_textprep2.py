@@ -137,9 +137,20 @@ def test_semantic_dedup_drops_near_duplicates(spark):
     assert len([k for k in kept if 4 <= k < 7]) == 1
 
 
-def test_bpe_fit_and_apply(spark):
+def _bpe_branches(monkeypatch):
+    """Both regimes of fit_bpe_merges, in turn: the rounds on the driver,
+    then (symbol cap at 0) the Spark rounds.  Yields the branch's name."""
+    from inferdb_spark.operators import bpe_train
+
+    yield "driver"
+    monkeypatch.setattr(bpe_train, "_DRIVER_SYMBOL_CAP", 0)
+    yield "spark"
+
+
+def test_bpe_fit_and_apply(spark, monkeypatch):
     """BPE trainer on a tiny corpus with a known dominant pair; apply
-    must reproduce training-time segmentation (fit/apply consistency)."""
+    must reproduce training-time segmentation (fit/apply consistency),
+    on both branches."""
     import pandas as pd
 
     from inferdb_spark.operators.bpe_train import bpe_apply, fit_bpe_merges
@@ -148,22 +159,23 @@ def test_bpe_fit_and_apply(spark):
     # there, other, thin), h+e only 7
     corpus = ["the then there thin", "the other", "then the"]
     df = spark.createDataFrame(pd.DataFrame({"text": corpus}))
-    merges, vocab = fit_bpe_merges(df, "text", n_merges=3)
-    assert (merges[0][0], merges[0][1]) == ("t", "h")
-    assert ("th", "e") in [(a, b) for a, b, _ in merges]
-    # apply with the learned merges reproduces the final vocab's seqs
-    lits = [(a, b) for a, b, _ in merges]
-    got = {
-        r["word"]: r["seg"]
-        for r in vocab.select(
-            "word", F.array_join(bpe_apply(F.col("word"), lits), " ").alias("seg")
-        ).collect()
-    }
-    want = {
-        r["word"]: " ".join(r["seq"].strip("|").split("||"))
-        for r in vocab.collect()
-    }
-    assert got == want
+    for branch in _bpe_branches(monkeypatch):
+        merges, vocab = fit_bpe_merges(df, "text", n_merges=3)
+        assert (merges[0][0], merges[0][1]) == ("t", "h"), branch
+        assert ("th", "e") in [(a, b) for a, b, _ in merges], branch
+        # apply with the learned merges reproduces the final vocab's seqs
+        lits = [(a, b) for a, b, _ in merges]
+        got = {
+            r["word"]: r["seg"]
+            for r in vocab.select(
+                "word", F.array_join(bpe_apply(F.col("word"), lits), " ").alias("seg")
+            ).collect()
+        }
+        want = {
+            r["word"]: " ".join(r["seq"].strip("|").split("||"))
+            for r in vocab.collect()
+        }
+        assert got == want, branch
 
 
 def test_bpe_merge_is_left_to_right_greedy(spark):
@@ -313,10 +325,10 @@ def test_temperature_rates_no_overflow_at_planetary_counts(spark):
     assert 500 * t_rows * max(wq.values()) > 2**63
 
 
-def test_bpe_sql_oracle_pair_exhaustion(spark):
+def test_bpe_sql_oracle_pair_exhaustion(spark, monkeypatch):
     """fit_bpe_sql with n_merges > available pairs must emit exactly the
-    merges the Spark fit performs (early break) and not NULL-propagate the
-    later rounds' replaces."""
+    merges the fit performs on either branch (early break) and not
+    NULL-propagate the later rounds' replaces."""
     import duckdb
     import pandas as pd
 
@@ -324,14 +336,14 @@ def test_bpe_sql_oracle_pair_exhaustion(spark):
 
     pdf = pd.DataFrame({"doc_id": [0, 1], "text": ["ab ab", "ab cd"]})
     sdf = spark.createDataFrame(pdf)
-    merges, _ = fit_bpe_merges(sdf, "text", n_merges=10)
-    assert 0 < len(merges) < 10  # genuinely exhausts
     con = duckdb.connect()
     con.register("documents", pdf)
-    sql = fit_bpe_sql(10, "documents")
-    got = con.execute(sql).fetchall()
-    exp = [(i, a, b, c) for i, (a, b, c) in enumerate(merges)]
-    assert [tuple(r) for r in got] == exp
+    got = con.execute(fit_bpe_sql(10, "documents")).fetchall()
+    for branch in _bpe_branches(monkeypatch):
+        merges, _ = fit_bpe_merges(sdf, "text", n_merges=10)
+        assert 0 < len(merges) < 10, branch  # genuinely exhausts
+        exp = [(i, a, b, c) for i, (a, b, c) in enumerate(merges)]
+        assert [tuple(r) for r in got] == exp, branch
 
 
 def test_semantic_dedup_leaves_no_cache_behind(spark):
@@ -403,10 +415,10 @@ def _bpe_fixture_counts():
     return texts, wc
 
 
-def test_bpe_batched_matches_python_twin(spark):
-    """batch_m in {1, 3}: the Spark fit must equal the pure-Python twin
-    exactly (same merges, same order, same counts); batch_m=1 is
-    sequential Sennrich BPE."""
+def test_bpe_batched_matches_python_twin(spark, monkeypatch):
+    """batch_m in {1, 3}: the fit must equal the pure-Python twin
+    exactly (same merges, same order, same counts) on both branches;
+    batch_m=1 is sequential Sennrich BPE."""
     import pandas as pd
 
     from inferdb_spark.operators.bpe_train import fit_bpe_merges
@@ -415,9 +427,41 @@ def test_bpe_batched_matches_python_twin(spark):
     sdf = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    for m in (1, 3):
-        got, _ = fit_bpe_merges(sdf, "text", n_merges=7, batch_m=m)
-        assert got == _py_bpe(wc, 7, m), f"batch_m={m}"
+    for branch in _bpe_branches(monkeypatch):
+        for m in (1, 3):
+            got, _ = fit_bpe_merges(sdf, "text", n_merges=7, batch_m=m)
+            assert got == _py_bpe(wc, 7, m), f"{branch} batch_m={m}"
+
+
+def test_bpe_vocab_relation_same_on_both_branches(spark, monkeypatch):
+    """The final vocab relation (word, cnt, seq) is the same rows and
+    types whichever regime ran the rounds."""
+    import pandas as pd
+
+    from inferdb_spark.operators.bpe_train import fit_bpe_merges
+
+    texts, _ = _bpe_fixture_counts()
+    sdf = spark.createDataFrame(pd.DataFrame({"text": texts}))
+    driver, loop = (
+        fit_bpe_merges(sdf, "text", n_merges=6, batch_m=2)
+        for _ in _bpe_branches(monkeypatch)
+    )
+    assert driver[0] == loop[0]
+    assert driver[1].dtypes == loop[1].dtypes
+    assert sorted(driver[1].collect()) == sorted(loop[1].collect())
+
+
+def test_bpe_driver_job_count_is_constant(spark, job_count):
+    """Under the symbol cap the job count does not grow with the merge
+    rounds (the Spark rounds take about two jobs each)."""
+    import pandas as pd
+
+    from inferdb_spark.operators.bpe_train import fit_bpe_merges
+
+    texts, _ = _bpe_fixture_counts()
+    sdf = spark.createDataFrame(pd.DataFrame({"text": texts}))
+    n = {m: job_count(lambda: fit_bpe_merges(sdf, "text", n_merges=m)) for m in (2, 8)}
+    assert n[8] == n[2] <= 3
 
 
 def test_bpe_batched_first_round_disjoint(spark):
